@@ -273,6 +273,15 @@ class _SrcGen:
         lines.append(f"{ind}        _s += 7")
         lines.append(f"{ind}    {var} = (_n >> 1) ^ -(_n & 1)")
 
+    def length(self, lines, ind, var):
+        """Non-negative avro length into `var`: a negative one would move
+        the cursor backwards, and a block loop could then spin forever."""
+        self.varint(lines, ind, var)
+        lines.append(
+            f"{ind}if {var} < 0: "
+            f"raise ValueError('negative avro bytes length %d' % {var})"
+        )
+
     def sized(self, lines, ind, var, length_expr, decode=False):
         """Bounds-checked slice of `length_expr` bytes into `var`."""
         end = self.fresh("E")
@@ -322,14 +331,15 @@ class _SrcGen:
             lines.append(f"{ind}{var} = {u}(data, pos)[0]; pos += 8")
         elif t in ("string", "bytes"):
             ln = self.fresh("L")
-            self.varint(lines, ind, ln)
-            lines.append(
-                f"{ind}if {ln} < 0: "
-                f"raise ValueError('negative avro bytes length %d' % {ln})"
-            )
+            self.length(lines, ind, ln)
             self.sized(lines, ind, var, ln, decode=(t == "string"))
         elif t == "fixed":
-            self.sized(lines, ind, var, schema["size"])
+            # the size comes from the file header: only a validated int
+            # literal may reach the generated source
+            size = int(schema["size"])
+            if size < 0:
+                raise ValueError(f"negative avro fixed size {size}")
+            self.sized(lines, ind, var, size)
         elif t == "union":
             idx = self.fresh("u")
             self.varint(lines, ind, idx)
@@ -365,7 +375,7 @@ class _SrcGen:
             lines.append(f"{ind}{var} = {{}}")
 
             def body(ind2):
-                self.varint(lines, ind2, kl)
+                self.length(lines, ind2, kl)
                 self.sized(lines, ind2, key, kl, decode=True)
                 self.emit(lines, ind2, schema["values"], val)
                 lines.append(f"{ind2}{var}[{key}] = {val}")

@@ -13,6 +13,7 @@ from __future__ import annotations
 import io
 import os
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
 from enum import IntEnum
 from typing import Any, Iterable, Optional
@@ -765,19 +766,26 @@ def positional_delete_schema() -> Schema:
 # (partition dict, stats maps, split_offsets/equality_ids lists) stay
 # shared — nothing in the repo mutates those on a read entry, they are
 # replaced wholesale only when building NEW DataFiles at write time.
-# The local planner reads manifests from a thread pool (table.py
-# plan_files), so eviction must be guarded: an unlocked
-# pop(next(iter(...))) races another thread's eviction of the same
-# oldest key and dies with KeyError mid-plan.
+# Remote plans read manifests from a thread pool (map_manifests), so
+# eviction must be guarded: an unlocked pop(next(iter(...))) races
+# another thread's eviction of the same oldest key and dies with
+# KeyError mid-plan.
 #
 # Capacity is bounded by TOTAL CACHED ENTRIES, not manifest count: at
 # ~2.3 KB per prototype entry (measured) the 1M-entry default is
 # ≤ ~2.3 GB — sized for a planner driver with Spark's default heap
 # alongside; override with SPARK_GRAFT_MANIFEST_CACHE_ENTRIES for
-# smaller drivers (0 disables caching). The old 256-manifest cap made
-# repeated plans of snapshots wider than 256 manifests decode every
-# manifest cold on every scan. _OCF_CACHE_MAX stays as a secondary
-# file-count bound for pathological many-tiny-manifest layouts.
+# smaller drivers (0 disables caching). _OCF_CACHE_MAX stays as a
+# secondary file-count bound for pathological many-tiny-manifest
+# layouts.
+#
+# Eviction is FIFO, so walking a snapshot N× wider than the cache in
+# list order evicts exactly what the next plan reads first: 0 hits.
+# map_manifests visits the resident manifests first — they are read
+# before the misses' inserts evict them, and the misses are what stays
+# for the next plan — for a 1/N hit ratio, the best any cache of this
+# size can do on a cyclic walk. 24 × 250 entries against a 3000-entry
+# cache (N = 2), 4-core host: 24 → 12 decodes, ~140 → ~77 ms per plan.
 _OCF_CACHE: dict[str, list] = {}
 _OCF_CACHE_MAX = 8192
 _OCF_CACHE_MAX_ENTRIES = int(
@@ -819,6 +827,31 @@ def _read_manifest_prototypes(path: str) -> list[ManifestEntry]:
                 _OCF_CACHE[path] = cached
                 _OCF_CACHE_ENTRY_COUNT += len(cached)
     return cached
+
+
+def is_resident(path: str) -> bool:
+    """True when the decoded entries of manifest `path` are cached."""
+    return path in _OCF_CACHE
+
+
+def map_manifests(fn, manifests, concurrency: int = 1) -> list:
+    """`[fn(m) for m in manifests]`, run on the cache-resident manifests
+    first (see the eviction note above `_OCF_CACHE`). The misses run
+    serially when all are local — decode is GIL-bound, so a pool only
+    adds contention (OPTIMIZATION_r15.md) — else on a thread pool to
+    overlap object-store round trips."""
+    from . import fileio
+
+    hit = [is_resident(m.manifest_path) for m in manifests]
+    out = [fn(m) if h else None for m, h in zip(manifests, hit)]
+    misses = [m for m, h in zip(manifests, hit) if not h]
+    n_workers = min(concurrency, len(misses))
+    if n_workers > 1 and not all(fileio.is_local(m.manifest_path) for m in misses):
+        with ThreadPoolExecutor(n_workers) as pool:
+            done = iter(list(pool.map(fn, misses)))
+    else:
+        done = map(fn, misses)
+    return [r if h else next(done) for r, h in zip(out, hit)]
 
 
 def read_manifest(

@@ -11,7 +11,6 @@ table/table.go:361-379 (Scan builder), table/scanner.go:410-460
 from __future__ import annotations
 
 import logging
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
 from typing import Any, Optional
 
@@ -30,6 +29,8 @@ from .manifest import (
     ManifestEntry,
     ManifestEntryStatus,
     ManifestFile,
+    is_resident,
+    map_manifests,
     read_manifest,
     scan_manifest,
 )
@@ -329,14 +330,15 @@ def build_delete_matcher(delete_rows):
         for idx, d_seq, ddf in pos_always:
             if d_seq >= data_seq:
                 picked.append((idx, ddf))
+        seen = set()
         if tree is not None:
             hits: list = []
             tree.stab(data_path, hits)  # lo <= path <= hi: covered as-is
-            seen = set()
             for idx, d_seq, ddf in hits:
                 if d_seq >= data_seq and idx not in seen:
                     seen.add(idx)
                     picked.append((idx, ddf))
+        if pos_bounded:  # inverted ones too, even when no tree was built
             # prefix-of-lo slack: path < lo but lo startswith path
             k = bisect_left(lo_keys, data_path)
             while k < len(lo_keys) and lo_keys[k].startswith(data_path):
@@ -668,21 +670,25 @@ class Scan:
             if report is not None:
                 report.clear()
             return []
-        cache_key = None
-        if report is None and self._plan_cache_on():
-            cache_key = self._plan_cache_key(snap)
-        if cache_key is not None:
-            with _PLAN_CACHE_LOCK:
-                hit = _PLAN_CACHE.pop(cache_key, None)
-                if hit is not None:
-                    _PLAN_CACHE[cache_key] = hit  # LRU refresh
-                    return list(hit)
-        tasks = self._plan_files_uncached(snap, report)
-        if cache_key is not None:
-            with _PLAN_CACHE_LOCK:
-                while len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-                    _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)), None)
-                _PLAN_CACHE[cache_key] = tuple(tasks)
+        if report is not None:
+            return self._plan_files_uncached(snap, report)
+        return self._memoized(snap, lambda: self._plan_files_uncached(snap, None))
+
+    def _memoized(self, snap, plan) -> list[FileScanTask]:
+        """`plan()` through the bounded planning memo, when enabled."""
+        key = self._plan_cache_key(snap) if self._plan_cache_on() else None
+        if key is None:
+            return plan()
+        with _PLAN_CACHE_LOCK:
+            hit = _PLAN_CACHE.pop(key, None)
+            if hit is not None:
+                _PLAN_CACHE[key] = hit  # LRU refresh
+                return list(hit)
+        tasks = plan()
+        with _PLAN_CACHE_LOCK:
+            while len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
+                _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)), None)
+            _PLAN_CACHE[key] = tuple(tasks)
         return tasks
 
     def _plan_cache_on(self) -> bool:
@@ -725,8 +731,10 @@ class Scan:
             if man_eval(m):
                 pruned_manifests.append(m)
 
-        # level 3+4: per-entry partition-tuple + metrics pruning, manifests
-        # fetched concurrently (ref scanner.go:343-406 errgroup workers)
+        # level 3+4: per-entry partition-tuple + metrics pruning, one
+        # manifest at a time, cache-resident ones first (map_manifests;
+        # remote misses fetch concurrently, ref scanner.go:343-406
+        # errgroup workers)
         def entries_of(m: ManifestFile):
             # evaluate on the cache PROTOTYPES and copy survivors only
             # (scan_manifest): a selective plan discards ~everything, so
@@ -757,40 +765,13 @@ class Scan:
 
         data_entries: list[ManifestEntry] = []
         entries_total = pruned_partition = pruned_metrics = 0
-        if pruned_manifests:
-            # Pool width is for OVERLAPPING REMOTE I/O (object-store
-            # RTTs); the per-entry decode/evaluate work is pure Python
-            # and GIL-serialized, so on local manifests a contended pool
-            # only adds context-switch overhead — measured 19.2 s → 13.6 s
-            # on the 500k-file cold plan (OPTIMIZATION_r15.md). Local ⇒
-            # run serially; any remote manifest keeps the concurrent path.
-            from . import fileio as _fio
-
-            n_workers = min(self.concurrency, len(pruned_manifests))
-            if n_workers > 1 and all(
-                _fio.is_local(m.manifest_path) for m in pruned_manifests
-            ):
-                n_workers = 1
-            results = (
-                map(entries_of, pruned_manifests)
-                if n_workers <= 1
-                else None
-            )
-            if results is not None:
-                for entry_list, n_total, n_part, n_metrics in results:
-                    data_entries.extend(entry_list)
-                    entries_total += n_total
-                    pruned_partition += n_part
-                    pruned_metrics += n_metrics
-            else:
-                with ThreadPoolExecutor(max_workers=n_workers) as pool:
-                    for entry_list, n_total, n_part, n_metrics in pool.map(
-                        entries_of, pruned_manifests
-                    ):
-                        data_entries.extend(entry_list)
-                        entries_total += n_total
-                        pruned_partition += n_part
-                        pruned_metrics += n_metrics
+        for entry_list, n_total, n_part, n_metrics in map_manifests(
+            entries_of, pruned_manifests, self.concurrency
+        ):
+            data_entries.extend(entry_list)
+            entries_total += n_total
+            pruned_partition += n_part
+            pruned_metrics += n_metrics
 
         # delete matching — ref scanner.go:268-309: gate delete manifests
         # by min data sequence number, then per data file keep deletes
@@ -798,14 +779,15 @@ class Scan:
         delete_entries: list[ManifestEntry] = []
         if delete_manifests and data_entries:
             min_data_seq = min(e.sequence_number or 0 for e in data_entries)
-            for m in delete_manifests:
-                if m.sequence_number < min_data_seq:
-                    continue
-                delete_entries.extend(
-                    read_manifest(
-                        m.manifest_path, inherit_sequence_number=m.sequence_number
-                    )
-                )
+            for entry_list in map_manifests(
+                lambda m: read_manifest(
+                    m.manifest_path, inherit_sequence_number=m.sequence_number
+                ),
+                [m for m in delete_manifests if m.sequence_number >= min_data_seq],
+                self.concurrency,
+            ):
+                delete_entries.extend(entry_list)
+            # stable: equal sequence numbers keep manifest-list order
             delete_entries.sort(key=lambda e: e.sequence_number or 0)
 
         delete_rows = [
@@ -972,34 +954,15 @@ class Scan:
                 if str(
                     props.get("read.distributed-planning.skip-when-cached", "true")
                 ).lower() in ("1", "true", "yes"):
-                    from .manifest import _OCF_CACHE
-
-                    cached = sum(
-                        1 for m in manifests if m.manifest_path in _OCF_CACHE
-                    )
+                    cached = sum(is_resident(m.manifest_path) for m in manifests)
                     if cached >= 0.9 * len(manifests):
                         return self.plan_files()
                 # same memo as the local planner (the two return the
                 # identical file set — bench-asserted), so a repeated
                 # scan skips the Spark planning job too
-                cache_key = (
-                    self._plan_cache_key(snap)
-                    if self._plan_cache_on()
-                    else None
+                return self._memoized(
+                    snap, lambda: plan_files_distributed(self, spark)
                 )
-                if cache_key is not None:
-                    with _PLAN_CACHE_LOCK:
-                        hit = _PLAN_CACHE.pop(cache_key, None)
-                        if hit is not None:
-                            _PLAN_CACHE[cache_key] = hit  # LRU refresh
-                            return list(hit)
-                tasks = plan_files_distributed(self, spark)
-                if cache_key is not None:
-                    with _PLAN_CACHE_LOCK:
-                        while len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-                            _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)), None)
-                        _PLAN_CACHE[cache_key] = tuple(tasks)
-                return tasks
         return self.plan_files()
 
     def _stream_plan_route(self, spark):
@@ -2390,7 +2353,8 @@ class IncrementalAppendScan(Scan):
         schema = self._scan_schema()
         evals_for, metrics_eval = self._pruning_evaluators(schema)
 
-        tasks: list[FileScanTask] = []
+        # the manifests each append in the range added, in walk order
+        added: list[ManifestFile] = []
         for snap in chain:
             op = snap.summary.operation
             if op == "replace":
@@ -2402,33 +2366,34 @@ class IncrementalAppendScan(Scan):
                 )
             for m in snap.manifests():
                 if (
-                    m.content != ManifestContent.DATA
-                    or m.added_snapshot_id != snap.snapshot_id
+                    m.content == ManifestContent.DATA
+                    and m.added_snapshot_id == snap.snapshot_id
+                    and evals_for(m.partition_spec_id)[0](m)
                 ):
-                    continue
-                man_eval, part_eval = evals_for(m.partition_spec_id)
-                if not man_eval(m):
-                    continue
+                    added.append(m)
+
+        def tasks_of(m: ManifestFile) -> list[FileScanTask]:
+            _, part_eval = evals_for(m.partition_spec_id)
+            return [
+                FileScanTask(
+                    file=e.data_file, data_sequence_number=e.sequence_number
+                )
                 for e in read_manifest(
                     m.manifest_path,
                     inherit_sequence_number=m.sequence_number,
                     inherit_first_row_id=m.first_row_id,
-                ):
-                    if e.status != ManifestEntryStatus.ADDED:
-                        continue
-                    if e.snapshot_id not in (None, snap.snapshot_id):
-                        continue
-                    if not part_eval(e.data_file.partition):
-                        continue
-                    if not metrics_eval(e.data_file):
-                        continue
-                    tasks.append(
-                        FileScanTask(
-                            file=e.data_file,
-                            data_sequence_number=e.sequence_number,
-                        )
-                    )
-        return tasks
+                )
+                if e.status == ManifestEntryStatus.ADDED
+                and e.snapshot_id in (None, m.added_snapshot_id)
+                and part_eval(e.data_file.partition)
+                and metrics_eval(e.data_file)
+            ]
+
+        return [
+            t
+            for ts in map_manifests(tasks_of, added, self.concurrency)
+            for t in ts
+        ]
 
     def plan_files_auto(self, spark) -> list[FileScanTask]:
         """Incremental planning is already O(appended manifests) — the

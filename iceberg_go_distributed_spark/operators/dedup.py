@@ -185,9 +185,11 @@ def minhash_signatures(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
             lst = batch.column(1)
             # ListArray.offsets is already adjusted for any array slice
             # and indexes into the full child values — correct even for
-            # non-zero-offset batches
+            # non-zero-offset batches. The child may run past the last
+            # list: cut it there, or reduceat's final segment (which
+            # always runs to the end) takes in the trailing values
             offsets = lst.offsets.to_numpy().astype(np.int64)
-            vals = lst.values.to_numpy(zero_copy_only=False)
+            vals = lst.values.to_numpy(zero_copy_only=False)[: offsets[-1]]
             h = vals % mersenne
             starts = offsets[:-1]
             arrays = [batch.column(0)]

@@ -264,3 +264,37 @@ def test_minhash_signatures_match_sql_aggregate(spark, sf_dir):
     ]
     assert got.exceptAll(expected).count() == 0
     assert expected.exceptAll(got).count() == 0
+
+
+def test_minhash_signatures_ignore_child_values_past_the_slice(spark):
+    """A sliced shingle ListArray keeps its whole child array: values past
+    the last list must not reach the last document's minima."""
+    import numpy as np
+    import pyarrow as pa
+
+    from iceberg_go_distributed_spark.operators import dedup
+
+    class Frame:  # captures the mapInArrow task instead of running it
+        def select(self, *cols):
+            return self
+
+        def mapInArrow(self, task, schema):
+            self.task = task
+
+    frame = Frame()
+    dedup.minhash_signatures(frame, "doc_id")
+    rng = np.random.default_rng(7)
+    lists = pa.array(
+        [list(rng.integers(0, 1 << 60, n)) for n in (3, 1, 4, 2, 30)],
+        pa.list_(pa.int64()),
+    )
+    for start, stop in ((0, 2), (1, 3), (2, 4)):
+        sliced = lists[start:stop]
+        compact = pa.array(sliced.to_pylist(), sliced.type)
+        ids = pa.array(range(start, stop), pa.int64())
+
+        def signatures(shingles):
+            batch = pa.record_batch([ids, shingles], names=["doc_id", "shingles"])
+            return next(frame.task(iter([batch]))).to_pydict()
+
+        assert signatures(sliced) == signatures(compact), (start, stop)

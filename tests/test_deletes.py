@@ -924,3 +924,52 @@ def test_delete_matcher_ranged_heavy_prefix_adversarial():
                 assert match(data_seq, p) == match_deletes(data_seq, p, rows), (
                     f"trial {trial} seq {data_seq} path {p}"
                 )
+
+
+def test_delete_matcher_all_inverted_bounds_still_match():
+    """When EVERY bounded ranged positional delete has hi < lo, no
+    interval tree is built — the prefix-slack lookups must still run, or
+    deletes that match_deletes applies are dropped and deleted rows come
+    back."""
+    from iceberg_go_distributed_spark.iceberg.conversions import to_bytes
+    from iceberg_go_distributed_spark.iceberg.manifest import (
+        POSITIONAL_DELETE_FILE_PATH_ID as FP,
+        DataFile,
+        DataFileContent,
+    )
+    from iceberg_go_distributed_spark.iceberg.table import (
+        build_delete_matcher,
+        match_deletes,
+    )
+    from iceberg_go_distributed_spark.iceberg.types import StringType
+
+    def inverted(seq, lo, hi):
+        return (
+            seq,
+            DataFile(
+                file_path=f"/del/pos-{seq}-{lo[3:]}-{hi[3:]}.parquet",
+                content=DataFileContent.POSITION_DELETES,
+                lower_bounds={FP: to_bytes(StringType(), lo)},
+                upper_bounds={FP: to_bytes(StringType(), hi)},
+                record_count=1,
+            ),
+        )
+
+    # hi < lo everywhere; each is still reachable through one slack
+    # branch: a path that prefixes lo (and is <= hi or extends it), or a
+    # path that extends hi
+    rows = [
+        inverted(1, "/w/ab", "/w/a"),
+        inverted(2, "/w/b", "/w/a"),
+        inverted(3, "/w/zz", "/w/c"),
+        inverted(3, "/w/cz", "/w/ca"),
+    ]
+    match = build_delete_matcher(rows)
+    paths = ["/w/a", "/w/ab", "/w/abc", "/w/b", "/w/c", "/w/ca.parquet", "/w/z", "/x"]
+    n_matched = 0
+    for p in paths:
+        for data_seq in (0, 1, 2, 3, 4):
+            expected = match_deletes(data_seq, p, rows)
+            n_matched += len(expected)
+            assert match(data_seq, p) == expected, (p, data_seq)
+    assert n_matched, "the inverted set must cover some paths"

@@ -504,3 +504,51 @@ def test_scan_manifest_matches_filtered_read(tmp_path):
                 inherit_first_row_id=frid,
             )
             assert got == expected, (seq, frid)
+
+
+def test_fixed_size_from_header_is_never_executed(tmp_path):
+    """A `fixed` size is copied from the file header into generated
+    decoder source: an expression there must fail loudly at compile time
+    and run nothing."""
+    marker = tmp_path / "ran"
+    size = f"0 if __import__('pathlib').Path({str(marker)!r}).touch() else 0"
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [{"name": "x", "type": {"type": "fixed", "name": "f", "size": size}}],
+    }
+    path = str(tmp_path / "crafted.avro")
+    A.write_ocf(path, schema, [], codec="null")
+    with open(path, "rb") as f:
+        sync = f.read()[-A.SYNC_SIZE :]
+    block = io.BytesIO()
+    A._write_long(block, 1)  # one record
+    A._write_long(block, 0)  # of zero payload bytes
+    with open(path, "ab") as f:
+        f.write(block.getvalue() + sync)
+    with pytest.raises(ValueError):
+        A.read_ocf(path)
+    assert not marker.exists()
+    for bad in (-1, "-3"):
+        schema["fields"][0]["type"]["size"] = bad
+        with pytest.raises(ValueError, match="negative avro fixed size"):
+            A.compile_block_reader(schema)
+
+
+def test_negative_map_key_length_raises_instead_of_spinning():
+    """A negative map-key length moves the decode cursor backwards; the
+    payload below (one item whose key length -2 rewinds to the block
+    count) loops forever unless the length is rejected."""
+
+    class Budgeted(bytes):
+        reads = 0
+
+        def __getitem__(self, i):
+            type(self).reads += 1
+            if type(self).reads > 10_000:
+                raise RuntimeError("decoder is spinning")
+            return super().__getitem__(i)
+
+    read_block = A.compile_block_reader({"type": "map", "values": "null"})
+    with pytest.raises(ValueError, match="negative avro bytes length -2"):
+        read_block(Budgeted(b"\x02\x03"), 0, 1, [].append)
