@@ -842,11 +842,13 @@ def compute_partition_statistics(table) -> dict:
     return entry
 
 
-# Per-worker LRU of decoded equality-delete key frames for the
-# conversion fast path (same pattern as streaming._EQ_FRAME_CACHE):
+# Per-worker LRU of decoded equality-delete key frames, shared by the
+# conversion fast path, SPJ bucket reads and the CDC stream source:
 # resolved at unpickle time in each reused Python worker, so the ~32
-# conversion tasks read each key file ~once per worker instead of once
-# per task. Bounded by slot count × the keys-max-rows routing bound.
+# conversion tasks (or one micro-batch's file partitions) read each key
+# file ~once per worker instead of once per task. Bounded by slot count
+# × the callers' key-row bounds (maintenance.eq-convert.keys-max-rows,
+# read.cdc.eq-keys-max-rows).
 _EQ_KEY_FRAME_CACHE: dict = {}
 _EQ_KEY_FRAME_CACHE_MAX = 4
 
@@ -859,12 +861,12 @@ def _eq_convert_key_frame(path, ids):
     deserialization — every task would see an empty cache and the
     claimed cross-task reuse would never happen. A module-level function
     pickles by reference and resolves `_EQ_KEY_FRAME_CACHE` in the
-    worker's imported module, the same pattern that makes
-    streaming._load_eq_sets' cache real. Caller applies fileio config
-    first. Frames are under maintenance.eq-convert.keys-max-rows by
-    routing and key-file paths are immutable, so the cache is bounded
-    and can never go stale."""
+    worker's imported module. Caller applies fileio config first. Key
+    columns resolve by parquet FIELD ID, so renames survive. Frames are
+    under the callers' key-row bounds and key-file paths are immutable,
+    so the cache is bounded and can never go stale."""
     from . import fileio
+    from .reader import field_ids
 
     k = (path, tuple(ids))
     cached = _EQ_KEY_FRAME_CACHE.pop(k, None)
@@ -872,11 +874,7 @@ def _eq_convert_key_frame(path, ids):
         _EQ_KEY_FRAME_CACHE[k] = cached  # LRU refresh
         return cached
     with fileio.parquet_file(path) as kf:
-        kby = {}
-        for fld in kf.schema_arrow:
-            fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-            if fid is not None:
-                kby[int(fid)] = fld.name
+        kby = field_ids(kf.schema_arrow)
         cols = [kby[i] for i in ids]
         pdf = kf.read(columns=cols).to_pandas()
     pdf.columns = [f"f{i}" for i in ids]
@@ -899,11 +897,9 @@ def _eq_matched_positions(pf, eq_sets, batch_rows: int = 131072):
     import numpy as np
     import pandas as pd
 
-    by_id = {}
-    for fld in pf.schema_arrow:
-        fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-        if fid is not None:
-            by_id[int(fid)] = fld.name
+    from .reader import field_ids
+
+    by_id = field_ids(pf.schema_arrow)
     needed_ids = sorted({fid for ids, _ in eq_sets for fid in ids})
     phys = [by_id[f] for f in needed_ids if f in by_id]
 
@@ -1284,16 +1280,13 @@ def _eq_keys_df_arrow(spark, path: str, fields):
 
     def read_rg(batches):
         from . import fileio
+        from .reader import field_ids
 
         fileio.apply_config(rg_cfg)
         for pdf in batches:
             for row in pdf.itertuples(index=False):
                 with fileio.parquet_file(row.path) as kf:
-                    by_fid = {}
-                    for fld in kf.schema_arrow:
-                        fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-                        if fid is not None:
-                            by_fid[int(fid)] = fld.name
+                    by_fid = field_ids(kf.schema_arrow)
                     cols = [by_fid[i] for i in want_ids]
                     frame = kf.read_row_group(
                         int(row.rg), columns=cols

@@ -42,6 +42,7 @@ import json
 from typing import Optional
 
 from .manifest import DataFileContent
+from .reader import _cast_bridge, delete_entry, mapped_names
 from .types import (
     BinaryType,
     DateType,
@@ -667,14 +668,7 @@ def _delete_entries(delete_files):
     executor-side bucket grouper (matched descriptor lists)."""
     return (
         [
-            {
-                "path": d.file_path,
-                "dv": (
-                    [d.content_offset, d.content_size_in_bytes]
-                    if d.content_offset is not None
-                    else None
-                ),
-            }
+            delete_entry(d)
             for d in delete_files
             if d.content == DataFileContent.POSITION_DELETES
         ],
@@ -763,25 +757,6 @@ def _ts_to_us(c):
     return c.cast(pa.int64())
 
 
-def _cast_bridge(col, want):
-    """Cast an Arrow column to `want`, bridging casts Arrow has no
-    direct kernel for: date32<->int64 (a date bucket-joined against an
-    int/long sibling widens to int64) goes through int32, date32's
-    physical day-number representation, so values stay bit-exact."""
-    import pyarrow as pa
-
-    if col.type == want:
-        return col
-    try:
-        return col.cast(want)
-    except pa.lib.ArrowNotImplementedError:
-        if pa.types.is_date32(col.type):
-            return col.cast(pa.int32()).cast(want)
-        if pa.types.is_date32(want):
-            return col.cast(pa.int32()).cast(pa.date32())
-        raise
-
-
 def _cast_to_schema(tbl, target):
     """Column-wise `tbl.cast(target)` that routes each column through
     _cast_bridge (a widened int64 key narrows back to the output
@@ -796,17 +771,32 @@ def _cast_to_schema(tbl, target):
     )
 
 
-def _read_bucket_arrow(files: list, col_names: list, arrow_types: dict, fileio, resid=None):
-    """One bucket side as a pyarrow Table: per-file read in file order
-    (positions are file-order row indexes, like _read_with_deletes_arrow,
-    table.py:1458), positional deletes / DVs dropped via a take-mask,
-    evolved files null-filled by name with the target arrow type, then
-    the bound residual row filter applied per file (pruning removed
-    FILES; other keys still share the bucket's files)."""
+def _bucket_read(table, names: list, types: dict):
+    """What _read_bucket_arrow needs for one side: reader `fields` for
+    the columns `names` of `table` — resolved by FIELD ID, so a renamed
+    column still finds its stored values — typed by `types` (the side's
+    Arrow read types, key-widened), plus the table's name mapping."""
+    schema = table.schema()
+    fields = []
+    for n in names:
+        f = schema.find_field(n)
+        fields.append((f.field_id, n, types[n], f.initial_default))
+    return fields, mapped_names(table.properties)
+
+
+def _read_bucket_arrow(files: list, read, resid=None):
+    """One bucket side as a pyarrow Table: each file through
+    reader.read_file (`read` is _bucket_read's (fields, name mapping)),
+    positional deletes / DVs and equality deletes dropped by file
+    position, then the bound residual row filter applied per file
+    (pruning removed FILES; other keys still share the bucket's files)."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
+    from . import fileio
+    from .reader import delete_positions, read_file
+
+    fields, mapped = read
     arrow_filter = None
     filter_cols: set = set()
     if resid is not None:
@@ -816,33 +806,9 @@ def _read_bucket_arrow(files: list, col_names: list, arrow_types: dict, fileio, 
         filter_cols = extract_field_names(resid)
     parts = []
     for f in files:
-        with fileio.open_input(f["path"]) as fh:
-            present = set(pq.read_schema(fh).names)
-        cols = [c for c in col_names if c in present]
-        # push the residual into the parquet read (row-group pruning)
-        # when it cannot disturb positional-delete row numbering and
-        # every filtered column physically exists in the file
-        pushed = (
-            arrow_filter is not None
-            and not f["dels"]
-            and not f.get("eqs")
-            and filter_cols <= present
-        )
-        tbl = fileio.read_parquet_table(
-            f["path"], columns=cols, filters=arrow_filter if pushed else None
-        )
-        drop: set = set()
-        for d in f["dels"]:
-            if d["dv"] is not None:
-                from . import puffin
-
-                drop.update(
-                    int(p)
-                    for p in puffin.read_deletion_vector(d["path"], d["dv"][0], d["dv"][1])
-                )
-            else:
-                dt = fileio.read_parquet_table(d["path"]).to_pandas()
-                drop.update(int(p) for p in dt.loc[dt["file_path"] == f["path"], "pos"])
+        drop = None
+        if f["dels"] or f.get("eqs"):
+            drop = delete_positions(f["path"], f["dels"])
         if f.get("eqs"):
             # equality deletes: key frames LRU-cached per worker, rows
             # matched by field id with NULL==NULL semantics — the same
@@ -854,21 +820,13 @@ def _read_bucket_arrow(files: list, col_names: list, arrow_types: dict, fileio, 
                 for e in f["eqs"]
             ]
             with fileio.parquet_file(f["path"]) as pf:
-                drop.update(int(p) for p in _eq_matched_positions(pf, eq_sets))
-        if drop:
-            keep = np.setdiff1d(np.arange(len(tbl), dtype=np.int64), np.fromiter(drop, np.int64))
-            tbl = tbl.take(pa.array(keep))
-        # null-fill columns the file predates, cast, then order columns
-        arrays, names = [], []
-        for c in col_names:
-            names.append(c)
-            want = arrow_types[c]
-            if c in tbl.column_names:
-                arrays.append(_cast_bridge(tbl.column(c), want))
-            else:
-                arrays.append(pa.nulls(len(tbl), want))
-        out = pa.table(dict(zip(names, arrays)))
-        if arrow_filter is not None and not pushed:
+                drop = np.union1d(
+                    drop, _eq_matched_positions(pf, eq_sets).astype("int64")
+                )
+        out = read_file(
+            f["path"], fields, mapped, arrow_filter, filter_cols, drop=drop
+        )
+        if arrow_filter is not None:
             out = out.filter(arrow_filter)
         parts.append(out)
     if not parts:
@@ -1155,29 +1113,28 @@ def storage_partitioned_join(
     # read them too, filter, then project back to the selected columns
     from .expressions import extract_field_names
 
-    l_read = left_cols + sorted(
+    l_read = _bucket_read(left, left_cols + sorted(
         (extract_field_names(l_resid) if l_resid is not None else set()) - set(left_cols)
-    )
-    r_read = right_cols + sorted(
+    ), l_types)
+    r_read = _bucket_read(right, right_cols + sorted(
         (extract_field_names(r_resid) if r_resid is not None else set()) - set(right_cols)
-    )
-
+    ), r_types)
     fused_names = [f.name for f in fused_struct.fields] if fused_struct else None
 
-    def _joined_buckets(batches, fileio, pa, target):
+    def _joined_buckets(batches, pa, target):
         """Shared per-task join: yield one joined Arrow table (selected
         to the flat output columns) per bucket/fragment row."""
         for batch in batches:
             for row in batch.to_pylist():
                 lt = _read_bucket_arrow(
-                    _task_loads(row["left_files"]), l_read, l_types, fileio, l_resid
+                    _task_loads(row["left_files"]), l_read, l_resid
                 )
                 if lt is None or len(lt) == 0:
                     continue
                 lt = lt.select(left_cols)
                 rt = (
                     _read_bucket_arrow(
-                        _task_loads(row["right_files"]), r_read, r_types, fileio, r_resid
+                        _task_loads(row["right_files"]), r_read, r_resid
                     )
                     if row["right_files"] != "[]"
                     else None
@@ -1217,7 +1174,7 @@ def storage_partitioned_join(
 
         target = to_arrow_schema(out_struct)
         fused_target = to_arrow_schema(fused_struct) if fused_struct else None
-        for joined in _joined_buckets(batches, fileio, pa, target):
+        for joined in _joined_buckets(batches, pa, target):
             if fused_target is not None:
                 # FINAL aggregates in the same task pass: every group
                 # tuple contains the co-located key, so the whole group
@@ -1257,7 +1214,7 @@ def storage_partitioned_join(
 
         target = to_arrow_schema(out_struct)
         p_target = to_arrow_schema(partial_struct)
-        for joined in _joined_buckets(batches, fileio, pa, target):
+        for joined in _joined_buckets(batches, pa, target):
             if len(joined) == 0:
                 continue
             out = _fold_fused_partial(joined, fg_keys, p_items, p_names, p_target)
@@ -1584,6 +1541,7 @@ def storage_partitioned_agg(
         task_df = spark.createDataFrame(rows, "part string, files string").repartition(min(len(rows), _MAX_TASK_PARTITIONS))
     agg_items = list(aggs.items())
     out_name_list = [f.name for f in out_struct.fields]
+    read = _bucket_read(table, need, t_types)
 
     def agg_task(batches):
         from . import fileio
@@ -1594,9 +1552,7 @@ def storage_partitioned_agg(
         target = to_arrow_schema(out_struct)
         for batch in batches:
             for row in batch.to_pylist():
-                tbl = _read_bucket_arrow(
-                    _task_loads(row["files"]), need, t_types, fileio, resid
-                )
+                tbl = _read_bucket_arrow(_task_loads(row["files"]), read, resid)
                 if tbl is None or len(tbl) == 0:
                     continue
                 out = _fold_fused_agg(
@@ -1736,6 +1692,8 @@ def storage_partitioned_asof_join(
         # int/long/date key siblings must merge on ONE pandas dtype;
         # equal types merge natively (date32 has no direct int64 cast)
         l_types[lkey] = r_types[rkey] = _pa.int64()
+    l_spec = _bucket_read(left, left_cols, l_types)
+    r_spec = _bucket_read(right, r_read, r_types)
     fileio_cfg = _fileio.env_config()
     if distributed:
         # as-of keeps every left bucket and may only split the left
@@ -1770,15 +1728,13 @@ def storage_partitioned_asof_join(
         for batch in batches:
             for row in batch.to_pylist():
                 lt = _read_bucket_arrow(
-                    _task_loads(row["left_files"]), left_cols, l_types, fileio,
-                    l_resid,
+                    _task_loads(row["left_files"]), l_spec, l_resid
                 )
                 if lt is None or len(lt) == 0:
                     continue
                 rt = (
                     _read_bucket_arrow(
-                        _task_loads(row["right_files"]), r_read, r_types, fileio,
-                        r_resid,
+                        _task_loads(row["right_files"]), r_spec, r_resid
                     )
                     if row["right_files"] != "[]"
                     else None
@@ -1994,7 +1950,7 @@ def storage_partitioned_star_join(
         }
         widen_keys = len(key_arrow) > 1
 
-    side_cols, side_read, side_types, out_fields, out_names = [], [], [], [], []
+    side_cols, side_read, out_fields, out_names = [], [], [], []
     for i, s in enumerate(norm):
         tbl = s["table"]
         cols = list(s["select"]) if s["select"] else [f.name for f in tbl.schema().fields]
@@ -2014,8 +1970,7 @@ def storage_partitioned_star_join(
             out_names.append(c)
             out_fields.append(st.StructField(c, struct[c].dataType, True))
         side_cols.append(cols)
-        side_read.append(read)
-        side_types.append(types)
+        side_read.append(_bucket_read(tbl, read, types))
     dup = {c for c in out_names if out_names.count(c) > 1}
     if dup:
         raise ValueError(
@@ -2115,7 +2070,7 @@ def storage_partitioned_star_join(
     keys = [s["key"] for s in norm]
     fused_names = [f.name for f in fused_struct.fields] if fused_struct else None
 
-    def _star_joined(batches, fileio):
+    def _star_joined(batches):
         """Shared per-task star join: yield the joined Arrow table
         (selected to the flat output columns) per bucket/fragment row."""
         for batch in batches:
@@ -2124,9 +2079,7 @@ def storage_partitioned_star_join(
                 acc = None
                 empty = False
                 for i, sj in enumerate(side_jsons):
-                    tbl = _read_bucket_arrow(
-                        _task_loads(sj), side_read[i], side_types[i], fileio, resids[i]
-                    )
+                    tbl = _read_bucket_arrow(_task_loads(sj), side_read[i], resids[i])
                     if tbl is None or len(tbl) == 0:
                         empty = True
                         break
@@ -2152,7 +2105,7 @@ def storage_partitioned_star_join(
 
         target = to_arrow_schema(out_struct)
         fused_target = to_arrow_schema(fused_struct) if fused_struct else None
-        for joined in _star_joined(batches, fileio):
+        for joined in _star_joined(batches):
             if fused_target is not None:
                 # FINAL aggregates in the star task: every group tuple
                 # contains the fact key, and split buckets route to the
@@ -2183,7 +2136,7 @@ def storage_partitioned_star_join(
         from pyspark.sql.pandas.types import to_arrow_schema
 
         p_target = to_arrow_schema(partial_struct)
-        for joined in _star_joined(batches, fileio):
+        for joined in _star_joined(batches):
             out = _fold_fused_partial(joined, fg_keys, p_items, p_names, p_target)
             yield from out.to_batches(max_chunksize=1 << 16)
 

@@ -371,79 +371,6 @@ def build_delete_matcher(delete_rows):
     return match
 
 
-def _arrow_read_file(path, fields, mapped_names, arrow_filter, filter_names, with_pos):
-    """One file of a wide/streaming Arrow read: resolve columns by
-    field id (name-mapped / current-name fallback for id-less files)
-    and read ONLY the resolved pruned columns — through a SINGLE open
-    handle serving both the schema probe and the data read (a second
-    open would double object-store round trips at million-file scale,
-    VERDICT r13 task 4). Returns (table, {field_id: physical_name}).
-
-    `fields` is [(field_id, name, arrow_type, initial_default)] for the
-    PRUNED read schema; executors call this from
-    Scan._read_files_arrow_distributed's mapInArrow task, and the unit
-    suite calls it directly to assert open-count and column pruning."""
-    import pyarrow.parquet as pq
-
-    from . import fileio
-
-    handle = fileio.open_input(path)
-    try:
-        # ParquetFile parses the footer ONCE and serves both the schema
-        # probe and the data read. The pq.read_table(handle, ...) it
-        # replaces spun up the whole pyarrow Dataset machinery per call
-        # AND re-parsed the footer: measured 8.96 ms → 1.51 ms per small
-        # file (OPTIMIZATION_r14.md) — the dominant per-file cost of a
-        # million-small-file scan.
-        pf = pq.ParquetFile(handle)
-        phys = pf.schema_arrow
-        by_id, names = {}, set(phys.names)
-        for fld in phys:
-            fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-            if fid is not None:
-                by_id[int(fid)] = fld.name
-
-        # field-id resolution; id-less files resolve by the first
-        # mapped name present, then the current name
-        def _resolve_one(fid, name):
-            if by_id:
-                return by_id.get(fid)
-            for alias in mapped_names.get(fid, ()):
-                if alias in names:
-                    return alias
-            return name if name in names else None
-
-        resolve = {
-            fid: _resolve_one(fid, name) for fid, name, _t, _d in fields
-        }
-        cols = [p for p in resolve.values() if p is not None]
-        # push the residual only when every referenced column physically
-        # carries its CURRENT name in this file — the compiled
-        # expression addresses physical names. A positional read must
-        # see every row in file order — in-file filtering would
-        # renumber _pos
-        pushable = (
-            arrow_filter is not None
-            and not with_pos
-            and all(
-                resolve.get(fid) == name
-                for fid, name, _t, _d in fields
-                if name in filter_names
-            )
-        )
-        if pushable:
-            # row-group stats pruning needs the Dataset reader; selective
-            # filters on big files win back far more than its fixed cost
-            handle.seek(0)
-            return (
-                pq.read_table(handle, columns=cols, filters=arrow_filter),
-                resolve,
-            )
-        return pf.read(columns=cols), resolve
-    finally:
-        handle.close()
-
-
 # scheme/authority-insensitive path comparison: EVERY _fp equi-join
 # (lineage map <-> data frame <-> delete frame <-> DV decoder) must strip
 # URI schemes byte-identically, so the pattern lives in exactly one place
@@ -1245,11 +1172,8 @@ class Scan:
                     spark, files, self._read_schema()
                 )
             elif "schema.name-mapping.default" in self.table.metadata.properties:
-                # No Arrow fallback here: it resolves columns by a single
-                # physical name and applies no defaults, so rerouting a
-                # name-mapped table would return wrong data (nulls for
-                # renamed columns) instead of an error. Let failures
-                # (including transient object-store errors) propagate.
+                # No Arrow fallback here: failures (including transient
+                # object-store errors) propagate.
                 if has_defaults:
                     # defaults need per-row file identity: carry _fp
                     # through the grouped union (no _metadata there)
@@ -1275,10 +1199,8 @@ class Scan:
                 except Exception:  # noqa: BLE001 — reroute to the Arrow reader
                     from . import fileio
 
-                    if all(fileio.is_local(f) for f in files) or has_defaults:
-                        # local files: a real error, not a missing scheme.
-                        # defaults present: the Arrow fallback would drop
-                        # them — fail loudly rather than return wrong data
+                    if all(fileio.is_local(f) for f in files):
+                        # local files: a real error, not a missing scheme
                         raise
                     # object-store table but no Hadoop connector for the
                     # scheme in this Spark: distributed per-file Arrow read
@@ -1288,7 +1210,7 @@ class Scan:
                         "distributed Arrow reader",
                         files[0].split("://", 1)[0] + "://",
                     )
-                    df = self._read_files_arrow(spark, files, schema)
+                    df = self._read_files_arrow_distributed(spark, files, schema)
                 else:
                     df = self._apply_initial_defaults(
                         spark,
@@ -1472,17 +1394,27 @@ class Scan:
                 # the Arrow fallback has no _metadata.row_index; silently
                 # rerouting would break _row_id derivation
                 raise
-            if any(f.initial_default is not None for f in schema.fields):
-                # the Arrow fallback never applies v3 initial-defaults —
-                # rerouting would return NULL where a default is required
-                # (the delete-free path refuses identically above)
-                raise
             logger.warning(
                 "JVM merge-on-read path failed; falling back to the per-file "
                 "Arrow reader (no parquet pushdown for this scan)",
                 exc_info=True,
             )
-            return self._read_with_deletes_arrow(spark, tasks, schema)
+            from .manifest import DataFileContent
+            from .reader import delete_entry
+
+            return self._read_files_arrow_distributed(
+                spark,
+                [t.file.file_path for t in tasks],
+                schema,
+                deletes=[
+                    [
+                        delete_entry(d)
+                        for d in t.delete_files
+                        if d.content == DataFileContent.POSITION_DELETES
+                    ]
+                    for t in tasks
+                ],
+            )
 
     @staticmethod
     def _eq_delete_groups(tasks):
@@ -1835,14 +1767,9 @@ class Scan:
         # ID-less files may store a defaulted column under ANY of its
         # mapped (pre-rename) names — flagging by current name alone
         # would overwrite real stored values with the default
-        alt_names: dict[int, list[str]] = {}
-        nm_json = self.table.metadata.properties.get("schema.name-mapping.default")
-        if nm_json:
-            from .sanitize import name_mapping_from_json
+        from .reader import mapped_names
 
-            alt_names = {
-                m.field_id: list(m.names) for m in name_mapping_from_json(nm_json)
-            }
+        alt_names = mapped_names(self.table.metadata.properties)
         want = [
             (f.field_id, f.name, sorted({f.name, *alt_names.get(f.field_id, [])}))
             for f in defaults
@@ -1857,6 +1784,7 @@ class Scan:
             import pyarrow.parquet as pq
 
             from . import fileio
+            from .reader import field_ids
 
             fileio.apply_config(cfg)
             for pdf in batches:
@@ -1864,12 +1792,7 @@ class Scan:
                 for p in pdf["path"]:
                     with fileio.open_input(p) as f:
                         arrow_schema = pq.read_schema(f)
-                    ids, names = set(), set(arrow_schema.names)
-                    for fld in arrow_schema:
-                        m = fld.metadata or {}
-                        fid = m.get(b"PARQUET:field_id")
-                        if fid is not None:
-                            ids.add(int(fid))
+                    ids, names = field_ids(arrow_schema), set(arrow_schema.names)
                     row = {"path": p}
                     for fid, name, aliases in want:
                         present = (
@@ -1979,9 +1902,11 @@ class Scan:
         with_fp: bool = False,
         files_df=None,
         with_pos: bool = False,
+        deletes: Optional[list] = None,
     ):
         """DataFrame-fed scan execution for very wide file sets —
-        VERDICT r12 task 1 (the last unproven 100× leg).
+        VERDICT r12 task 1 (the last unproven 100× leg) — and the
+        per-file Arrow fallback for URIs the JVM has no FileSystem for.
 
         `spark.read.parquet(*paths)` ships an O(files) argument list
         through py4j and builds a driver-side InMemoryFileIndex over it:
@@ -1991,10 +1916,10 @@ class Scan:
         (table/arrow_scanner.go:557-607). This path does the Spark
         equivalent: the matched paths become a DataFrame (one Arrow
         batch, no py4j list) and executors read their partition's files
-        with pyarrow via mapInArrow — plan-to-first-row is O(1) on the
-        driver in file count.
+        with reader.read_file via mapInArrow — plan-to-first-row is O(1)
+        on the driver in file count.
 
-        Semantics match the JVM field-id read:
+        Semantics match the JVM field-id read (reader.py):
           * columns resolve BY FIELD ID (rename-safe); files with no
             ids resolve through the table's name mapping when one is
             declared (add_files imports — any mapped pre-rename name
@@ -2016,70 +1941,50 @@ class Scan:
         appends the FILE-ORDER row position (and disables filter
         pushdown, which would renumber rows) — together they give MOR
         callers the (_fp, _pos) identity the positional anti-join
-        keys on."""
+        keys on. `deletes` (parallel to `files`: per-file lists of
+        reader.delete_entry descriptors) drops DV / positional-delete
+        rows in-task instead — merge-on-read without the anti-join."""
+        import json
+
         import pandas as pd
 
         from . import fileio as _fileio
-        from .types import TimestampTzType, schema_to_spark_struct
-        from .write import _arrow_type as _w_arrow_type
+        from .reader import mapped_names as _mapped_names
+        from .reader import read_fields
+        from .types import schema_to_spark_struct
 
         fileio_cfg = _fileio.env_config()
         par = spark.sparkContext.defaultParallelism
         if files_df is None:
             # one Arrow batch to the JVM — never a py4j argument list
-            files_df = spark.createDataFrame(
-                pd.DataFrame({"data_file": files}), "data_file string"
-            )
+            cols = {"data_file": files}
+            ddl = "data_file string"
+            if deletes is not None:
+                cols["deletes"] = [json.dumps(d) for d in deletes]
+                ddl += ", deletes string"
+            files_df = spark.createDataFrame(pd.DataFrame(cols), ddl)
             files_df = files_df.repartition(min(len(files), max(64, par * 4)))
         else:
             # pre-built paths frame (the streaming plan→read route):
             # this repartition shuffles PATH STRINGS only, never data
             files_df = files_df.repartition(max(64, par * 4))
 
-        fields = []
-        for f in schema.fields:
-            t = _w_arrow_type(f.field_type)
-            if isinstance(f.field_type, TimestampTzType):
-                import pyarrow as pa
-
-                t = pa.timestamp("us", tz="UTC")
-            fields.append((f.field_id, f.name, t, f.initial_default))
-        # id-less files (add_files imports) resolve by mapped name —
-        # ANY of a field's mapped (pre-rename) names may be the
-        # physical column (ref name_mapping.go:144)
-        mapped_names: dict[int, list] = {}
-        nm_json = self.table.metadata.properties.get(
-            "schema.name-mapping.default"
-        )
-        if nm_json:
-            from .sanitize import name_mapping_from_json
-
-            mapped_names = {
-                m.field_id: list(m.names)
-                for m in name_mapping_from_json(nm_json)
-                if m.field_id is not None
-            }
+        fields = read_fields(schema)
+        mapped_names = _mapped_names(self.table.metadata.properties)
         # schema_to_spark_struct, not DDL: the listed path's frames carry
         # parquet.field.id field metadata, and downstream schema equality
         # must hold whichever route served the scan. All-nullable for the
         # same reason — Spark file scans are always nullable.
-        from pyspark.sql import types as _st0
+        from pyspark.sql import types as _st
 
-        out_struct = _st0.StructType(
+        out_struct = _st.StructType(
             [
-                _st0.StructField(f.name, f.dataType, True, f.metadata)
+                _st.StructField(f.name, f.dataType, True, f.metadata)
                 for f in schema_to_spark_struct(schema).fields
             ]
+            + ([_st.StructField("_fp", _st.StringType(), True)] if with_fp else [])
+            + ([_st.StructField("_pos", _st.LongType(), True)] if with_pos else [])
         )
-        if with_fp or with_pos:
-            from pyspark.sql import types as _st
-
-            extra = []
-            if with_fp:
-                extra.append(_st.StructField("_fp", _st.StringType(), True))
-            if with_pos:
-                extra.append(_st.StructField("_pos", _st.LongType(), True))
-            out_struct = _st.StructType(list(out_struct.fields) + extra)
         bound_filter = None
         if not isinstance(self.row_filter, AlwaysTrue):
             from .expressions import bind_expr, rewrite_not
@@ -2089,11 +1994,12 @@ class Scan:
             )
 
         def read_task(batches):
+            import numpy as np
             import pyarrow as pa
-            import pyarrow.parquet as pq
 
             from . import fileio
             from .expressions import extract_field_names, to_arrow_expression
+            from .reader import delete_positions, read_file
 
             fileio.apply_config(fileio_cfg)
             arrow_filter = (
@@ -2105,11 +2011,6 @@ class Scan:
                 extract_field_names(bound_filter)
                 if bound_filter is not None
                 else set()
-            )
-            out_schema = pa.schema(
-                [pa.field(n, t) for _, n, t, _d in fields]
-                + ([pa.field("_fp", pa.string())] if with_fp else [])
-                + ([pa.field("_pos", pa.int64())] if with_pos else [])
             )
             # Small-file coalescing: every yielded batch crosses the
             # Python→JVM Arrow boundary with fixed per-batch cost, so a
@@ -2135,49 +2036,34 @@ class Scan:
                 )
 
             for batch in batches:
-                for path in batch.column("data_file").to_pylist():
-                    tbl, resolve = _arrow_read_file(
+                paths = batch.column("data_file").to_pylist()
+                dels_json = (
+                    batch.column("deletes").to_pylist()
+                    if "deletes" in batch.schema.names
+                    else [None] * len(paths)
+                )
+                for path, file_dels in zip(paths, dels_json):
+                    file_dels = json.loads(file_dels) if file_dels else []
+                    out = read_file(
                         path,
                         fields,
                         mapped_names,
                         arrow_filter,
                         filter_names,
-                        with_pos,
+                        with_pos=with_pos,
+                        drop=(
+                            delete_positions(path, file_dels) if file_dels else None
+                        ),
                     )
-                    n = tbl.num_rows
-                    arrays = []
-                    for fid, name, t, dflt in fields:
-                        p = resolve[fid]
-                        if p is None:
-                            if dflt is not None:
-                                # pa.repeat: O(1) python objects per file.
-                                # Spec single-value JSON serializes date/
-                                # timestamp/decimal defaults as STRINGS —
-                                # cast like the JVM path's lit().cast()
-                                try:
-                                    s = pa.scalar(dflt, type=t)
-                                except (pa.ArrowInvalid, TypeError) as _e:
-                                    try:
-                                        s = pa.array([dflt]).cast(t)[0]
-                                    except Exception:  # noqa: BLE001
-                                        raise _e from None
-                                arrays.append(pa.repeat(s, n))
-                            else:
-                                arrays.append(pa.nulls(n, type=t))
-                        else:
-                            col = tbl.column(p)
-                            if col.type != t:
-                                col = col.cast(t)  # int32→long etc.
-                            arrays.append(col.combine_chunks())
+                    n = out.num_rows
                     if with_fp:
-                        arrays.append(
-                            pa.repeat(pa.scalar(strip_scheme(path)), n)
+                        out = out.append_column(
+                            "_fp", pa.repeat(pa.scalar(strip_scheme(path)), n)
                         )
                     if with_pos:
-                        import numpy as _np
-
-                        arrays.append(pa.array(_np.arange(n, dtype="int64")))
-                    out = pa.table(arrays, schema=out_schema)
+                        out = out.append_column(
+                            "_pos", pa.array(np.arange(n, dtype="int64"))
+                        )
                     if out.num_rows >= FLUSH_ROWS or out.nbytes >= FLUSH_BYTES:
                         # big file: drain the buffer first (preserves
                         # file order for _pos consumers), then stream it
@@ -2192,118 +2078,6 @@ class Scan:
             yield from flush()
 
         return files_df.mapInArrow(read_task, out_struct)
-
-    def _read_files_arrow(self, spark, files: list, schema: Schema):
-        """Distributed per-file Arrow read for URIs the JVM has no
-        FileSystem for (metadata-plane fileio resolves them instead)."""
-        from . import fileio as _fileio
-
-        files_df = spark.createDataFrame(
-            [(f,) for f in files], "data_file string"
-        ).repartition(min(len(files), 64))
-        ddl = schema_to_spark_ddl(schema)
-        col_names = [f.name for f in schema.fields]
-        fileio_cfg = _fileio.env_config()
-
-        def read_task(batches):
-            import pyarrow.parquet as pq
-
-            from . import fileio
-
-            fileio.apply_config(fileio_cfg)
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    # schema-evolved files may physically lack columns
-                    # added later (or carry old names): project what the
-                    # file HAS and null-fill the rest, like the JVM path
-                    with fileio.open_input(row.data_file) as f:
-                        present = set(pq.read_schema(f).names)
-                    cols = [c for c in col_names if c in present]
-                    frame = fileio.read_parquet_table(
-                        row.data_file, columns=cols
-                    ).to_pandas()
-                    yield frame.reindex(columns=col_names)
-
-        return files_df.mapInPandas(read_task, ddl)
-
-    def _read_with_deletes_arrow(self, spark, tasks, schema: Schema):
-        """Fallback MOR: per data file, read with pyarrow (file-order
-        row positions, as the reference's per-file arrow_scanner does)
-        and drop deleted positions — ref arrow_scanner.go:102-190."""
-        import json as _json
-
-        from .manifest import DataFileContent
-
-        work = [
-            (
-                t.file.file_path,
-                _json.dumps(
-                    [
-                        {
-                            "path": d.file_path,
-                            # v3 DV pointer (puffin blob) vs v2 parquet file
-                            "dv": (
-                                [d.content_offset, d.content_size_in_bytes]
-                                if d.content_offset is not None
-                                else None
-                            ),
-                        }
-                        for d in t.delete_files
-                        if d.content == DataFileContent.POSITION_DELETES
-                    ]
-                ),
-            )
-            for t in tasks
-        ]
-        from . import fileio as _fileio
-
-        files_df = spark.createDataFrame(
-            work, "data_file string, delete_files string"
-        ).repartition(min(len(work), 64))
-        ddl = schema_to_spark_ddl(schema)
-        col_names = [f.name for f in schema.fields]
-        fileio_cfg = _fileio.env_config()
-
-        def read_task(batches):
-            import pyarrow.parquet as pq
-
-            from . import fileio
-
-            fileio.apply_config(fileio_cfg)
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    with fileio.open_input(row.data_file) as f:
-                        present = set(pq.read_schema(f).names)
-                    cols = [c for c in col_names if c in present]
-                    tbl = fileio.read_parquet_table(row.data_file, columns=cols)
-                    # evolved files: null-fill columns the file predates
-                    frame = tbl.to_pandas().reindex(columns=col_names)
-                    dels = _json.loads(row.delete_files)
-                    if dels:
-                        from . import puffin
-
-                        drop: set[int] = set()
-                        for d in dels:
-                            if d["dv"] is not None:
-                                drop.update(
-                                    int(p)
-                                    for p in puffin.read_deletion_vector(
-                                        d["path"], d["dv"][0], d["dv"][1]
-                                    )
-                                )
-                                continue
-                            dt = fileio.read_parquet_table(d["path"]).to_pandas()
-                            drop.update(
-                                int(p)
-                                for p in dt.loc[
-                                    dt["file_path"] == row.data_file, "pos"
-                                ]
-                            )
-                        if drop:
-                            frame = frame[~frame.index.isin(drop)]
-                    yield frame
-
-        return files_df.mapInPandas(read_task, ddl)
 
 
 @dataclass(frozen=True)

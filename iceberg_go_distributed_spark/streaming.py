@@ -343,23 +343,19 @@ def iceberg_stream(spark, warehouse: str, table: str, **options) -> DataFrame:
 _NO_LINEAGE = object()  # sentinel: omit the _row_id column entirely
 
 
-def _project_batch(plan, batch, n, change_type=None, row_ids=_NO_LINEAGE):
-    """One output RecordBatch from a (possibly absent) source batch:
-    resolved columns pass through, unresolved ones fill with the field's
-    initial-default (v3) or nulls. `change_type` appends the CDC-mode
-    `_change_type` column; `row_ids` (an int64 array, or None for a
-    null-filled column) appends the v3 `_row_id` lineage column."""
+def _project_batch(fields, resolved, batch, n, change_type=None, row_ids=_NO_LINEAGE):
+    """One output RecordBatch from a (possibly absent) source batch,
+    projected by reader.project (resolved columns cast to the table
+    type, unresolved ones filled with the initial-default or nulls).
+    `change_type` appends the CDC-mode `_change_type` column; `row_ids`
+    (an int64 array, or None for a null-filled column) appends the v3
+    `_row_id` lineage column."""
     import pyarrow as pa
 
-    cols, names = [], []
-    for name, src, typ, default in plan:
-        if src is not None:
-            cols.append(batch.column(batch.schema.get_field_index(src)))
-        elif default is not None:
-            cols.append(pa.array([default] * n, type=typ))
-        else:
-            cols.append(pa.nulls(n, type=typ))
-        names.append(name)
+    from .iceberg.reader import project
+
+    out = project(batch, fields, resolved, n)
+    cols, names = out.columns, out.schema.names
     if change_type is not None:
         cols.append(pa.array([change_type] * n, type=pa.string()))
         names.append("_change_type")
@@ -378,39 +374,12 @@ def _materialized_lineage_col(pf):
     overwrite carry exact ids that position arithmetic must NOT
     recompute), or None."""
     from .iceberg.manifest import ROW_ID_FIELD_ID
+    from .iceberg.reader import field_ids
 
-    for fld in pf.schema_arrow:
-        fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-        if fid is not None and int(fid) == ROW_ID_FIELD_ID:
-            return fld.name
-    return None
+    return field_ids(pf.schema_arrow).get(ROW_ID_FIELD_ID)
 
 
-def _resolve_read_plan(pf, fields):
-    """Field-id column resolution for one open ParquetFile: returns
-    (plan, read_cols) where plan = [(out_name, src_col|None, type,
-    default)] — files with ids resolve strictly by id; id-less
-    (imported) files fall back to the current name; columns added after
-    the file was written resolve to their default/null."""
-    file_schema = pf.schema_arrow
-    by_id = {}
-    for fld in file_schema:
-        fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-        if fid is not None:
-            by_id[int(fid)] = fld.name
-    plan = []
-    for fid, name, typ, default in fields:
-        src = by_id.get(fid) if by_id else (
-            name if name in file_schema.names else None
-        )
-        if src is not None and src not in file_schema.names:
-            src = None
-        plan.append((name, src, typ, default))
-    read_cols = [src for _, src, _, _ in plan if src is not None]
-    return plan, read_cols
-
-
-def _read_change_deletes(pf, partition, plan, read_cols, batch_rows):
+def _read_change_deletes(pf, partition, resolved, batch_rows):
     """CDC executor read for a delete partition: yield the rows of this
     data file that its snapshot newly removed, batch-wise. Position
     selection is windowed per batch, so memory stays one batch + the
@@ -418,18 +387,21 @@ def _read_change_deletes(pf, partition, plan, read_cols, batch_rows):
     import numpy as np
     import pyarrow as pa
 
-    prior = _decode_delete_positions(partition.prior_deletes, partition.path)
+    from .iceberg.maintenance import _eq_matched_positions
+    from .iceberg.reader import delete_positions
+
+    fields = partition.fields
+    read_cols = [p for p in resolved.values() if p is not None]
+    prior = delete_positions(partition.path, partition.prior_deletes)
     if getattr(partition, "eq_prior", None):
         # unconverted eq-delete debt applicable at the parent: its rows
         # are already dead — fold them into `prior` so NO delete path
         # (whole-file drop, DV diff, or new eq match) re-emits them.
         # One key-matching pass over the file (pyarrow batch-wise).
-        from .iceberg.maintenance import _eq_matched_positions
-
         prior = np.union1d(
             prior,
             _eq_matched_positions(
-                pf, _load_eq_sets(partition.eq_prior)
+                pf, _eq_sets(partition.eq_prior)
             ).astype("int64"),
         )
     if partition.whole_file:
@@ -443,17 +415,13 @@ def _read_change_deletes(pf, partition, plan, read_cols, batch_rows):
         # — and the union is exactly the range's cumulative delete set.
         news = []
         if getattr(partition, "eq_new", None):
-            from .iceberg.maintenance import _eq_matched_positions
-
             news.append(
                 _eq_matched_positions(
-                    pf, _load_eq_sets(partition.eq_new)
+                    pf, _eq_sets(partition.eq_new)
                 ).astype("int64")
             )
         if partition.new_deletes:
-            news.append(
-                _decode_delete_positions(partition.new_deletes, partition.path)
-            )
+            news.append(delete_positions(partition.path, partition.new_deletes))
         new = news[0] if len(news) == 1 else np.union1d(*news)
         target = np.setdiff1d(new, prior).astype("int64")
         if target.size == 0:
@@ -497,7 +465,7 @@ def _read_change_deletes(pf, partition, plan, read_cols, batch_rows):
             idx = window_indices(off, n)
             if idx.size:
                 yield _project_batch(
-                    plan, None, len(idx), change, ids_for(idx, off)
+                    fields, resolved, None, len(idx), change, ids_for(idx, off)
                 )
             off += n
         return
@@ -508,100 +476,25 @@ def _read_change_deletes(pf, partition, plan, read_cols, batch_rows):
         if idx.size:
             sub = batch.take(pa.array(idx))
             yield _project_batch(
-                plan, sub, sub.num_rows, change, ids_for(idx, off, batch)
+                fields, resolved, sub, sub.num_rows, change,
+                ids_for(idx, off, batch),
             )
         off += n
 
 
-# Per-worker LRU of decoded key frames: every file partition of one CDC
-# batch names the SAME few key files, and Spark reuses Python workers
-# (spark.python.worker.reuse), so caching kills the F×K read
-# amplification (F file partitions each re-reading K key files). Memory
-# stays bounded by construction: each frame is under the planner's
-# read.cdc.eq-keys-max-rows bound and at most _EQ_FRAME_CACHE_MAX frames
-# are retained. Key-file paths are immutable (new commit = new file), so
-# staleness is impossible.
-_EQ_FRAME_CACHE: dict = {}
-_EQ_FRAME_CACHE_MAX = 4
-
-
-def _load_eq_sets(descriptors):
+def _eq_sets(descriptors):
     """Executor-side load of equality-delete key files for
     _eq_matched_positions: [(key_file_path, field_ids)] →
-    [(field_ids, pandas frame with f{id} columns)]. Key columns resolve
-    by parquet FIELD ID so renames survive (same contract as the
-    conversion pass in maintenance.py). Key files are one-per-commit and
-    small — the frame is the keys of one upsert/MERGE batch — and the
-    PLANNER enforces that: partitions whose applicable key files exceed
-    `read.cdc.eq-keys-max-rows` (manifest record_count, checked driver-
-    side) are refused at plan time naming changelog_poll, so this load
-    is bounded by construction. Frames are LRU-cached per worker
-    process (see _EQ_FRAME_CACHE) so the partitions of one micro-batch
-    read each key file ~once per worker, not once per partition."""
-    from .iceberg import fileio
+    [(field_ids, key frame)]. Frames come from the conversion pass's
+    per-worker LRU (maintenance._eq_convert_key_frame: key columns by
+    field id), so the file partitions of one micro-batch read each key
+    file ~once per worker. The PLANNER bounds every load: partitions
+    whose applicable key files exceed `read.cdc.eq-keys-max-rows`
+    (manifest record_count, checked driver-side) are refused at plan
+    time naming changelog_poll."""
+    from .iceberg.maintenance import _eq_convert_key_frame
 
-    out = []
-    for path, ids in descriptors:
-        ck = (path, tuple(ids))
-        if ck in _EQ_FRAME_CACHE:
-            out.append((list(ids), _EQ_FRAME_CACHE.pop(ck)))
-            _EQ_FRAME_CACHE[ck] = out[-1][1]  # re-insert: LRU refresh
-            continue
-        with fileio.parquet_file(path) as kf:
-            by_id = {}
-            for fld in kf.schema_arrow:
-                fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-                if fid is not None:
-                    by_id[int(fid)] = fld.name
-            cols = [by_id[i] for i in ids]
-            pdf = kf.read(columns=cols).to_pandas()
-        pdf.columns = [f"f{i}" for i in ids]
-        while len(_EQ_FRAME_CACHE) >= _EQ_FRAME_CACHE_MAX:
-            _EQ_FRAME_CACHE.pop(next(iter(_EQ_FRAME_CACHE)), None)
-        _EQ_FRAME_CACHE[ck] = pdf
-        out.append((list(ids), pdf))
-    return out
-
-
-def _decode_delete_positions(descriptors, data_path: str):
-    """Deleted positions of `data_path` named by a set of delete-file
-    descriptors, executor-side. Descriptor shapes:
-      ("dv", puffin_path, offset, size)        — v3 deletion vector
-      ("pos", parquet_path)                    — v2 positional parquet
-    Returns a sorted unique int64 numpy array."""
-    import numpy as np
-
-    from .iceberg.table import strip_scheme
-
-    parts = []
-    for d in descriptors:
-        if d[0] == "dv":
-            from .iceberg import puffin
-
-            parts.append(
-                puffin.read_deletion_vector(d[1], int(d[2]), int(d[3])).astype(
-                    "int64"
-                )
-            )
-        else:
-            import pyarrow.compute as pc
-
-            from .iceberg import fileio
-
-            with fileio.parquet_file(d[1]) as pf:
-                tbl = pf.read(columns=["file_path", "pos"])
-            want = strip_scheme(data_path)
-            stripped = pc.replace_substring_regex(
-                tbl["file_path"], pattern="^[a-z0-9]+:(//)?", replacement=""
-            )
-            parts.append(
-                tbl["pos"].filter(pc.equal(stripped, want)).to_numpy(
-                    zero_copy_only=False
-                ).astype("int64")
-            )
-    if not parts:
-        return np.empty(0, dtype="int64")
-    return np.unique(np.concatenate(parts))
+    return [(list(ids), _eq_convert_key_frame(path, ids)) for path, ids in descriptors]
 
 
 try:  # pyspark >= 4: Python Data Source API
@@ -638,8 +531,9 @@ try:  # pyspark >= 4: Python Data Source API
             the NEW equality-delete files name, minus positions already
             dead (prior eq matches ∪ `prior_deletes`) — the upsert/MERGE
             commit expanded to row-level events executor-side.
-        Delete descriptors (see _decode_delete_positions) decode
-        executor-side; the driver ships only O(delete files) pointers.
+        Delete descriptors (reader.delete_entry) decode executor-side
+        (reader.delete_positions); the driver ships only O(delete
+        files) pointers.
         eq_new / eq_prior: [(key_file_path, equality_field_ids)]."""
 
         def __init__(self, path, fields, cfg, batch_rows, change,
@@ -751,13 +645,9 @@ try:  # pyspark >= 4: Python Data Source API
             if e_id == -1 or s_id == e_id:
                 return []
             t = _load_stream_table(self._options)
-            from .iceberg.write import _arrow_type
+            from .iceberg.reader import read_fields
 
-            fields = [
-                (f.field_id, f.name, _arrow_type(f.field_type),
-                 getattr(f, "initial_default", None))
-                for f in t.metadata.current_schema().fields
-            ]
+            fields = read_fields(t.metadata.current_schema())
             batch_rows = int(self._options.get("stream_batch_rows", "8192"))
             if self._mode == "cdc":
                 return self._cdc_partitions(t, s_id, e_id, fields, batch_rows)
@@ -798,6 +688,7 @@ try:  # pyspark >= 4: Python Data Source API
                 ManifestEntryStatus,
                 read_manifest,
             )
+            from .iceberg.reader import delete_entry
             from .iceberg.table import strip_scheme
 
             md = t.metadata
@@ -849,16 +740,10 @@ try:  # pyspark >= 4: Python Data Source API
                     t, s_id, e_id, fields, batch_rows
                 )
 
-            def descriptor(d):
-                if d.content_offset is not None:
-                    return ("dv", d.file_path, d.content_offset,
-                            d.content_size_in_bytes)
-                return ("pos", d.file_path)
-
             # Executor-memory bound for equality-delete expansion
             # (mirrors read.mor.driver-decode-max-positions): executors
             # load each partition's applicable key files as pandas
-            # frames (_load_eq_sets) — one small file for typical CDC
+            # frames (_eq_sets) — one small file for typical CDC
             # commits, but a bulk MERGE can commit a 100M-key file that
             # would OOM every task. Key-row counts are free driver-side
             # (manifest record_count), so refuse AT PLAN TIME naming the
@@ -949,7 +834,7 @@ try:  # pyspark >= 4: Python Data Source API
                         prior_by_path[strip_scheme(task.file.file_path)] = (
                             task.file.file_path,
                             [
-                                descriptor(d)
+                                delete_entry(d)
                                 for d in task.delete_files
                                 if d.content == DataFileContent.POSITION_DELETES
                             ],
@@ -1012,7 +897,7 @@ try:  # pyspark >= 4: Python Data Source API
                         new_dels.setdefault(
                             strip_scheme(d.referenced_data_file),
                             (d.referenced_data_file, []),
-                        )[1].append(descriptor(d))
+                        )[1].append(delete_entry(d))
                 if op == "overwrite" and removed:
                     # a file-rewriting overwrite (partial-file overwrite
                     # rewrites SURVIVORS into new files with their row
@@ -1154,13 +1039,8 @@ try:  # pyspark >= 4: Python Data Source API
             files with changes. The eq-key plan-time bound applies per
             partition exactly as in per-commit mode."""
             from .iceberg.manifest import DataFileContent
+            from .iceberg.reader import delete_entry
             from .iceberg.table import strip_scheme
-
-            def descriptor(d):
-                if d.content_offset is not None:
-                    return ("dv", d.file_path, d.content_offset,
-                            d.content_size_in_bytes)
-                return ("pos", d.file_path)
 
             try:
                 eq_keys_max = int(self._options.get(
@@ -1207,7 +1087,7 @@ try:  # pyspark >= 4: Python Data Source API
                     prior_by_path[strip_scheme(task.file.file_path)] = (
                         task.file.file_path,
                         [
-                            descriptor(d)
+                            delete_entry(d)
                             for d in task.delete_files
                             if d.content == DataFileContent.POSITION_DELETES
                         ],
@@ -1218,7 +1098,7 @@ try:  # pyspark >= 4: Python Data Source API
             for task in t.scan(snapshot_id=e_id).plan_files():
                 key = strip_scheme(task.file.file_path)
                 e_pos = [
-                    descriptor(d)
+                    delete_entry(d)
                     for d in task.delete_files
                     if d.content == DataFileContent.POSITION_DELETES
                 ]
@@ -1278,12 +1158,16 @@ try:  # pyspark >= 4: Python Data Source API
             # peak executor memory is one record batch, never the whole
             # decompressed file — at the 512 MiB default target file
             # size, materializing first would hold multi-GiB per task.
-            # Column resolution (field-id first) is shared with CDC mode
-            # via _resolve_read_plan.
+            # Column resolution (field-id first) is reader.resolve, shared
+            # with CDC mode.
+            from .iceberg.reader import resolve
+
             change = getattr(partition, "change", None)
             batch_rows = getattr(partition, "batch_rows", 8192)
+            fields = partition.fields
             with fileio.parquet_file(partition.path) as pf:
-                plan, read_cols = _resolve_read_plan(pf, partition.fields)
+                resolved = resolve(pf.schema_arrow, fields, {})
+                read_cols = [p for p in resolved.values() if p is not None]
                 if change == "delete" or (
                     change == "insert"
                     and (
@@ -1296,7 +1180,7 @@ try:  # pyspark >= 4: Python Data Source API
                     # as-inserts partitions (a file added mid-range with
                     # range-end deletions applied before emission)
                     yield from _read_change_deletes(
-                        pf, partition, plan, read_cols, batch_rows
+                        pf, partition, resolved, batch_rows
                     )
                     return
                 # CDC inserts carry v3 row lineage: exact materialized
@@ -1312,14 +1196,16 @@ try:  # pyspark >= 4: Python Data Source API
                     for rg in range(pf.metadata.num_row_groups):
                         n = pf.metadata.row_group(rg).num_rows
                         if change is None:
-                            yield _project_batch(plan, None, n, change)
+                            yield _project_batch(fields, resolved, None, n, change)
                         else:
                             ids = (
                                 list(range(frid + off, frid + off + n))
                                 if frid is not None
                                 else None
                             )
-                            yield _project_batch(plan, None, n, change, ids)
+                            yield _project_batch(
+                                fields, resolved, None, n, change, ids
+                            )
                         off += n
                     return
                 scan_cols = read_cols + ([lin_src] if lin_src else [])
@@ -1329,7 +1215,7 @@ try:  # pyspark >= 4: Python Data Source API
                 ):
                     n = batch.num_rows
                     if change is None:
-                        yield _project_batch(plan, batch, n, change)
+                        yield _project_batch(fields, resolved, batch, n, change)
                     else:
                         if lin_src is not None:
                             ids = batch.column(
@@ -1339,7 +1225,9 @@ try:  # pyspark >= 4: Python Data Source API
                             ids = list(range(frid + off, frid + off + n))
                         else:
                             ids = None
-                        yield _project_batch(plan, batch, n, change, ids)
+                        yield _project_batch(
+                            fields, resolved, batch, n, change, ids
+                        )
                     off += n
 
         def commit(self, end: dict) -> None:

@@ -158,7 +158,7 @@ def _attach_deletion_vector(t: Table, data_path: str, positions, tmp_path):
     return Table(t.identifier, md, t.metadata_location, t.catalog)
 
 
-def test_scan_applies_deletion_vector(fs_catalog, spark, sf_dir, tmp_path):
+def test_scan_applies_deletion_vector(fs_catalog, spark, sf_dir, tmp_path, monkeypatch):
     from iceberg_go_distributed_spark.datasets import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -194,11 +194,20 @@ def test_scan_applies_deletion_vector(fs_catalog, spark, sf_dir, tmp_path):
         spark
     ).count() == n0
 
-    # the Arrow fallback MOR path agrees with the JVM path
-    scan = t2.scan()
-    tasks = scan.plan_files()
-    arrow_df = scan._read_with_deletes_arrow(spark, tasks, t2.schema())
-    assert arrow_df.count() == n0 - len(positions)
+    # the Arrow fallback MOR path (taken when the JVM path fails)
+    # returns exactly the JVM path's rows
+    from iceberg_go_distributed_spark.iceberg.table import Scan
+
+    jvm_rows = sorted(tuple(r) for r in df.collect())
+
+    def jvm_fails(*_a, **_k):
+        raise RuntimeError("JVM merge-on-read unavailable")
+
+    monkeypatch.setattr(Scan, "_read_with_pos_deletes_jvm", jvm_fails)
+    arrow_df = t2.scan().to_df(spark)
+    assert "MapInArrow" in arrow_df._jdf.queryExecution().executedPlan().toString()
+    assert sorted(tuple(r) for r in arrow_df.collect()) == jvm_rows
+    assert len(jvm_rows) == n0 - len(positions)
 
 
 def test_dv_only_deletes_its_referenced_file(fs_catalog, spark, sf_dir, tmp_path):

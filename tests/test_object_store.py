@@ -135,6 +135,60 @@ def test_s3_positional_deletes(s3_catalog, spark, lineitem_df):
     li.unpersist()
 
 
+def test_s3_initial_default_through_arrow_fallbacks(s3_catalog, spark):
+    """No Hadoop connector for s3:// here, so both scans take the
+    per-file Arrow fallback: the delete-free read and the merge-on-read
+    read. Both fill a v3 initial-default for files that predate the
+    column (they used to refuse defaulted schemas)."""
+    from iceberg_go_distributed_spark.iceberg import types as ty
+    from iceberg_go_distributed_spark.iceberg.transaction import (
+        AddSchemaUpdate,
+        SetCurrentSchema,
+    )
+    from iceberg_go_distributed_spark.iceberg.types import (
+        NestedField,
+        Schema,
+        schema_from_spark,
+    )
+
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(20)], "id long, v string")
+    t = s3_catalog.create_table(
+        "db.s3_defaults",
+        schema_from_spark(df.schema),
+        location=f"s3://{BUCKET}/db/s3_defaults",
+    )
+    t.upgrade_format_version(3)
+    t.append(df.coalesce(1))
+    base = t.schema()
+    new_schema = Schema(
+        base.schema_id + 1,
+        tuple(base.fields)
+        + (
+            NestedField(
+                base.highest_field_id() + 1,
+                "cat",
+                ty.StringType(),
+                initial_default="unknown",
+                write_default="unknown",
+            ),
+        ),
+    )
+    tx = t.transaction()
+    tx.apply(
+        [AddSchemaUpdate(new_schema), SetCurrentSchema(new_schema.schema_id)], []
+    )
+    tx.commit()
+    t.refresh()
+
+    rows = sorted(tuple(r) for r in t.scan().to_df(spark).collect())
+    assert rows == [(i, f"v{i}", "unknown") for i in range(20)]
+
+    t.delete_where(spark, E.less_than("id", 5))
+    assert any(task.delete_files for task in t.scan().plan_files())
+    rows = sorted(tuple(r) for r in t.scan().to_df(spark).collect())
+    assert rows == [(i, f"v{i}", "unknown") for i in range(5, 20)]
+
+
 def test_s3_v3_deletion_vector_write(s3_catalog, spark, lineitem_df):
     """v3 write plane against the object store: the upgrade commit, the
     lineage-assigning manifest list, the executor-written puffin DV,

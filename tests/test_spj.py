@@ -130,6 +130,45 @@ def test_spj_applies_positional_deletes(spark, sf_dir, catalog):
     assert _agg_rows(got) == _agg_rows(exp)
 
 
+def test_spj_reads_renamed_columns_by_field_id(spark, catalog):
+    """A column renamed after the first append keeps its stored values
+    in SPJ bucket reads: the old files carry the pre-rename physical
+    name, and the bucket reader resolves columns by field id, never by
+    the current name (which would read NULLs)."""
+    t = _bucketed(
+        catalog,
+        "ren",
+        spark.createDataFrame([(1, 10), (1, 5), (2, 7)], "k long, v long"),
+        "k",
+        n=4,
+    )
+    t.update_schema().rename_column("v", "w").commit()
+    t.append(spark.createDataFrame([(2, 1)], "k long, w long"))
+    assert sorted(tuple(r) for r in t.scan().to_df(spark).collect()) == [
+        (1, 5),
+        (1, 10),
+        (2, 1),
+        (2, 7),
+    ]
+
+    agg = storage_partitioned_agg(spark, t, on="k", aggs={"s": ("w", "sum")})
+    assert sorted(tuple(r) for r in agg.collect()) == [(1, 15), (2, 8)]
+
+    probe = _bucketed(
+        catalog, "ren_probe", spark.createDataFrame([(1,), (2,)], "pk long"), "pk", n=4
+    )
+    joined = storage_partitioned_join(
+        spark, probe, t, on=("pk", "k"), right_select=["k", "w"]
+    )
+    assert joined.columns == ["pk", "w"]
+    assert sorted(tuple(r) for r in joined.collect()) == [
+        (1, 5),
+        (1, 10),
+        (2, 1),
+        (2, 7),
+    ]
+
+
 def test_spj_applies_equality_deletes(spark, sf_dir, catalog):
     """Equality deletes (the MERGE/upsert debt shape) are matched
     in-task by field id with NULL==NULL semantics — a hot MERGE table

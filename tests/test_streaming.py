@@ -543,6 +543,37 @@ def test_iceberg_stream_source_survives_column_rename(tmp_path, spark):
     assert sorted(seen) == [(1, "a"), (2, "b")]
 
 
+def test_iceberg_stream_source_survives_int_to_long_promotion(tmp_path, spark):
+    """Files written before an int→long promotion still carry int32
+    columns; the stream source casts them to the table type, so the
+    availableNow stream delivers exactly the batch scan's rows."""
+    from iceberg_go_distributed_spark.iceberg.types import LongType
+    from iceberg_go_distributed_spark.streaming import iceberg_stream
+
+    wh = str(tmp_path / "wh")
+    cat = FileSystemCatalog(wh)
+    df = spark.createDataFrame([(1, 7)], "id long, v int")
+    t = cat.create_table("db.prom", schema_from_spark(df.schema))
+    t.append(df.coalesce(1))  # physical int32 column
+    t.update_schema().update_column("v", LongType()).commit()
+    t.append(spark.createDataFrame([(2, 8)], "id long, v long").coalesce(1))
+    want = sorted(tuple(r) for r in t.scan().to_df(spark).collect())
+    assert want == [(1, 7), (2, 8)]
+
+    seen: list[tuple] = []
+    q = (
+        iceberg_stream(spark, wh, "db.prom")
+        .writeStream.foreachBatch(
+            lambda b, _id: seen.extend(tuple(r) for r in b.collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert sorted(seen) == want
+
+
 def test_iceberg_stream_source_full_lineitem_types(tmp_path, spark, sf_dir):
     """Type fidelity through the Arrow bridge: timestamps, doubles,
     ints, and strings stream bit-identically to the batch scan."""

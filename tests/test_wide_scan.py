@@ -4,14 +4,14 @@ Above `read.spark.max-listed-files` matched files, plain scans stop
 passing a python path list to spark.read.parquet (py4j + driver
 InMemoryFileIndex are O(files): 72 s at 100k files, SCALE.md r13) and
 stream the paths to executors as a DataFrame; each task reads its files
-with pyarrow, resolving columns BY FIELD ID like the JVM path. These
+through the shared per-file reader (iceberg/reader.py), resolving
+columns BY FIELD ID like the JVM path. These
 tests force the route with max-listed-files=1 and pin parity against
 the listed path on the shapes that distinguish the two:
 
   * schema evolution: renamed column + int→long promotion — field-id
     resolution must return the stored values under the NEW name, never
-    name-matched nulls (the difference from the old name-based
-    `_read_files_arrow` fallback);
+    name-matched nulls;
   * post-evolution null-fill for files predating an added column;
   * residual filters (pushed per-file when names align; outer .where
     guarantees semantics either way) and column projection;
@@ -520,7 +520,7 @@ def test_arrow_read_file_single_open_and_pruned_columns(tmp_path, monkeypatch):
     import pyarrow.parquet as pq
 
     from iceberg_go_distributed_spark.iceberg import fileio
-    from iceberg_go_distributed_spark.iceberg.table import _arrow_read_file
+    from iceberg_go_distributed_spark.iceberg.reader import _arrow_read_file
 
     path = str(tmp_path / "f.parquet")
     schema = pa.schema(
