@@ -166,60 +166,6 @@ def write_datum(out: BinaryIO, schema: Any, value: Any) -> None:
         raise TypeError(f"unsupported avro type {t!r}")
 
 
-def read_datum(buf: BinaryIO, schema: Any) -> Any:
-    t = _schema_type(schema)
-    if t == "union":
-        idx = _read_long(buf)
-        return read_datum(buf, schema[idx])
-    if t == "null":
-        return None
-    if t == "boolean":
-        b = buf.read(1)
-        if not b:
-            raise EOFError("unexpected end of avro data")
-        return b != b"\x00"
-    if t in ("int", "long"):
-        return _read_long(buf)
-    if t == "float":
-        return struct.unpack("<f", _read_exact(buf, 4))[0]
-    if t == "double":
-        return struct.unpack("<d", _read_exact(buf, 8))[0]
-    if t == "string":
-        return _read_bytes(buf).decode("utf-8")
-    if t == "bytes":
-        return _read_bytes(buf)
-    if t == "fixed":
-        return _read_exact(buf, schema["size"])
-    if t == "record":
-        return {f["name"]: read_datum(buf, f["type"]) for f in schema["fields"]}
-    if t == "array":
-        out = []
-        while True:
-            n = _read_long(buf)
-            if n == 0:
-                break
-            if n < 0:  # block with byte size prefix
-                _read_long(buf)
-                n = -n
-            for _ in range(n):
-                out.append(read_datum(buf, schema["items"]))
-        return out
-    if t == "map":
-        out = {}
-        while True:
-            n = _read_long(buf)
-            if n == 0:
-                break
-            if n < 0:
-                _read_long(buf)
-                n = -n
-            for _ in range(n):
-                k = _read_bytes(buf).decode("utf-8")
-                out[k] = read_datum(buf, schema["values"])
-        return out
-    raise TypeError(f"unsupported avro type {t!r}")
-
-
 # --------------------------------------------- codegen'd block reader
 #
 # r14 compiled the schema walk into closure trees; the remaining cold
@@ -383,6 +329,61 @@ class _SrcGen:
             self.block_loop(lines, ind, body)
         else:
             raise TypeError(f"unsupported avro type {t!r}")
+
+    def skip(self, lines, ind, schema):
+        """Emit code that moves `pos` past one datum of `schema` without
+        building a value: varints are scanned to their last byte, and
+        strings, bytes and fixed are jumped over by length. Same bounds
+        checks as `emit`, so truncated data still fails loudly."""
+        t = _schema_type(schema)
+        if t == "null":
+            lines.append(f"{ind}pass")
+        elif t == "boolean":
+            self.advance(lines, ind, "1")
+        elif t in ("int", "long"):
+            lines.append(f"{ind}while data[pos] > 127: pos += 1")
+            lines.append(f"{ind}pos += 1")
+        elif t in ("float", "double", "fixed"):
+            size = {"float": 4, "double": 8}.get(t)
+            if size is None:
+                size = int(schema["size"])  # validated literal, as in emit
+                if size < 0:
+                    raise ValueError(f"negative avro fixed size {size}")
+            self.advance(lines, ind, str(size))
+        elif t in ("string", "bytes"):
+            ln = self.fresh("L")
+            self.length(lines, ind, ln)
+            self.advance(lines, ind, ln)
+        elif t == "union":
+            idx = self.fresh("u")
+            self.varint(lines, ind, idx)
+            for i, branch in enumerate(schema):
+                lines.append(f"{ind}{'if' if i == 0 else 'elif'} {idx} == {i}:")
+                self.skip(lines, ind + "    ", branch)
+            lines.append(f"{ind}else:")
+            lines.append(f"{ind}    raise IndexError('bad union index %d' % {idx})")
+        elif t == "record":
+            lines.append(f"{ind}pass")
+            for f in schema["fields"]:
+                self.skip(lines, ind, f["type"])
+        elif t == "array":
+            self.block_loop(lines, ind, lambda i2: self.skip(lines, i2, schema["items"]))
+        elif t == "map":
+
+            def body(ind2):
+                self.skip(lines, ind2, "string")
+                self.skip(lines, ind2, schema["values"])
+
+            self.block_loop(lines, ind, body)
+        else:
+            raise TypeError(f"unsupported avro type {t!r}")
+
+    def advance(self, lines, ind, length_expr):
+        """Bounds-checked `pos += length_expr`."""
+        end = self.fresh("E")
+        lines.append(f"{ind}{end} = pos + {length_expr}")
+        lines.append(f"{ind}if {end} > _dlen: raise _EOF('unexpected end of avro data')")
+        lines.append(f"{ind}pos = {end}")
 
     def compile(self, lines, name="_decode_block"):
         src = "\n".join(lines)

@@ -18,6 +18,8 @@ from dataclasses import dataclass, field, replace
 from enum import IntEnum
 from typing import Any, Iterable, Optional
 
+import numpy as np
+
 from . import avro as avro_io
 from .partitioning import PartitionSpec
 from .types import (
@@ -551,12 +553,79 @@ def _emit_kv_map_reader(g, schema, lines, ind, var):
     return True
 
 
-def _compile_entry_reader(schema):
+def _emit_kv_map_capture(g, schema, lines, ind, wanted):
+    """Column-mode twin of `_emit_kv_map_reader`: walk the k_v map,
+    storing the values of the `wanted` {key: var} items and skipping
+    the rest (the vars must already hold None). False when the shape
+    doesn't match."""
+    shape = _kv_map_shape(schema)
+    if shape is None:
+        return False
+    null_idx, vt = shape
+
+    def item(ind2):
+        # a varint is prefix-free, so a key equals `fid` exactly when its
+        # bytes equal fid's encoding: compare raw bytes, and items of
+        # other columns never decode their key
+        kb = g.fresh("kb")
+        if wanted:
+            lines.append(f"{ind2}{kb} = data[pos]")
+        for i, (fid, var) in enumerate(wanted.items()):
+            buf = io.BytesIO()
+            avro_io._write_long(buf, int(fid))
+            enc = buf.getvalue()
+            same = " and ".join(
+                f"data[pos + {j}] == {b}" if j else f"{kb} == {b}"
+                for j, b in enumerate(enc)
+            )
+            lines.append(f"{ind2}{'if' if i == 0 else 'elif'} {same}:")
+            lines.append(f"{ind2}    pos += {len(enc)}")
+            g.emit(lines, ind2 + "    ", vt, var)
+        body = ind2
+        if wanted:
+            lines.append(f"{ind2}else:")
+            body = ind2 + "    "
+        g.skip(lines, body, "long")
+        g.skip(lines, body, vt)
+
+    if null_idx is None:
+        g.block_loop(lines, ind, item)
+    else:
+        u = g.fresh("u")
+        g.varint(lines, ind, u)
+        lines.append(f"{ind}if {u} != {null_idx}:")
+        g.block_loop(lines, ind + "    ", item)
+    return True
+
+
+# the stats a column-mode row carries per requested field id, in order
+_STATS_COLUMNS = (
+    "value_counts",
+    "null_value_counts",
+    "nan_value_counts",
+    "lower_bounds",
+    "upper_bounds",
+)
+# column-mode data_file fields decoded into the row; the rest are skipped
+_ROW_FIELDS = ("content", "record_count", "first_row_id", "partition")
+
+
+def _compile_entry_reader(schema, stats_ids=None):
     """Writer schema (parsed JSON) → codegen'd BLOCK reader
-    `fn(data, pos, count, append)` appending ManifestEntry objects, or
-    None when the schema isn't a manifest_entry record of the known
-    shape (read_ocf then falls back to the generic datum model +
-    _entry_from_avro, so semantics can never diverge).
+    `fn(data, pos, count, append)`, or None when the schema isn't a
+    manifest_entry record of the known shape (read_ocf then falls back
+    to the generic datum model + _entry_from_avro, so semantics can
+    never diverge).
+
+    Object mode (`stats_ids` None) appends one ManifestEntry per entry.
+    Column mode (`stats_ids` a tuple of field ids) appends one row tuple
+    per entry holding only what the pruning cascade reads:
+    `(payload, offset, status, content, record_count, first_row_id,
+    partition, *stats)`, where `partition` is a tuple of (name, value)
+    pairs and `stats` holds the five `_STATS_COLUMNS` per requested
+    field id (None when absent). Every other field is skipped without
+    being built; `(payload, offset)` lets the object-mode reader decode
+    that one entry later (`ManifestBlock.entry`).
 
     Fuses two layers the generic path pays per entry: the intermediate
     datum dicts ({"key","value"} per stats item, record dicts) and the
@@ -566,6 +635,7 @@ def _compile_entry_reader(schema):
         return None
     if schema.get("name") != "manifest_entry":
         return None
+    columns = stats_ids is not None
     g = avro_io._SrcGen()
     lines = [
         "def _decode_entries(data, pos, count, append):",
@@ -575,6 +645,13 @@ def _compile_entry_reader(schema):
     ind = "        "
     entry_vars: dict[str, str] = {}
     df_vars: dict[str, str] = {}
+    stat_vars = {
+        (m, fid): g.fresh("s") for fid in (stats_ids or ()) for m in _STATS_COLUMNS
+    }
+    if columns:
+        lines.append(f"{ind}_p0 = pos")
+        if stat_vars:
+            lines.append(f"{ind}{' = '.join(stat_vars.values())} = None")
     saw_data_file = False
     for f in schema.get("fields") or []:
         nm = f["name"]
@@ -587,22 +664,63 @@ def _compile_entry_reader(schema):
                 dnm = df_f["name"]
                 v = g.fresh("d")
                 if dnm in _STATS_MAP_FIELDS:
-                    if not _emit_kv_map_reader(g, df_f["type"], lines, ind, v):
+                    if columns:
+                        wanted = {
+                            fid: stat_vars[(dnm, fid)]
+                            for fid in stats_ids
+                            if (dnm, fid) in stat_vars
+                        }
+                        ok = _emit_kv_map_capture(g, df_f["type"], lines, ind, wanted)
+                    else:
+                        ok = _emit_kv_map_reader(g, df_f["type"], lines, ind, v)
+                    if not ok:
                         return None  # unexpected stats encoding: generic path
+                elif columns and dnm == "partition":
+                    ps = df_f["type"]
+                    if not (isinstance(ps, dict) and ps.get("type") == "record"):
+                        return None
+                    pairs = []
+                    for pf in ps.get("fields") or []:
+                        pv = g.fresh("p")
+                        g.emit(lines, ind, pf["type"], pv)
+                        # the name comes from the file header: bound in
+                        # the namespace, never spliced into the source
+                        pairs.append(f"({g.bind('pn', pf['name'])}, {pv})")
+                    lines.append(f"{ind}{v} = ({''.join(p + ', ' for p in pairs)})")
+                elif columns and dnm not in _ROW_FIELDS:
+                    g.skip(lines, ind, df_f["type"])
                 else:
                     # writer-only fields (e.g. v1 block_size_in_bytes)
                     # are decoded for stream position but dropped below
                     g.emit(lines, ind, df_f["type"], v)
                 if dnm in _DF_DEFAULTS:
                     df_vars[dnm] = v
-        elif nm == "status" or nm in _ENTRY_FIELDS:
+        elif nm in _ENTRY_FIELDS:
             v = g.fresh("e")
-            g.emit(lines, ind, f["type"], v)
-            entry_vars[nm] = v
+            if columns and nm != "status":
+                g.skip(lines, ind, f["type"])
+            else:
+                g.emit(lines, ind, f["type"], v)
+                entry_vars[nm] = v
         else:
             return None  # unknown entry-level field: generic path
     if "status" not in entry_vars or not saw_data_file or not df_vars:
         return None
+
+    if columns:
+        row = [
+            "data",
+            "_p0",
+            entry_vars["status"],
+            f"{df_vars['content']} or 0" if "content" in df_vars else "0",
+            df_vars.get("record_count", "0"),
+            df_vars.get("first_row_id", "None"),
+            df_vars.get("partition", "()"),
+            *stat_vars.values(),
+        ]
+        lines.append(f"{ind}append(({', '.join(row)}))")
+        lines.append("    return pos")
+        return g.compile(lines, name="_decode_entries")
 
     # absent DataFile fields get their dataclass defaults (v1 manifests
     # lack content/equality_ids/…), mirroring _entry_from_avro's d.get()
@@ -641,23 +759,25 @@ def _compile_entry_reader(schema):
     return g.compile(lines, name="_decode_entries")
 
 
-# fused readers memoized by raw schema bytes (False = schema rejected,
-# use the generic path); population is one per writer schema version.
-# Locked like avro's block-reader memo: planner threads share it.
-_ENTRY_READER_MEMO: dict[bytes, Any] = {}
+# fused readers memoized by (raw schema bytes, stats ids) (False =
+# schema rejected, use the generic path); population is one per writer
+# schema version and predicate column set. Locked like avro's
+# block-reader memo: planner threads share it.
+_ENTRY_READER_MEMO: dict[tuple, Any] = {}
 _ENTRY_READER_MEMO_MAX = 64
 _ENTRY_READER_LOCK = threading.Lock()
 
 
-def _entry_reader_factory(schema, raw_schema):
+def _entry_reader_factory(schema, raw_schema, stats_ids=None):
+    key = (raw_schema, stats_ids)
     with _ENTRY_READER_LOCK:
-        r = _ENTRY_READER_MEMO.get(raw_schema)
+        r = _ENTRY_READER_MEMO.get(key)
     if r is None:
-        r = _compile_entry_reader(schema) or False
+        r = _compile_entry_reader(schema, stats_ids) or False
         with _ENTRY_READER_LOCK:
             while len(_ENTRY_READER_MEMO) >= _ENTRY_READER_MEMO_MAX:
                 _ENTRY_READER_MEMO.pop(next(iter(_ENTRY_READER_MEMO)), None)
-            _ENTRY_READER_MEMO[raw_schema] = r
+            _ENTRY_READER_MEMO[key] = r
     return r or None
 
 
@@ -756,28 +876,231 @@ def positional_delete_schema() -> Schema:
     )
 
 
+def _copy_entry(p: ManifestEntry) -> ManifestEntry:
+    """Two-level shallow copy: entry and data_file ATTRIBUTES become
+    caller-owned, inner collections stay shared (see read_manifest)."""
+    df = DataFile.__new__(DataFile)
+    df.__dict__ = dict(p.data_file.__dict__)
+    e = ManifestEntry.__new__(ManifestEntry)
+    e.__dict__ = dict(p.__dict__)
+    e.data_file = df
+    return e
+
+
+class ManifestBlock:
+    """One manifest's entries in column form: what the pruning cascade
+    reads, one list (or array) per field, instead of one DataFile per
+    entry. Planning evaluates a whole block per evaluator call and
+    builds full ManifestEntry objects only for the entries it keeps.
+
+    Two origins, one interface:
+      * `of_rows` — the column-mode entry reader's rows. Holds stats for
+        the decoded field ids only (`stats` raises KeyError for others)
+        and decodes full entries from their payload offsets on demand.
+      * `of_entries` / `of_files` — already-decoded objects (the generic
+        Avro fallback, `read_manifest` misses, planned tasks, tests).
+        Stats of any field id derive from the objects.
+
+    Read-only once built, apart from memoized derived columns."""
+
+    __slots__ = (
+        "live",
+        "content",
+        "record_count",
+        "first_row_id",
+        "partitions",
+        "_stats",
+        "_payloads",
+        "_offsets",
+        "_reader",
+        "_protos",
+        "_row_ids",
+        "_derived",
+    )
+
+    def __init__(self, status, content, record_count, first_row_id, partitions):
+        # live = not DELETED; status codes are ManifestEntryStatus ints
+        self.live = np.array(status, dtype=np.int64) != 2
+        self.content = content
+        self.record_count = np.array(record_count, dtype=np.int64)
+        self.first_row_id = first_row_id
+        self.partitions = partitions  # per entry: tuple of (name, value)
+        self._stats: dict = {}
+        self._payloads = self._offsets = self._reader = None
+        self._protos: Optional[list] = None
+        self._row_ids: Optional[list] = None
+        self._derived: dict = {}
+
+    @classmethod
+    def of_rows(cls, rows, stats_ids, reader) -> "ManifestBlock":
+        """Block over column-mode reader rows (see _compile_entry_reader);
+        `reader` is the object-mode reader of the same writer schema."""
+        width = 7 + len(_STATS_COLUMNS) * len(stats_ids)
+        cols = list(zip(*rows)) if rows else [()] * width
+        block = cls(*cols[2:7])
+        block._payloads, block._offsets, block._reader = cols[0], cols[1], reader
+        k = len(_STATS_COLUMNS)
+        for j, fid in enumerate(stats_ids):
+            block._stats[fid] = tuple(cols[7 + k * j : 7 + k * (j + 1)])
+        return block
+
+    @classmethod
+    def of_entries(cls, entries: list) -> "ManifestBlock":
+        files = [e.data_file for e in entries]
+        block = cls(
+            [e.status for e in entries],
+            [f.content for f in files],
+            [f.record_count for f in files],
+            [f.first_row_id for f in files],
+            [tuple((f.partition or {}).items()) for f in files],
+        )
+        block._protos = list(entries)
+        return block
+
+    @classmethod
+    def of_files(cls, files) -> "ManifestBlock":
+        """Block over bare data files (all live), e.g. planned tasks."""
+        return cls.of_entries(
+            [ManifestEntry(ManifestEntryStatus.ADDED, None, None, None, f) for f in files]
+        )
+
+    def __len__(self) -> int:
+        return len(self.record_count)
+
+    def covers(self, stats_ids) -> bool:
+        """True when `stats(fid)` answers every field id in `stats_ids`."""
+        return self._protos is not None or all(f in self._stats for f in stats_ids)
+
+    def stats(self, fid: int) -> tuple:
+        """Per-entry `_STATS_COLUMNS` of field `fid`: value, null and NaN
+        counts, lower and upper bound bytes; None where absent."""
+        out = self._stats.get(fid)
+        if out is None:
+            if self._protos is None:
+                raise KeyError(
+                    f"stats of field id {fid} were not decoded; pass it in stats_ids"
+                )
+            files = [p.data_file for p in self._protos]
+            out = tuple(
+                [m.get(fid) if m else None for m in (getattr(f, c) for f in files)]
+                for c in _STATS_COLUMNS
+            )
+            self._stats[fid] = out
+        return out
+
+    def derived(self, key, make):
+        """`make()`, memoized on this block under `key`: evaluators keep
+        the columns they derive from a cached block for later plans."""
+        out = self._derived.get(key)
+        if out is None:
+            out = self._derived[key] = make()
+        return out
+
+    def partition_mask(self, pred) -> np.ndarray:
+        """`pred(partition dict)` per entry, called once per distinct
+        partition tuple."""
+        verdict = {key: bool(pred(dict(key))) for key in set(self.partitions)}
+        return np.fromiter(
+            map(verdict.__getitem__, self.partitions), bool, len(self.partitions)
+        )
+
+    def entries(self) -> list[ManifestEntry]:
+        """Every entry as a full ManifestEntry prototype, decoded once and
+        memoized. Read-only: hand out `_copy_entry` copies."""
+        if self._protos is None:
+            protos: list = []
+            n, i = len(self), 0
+            while i < n:  # entries of one OCF block are contiguous
+                data, j = self._payloads[i], i + 1
+                while j < n and self._payloads[j] is data:
+                    j += 1
+                self._reader(data, self._offsets[i], j - i, protos.append)
+                i = j
+            self._protos = protos
+        return self._protos
+
+    def entry(self, i: int) -> ManifestEntry:
+        """A caller-owned ManifestEntry for entry `i`."""
+        if self._protos is not None:
+            return _copy_entry(self._protos[i])
+        out: list = []
+        self._reader(self._payloads[i], self._offsets[i], 1, out.append)
+        return out[0]
+
+    def row_id_offsets(self) -> list:
+        """Per entry, the offset into the manifest's first_row_id range
+        that inheritance assigns it, or None. Live DATA files without an
+        explicit first_row_id consume `record_count` ids each, in order,
+        whether or not a scan keeps them (spec assignment rule)."""
+        if self._row_ids is None:
+            offsets, running = [], 0
+            for live, content, frid, rc in zip(
+                self.live.tolist(),
+                self.content,
+                self.first_row_id,
+                self.record_count.tolist(),
+            ):
+                if live and content == DataFileContent.DATA and frid is None:
+                    offsets.append(running)
+                    running += rc
+                else:
+                    offsets.append(None)
+            self._row_ids = offsets
+        return self._row_ids
+
+
+def _decode_manifest(path: str, stats_ids) -> ManifestBlock:
+    """One `avro.read_ocf` pass over manifest `path`. With `stats_ids`
+    (a tuple) the column-mode reader builds the block; with None, or
+    when the schema has no column-mode reader, whole entries are
+    decoded (fused object reader, else generic datums +
+    `_entry_from_avro`)."""
+    col_readers = []
+
+    def factory(schema, raw_schema):
+        obj = _entry_reader_factory(schema, raw_schema)
+        if stats_ids is None or obj is None:
+            return obj
+        col = _entry_reader_factory(schema, raw_schema, stats_ids)
+        if col is None:
+            return obj
+        col_readers.append(obj)
+        return col
+
+    _, _, rows = avro_io.read_ocf(path, record_reader_factory=factory)
+    if col_readers:
+        return ManifestBlock.of_rows(rows, stats_ids, col_readers[0])
+    if rows and not isinstance(rows[0], ManifestEntry):
+        rows = [_entry_from_avro(r) for r in rows]
+    return ManifestBlock.of_entries(rows)
+
+
 # Manifests are immutable once written (new state = new file), so
-# caching the decoded entries is safe and makes repeated scans
-# O(entries) in Python with no re-decode. The cache holds fully built
-# PROTOTYPE entries (avro decode + _entry_from_avro paid once per
-# manifest); read_manifest hands out per-call copies because callers
-# mutate entry/data_file ATTRIBUTES (status, sequence numbers,
-# first_row_id). The copy is two-level shallow: the inner collections
-# (partition dict, stats maps, split_offsets/equality_ids lists) stay
-# shared — nothing in the repo mutates those on a read entry, they are
-# replaced wholesale only when building NEW DataFiles at write time.
-# Remote plans read manifests from a thread pool (map_manifests), so
-# eviction must be guarded: an unlocked pop(next(iter(...))) races
-# another thread's eviction of the same oldest key and dies with
-# KeyError mid-plan.
+# caching their decoded entries is safe and makes repeated scans skip
+# the Avro decode. The cache holds one ManifestBlock per manifest: a
+# planning scan decodes the column form (status, content, record_count,
+# first_row_id, partition tuple, the stats of the scan's predicate
+# columns, and each entry's payload offset); full ManifestEntry
+# prototypes are added to a block only when `read_manifest` asks for
+# them. A resident block decoded for other predicate columns is decoded
+# again, for the union of both sets, and replaced in place. Remote plans
+# read manifests from a thread pool (map_manifests), so eviction must be
+# guarded: an unlocked pop(next(iter(...))) races another thread's
+# eviction of the same oldest key and dies with KeyError mid-plan.
 #
-# Capacity is bounded by TOTAL CACHED ENTRIES, not manifest count: at
-# ~2.3 KB per prototype entry (measured) the 1M-entry default is
-# ≤ ~2.3 GB — sized for a planner driver with Spark's default heap
-# alongside; override with SPARK_GRAFT_MANIFEST_CACHE_ENTRIES for
-# smaller drivers (0 disables caching). _OCF_CACHE_MAX stays as a
-# secondary file-count bound for pathological many-tiny-manifest
-# layouts.
+# Capacity is bounded by TOTAL CACHED ENTRIES, not manifest count. A
+# column block costs ~500 bytes per entry, the decompressed payload its
+# offsets point into included (~380 with no stats decoded), plus ~60
+# per predicate column once evaluated (the memoized numpy columns); a
+# block holding prototypes costs ~2.7 KB per entry (tracemalloc, the
+# 250-entry two-column manifests of perfbench's plan_cold_wide, stats
+# of one column). So the 1M-entry default holds ≤ ~0.6 GB of planning
+# blocks, ≤ ~2.7 GB if every manifest was also read whole — sized for a
+# planner driver with Spark's default heap alongside; override with
+# SPARK_GRAFT_MANIFEST_CACHE_ENTRIES for smaller drivers (0 disables
+# caching). A manifest with more entries than the budget is returned
+# uncached and evicts nothing. _OCF_CACHE_MAX stays as a secondary
+# file-count bound for pathological many-tiny-manifest layouts.
 #
 # Eviction is FIFO, so walking a snapshot N× wider than the cache in
 # list order evicts exactly what the next plan reads first: 0 hits.
@@ -786,7 +1109,7 @@ def positional_delete_schema() -> Schema:
 # for the next plan — for a 1/N hit ratio, the best any cache of this
 # size can do on a cyclic walk. 24 × 250 entries against a 3000-entry
 # cache (N = 2), 4-core host: 24 → 12 decodes, ~140 → ~77 ms per plan.
-_OCF_CACHE: dict[str, list] = {}
+_OCF_CACHE: dict[str, ManifestBlock] = {}
 _OCF_CACHE_MAX = 8192
 _OCF_CACHE_MAX_ENTRIES = int(
     os.environ.get("SPARK_GRAFT_MANIFEST_CACHE_ENTRIES", "1000000")
@@ -795,38 +1118,42 @@ _OCF_CACHE_ENTRY_COUNT = 0  # guarded by _OCF_CACHE_LOCK
 _OCF_CACHE_LOCK = threading.Lock()
 
 
-def _read_manifest_prototypes(path: str) -> list[ManifestEntry]:
+def _read_manifest_block(path: str, stats_ids=(), full: bool = False) -> ManifestBlock:
+    """The cached block of manifest `path`, decoded on a miss. `stats_ids`
+    are the field ids whose stats the caller's evaluator reads; `full`
+    callers want every entry, so a miss decodes whole entries."""
     global _OCF_CACHE_ENTRY_COUNT
+    stats_ids = tuple(sorted(set(stats_ids)))
     cached = _OCF_CACHE.get(path)
-    if cached is None:
-        # decode outside the lock (the slow part; worst case two threads
-        # decode the same new manifest once each — benign for an
-        # immutable file). The fused reader decodes straight to
-        # ManifestEntry objects; read_ocf falls back to the generic
-        # dict model + _entry_from_avro for unknown schemas.
-        _, _, cached = avro_io.read_ocf(
-            path, record_reader_factory=_entry_reader_factory
-        )
-        if cached and not isinstance(cached[0], ManifestEntry):
-            cached = [_entry_from_avro(r) for r in cached]
-        with _OCF_CACHE_LOCK:
-            # two threads can decode the same new manifest concurrently:
-            # the loser must not re-insert, or the entry count inflates
-            # by len(cached) per race and evicts prematurely forever
-            prior = _OCF_CACHE.get(path)
-            if prior is not None:
+    if cached is not None and cached.covers(stats_ids):
+        return cached
+    if cached is not None:  # resident, decoded for other columns: widen
+        stats_ids = tuple(sorted(set(stats_ids) | set(cached._stats)))
+    # decode outside the lock (the slow part; worst case two threads
+    # decode the same new manifest once each — benign for an immutable
+    # file)
+    block = _decode_manifest(path, None if full and cached is None else stats_ids)
+    n = len(block)
+    with _OCF_CACHE_LOCK:
+        # two threads can decode the same new manifest concurrently:
+        # the loser must not re-insert, or the entry count inflates by
+        # n per race and evicts prematurely forever
+        prior = _OCF_CACHE.get(path)
+        if prior is not None:
+            if prior.covers(stats_ids):
                 return prior
+            _OCF_CACHE[path] = block  # same entries, more columns
+        elif n <= _OCF_CACHE_MAX_ENTRIES:
             while _OCF_CACHE and (
                 len(_OCF_CACHE) >= _OCF_CACHE_MAX
-                or _OCF_CACHE_ENTRY_COUNT + len(cached) > _OCF_CACHE_MAX_ENTRIES
+                or _OCF_CACHE_ENTRY_COUNT + n > _OCF_CACHE_MAX_ENTRIES
             ):
                 old = _OCF_CACHE.pop(next(iter(_OCF_CACHE)), None)
                 if old is not None:
                     _OCF_CACHE_ENTRY_COUNT -= len(old)
-            if len(cached) <= _OCF_CACHE_MAX_ENTRIES:
-                _OCF_CACHE[path] = cached
-                _OCF_CACHE_ENTRY_COUNT += len(cached)
-    return cached
+            _OCF_CACHE[path] = block
+            _OCF_CACHE_ENTRY_COUNT += n
+    return block
 
 
 def is_resident(path: str) -> bool:
@@ -876,29 +1203,16 @@ def read_manifest(
     collections — partition dict, stats maps, split_offsets/equality_ids
     lists — are SHARED with the manifest cache's prototypes and must be
     treated as immutable; replace them wholesale, never mutate in place."""
-    _df_new, _e_new = DataFile.__new__, ManifestEntry.__new__
-    entries = []
-    for p in _read_manifest_prototypes(path):
-        df = _df_new(DataFile)
-        df.__dict__.update(p.data_file.__dict__)
-        e = _e_new(ManifestEntry)
-        e.__dict__.update(p.__dict__)
-        e.data_file = df
-        entries.append(e)
+    block = _read_manifest_block(path, full=True)
+    entries = [_copy_entry(p) for p in block.entries()]
     if inherit_sequence_number is not None:
         for e in entries:
             if e.sequence_number is None:
                 e.sequence_number = inherit_sequence_number
     if inherit_first_row_id is not None:
-        running = inherit_first_row_id
-        for e in entries:
-            if e.data_file.content != DataFileContent.DATA:
-                continue
-            if e.status == ManifestEntryStatus.DELETED:
-                continue
-            if e.data_file.first_row_id is None:
-                e.data_file.first_row_id = running
-                running += e.data_file.record_count
+        for e, off in zip(entries, block.row_id_offsets()):
+            if off is not None:
+                e.data_file.first_row_id = inherit_first_row_id + off
     if discard_deleted:
         entries = [e for e in entries if e.status != ManifestEntryStatus.DELETED]
     return entries
@@ -909,44 +1223,32 @@ def scan_manifest(
     keep,
     inherit_sequence_number: Optional[int] = None,
     inherit_first_row_id: Optional[int] = None,
+    stats_ids: tuple = (),
 ) -> list[ManifestEntry]:
-    """Planner-oriented filtered read: evaluate `keep(prototype_entry)`
-    on the cached PROTOTYPES (read-only — the callback must not mutate
-    them or their collections) and return fresh two-level shallow copies
-    of only the survivors, with sequence-number / first_row_id
-    inheritance applied exactly as `read_manifest` would have. DELETED
-    entries are always discarded (and, per the spec assignment rule,
-    never consume from the manifest's first_row_id range, while
-    non-kept live DATA files still do). A selective plan discards most
-    entries, so copying survivors only removes the dominant per-entry
-    cost of the filtered read — equivalence with
-    read_manifest-then-filter is pinned by
-    tests/test_manifest_io.py::test_scan_manifest_matches_filtered_read."""
-    _df_new, _e_new = DataFile.__new__, ManifestEntry.__new__
+    """Planner-oriented filtered read: `keep(block)` gets the manifest's
+    cached ManifestBlock (read-only) and returns one bool per entry.
+    Full ManifestEntry objects are built only for the kept live entries,
+    with sequence-number / first_row_id inheritance applied exactly as
+    `read_manifest` would have. DELETED entries are always discarded
+    (and, per the spec assignment rule, never consume from the
+    manifest's first_row_id range, while non-kept live DATA files still
+    do). `stats_ids` are the field ids whose stats `keep` reads
+    (`block.stats`). Equivalence with read_manifest-then-filter is
+    pinned by tests/test_manifest_io.py."""
+    block = _read_manifest_block(path, stats_ids)
+    mask = np.asarray(keep(block), dtype=bool)
+    if mask.shape != block.live.shape:
+        raise ValueError(
+            f"keep returned {mask.shape} verdicts for a {len(block)}-entry manifest"
+        )
+    row_ids = block.row_id_offsets() if inherit_first_row_id is not None else None
     out = []
-    running = inherit_first_row_id
-    for p in _read_manifest_prototypes(path):
-        deleted = p.status == ManifestEntryStatus.DELETED
-        frid = None
-        if (
-            running is not None
-            and not deleted
-            and p.data_file.content == DataFileContent.DATA
-            and p.data_file.first_row_id is None
-        ):
-            frid = running
-            running += p.data_file.record_count
-        if deleted or not keep(p):
-            continue
-        df = _df_new(DataFile)
-        df.__dict__ = dict(p.data_file.__dict__)
-        e = _e_new(ManifestEntry)
-        e.__dict__ = dict(p.__dict__)
-        e.data_file = df
+    for i in np.flatnonzero(mask & block.live).tolist():
+        e = block.entry(i)
         if inherit_sequence_number is not None and e.sequence_number is None:
             e.sequence_number = inherit_sequence_number
-        if frid is not None:
-            df.first_row_id = frid
+        if row_ids is not None and row_ids[i] is not None:
+            e.data_file.first_row_id = inherit_first_row_id + row_ids[i]
         out.append(e)
     return out
 

@@ -253,7 +253,7 @@ def _side_blobs(table, pf, row_filter, spark):
     never materializes O(files) descriptors per join side (the same
     move `_stream_plan_route` made for plain scans). Delete
     descriptors are O(small) and collect driver-side; sequence-gated
-    matching (`match_deletes`) runs inside the grouping task.
+    matching (`build_delete_matcher`) runs inside the grouping task.
 
     Returns (frame, residual) — the same residual contract as
     `_side_tasks`."""

@@ -21,10 +21,12 @@ from .evaluators import (
     inclusive_metrics_evaluator,
     inclusive_projection,
     manifest_evaluator,
+    metrics_field_ids,
 )
 from .expressions import AlwaysTrue, Expression, to_spark_column
 from .manifest import (
     DataFile,
+    ManifestBlock,
     ManifestContent,
     ManifestEntry,
     ManifestEntryStatus,
@@ -168,38 +170,10 @@ def _ensure_field_id_reads(spark) -> None:
     spark._iceberg_field_id_reads = True
 
 
-def match_deletes(data_seq: int, data_path: str, delete_rows) -> tuple:
-    """Sequence-gated delete matching for one data file — the ONE copy
-    both planners share (ref scanner.go:285-309): v3 DVs match their
-    exact referenced file at seq >=, parquet positional deletes match by
-    file_path bounds at seq >=, equality deletes apply to strictly older
-    data (seq >). `delete_rows` is an iterable of (delete_seq,
-    delete_DataFile) sorted by sequence number."""
-    from .manifest import DataFileContent
-
-    picked = []
-    for d_seq, ddf in delete_rows:
-        if ddf.content == DataFileContent.POSITION_DELETES:
-            if ddf.content_offset is not None:
-                # v3 deletion vector: targets exactly one data file
-                # (referenced_data_file is required for DVs)
-                if d_seq >= data_seq and ddf.referenced_data_file == data_path:
-                    picked.append(ddf)
-            # positional: applies to same-or-older data (>=)
-            elif d_seq >= data_seq and _delete_covers_path(ddf, data_path):
-                picked.append(ddf)
-        elif ddf.content == DataFileContent.EQUALITY_DELETES:
-            # equality: applies to strictly older data (>)
-            if d_seq > data_seq:
-                picked.append(ddf)
-    return tuple(picked)
-
-
 def _ranged_delete_bounds(delete_file: DataFile):
     """Decoded (lo, hi) file_path bounds of a legacy path-ranged
     positional delete, or None when bounds are absent/undecodable (the
-    delete must then be assumed to cover every path — exactly the
-    `_delete_covers_path` early-outs)."""
+    delete must then be assumed to cover every path)."""
     from .manifest import POSITIONAL_DELETE_FILE_PATH_ID as FP
 
     lo = (delete_file.lower_bounds or {}).get(FP)
@@ -262,21 +236,27 @@ class _IntervalTree:
 
 
 def build_delete_matcher(delete_rows):
-    """Indexed form of `match_deletes` for matching MANY data files
-    against the same delete set: the linear scan is O(files × deletes),
-    which at DV-heavy scale (one DV per rewritten file) goes quadratic
-    in table size. The index keys DVs by their exact referenced data
-    file (dict hit), bisects equality deletes on the sequence gate, and
-    resolves legacy path-RANGED positional deletes through an interval
+    """Sequence-gated delete matching — ref scanner.go:285-309.
+    `delete_rows` is a list of (delete_seq, delete DataFile) sorted by
+    sequence number; the returned `match(data_seq, data_path)` gives the
+    tuple of deletes that apply to one data file, in delete_rows order.
+    v3 DVs match their exact referenced file at seq >=, parquet
+    positional deletes match by file_path bounds at seq >= (absent or
+    undecodable bounds cover every path), and equality deletes apply to
+    strictly older data (seq >).
+
+    Indexed for matching MANY data files against the same delete set (a
+    linear scan is O(files × deletes), quadratic in table size at
+    DV-heavy scale): DVs are keyed by their exact referenced data file
+    (dict hit), equality deletes bisected on the sequence gate, and
+    legacy path-RANGED positional deletes resolved through an interval
     tree over their decoded file_path bounds plus two slack structures
-    for `_delete_covers_path`'s truncated-bounds semantics (a data path
-    that is a PREFIX of a lower bound, or an EXTENSION of a truncated
-    upper bound, is covered even though it falls outside [lo, hi] in
-    plain string order). Output tuples are IDENTICAL to match_deletes —
-    same deletes, same delete_rows order (each candidate carries its
-    input position and matches re-sort on it); equivalence is fuzzed in
-    tests/test_deletes.py including ranged-heavy prefix-adversarial
-    sets."""
+    for truncated bounds (a data path that is a PREFIX of a lower bound,
+    or an EXTENSION of a truncated upper bound, is covered even though
+    it falls outside [lo, hi] in plain string order). Equivalence with
+    the linear reference twin (tests/oracles.py `match_deletes`) is
+    fuzzed in tests/test_deletes.py, including ranged-heavy
+    prefix-adversarial sets."""
     from bisect import bisect_left, bisect_right
 
     from .manifest import DataFileContent
@@ -350,7 +330,7 @@ def build_delete_matcher(delete_rows):
                 ):
                     seen.add(idx)
                     picked.append((idx, ddf))
-            # hi-is-a-prefix-of-path slack: _delete_covers_path's
+            # hi-is-a-prefix-of-path slack: the linear twin's
             # `data_path.startswith(hi_s)` branch covers REGARDLESS of
             # the lower bound (hi was truncated+incremented), so no lo
             # check here; cut == len(path) included (startswith admits
@@ -393,24 +373,6 @@ def strip_scheme_col(col):
     from pyspark.sql import functions as F
 
     return F.regexp_replace(col, SCHEME_RE, "")
-
-
-def _delete_covers_path(delete_file: DataFile, data_path: str) -> bool:
-    """file_path-bounds check for positional-delete matching —
-    ref scanner.go:285-309 (metrics-match on file_path)."""
-    from .manifest import POSITIONAL_DELETE_FILE_PATH_ID as FP
-
-    lo = (delete_file.lower_bounds or {}).get(FP)
-    hi = (delete_file.upper_bounds or {}).get(FP)
-    if lo is None or hi is None:
-        return True  # no bounds → must assume it may apply
-    try:
-        lo_s = lo.decode("utf-8")
-        hi_s = hi.decode("utf-8")
-    except Exception:
-        return True
-    # upper bound may be truncated+incremented; prefix compare is safe
-    return lo_s[: len(data_path)] <= data_path <= hi_s or data_path.startswith(hi_s)
 
 
 # Bounded planning memo: (metadata_location, snapshot, filter
@@ -548,8 +510,9 @@ class Scan:
         """Per-spec manifest + partition evaluators and the file metrics
         evaluator for this scan's row filter (levels 1-4 of the cascade,
         ref scanner.go:238-243, :313-339). Returns (evals_for,
-        metrics_eval) where evals_for(spec_id) -> (man_eval, part_eval),
-        built lazily and cached per spec id."""
+        metrics_eval, stats_ids) where evals_for(spec_id) -> (man_eval,
+        part_eval), built lazily and cached per spec id, and stats_ids
+        are the field ids whose stats metrics_eval reads."""
         md = self.table.metadata
         proj_by_spec: dict[int, Expression] = {}
         man_eval_by_spec: dict[int, Any] = {}
@@ -557,6 +520,7 @@ class Scan:
         metrics_eval = inclusive_metrics_evaluator(
             schema, self.row_filter, self.case_sensitive
         )
+        stats_ids = metrics_field_ids(schema, self.row_filter, self.case_sensitive)
 
         def evals_for(spec_id: int):
             if spec_id not in proj_by_spec:
@@ -574,7 +538,7 @@ class Scan:
                 )
             return man_eval_by_spec[spec_id], part_eval_by_spec[spec_id]
 
-        return evals_for, metrics_eval
+        return evals_for, metrics_eval, stats_ids
 
     def plan_files(self, report: Optional[dict] = None) -> list[FileScanTask]:
         """Four-level pruning — ref table/scanner.go:410-460. Pass a
@@ -650,7 +614,7 @@ class Scan:
         ]
 
         # level 1+2: partition projection + manifest pruning, per spec id
-        evals_for, metrics_eval = self._pruning_evaluators(schema)
+        evals_for, metrics_eval, stats_ids = self._pruning_evaluators(schema)
 
         pruned_manifests = []
         for m in manifests:
@@ -658,35 +622,35 @@ class Scan:
             if man_eval(m):
                 pruned_manifests.append(m)
 
-        # level 3+4: per-entry partition-tuple + metrics pruning, one
-        # manifest at a time, cache-resident ones first (map_manifests;
-        # remote misses fetch concurrently, ref scanner.go:343-406
-        # errgroup workers)
+        # level 3+4: partition-tuple + metrics pruning, one manifest
+        # block per evaluator call, cache-resident manifests first
+        # (map_manifests; remote misses fetch concurrently, ref
+        # scanner.go:343-406 errgroup workers)
         def entries_of(m: ManifestFile):
-            # evaluate on the cache PROTOTYPES and copy survivors only
-            # (scan_manifest): a selective plan discards ~everything, so
-            # per-entry copies were most of the filtered-read cost. The
-            # evaluators only READ partition tuples / stats — neither
-            # depends on the inherited sequence numbers applied to the
-            # copies afterwards.
+            # evaluate on the cached column block and build entries for
+            # the survivors only (scan_manifest): a selective plan
+            # discards ~everything. The evaluators only READ partition
+            # tuples / stats — neither depends on the inherited sequence
+            # numbers applied to the survivors afterwards.
             _, part_eval = evals_for(m.partition_spec_id)
             counts = [0, 0, 0]  # total, partition-pruned, metrics-pruned
 
-            def keep(e):
-                counts[0] += 1
-                if not part_eval(e.data_file.partition):
-                    counts[1] += 1
-                    return False
-                if not metrics_eval(e.data_file):
-                    counts[2] += 1
-                    return False
-                return True
+            def keep(block):
+                in_part = block.partition_mask(part_eval)
+                might = metrics_eval(block)
+                if report is not None:
+                    live = block.live
+                    counts[0] += int(live.sum())
+                    counts[1] += int((live & ~in_part).sum())
+                    counts[2] += int((live & in_part & ~might).sum())
+                return in_part & might
 
             out = scan_manifest(
                 m.manifest_path,
                 keep,
                 inherit_sequence_number=m.sequence_number,
                 inherit_first_row_id=m.first_row_id,
+                stats_ids=stats_ids,
             )
             return out, counts[0], counts[1], counts[2]
 
@@ -766,19 +730,14 @@ class Scan:
         never smaller-than-sound) superset of what plan_files would
         return with the same filter: inclusive pruning semantics hold."""
         schema = self._scan_schema()
-        evals_for, metrics_eval = self._pruning_evaluators(schema)
+        evals_for, metrics_eval, _ = self._pruning_evaluators(schema)
+        block = ManifestBlock.of_files([t.file for t in tasks])
+        keep = metrics_eval(block)
         specs = self.table.metadata.partition_specs
-        part_eval = None
         if len(specs) == 1:
             _, part_eval = evals_for(specs[0].spec_id)
-        out = []
-        for t in tasks:
-            if part_eval is not None and not part_eval(t.file.partition):
-                continue
-            if not metrics_eval(t.file):
-                continue
-            out.append(t)
-        return out
+            keep = keep & block.partition_mask(part_eval)
+        return [t for t, k in zip(tasks, keep.tolist()) if k]
 
     def sample_files(self, spark, fraction: float, seed: int = 17):
         """File-level sample of the scan: a DataFrame over a
@@ -872,8 +831,8 @@ class Scan:
             ):
                 # re-plan of a cache-warm snapshot (e.g. a NEW filter on
                 # a just-scanned table: plan-memo miss, manifest-cache
-                # hit): the local planner replays decoded prototype
-                # entries at ~2 µs/entry, ~4x faster than the
+                # hit): the local planner re-evaluates cached manifest
+                # blocks, much faster than the
                 # distributed job's fixed launch cost (bench planning
                 # block, warm attempts) and without spending cluster
                 # resources on planning. Width is no longer the right
@@ -2125,7 +2084,7 @@ class IncrementalAppendScan(Scan):
         chain.reverse()
 
         schema = self._scan_schema()
-        evals_for, metrics_eval = self._pruning_evaluators(schema)
+        evals_for, metrics_eval, _ = self._pruning_evaluators(schema)
 
         # the manifests each append in the range added, in walk order
         added: list[ManifestFile] = []
@@ -2148,19 +2107,21 @@ class IncrementalAppendScan(Scan):
 
         def tasks_of(m: ManifestFile) -> list[FileScanTask]:
             _, part_eval = evals_for(m.partition_spec_id)
+            entries = read_manifest(
+                m.manifest_path,
+                inherit_sequence_number=m.sequence_number,
+                inherit_first_row_id=m.first_row_id,
+            )
+            block = ManifestBlock.of_entries(entries)
+            keep = block.partition_mask(part_eval) & metrics_eval(block)
             return [
                 FileScanTask(
                     file=e.data_file, data_sequence_number=e.sequence_number
                 )
-                for e in read_manifest(
-                    m.manifest_path,
-                    inherit_sequence_number=m.sequence_number,
-                    inherit_first_row_id=m.first_row_id,
-                )
-                if e.status == ManifestEntryStatus.ADDED
+                for e, k in zip(entries, keep.tolist())
+                if k
+                and e.status == ManifestEntryStatus.ADDED
                 and e.snapshot_id in (None, m.added_snapshot_id)
-                and part_eval(e.data_file.partition)
-                and metrics_eval(e.data_file)
             ]
 
         return [
@@ -2870,6 +2831,7 @@ def _distributed_prune_frame(scan: Scan, spark):
         inclusive_metrics_evaluator,
         inclusive_projection,
         manifest_evaluator,
+        metrics_field_ids,
     )
     from .write import _encode_descriptor
 
@@ -2936,6 +2898,7 @@ def _distributed_prune_frame(scan: Scan, spark):
 
         fileio.apply_config(fileio_cfg)
         metrics_eval = inclusive_metrics_evaluator(schema_p, row_filter, case_sensitive)
+        stats_ids = metrics_field_ids(schema_p, row_filter, case_sensitive)
         part_evals = {}
         kinds, seqs, out = [], [], []
         for pdf in batches:
@@ -2957,15 +2920,15 @@ def _distributed_prune_frame(scan: Scan, spark):
                     )
                 part_eval = part_evals[row.spec_id]
                 frid = None if pd.isna(row.first_row_id) else int(row.first_row_id)
-                # evaluate on the worker's cached prototypes, copy only
-                # survivors (same filtered-read shape as the local
+                # evaluate on the worker's cached column block, build
+                # survivors only (same filtered-read shape as the local
                 # planner's entries_of)
                 for e in scan_manifest(
                     row.path,
-                    lambda p: part_eval(p.data_file.partition)
-                    and metrics_eval(p.data_file),
+                    lambda b: b.partition_mask(part_eval) & metrics_eval(b),
                     inherit_sequence_number=int(row.seq),
                     inherit_first_row_id=frid,
+                    stats_ids=stats_ids,
                 ):
                     kinds.append(0)
                     seqs.append(e.sequence_number or 0)

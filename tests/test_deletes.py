@@ -761,10 +761,9 @@ def test_delete_matcher_index_equals_linear_scan():
         DataFile,
         DataFileContent,
     )
-    from iceberg_go_distributed_spark.iceberg.table import (
-        build_delete_matcher,
-        match_deletes,
-    )
+    from oracles import match_deletes
+
+    from iceberg_go_distributed_spark.iceberg.table import build_delete_matcher
     from iceberg_go_distributed_spark.iceberg.types import StringType
 
     rng = random.Random(42)
@@ -840,10 +839,9 @@ def test_delete_matcher_ranged_heavy_prefix_adversarial():
         DataFile,
         DataFileContent,
     )
-    from iceberg_go_distributed_spark.iceberg.table import (
-        build_delete_matcher,
-        match_deletes,
-    )
+    from oracles import match_deletes
+
+    from iceberg_go_distributed_spark.iceberg.table import build_delete_matcher
     from iceberg_go_distributed_spark.iceberg.types import StringType
 
     rng = random.Random(515)
@@ -937,10 +935,9 @@ def test_delete_matcher_all_inverted_bounds_still_match():
         DataFile,
         DataFileContent,
     )
-    from iceberg_go_distributed_spark.iceberg.table import (
-        build_delete_matcher,
-        match_deletes,
-    )
+    from oracles import match_deletes
+
+    from iceberg_go_distributed_spark.iceberg.table import build_delete_matcher
     from iceberg_go_distributed_spark.iceberg.types import StringType
 
     def inverted(seq, lo, hi):

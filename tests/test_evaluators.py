@@ -11,7 +11,12 @@ import pytest
 from iceberg_go_distributed_spark.iceberg import evaluators as EV
 from iceberg_go_distributed_spark.iceberg import expressions as E
 from iceberg_go_distributed_spark.iceberg import types as ty
-from iceberg_go_distributed_spark.iceberg.manifest import DataFile, FieldSummary, ManifestFile
+from iceberg_go_distributed_spark.iceberg.manifest import (
+    DataFile,
+    FieldSummary,
+    ManifestBlock,
+    ManifestFile,
+)
 from iceberg_go_distributed_spark.iceberg.partitioning import PartitionField, PartitionSpec
 from iceberg_go_distributed_spark.iceberg.transforms import IdentityTransform
 
@@ -237,8 +242,14 @@ FILE = DataFile(
 FILE_EMPTY = DataFile(file_path="e.parquet", record_count=0)
 
 
+def _one(ev, f) -> bool:
+    """Verdict of the production block evaluator on a block of one file."""
+    (verdict,) = ev(ManifestBlock.of_files([f])).tolist()
+    return verdict
+
+
 def _meval(expr, f=FILE):
-    return EV.inclusive_metrics_evaluator(MSCHEMA, expr)(f)
+    return _one(EV.inclusive_metrics_evaluator(MSCHEMA, expr), f)
 
 
 def test_metrics_all_null():
@@ -343,7 +354,7 @@ FILE_STR = DataFile(
 
 
 def _m2(expr, f=FILE_STR):
-    return EV.inclusive_metrics_evaluator(MSCHEMA2, expr)(f)
+    return _one(EV.inclusive_metrics_evaluator(MSCHEMA2, expr), f)
 
 
 @pytest.mark.parametrize(
@@ -382,9 +393,9 @@ def test_case_insensitive_binding_in_evaluator():
     ev = EV.inclusive_metrics_evaluator(
         MSCHEMA2, E.equal("ALWAYS_5", 5), case_sensitive=False
     )
-    assert ev(FILE_STR)
+    assert _one(ev, FILE_STR)
     with pytest.raises(ValueError):
-        EV.inclusive_metrics_evaluator(MSCHEMA2, E.equal("ALWAYS_5", 5))(FILE_STR)
+        EV.inclusive_metrics_evaluator(MSCHEMA2, E.equal("ALWAYS_5", 5))
 
 
 def test_promoted_bounds_decode_by_width():
@@ -401,3 +412,272 @@ def test_promoted_bounds_decode_by_width():
     assert from_bytes(ty.LongType(), struct.pack("<q", 42)) == 42
     assert from_bytes(ty.DoubleType(), struct.pack("<f", 1.5)) == 1.5
     assert from_bytes(ty.DoubleType(), struct.pack("<d", 2.5)) == 2.5
+
+
+# ------------- block evaluator vs the per-file oracle (tests/oracles.py)
+
+TWIN_SCHEMA = ty.Schema.of(
+    1,
+    ty.NestedField(1, "l", ty.LongType()),
+    ty.NestedField(2, "i", ty.IntegerType()),
+    ty.NestedField(3, "d", ty.DateType()),
+    ty.NestedField(4, "ts", ty.TimestampType()),
+    ty.NestedField(5, "f", ty.FloatType()),
+    ty.NestedField(6, "db", ty.DoubleType()),
+    ty.NestedField(7, "s", ty.StringType()),
+    ty.NestedField(8, "dec", ty.DecimalType(9, 2)),
+    ty.NestedField(9, "b", ty.BinaryType()),
+)
+_TWIN_FIELDS = {f.field_id: f for f in TWIN_SCHEMA.fields}
+_STRS = ["", "a", "ab", "abc", "b", "ba", "é", "z"]
+FILE_KINDS = (
+    "mixed",
+    "absent_bounds",
+    "inverted",
+    "all_null",
+    "nan_only",
+    "truncated",
+    "empty_files",
+    "unknown_counts",
+)
+
+
+def _twin_value(rng, fid):
+    from decimal import Decimal
+
+    t = _TWIN_FIELDS[fid].field_type
+    if isinstance(t, (ty.LongType, ty.IntegerType, ty.DateType, ty.TimestampType)):
+        return rng.randint(-4, 4)
+    if isinstance(t, (ty.FloatType, ty.DoubleType)):
+        return rng.choice([-2.5, -1.0, 0.0, 0.5, 1.0, 3.25])
+    if isinstance(t, ty.StringType):
+        return rng.choice(_STRS)
+    if isinstance(t, ty.DecimalType):
+        return Decimal(rng.randint(-400, 400)).scaleb(-2)
+    return rng.choice(_STRS).encode()
+
+
+def _twin_file(rng, kind, n):
+    """A data file whose stats have the shape `kind` names."""
+    from iceberg_go_distributed_spark.iceberg.conversions import to_bytes
+
+    rc = rng.choice([0, -1, 5, 10]) if kind == "empty_files" else rng.choice([5, 10, 10])
+    vc, nc, nanc, lo, hi = {}, {}, {}, {}, {}
+    for fid, f in _TWIN_FIELDS.items():
+        t = f.field_type
+        is_float = isinstance(t, (ty.FloatType, ty.DoubleType))
+        vc[fid] = rc if rc >= 0 else 10
+        nc[fid] = rng.choice([0, 0, 3])
+        if is_float:
+            nanc[fid] = rng.choice([0, 0, 2])
+        a, b = sorted([_twin_value(rng, fid), _twin_value(rng, fid)])
+        if kind == "inverted" or (kind == "mixed" and rng.random() < 0.1):
+            a, b = max(a, b), min(a, b)
+        if kind == "absent_bounds" or (kind == "mixed" and rng.random() < 0.15):
+            drop = rng.choice(["lo", "hi", "both"])
+            a = None if drop in ("lo", "both") else a
+            b = None if drop in ("hi", "both") else b
+        if kind == "all_null" or (kind == "mixed" and rng.random() < 0.1):
+            nc[fid], a, b = vc[fid], None, None
+        if is_float and (kind == "nan_only" or (kind == "mixed" and rng.random() < 0.1)):
+            nanc[fid] = vc[fid]
+            a = b = float("nan") if rng.random() < 0.5 else None
+        if is_float and kind == "mixed" and rng.random() < 0.1:
+            a = float("nan")  # NaN lower bound: metrics unreliable
+        if kind == "unknown_counts" or (kind == "mixed" and rng.random() < 0.1):
+            for m in (vc, nc, nanc):
+                if rng.random() < 0.5:
+                    m.pop(fid, None)
+        if a is not None:
+            lo[fid] = to_bytes(t, a)
+        if b is not None:
+            hi[fid] = to_bytes(t, b)
+        if kind == "truncated" and fid in (7, 9) and a is not None and b is not None:
+            # truncated bounds (by code point for strings): the lower
+            # cut to one unit, the upper cut and its last unit incremented
+            if fid == 7:
+                lo[fid] = a[:1].encode()
+                hi[fid] = (b[:1] and chr(ord(b[0]) + 1)).encode()
+            else:
+                lo[fid] = a[:1]
+                hi[fid] = b[:1] and bytes([min(b[0] + 1, 255)])
+    return DataFile(
+        file_path=f"/t/{kind}-{n}.parquet",
+        record_count=rc,
+        value_counts=vc or None,
+        null_value_counts=nc,
+        nan_value_counts=nanc,
+        lower_bounds=lo,
+        upper_bounds=hi,
+    )
+
+
+def _twin_leaf(rng):
+    fid = rng.choice(list(_TWIN_FIELDS))
+    f = _TWIN_FIELDS[fid]
+    name, t = f.name, f.field_type
+
+    def lit():
+        v = _twin_value(rng, fid)
+        return v.decode() if isinstance(v, bytes) else v
+
+    ops = ["lt", "le", "gt", "ge", "eq", "ne", "in", "not_in", "is_null", "not_null", "in_big"]
+    if isinstance(t, (ty.FloatType, ty.DoubleType)):
+        ops += ["is_nan", "not_nan"]
+    if isinstance(t, ty.StringType):
+        ops += ["starts_with", "not_starts_with"]
+    op = rng.choice(ops)
+    if op in ("lt", "le", "gt", "ge", "eq", "ne"):
+        fn = {
+            "lt": E.less_than,
+            "le": E.less_than_or_equal,
+            "gt": E.greater_than,
+            "ge": E.greater_than_or_equal,
+            "eq": E.equal,
+            "ne": E.not_equal,
+        }[op]
+        return fn(name, lit())
+    if op in ("in", "not_in"):
+        vals = list({lit() for _ in range(rng.randint(2, 4))})
+        return (E.is_in if op == "in" else E.not_in)(name, vals)
+    if op == "in_big":
+        if isinstance(t, (ty.StringType, ty.BinaryType)):
+            return E.is_in(name, [f"v{k}" for k in range(201)])
+        if isinstance(t, (ty.FloatType, ty.DoubleType)):
+            return E.is_in(name, [k + 0.5 for k in range(201)])
+        return E.is_in(name, list(range(201)))
+    if op in ("starts_with", "not_starts_with"):
+        fn = E.starts_with if op == "starts_with" else E.not_starts_with
+        return fn(name, rng.choice(_STRS))
+    return {
+        "is_null": E.is_null,
+        "not_null": E.not_null,
+        "is_nan": E.is_nan,
+        "not_nan": E.not_nan,
+    }[op](name)
+
+
+def _twin_pred(rng, depth=2):
+    if depth == 0 or rng.random() < 0.5:
+        return _twin_leaf(rng)
+    r = rng.random()
+    if r < 0.4:
+        return E.and_(_twin_pred(rng, depth - 1), _twin_pred(rng, depth - 1))
+    if r < 0.8:
+        return E.or_(_twin_pred(rng, depth - 1), _twin_pred(rng, depth - 1))
+    return E.not_(_twin_pred(rng, depth - 1))
+
+
+@pytest.mark.parametrize("kind", FILE_KINDS)
+def test_block_evaluator_matches_per_file_oracle(kind):
+    """The block evaluator must return, per file, exactly the per-file
+    oracle's verdict: every predicate op on long, int, date, timestamp,
+    float, double, string, decimal and binary columns, over manifests
+    of one degenerate stats shape each (and a mixed one)."""
+    import random
+
+    from oracles import inclusive_metrics_oracle
+
+    rng = random.Random(f"block-twin-{kind}")
+    files = [_twin_file(rng, kind, n) for n in range(40)]
+    block = ManifestBlock.of_files(files)
+    for _ in range(150):
+        expr = _twin_pred(rng)
+        for empty in (False, True):
+            got = EV.inclusive_metrics_evaluator(
+                TWIN_SCHEMA, expr, include_empty_files=empty
+            )(block).tolist()
+            oracle = inclusive_metrics_oracle(TWIN_SCHEMA, expr, include_empty_files=empty)
+            assert got == [oracle(f) for f in files], (kind, expr, empty)
+
+
+def test_block_evaluator_on_empty_block():
+    block = ManifestBlock.of_files([])
+    for expr in (E.less_than("l", 3), E.starts_with("s", "a"), E.is_in("dec", [1, 2])):
+        assert EV.inclusive_metrics_evaluator(TWIN_SCHEMA, expr)(block).tolist() == []
+
+
+def test_metrics_field_ids_are_the_predicate_columns():
+    expr = E.and_(E.less_than("l", 3), E.or_(E.is_null("s"), E.not_(E.equal("i", 1))))
+    assert EV.metrics_field_ids(TWIN_SCHEMA, expr) == (1, 2, 7)
+    assert EV.metrics_field_ids(TWIN_SCHEMA, E.AlwaysTrue()) == ()
+
+
+@pytest.mark.parametrize("kind", FILE_KINDS + ("empty_manifest",))
+def test_scan_manifest_block_path_matches_filtered_read(tmp_path, monkeypatch, kind):
+    """The planner's block path — column-mode decode, one evaluator call
+    per block, one partition-evaluator call per distinct tuple, entries
+    built for survivors only — against read_manifest plus the per-entry
+    oracles. Covers DELETED entries, explicit and inherited sequence
+    numbers, non-DATA content and v3 first_row_id inheritance (non-kept
+    live DATA files still consume ids), with the cache off (every read
+    decodes) and on (survivors copied from prototypes)."""
+    import random
+
+    from oracles import inclusive_metrics_oracle
+
+    from iceberg_go_distributed_spark.iceberg import manifest as M
+    from iceberg_go_distributed_spark.iceberg.manifest import (
+        DataFileContent,
+        ManifestEntry,
+        ManifestEntryStatus,
+        read_manifest,
+        scan_manifest,
+        write_manifest,
+    )
+    from iceberg_go_distributed_spark.iceberg.partitioning import spec_from
+
+    rng = random.Random(f"scan-twin-{kind}")
+    spec = spec_from(TWIN_SCHEMA, ("i", "identity"))
+    entries = []
+    for n in range(0 if kind == "empty_manifest" else 30):
+        f = _twin_file(rng, "mixed" if kind == "empty_manifest" else kind, n)
+        f.partition = {"i": rng.choice([None, 1, 2, 3])}
+        f.first_row_id = rng.choice([None, None, 10_000 + n])
+        f.content = rng.choice([DataFileContent.DATA] * 4 + [DataFileContent.EQUALITY_DELETES])
+        status = rng.choice(list(ManifestEntryStatus))
+        seq = rng.choice([None, 3])
+        entries.append(ManifestEntry(status, 1, seq, seq, f))
+    path = str(tmp_path / "twin.avro")
+    write_manifest(path, spec, TWIN_SCHEMA, 1, entries)
+    monkeypatch.setattr(M, "_OCF_CACHE", {})
+    monkeypatch.setattr(M, "_OCF_CACHE_ENTRY_COUNT", 0)
+    monkeypatch.setattr(M, "_OCF_CACHE_MAX_ENTRIES", 0)  # every read decodes
+
+    cases = []
+    for _ in range(30):
+        expr = _twin_pred(rng)
+        proj = EV.inclusive_projection(TWIN_SCHEMA, spec)(expr)
+        part_schema = ty.Schema(0, spec.partition_type(TWIN_SCHEMA).fields)
+        part_eval = EV.expression_evaluator(part_schema, proj)
+        metrics_eval = EV.inclusive_metrics_evaluator(TWIN_SCHEMA, expr)
+        oracle = inclusive_metrics_oracle(TWIN_SCHEMA, expr)
+        for seq, frid in ((None, None), (7, 500)):
+            expected = [
+                e
+                for e in read_manifest(
+                    path, inherit_sequence_number=seq, inherit_first_row_id=frid
+                )
+                if part_eval(e.data_file.partition) and oracle(e.data_file)
+            ]
+            keep = lambda b, pe=part_eval, me=metrics_eval: b.partition_mask(pe) & me(b)
+            ids = EV.metrics_field_ids(TWIN_SCHEMA, expr)
+            cases.append((keep, ids, seq, frid, expected, expr))
+
+    def scan_all(label):
+        for keep, ids, seq, frid, expected, expr in cases:
+            got = scan_manifest(
+                path,
+                keep,
+                inherit_sequence_number=seq,
+                inherit_first_row_id=frid,
+                stats_ids=ids,
+            )
+            assert got == expected, (kind, label, expr)
+
+    scan_all("uncached column blocks")
+    # cached: one column block, widened as the predicate columns change
+    monkeypatch.setattr(M, "_OCF_CACHE_MAX_ENTRIES", 10**6)
+    scan_all("cached column block")
+    read_manifest(path)  # the cached block gains prototypes
+    scan_all("cached block with prototypes")

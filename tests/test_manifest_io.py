@@ -132,22 +132,27 @@ def test_truncated_avro_fails_loudly(tmp_path):
     import io
     import struct
 
-    from iceberg_go_distributed_spark.iceberg.avro import read_datum, write_datum
+    from oracles import read_datum
+
+    from iceberg_go_distributed_spark.iceberg.avro import compile_block_reader, write_datum
+
+    def both_fail(data, schema):
+        with pytest.raises(EOFError):
+            read_datum(io.BytesIO(data), schema)
+        with pytest.raises(EOFError):
+            compile_block_reader(schema)(data, 0, 1, [].append)
 
     # fixed
+    fixed8 = {"type": "fixed", "name": "f8", "size": 8}
     buf = io.BytesIO()
-    write_datum(buf, {"type": "fixed", "name": "f8", "size": 8}, b"12345678")
-    data = buf.getvalue()
-    with pytest.raises(EOFError):
-        read_datum(io.BytesIO(data[:5]), {"type": "fixed", "name": "f8", "size": 8})
+    write_datum(buf, fixed8, b"12345678")
+    both_fail(buf.getvalue()[:5], fixed8)
     # bytes with a length prefix longer than the payload
     buf2 = io.BytesIO()
     write_datum(buf2, "bytes", b"abcdef")
-    with pytest.raises(EOFError):
-        read_datum(io.BytesIO(buf2.getvalue()[:4]), "bytes")
+    both_fail(buf2.getvalue()[:4], "bytes")
     # double truncated mid-value
-    with pytest.raises(EOFError):
-        read_datum(io.BytesIO(struct.pack("<d", 1.5)[:3]), "double")
+    both_fail(struct.pack("<d", 1.5)[:3], "double")
     # truncated manifest file body
     spec = spec_from(SCHEMA)
     path = str(tmp_path / "trunc.avro")
@@ -448,11 +453,16 @@ def test_ocf_cache_entry_count_bound(tmp_path, monkeypatch):
     assert read_manifest(paths[0], discard_deleted=False) == first
 
 
-def test_scan_manifest_matches_filtered_read(tmp_path):
+def test_scan_manifest_matches_filtered_read(tmp_path, monkeypatch):
     """scan_manifest(keep) must equal read_manifest() followed by the
-    same filter — including the first_row_id assignment rule: non-kept
-    live DATA files still consume from the manifest's row-id range, so
-    survivors' assigned ids must be identical whichever path ran."""
+    same per-entry verdicts — including the first_row_id assignment
+    rule: non-kept live DATA files still consume from the manifest's
+    row-id range, so survivors' assigned ids must be identical whichever
+    path ran. Checked on a freshly decoded column block (survivors
+    decoded from their offsets) and on a block holding prototypes."""
+    import numpy as np
+
+    import iceberg_go_distributed_spark.iceberg.manifest as M
     from iceberg_go_distributed_spark.iceberg.manifest import (
         ManifestEntryStatus,
         read_manifest,
@@ -481,29 +491,165 @@ def test_scan_manifest_matches_filtered_read(tmp_path):
     path = str(tmp_path / "scan.avro")
     write_manifest(path, spec, SCHEMA, 123, entries)
 
+    monkeypatch.setattr(M, "_OCF_CACHE", {})
+    monkeypatch.setattr(M, "_OCF_CACHE_ENTRY_COUNT", 0)
     for keep_fn in (
-        lambda e: True,
-        lambda e: False,
-        lambda e: e.data_file.file_path.endswith("c.parquet"),
-        lambda e: e.data_file.record_count > 8,
+        lambda b: np.ones(len(b), bool),
+        lambda b: np.zeros(len(b), bool),
+        lambda b: np.arange(len(b)) == len(b) - 1,
+        lambda b: b.record_count > 8,
     ):
         for seq, frid in ((None, None), (9, None), (None, 1000), (9, 1000)):
-            expected = [
-                e
-                for e in read_manifest(
-                    path,
-                    inherit_sequence_number=seq,
-                    inherit_first_row_id=frid,
-                )
-                if keep_fn(e)
-            ]
-            got = scan_manifest(
+            M._OCF_CACHE.clear()
+            M._OCF_CACHE_ENTRY_COUNT = 0
+            fresh = scan_manifest(
+                path, keep_fn, inherit_sequence_number=seq, inherit_first_row_id=frid
+            )
+            assert M._OCF_CACHE[path]._protos is None, "column block expected"
+            everything = read_manifest(
                 path,
-                keep_fn,
+                discard_deleted=False,
                 inherit_sequence_number=seq,
                 inherit_first_row_id=frid,
             )
-            assert got == expected, (seq, frid)
+            verdicts = keep_fn(M._OCF_CACHE[path]).tolist()
+            expected = [
+                e
+                for e, k in zip(everything, verdicts)
+                if k and e.status != ManifestEntryStatus.DELETED
+            ]
+            assert fresh == expected, (seq, frid)
+            # the block now holds prototypes: survivors are copies
+            assert M._OCF_CACHE[path]._protos is not None
+            again = scan_manifest(
+                path, keep_fn, inherit_sequence_number=seq, inherit_first_row_id=frid
+            )
+            assert again == expected, (seq, frid)
+
+
+def test_scan_manifest_rejects_a_verdict_count_mismatch(tmp_path):
+    from iceberg_go_distributed_spark.iceberg.manifest import scan_manifest
+
+    path = str(tmp_path / "one.avro")
+    write_manifest(path, spec_from(SCHEMA), SCHEMA, 1, _rich_entries())
+    with pytest.raises(ValueError):
+        scan_manifest(path, lambda b: True)
+
+
+def test_column_reader_matches_object_reader(tmp_path):
+    """The column-mode entry reader must carry, per entry, exactly the
+    object-mode reader's status, content, record count, first_row_id,
+    partition and requested stats, and the offset each entry decodes
+    from; field ids absent from every stats map read as None."""
+    from iceberg_go_distributed_spark.iceberg.manifest import (
+        _STATS_COLUMNS,
+        _entry_reader_factory,
+    )
+
+    spec = spec_from(SCHEMA, ("category", "identity"), ("id", "bucket[16]"))
+    path = str(tmp_path / "rich.avro")
+    # keys of one, two and three varint bytes, and near-miss neighbours
+    wide_keys = DataFile(
+        file_path="/data/wide.parquet",
+        partition={"category": "w", "id_bucket": 1},
+        record_count=3,
+        value_counts={63: 1, 64: 2, 65: 3, 8191: 4, 8192: 5},
+        lower_bounds={64: b"lo64", 8192: b"lo8192"},
+        upper_bounds={8191: b"hi8191"},
+    )
+    entries = _rich_entries() + [
+        ManifestEntry(ManifestEntryStatus.ADDED, 1, 2, 2, wide_keys)
+    ]
+    write_manifest(path, spec, SCHEMA, 123, entries)
+    _, _, objects = A.read_ocf(path, record_reader_factory=_entry_reader_factory)
+    schema, meta, _ = A.read_ocf(path)
+    decode = _entry_reader_factory(schema, meta["avro.schema"])
+    for ids in ((), (1,), (1, 2, 3, 99), (64, 8192), (63, 8191, 65)):
+        _, _, rows = A.read_ocf(
+            path,
+            record_reader_factory=lambda s, raw: _entry_reader_factory(s, raw, ids),
+        )
+        assert len(rows) == len(objects)
+        for row, e in zip(rows, objects):
+            payload, offset, status, content, rc, frid, part, *stats = row
+            f = e.data_file
+            assert (status, content, rc, frid) == (
+                e.status, f.content, f.record_count, f.first_row_id
+            )
+            assert dict(part) == f.partition
+            assert stats == [
+                (getattr(f, c) or {}).get(fid) for fid in ids for c in _STATS_COLUMNS
+            ]
+            one = []
+            decode(payload, offset, 1, one.append)
+            assert one == [e]
+
+
+def test_entry_readers_walk_exactly_and_fail_loudly_when_truncated():
+    """Both reader modes must consume a block to its last byte, and
+    every truncated prefix of it must raise, never decode short: the
+    column mode skips most fields without building them, with the same
+    bounds checks."""
+    import json
+
+    from iceberg_go_distributed_spark.iceberg.manifest import (
+        _entry_reader_factory,
+        _entry_to_avro,
+        manifest_entry_schema,
+    )
+
+    spec = spec_from(SCHEMA, ("category", "identity"), ("id", "bucket[16]"))
+    schema = manifest_entry_schema(spec, SCHEMA, dv_fields=True, lineage_fields=True)
+    entries = _rich_entries()
+    buf = io.BytesIO()
+    for e in entries:
+        A.write_datum(buf, schema, _entry_to_avro(e, spec))
+    payload = buf.getvalue()
+    raw = json.dumps(schema).encode()
+    for ids in (None, (), (1, 2, 3)):
+        read = _entry_reader_factory(schema, raw, ids)
+        out = []
+        assert read(payload, 0, len(entries), out.append) == len(payload)
+        assert len(out) == len(entries)
+        for k in range(len(payload)):
+            with pytest.raises((EOFError, IndexError)):
+                read(payload[:k], 0, len(entries), [].append)
+
+
+def test_oversized_manifest_is_returned_uncached_and_evicts_nothing(
+    tmp_path, monkeypatch
+):
+    """A manifest with more entries than the whole cache budget used to
+    evict every resident manifest and then not be cached itself."""
+    import iceberg_go_distributed_spark.iceberg.manifest as M
+
+    spec = spec_from(SCHEMA)
+
+    def manifest(name, n):
+        p = str(tmp_path / name)
+        write_manifest(
+            p, spec, SCHEMA, 1,
+            [
+                ManifestEntry(
+                    ManifestEntryStatus.ADDED, 1, 1, 1,
+                    DataFile(file_path=f"/d/{name}-{i}.parquet", record_count=1),
+                )
+                for i in range(n)
+            ],
+        )
+        return p
+
+    small = [manifest(f"s{i}.avro", 250) for i in range(4)]
+    big = manifest("big.avro", 4000)
+    monkeypatch.setattr(M, "_OCF_CACHE", {})
+    monkeypatch.setattr(M, "_OCF_CACHE_ENTRY_COUNT", 0)
+    monkeypatch.setattr(M, "_OCF_CACHE_MAX_ENTRIES", 3000)
+    for p in small:
+        read_manifest(p)
+    assert len(read_manifest(big)) == 4000
+    assert all(M.is_resident(p) for p in small)
+    assert not M.is_resident(big)
+    assert M._OCF_CACHE_ENTRY_COUNT == 1000
 
 
 def test_fixed_size_from_header_is_never_executed(tmp_path):

@@ -146,12 +146,25 @@ def _pred(rng, depth=3):
 
 @pytest.mark.parametrize("layout", sorted(SPECS))
 def test_random_predicates_prune_soundly(fuzz_tables, spark, layout):
+    _check_random_predicates(fuzz_tables, spark, layout, random.Random(hash(layout) & 0xFFFF), 40)
+
+
+# the metrics-only layouts: `flat` prunes by column metrics alone, `mor`
+# composes metrics pruning with deletion vectors. A short seeded slice
+# of each runs in the default tier (the seed's 8 predicates prune files
+# twice on each layout); the 40-predicate runs stay slow.
+@pytest.mark.parametrize("layout", ["flat", "mor"])
+def test_random_predicates_prune_soundly_slice(fuzz_tables, spark, layout):
+    rng = random.Random(f"slice-{layout}-3")
+    _check_random_predicates(fuzz_tables, spark, layout, rng, 8)
+
+
+def _check_random_predicates(fuzz_tables, spark, layout, rng, n_preds):
     oracles, tables = fuzz_tables
     raw, t = oracles[layout], tables[layout]
     n_all = len(t.scan().plan_files())
-    rng = random.Random(hash(layout) & 0xFFFF)
     pruned_at_least_once = False
-    for i in range(40):
+    for i in range(n_preds):
         expr, col = _pred(rng)
         want = {
             (r.l_orderkey, r.l_linenumber, r.l_quantity)

@@ -137,7 +137,7 @@ def test_spj_distributed_oversized_bucket_splits(spark, catalog):
 
 def test_spj_distributed_with_deletes(spark, catalog):
     """DVs and equality deletes match inside the executor grouping task
-    (sequence-gated, same `match_deletes` the planners share)."""
+    (sequence-gated, same `build_delete_matcher` the planners share)."""
     df = spark.createDataFrame(
         [(i % 8, i, f"v{i}") for i in range(320)], "k long, id long, v string"
     )
