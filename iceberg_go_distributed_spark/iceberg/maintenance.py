@@ -1373,9 +1373,7 @@ def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
         need_ids = sorted({i for _, ids in key for i in ids})
         key_schema = Schema(0, tuple(by_id[i] for i in need_ids))
         stripped = [_replace(t, delete_files=()) for t in gtasks]
-        df = table.scan()._read_with_pos_deletes_jvm(
-            spark, stripped, key_schema, keep_pos=True
-        )
+        df = table.scan()._read_with_pos_deletes_jvm(spark, stripped, key_schema)
         for path, ids in key:
             fields = [by_id[i] for i in ids]
             kdf = keys_df(path, fields)

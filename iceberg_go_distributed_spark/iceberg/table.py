@@ -375,6 +375,39 @@ def strip_scheme_col(col):
     return F.regexp_replace(col, SCHEME_RE, "")
 
 
+def file_path_col():
+    """Raw, scheme-stripped data-file path of each row. Spark's
+    `_metadata.file_path` is URI-encoded (`with%20space`); manifests, DV
+    targets, v2 positional rows, the lineage map and the defaults probe
+    hold raw paths. `+` is escaped first: `url_decode` reads it as a space."""
+    from pyspark.sql import functions as F
+
+    return F.url_decode(
+        F.regexp_replace(
+            strip_scheme_col(F.col("_metadata.file_path")), r"\+", "%2B"
+        )
+    )
+
+
+def _fp_gate(covered: set, planned: set) -> Optional[str]:
+    """SQL condition restricting a frame's rows to those whose `_fp` is
+    in `covered` (raw, scheme-stripped paths), or None when `covered`
+    holds every `planned` path. Written over the smaller of the covered
+    and the skipped sets, as one string of escaped literals, so it costs
+    one `F.expr` whatever the file count (Spark turns a long IN list
+    into a hash-set lookup)."""
+    skipped = planned - covered
+    if not skipped:
+        return None
+
+    def lit(p):
+        return "'" + p.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    if len(covered) <= len(skipped):
+        return f"_fp IN ({', '.join(map(lit, sorted(covered)))})"
+    return f"NOT (_fp IN ({', '.join(map(lit, sorted(skipped)))}))"
+
+
 # Bounded planning memo: (metadata_location, snapshot, filter
 # fingerprint, case, projection) → planned FileScanTask tuple. Keyed on
 # the metadata LOCATION so any commit invalidates by construction
@@ -919,14 +952,7 @@ class Scan:
         has_eq = any(
             d.content == DataFileContent.EQUALITY_DELETES for d in delete_rows
         )
-        try:
-            max_listed = int(
-                self.table.metadata.properties.get(
-                    "read.spark.max-listed-files", _DEFAULT_MAX_LISTED_FILES
-                )
-            )
-        except (TypeError, ValueError):
-            max_listed = _DEFAULT_MAX_LISTED_FILES
+        max_listed = self._max_listed_files()
         if n_matched <= max_listed or has_eq:
             # small matched set (the JVM routes with Catalyst pushdown
             # win there) or eq deletes: collect the already-pruned
@@ -953,6 +979,16 @@ class Scan:
         df = self._anti_join_pos_deletes(spark, df, delete_rows)
         return df.drop("_fp", "_pos"), None
 
+    def _max_listed_files(self) -> int:
+        try:
+            return int(
+                self.table.metadata.properties.get(
+                    "read.spark.max-listed-files", _DEFAULT_MAX_LISTED_FILES
+                )
+            )
+        except (TypeError, ValueError):
+            return _DEFAULT_MAX_LISTED_FILES
+
     def _stream_plan_eligible(self) -> bool:
         if type(self) is not Scan:
             # subclasses (IncrementalAppendScan) plan their own file
@@ -968,9 +1004,7 @@ class Scan:
             except (TypeError, ValueError):
                 return int(default)
 
-        max_listed = prop_int(
-            "read.spark.max-listed-files", _DEFAULT_MAX_LISTED_FILES
-        )
+        max_listed = self._max_listed_files()
         if max_listed <= 0:
             return False
         manifests = [
@@ -1063,10 +1097,12 @@ class Scan:
             if md.format_version < 3:
                 raise ValueError("_row_id requires a format-version 3 table")
             lineage = lineage_map_frame(spark, tasks)
-        if has_pos or eq_files:
+        if has_pos or eq_files or lineage is not None:
             # prune the MOR read too: projection ∪ filter fields, plus
             # every equality-delete key column (the eq anti-join matches
-            # on them; _anti_join_eq_keys keeps the dropped-key check)
+            # on them; _anti_join_eq_keys keeps the dropped-key check).
+            # Lineage reads take this path with or without deletes: it
+            # carries the _fp/_pos that _row_id derives from
             read_schema = self._read_schema()
             if eq_files:
                 keep = {f.field_id for f in read_schema.fields} | {
@@ -1079,28 +1115,8 @@ class Scan:
                     tuple(f for f in schema.fields if f.field_id in keep),
                 )
             df = self._read_with_deletes(
-                spark, tasks, read_schema, eq_files, keep_pos=lineage is not None
+                spark, tasks, read_schema, keep_pos=lineage is not None
             )
-        elif lineage is not None:
-            if "schema.name-mapping.default" in self.table.metadata.properties:
-                # ID-less (add_files-imported) files resolve columns by
-                # mapped name; the lineage columns resolve by their exact
-                # reserved names (compacted files) or null-fill (imports)
-                df = self._read_with_name_mapping(
-                    spark, files, _lineage_ext_schema(schema), with_pos=True
-                )
-            else:
-                _ensure_field_id_reads(spark)
-                df = (
-                    spark.read.schema(_lineage_read_struct(schema))
-                    .parquet(*files)
-                    .withColumn(
-                        "_fp",
-                        strip_scheme_col(F.col("_metadata.file_path")),
-                    )
-                    .withColumn("_pos", F.col("_metadata.row_index"))
-                )
-            df = self._apply_initial_defaults(spark, df, files, schema, F.col("_fp"))
         else:
             # field-id-based read: columns resolve by the parquet field
             # ids our writer stamps, so renames/evolution are safe;
@@ -1109,14 +1125,7 @@ class Scan:
             # contain add_files-registered files WITHOUT field ids —
             # those resolve by (mapped) name instead.
             has_defaults = any(f.initial_default is not None for f in schema.fields)
-            try:
-                max_listed = int(
-                    self.table.metadata.properties.get(
-                        "read.spark.max-listed-files", _DEFAULT_MAX_LISTED_FILES
-                    )
-                )
-            except (TypeError, ValueError):
-                max_listed = _DEFAULT_MAX_LISTED_FILES
+            max_listed = self._max_listed_files()
             if 0 < max_listed < len(files):
                 # wide scan: a path-list read would ship O(files) strings
                 # through py4j and build a driver file index (72 s at
@@ -1176,7 +1185,7 @@ class Scan:
                         df,
                         files,
                         schema,
-                        strip_scheme_col(F.col("_metadata.file_path")),
+                        file_path_col(),
                     )
         if lineage is not None:
             df = attach_lineage(df, lineage)
@@ -1317,37 +1326,19 @@ class Scan:
             out[c] = (lo, hi)
         return out
 
-    def _read_with_deletes(
-        self, spark, tasks, schema: Schema, eq_files=None, keep_pos=False
-    ):
-        """Merge-on-read dispatch: prefer the JVM-native path
-        (`_metadata.row_index` anti-join — keeps parquet pushdown and
-        split planning), fall back to the per-file Arrow path (the
-        reference's arrow_scanner shape) if the hidden metadata column
-        is unavailable. `keep_pos` keeps the `_fp`/`_pos` columns in the
-        output (row-lineage reads derive `_row_id` from them)."""
-        groups = self._eq_delete_groups(tasks) if eq_files else None
-        if groups and len(groups) > 1:
-            # several distinct eq-delete sets: read per group (a single
-            # upfront read would be discarded anyway)
-            parts = []
-            for key, group_tasks in groups.items():
-                sub = self._read_pos_only(spark, group_tasks, schema, keep_pos)
-                sub = self._anti_join_eq_keys(spark, sub, key, eq_files, schema)
-                parts.append(sub)
-            df = parts[0]
-            for p_ in parts[1:]:
-                df = df.unionByName(p_)
-            return df
-        df = self._read_pos_only(spark, tasks, schema, keep_pos)
-        if groups:
-            (only_key,) = groups
-            df = self._anti_join_eq_keys(spark, df, only_key, eq_files, schema)
-        return df
-
-    def _read_pos_only(self, spark, tasks, schema: Schema, keep_pos=False):
+    def _read_with_deletes(self, spark, tasks, schema: Schema, keep_pos=False):
+        """Merge-on-read in one pass over the scan, as the reference's
+        arrow_scanner does: one read of every planned file carrying
+        `_fp`/`_pos` (`_read_with_pos_deletes_jvm`), one `(_fp, _pos)`
+        anti-join for positional deletes and DVs, and one anti-join per
+        equality-delete file, gated to the files plan-time matching
+        assigned it (`_anti_join_eq_keys`). If the JVM read fails, the
+        per-file Arrow reader drops positional deletes in-task instead.
+        `keep_pos` marks a row-lineage read: it keeps `_fp`/`_pos`
+        (`_row_id` derives from them) and the reserved lineage
+        columns."""
         try:
-            return self._read_with_pos_deletes_jvm(spark, tasks, schema, keep_pos)
+            df = self._read_with_pos_deletes_jvm(spark, tasks, schema, keep_pos)
         except Exception:
             if keep_pos:
                 # the Arrow fallback has no _metadata.row_index; silently
@@ -1361,10 +1352,11 @@ class Scan:
             from .manifest import DataFileContent
             from .reader import delete_entry
 
-            return self._read_files_arrow_distributed(
+            df = self._read_files_arrow_distributed(
                 spark,
                 [t.file.file_path for t in tasks],
                 schema,
+                with_fp=True,
                 deletes=[
                     [
                         delete_entry(d)
@@ -1374,31 +1366,38 @@ class Scan:
                     for t in tasks
                 ],
             )
+        df = self._anti_join_eq_keys(spark, df, tasks, schema)
+        return df if keep_pos else df.drop("_fp", "_pos")
 
-    @staticmethod
-    def _eq_delete_groups(tasks):
-        from .manifest import DataFileContent
+    def _anti_join_eq_keys(self, spark, df, tasks, schema: Schema):
+        """Drop equality-deleted rows from a `_fp`-carrying frame: one
+        null-safe left-anti join per equality-delete file (Iceberg
+        eq-delete semantics: NULL key values match NULL), over the whole
+        scan. Key files read by field id, so key-column renames stay
+        safe. The key side is not deduplicated: a left-anti join gives
+        the same rows whatever the duplicate keys on its right.
 
-        groups: dict[frozenset, list] = {}
-        for t in tasks:
-            key = frozenset(
-                d.file_path
-                for d in t.delete_files
-                if d.content == DataFileContent.EQUALITY_DELETES
-            )
-            groups.setdefault(key, []).append(t)
-        return groups
-
-    def _anti_join_eq_keys(self, spark, df, key, eq_files, schema: Schema):
-        """Null-safe anti-join per equality-delete file (Iceberg eq-delete
-        semantics: NULL key values match NULL), with key files read by
-        field id so key-column renames stay safe."""
+        A file that applies to only some planned files (per
+        `task.delete_files`) adds `_fp_gate`'s `_fp IN (...)` to its
+        join condition: rows of the other files never match it."""
         from pyspark.sql import functions as F
 
+        from . import fileio
+        from .manifest import DataFileContent
         from .types import schema_to_spark_struct
 
+        planned: set = set()
+        eq_files: dict[str, DataFile] = {}
+        covers: dict[str, set] = {}
+        for t in tasks:
+            fp = strip_scheme(t.file.file_path)
+            planned.add(fp)
+            for d in t.delete_files:
+                if d.content == DataFileContent.EQUALITY_DELETES:
+                    eq_files[d.file_path] = d
+                    covers.setdefault(d.file_path, set()).add(fp)
         by_id = {f.field_id: f for f in schema.fields}
-        for path in key:
+        for path in sorted(covers):
             eqf = eq_files[path]
             missing = [i for i in (eqf.equality_ids or []) if i not in by_id]
             if missing:
@@ -1417,13 +1416,9 @@ class Scan:
             if not fields:
                 continue
             eq_schema = Schema(0, tuple(fields))
-            from . import fileio
-
             if fileio.is_local(path):
-                keys = (
-                    spark.read.schema(schema_to_spark_struct(eq_schema))
-                    .parquet(path)
-                    .dropDuplicates()
+                keys = spark.read.schema(schema_to_spark_struct(eq_schema)).parquet(
+                    path
                 )
             else:
                 # key files are small (distinct delete keys) — a driver
@@ -1444,22 +1439,29 @@ class Scan:
                             path, columns=[f.name for f in fields]
                         ).to_pandas(),
                         schema=schema_to_spark_ddl(eq_schema),
-                    ).dropDuplicates()
+                    )
                 )
             cond = None
             for f in fields:
                 c = df[f.name].eqNullSafe(keys[f.name])
                 cond = c if cond is None else (cond & c)
+            gate = _fp_gate(covers[path], planned)
+            if gate is not None:
+                cond = cond & F.expr(gate)
             df = df.join(keys, on=cond, how="left_anti")
         return df
 
-    def _read_with_pos_deletes_jvm(self, spark, tasks, schema: Schema, keep_pos=False):
-        """JVM-side MOR: read all planned files with the parquet
-        `_metadata` struct and left-anti join (file_path, row_index)
-        against the matched positional-delete files. Positional deletes
-        name exact file paths, and a delete can never name a file from a
-        later snapshot, so the global anti-join preserves the per-file
-        sequence-gated matching computed at plan time."""
+    def _read_with_pos_deletes_jvm(self, spark, tasks, schema: Schema, lineage=False):
+        """JVM-side read of every planned file in one `parquet(*files)`,
+        with `_fp` (`file_path_col`) and `_pos` (`_metadata.row_index`)
+        added by one select; the matched positional deletes and DVs drop
+        through `_anti_join_pos_deletes`, then initial defaults apply.
+        Positional deletes name exact file paths, and a delete can never
+        name a file from a later snapshot, so the global anti-join
+        preserves the per-file sequence-gated matching computed at plan
+        time. Returns the frame with `_fp`/`_pos`. `lineage` marks a
+        row-lineage read: it also requests the reserved materialized
+        lineage columns (null-filled where absent)."""
         from pyspark.sql import functions as F
 
         from .manifest import DataFileContent
@@ -1472,16 +1474,8 @@ class Scan:
             if d.content == DataFileContent.POSITION_DELETES
         ]
         files = [t.file.file_path for t in tasks]
-        strip = strip_scheme_col
-        try:
-            max_listed = int(
-                self.table.metadata.properties.get(
-                    "read.spark.max-listed-files", _DEFAULT_MAX_LISTED_FILES
-                )
-            )
-        except (TypeError, ValueError):
-            max_listed = _DEFAULT_MAX_LISTED_FILES
-        if 0 < max_listed < len(files) and not keep_pos:
+        max_listed = self._max_listed_files()
+        if 0 < max_listed < len(files) and not lineage:
             # wide MOR scan: the same O(files) path-list cost as the
             # plain read (SCALE.md r13) — stream the paths instead;
             # the reader emits (_fp, _pos) in-task, file-order exact,
@@ -1494,37 +1488,32 @@ class Scan:
         elif "schema.name-mapping.default" in self.table.metadata.properties:
             # grouped multi-name read: ID-less files may carry any
             # mapped (pre-rename) column name; _fp/_pos selected inside
-            # each group before the union. keep_pos ⇒ a row-lineage read:
-            # extend with the reserved lineage columns (resolved by their
-            # exact names in compacted files, null elsewhere)
-            nm_schema = _lineage_ext_schema(schema) if keep_pos else schema
+            # each group before the union
+            nm_schema = _lineage_ext_schema(schema) if lineage else schema
             df = self._read_with_name_mapping(spark, files, nm_schema, with_pos=True)
         else:
             _ensure_field_id_reads(spark)
-            # keep_pos ⇒ a row-lineage read: also request the reserved
-            # materialized lineage columns (null-filled where absent)
             struct = (
                 _lineage_read_struct(schema)
-                if keep_pos
+                if lineage
                 else schema_to_spark_struct(schema)
             )
-            reader = spark.read.schema(struct)
-            df = (
-                reader.parquet(*files)
-                .withColumn("_fp", strip(F.col("_metadata.file_path")))
-                .withColumn("_pos", F.col("_metadata.row_index"))
+            df = spark.read.schema(struct).parquet(*files).select(
+                "*",
+                file_path_col().alias("_fp"),
+                F.col("_metadata.row_index").alias("_pos"),
             )
         df = self._anti_join_pos_deletes(spark, df, delete_files)
-        df = self._apply_initial_defaults(spark, df, files, schema, F.col("_fp"))
-        return df if keep_pos else df.drop("_fp", "_pos")
+        return self._apply_initial_defaults(spark, df, files, schema, F.col("_fp"))
 
     def _anti_join_pos_deletes(self, spark, df, delete_files):
         """Drop positionally-deleted rows from a (_fp, _pos)-carrying
         frame: the delete side (parquet positional files + v3 DVs)
         becomes one (_fp, _pos) frame, left-anti joined. Shared by the
-        task-planned JVM MOR read and the streaming plan→read, which
+        task-planned one-pass MOR read and the streaming plan→read, which
         plans the delete side driver-side — it is O(small) next to the
-        data it deletes from.
+        data it deletes from. No dedup of the delete side (a shuffle;
+        duplicate right keys leave a left-anti join's rows unchanged).
 
         The delete side's cardinality is KNOWN at plan time (manifest
         record_count = positions per delete file / DV cardinality), but
@@ -1571,13 +1560,14 @@ class Scan:
         small_deletes = 0 < n_del_positions <= max_small
         dels = None
         if pos_files:
+            # declared schema: inferring it would run a Spark job
             dels = (
-                spark.read.parquet(*pos_files)
+                spark.read.schema("file_path string, pos long")
+                .parquet(*pos_files)
                 .select(
                     strip(F.col("file_path")).alias("_fp"),
                     F.col("pos").alias("_pos"),
                 )
-                .dropDuplicates()
             )
         if dv_descriptors:
             # Driver decode has its OWN (much smaller) bound than the
@@ -1695,7 +1685,7 @@ class Scan:
             if with_pos:
                 # positional-MOR callers need (file, row) before the union
                 cols += [
-                    strip_scheme_col(F.col("_metadata.file_path")).alias("_fp"),
+                    file_path_col().alias("_fp"),
                     F.col("_metadata.row_index").alias("_pos"),
                 ]
             parts.append(g.select(*cols))
@@ -1822,7 +1812,7 @@ class Scan:
                     "_pos": pa.concat_arrays(poss) if poss else pa.array([], pa.int64()),
                 }
             )
-            return spark.createDataFrame(tbl.to_pandas(), "_fp string, _pos long")
+            return spark.createDataFrame(tbl, "_fp string, _pos long")
 
         fileio_cfg = _fileio.env_config()
         desc_df = spark.createDataFrame(

@@ -1909,16 +1909,8 @@ def overwrite_where(table, df, expr) -> None:
     survivor_files: list = []
     partial_tasks = [t for t in tasks if not strict(t.file)]
     if partial_tasks:
-        from .manifest import DataFileContent
-
         bound = bind_expr(rewrite_not(not_(expr)), schema)
         scan = table.scan()
-        eq_map = {
-            d.file_path: d
-            for t in partial_tasks
-            for d in t.delete_files
-            if d.content == DataFileContent.EQUALITY_DELETES
-        }
         if md.format_version >= 3:
             # spec v3 "Row Lineage": rewriting a partial file copies its
             # SURVIVING rows, which MUST keep their _row_id — so, like
@@ -1932,7 +1924,7 @@ def overwrite_where(table, df, expr) -> None:
 
             lineage_map = lineage_map_frame(spark, partial_tasks)
             srv = scan._read_with_deletes(
-                spark, partial_tasks, schema, eq_map or None, keep_pos=True
+                spark, partial_tasks, schema, keep_pos=True
             )
             srv = attach_lineage(srv, lineage_map).where(to_spark_column(bound))
             srv_schema = Schema(
@@ -1964,7 +1956,7 @@ def overwrite_where(table, df, expr) -> None:
                             del m[k]
         else:
             survivors = scan._read_with_deletes(
-                spark, partial_tasks, schema, eq_map or None
+                spark, partial_tasks, schema
             ).where(to_spark_column(bound))
             to_write = df.select(survivors.columns).unionByName(survivors)
 
@@ -3845,17 +3837,9 @@ def rewrite_data_files(
     # ceil(total/target) partitions so bin-packing actually merges
     import math as _math
 
-    from .manifest import DataFileContent
-
     total = sum(t.file.file_size_in_bytes for t in victims)
     n_out = max(1, _math.ceil(total / target))
     scan = table.scan()
-    eq_map = {
-        d.file_path: d
-        for t in victims
-        for d in t.delete_files
-        if d.content == DataFileContent.EQUALITY_DELETES
-    }
     write_schema = schema
     if v3:
         # v3 row lineage (spec "Row Lineage" rewrite rule): a writer that
@@ -3872,7 +3856,7 @@ def rewrite_data_files(
 
         lineage_map = lineage_map_frame(spark, victims)
         df = scan._read_with_deletes(
-            spark, victims, schema, eq_map or None, keep_pos=True
+            spark, victims, schema, keep_pos=True
         )
         df = attach_lineage(df, lineage_map)
         write_schema = Schema(
@@ -3888,7 +3872,7 @@ def rewrite_data_files(
             ),
         )
     else:
-        df = scan._read_with_deletes(spark, victims, schema, eq_map or None)
+        df = scan._read_with_deletes(spark, victims, schema)
     write_props = md.properties
     write_sort_order = None
     if clustered:

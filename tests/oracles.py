@@ -10,6 +10,8 @@ degenerate inputs.
     `table.build_delete_matcher`.
   * `read_datum` — recursive BytesIO twin of avro's codegen'd block
     reader.
+  * `merge_on_read_oracle` — per-file twin of the one-pass
+    merge-on-read `table.Scan._read_with_deletes`.
 """
 
 from __future__ import annotations
@@ -298,6 +300,63 @@ def _delete_covers_path(delete_file: DataFile, data_path: str) -> bool:
         return True
     # upper bound may be truncated+incremented; prefix compare is safe
     return lo_s[: len(data_path)] <= data_path <= hi_s or data_path.startswith(hi_s)
+
+
+def merge_on_read_oracle(tasks, schema: Schema, columns, with_fp_pos=False):
+    """Per-file twin of `Scan._read_with_deletes`: pyarrow reads each
+    task's (local) data file, drops the positions named by THAT task's
+    own positional-delete files and DVs, then drops rows whose key tuple
+    null-safely equals a key in any of that task's own equality-delete
+    files. Columns resolve by name. Returns a Counter of row tuples over
+    `columns`, plus (raw path, position) when `with_fp_pos`."""
+    import collections
+    import re
+
+    import pyarrow.parquet as pq
+
+    from iceberg_go_distributed_spark.iceberg.puffin import read_deletion_vector
+    from iceberg_go_distributed_spark.iceberg.table import SCHEME_RE
+
+    def raw(p):
+        return re.sub(SCHEME_RE, "", p)
+
+    name_of = {f.field_id: f.name for f in schema.fields}
+    out = collections.Counter()
+    for t in tasks:
+        path = raw(t.file.file_path)
+        dropped = set()
+        eq_sets = []
+        for d in t.delete_files:
+            if d.content == DataFileContent.EQUALITY_DELETES:
+                names = [name_of[i] for i in d.equality_ids]
+                kt = pq.read_table(raw(d.file_path), columns=names)
+                eq_sets.append(
+                    (names, set(zip(*(kt.column(n).to_pylist() for n in names))))
+                )
+            elif d.content_offset is not None:
+                dropped.update(
+                    int(p)
+                    for p in read_deletion_vector(
+                        raw(d.file_path), d.content_offset, d.content_size_in_bytes
+                    )
+                )
+            else:
+                pt = pq.read_table(raw(d.file_path), columns=["file_path", "pos"])
+                for fp, pos in zip(
+                    pt.column("file_path").to_pylist(), pt.column("pos").to_pylist()
+                ):
+                    if raw(fp) == path:
+                        dropped.add(pos)
+        tbl = pq.read_table(path)
+        data = {n: tbl.column(n).to_pylist() for n in tbl.column_names}
+        for i in range(tbl.num_rows):
+            if i in dropped or any(
+                tuple(data[n][i] for n in names) in keys for names, keys in eq_sets
+            ):
+                continue
+            row = tuple(data[c][i] for c in columns)
+            out[row + ((path, i) if with_fp_pos else ())] += 1
+    return out
 
 
 # ------------------------------------------------------------ avro decode

@@ -182,10 +182,19 @@ def test_merge_rejects_bad_arguments(fs_catalog, spark):
 def test_merge_fuzz_against_pandas_model(fs_catalog, spark):
     """Randomized target/source vs an ANSI-MERGE pandas model: delete
     wins over update; untouched matched rows survive; inserts null-fill."""
+    _merge_fuzz(fs_catalog, spark, seed=42, trials=3)
+
+
+def test_merge_fuzz_against_pandas_model_slice(fs_catalog, spark):
+    """One seeded trial of the fuzz above for the default tier."""
+    _merge_fuzz(fs_catalog, spark, seed=5, trials=1)
+
+
+def _merge_fuzz(fs_catalog, spark, seed, trials):
     import random
 
-    rng = random.Random(42)
-    for trial in range(3):
+    rng = random.Random(seed)
+    for trial in range(trials):
         tgt_rows = [
             (i, f"o{i}", float(rng.randint(0, 999)))
             for i in rng.sample(range(30), 18)
