@@ -11,6 +11,7 @@ table/table.go:361-379 (Scan builder), table/scanner.go:410-460
 from __future__ import annotations
 
 import logging
+import threading
 from dataclasses import dataclass, field, replace
 from typing import Any, Optional
 
@@ -389,6 +390,50 @@ def file_path_col():
     )
 
 
+# Spark's default `spark.sql.sources.parallelPartitionDiscovery.threshold`:
+# a read naming more paths stats them in a job of one task per path
+_LISTING_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_SPARK_LISTING_THRESHOLD = 32
+_listing_lock = threading.Lock()
+
+
+def read_listed_parquet(spark, reader, paths: list):
+    """`reader.parquet(*paths)` over files a manifest already lists.
+    Spark stats the paths while it builds the frame; past
+    `parallelPartitionDiscovery.threshold` (32) it runs a job of one
+    task per path to do so (SCALE.md listing sweep: 280-382 ms at 35
+    local paths, 37-54 ms serial). When every path is local, the
+    threshold is raised to the path count for this one build, so the
+    driver stats them serially and no job runs. Object-store paths keep
+    Spark's parallel listing: there a serial stat costs a round trip
+    per path, and that was not measured. The lock keeps concurrent
+    builds from restoring each other's value; another read in the same
+    session while it is raised may list serially."""
+    from . import fileio
+
+    if len(paths) <= _SPARK_LISTING_THRESHOLD or not all(
+        fileio.is_local(p) for p in paths
+    ):
+        return reader.parquet(*paths)
+    with _listing_lock:
+        prev = spark.conf.get(_LISTING_CONF, None)
+        if prev is not None and int(prev) >= len(paths):
+            return reader.parquet(*paths)
+        spark.conf.set(_LISTING_CONF, str(len(paths)))
+        try:
+            return reader.parquet(*paths)
+        finally:
+            if prev is None:
+                spark.conf.unset(_LISTING_CONF)
+            else:
+                spark.conf.set(_LISTING_CONF, prev)
+
+
+def _sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _fp_gate(covered: set, planned: set) -> Optional[str]:
     """SQL condition restricting a frame's rows to those whose `_fp` is
     in `covered` (raw, scheme-stripped paths), or None when `covered`
@@ -399,13 +444,9 @@ def _fp_gate(covered: set, planned: set) -> Optional[str]:
     skipped = planned - covered
     if not skipped:
         return None
-
-    def lit(p):
-        return "'" + p.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
     if len(covered) <= len(skipped):
-        return f"_fp IN ({', '.join(map(lit, sorted(covered)))})"
-    return f"NOT (_fp IN ({', '.join(map(lit, sorted(skipped)))}))"
+        return f"_fp IN ({', '.join(map(_sql_str, sorted(covered)))})"
+    return f"NOT (_fp IN ({', '.join(map(_sql_str, sorted(skipped)))}))"
 
 
 # Bounded planning memo: (metadata_location, snapshot, filter
@@ -1115,7 +1156,7 @@ class Scan:
                     tuple(f for f in schema.fields if f.field_id in keep),
                 )
             df = self._read_with_deletes(
-                spark, tasks, read_schema, keep_pos=lineage is not None
+                spark, tasks, read_schema, lineage=lineage is not None
             )
         else:
             # field-id-based read: columns resolve by the parquet field
@@ -1161,8 +1202,8 @@ class Scan:
                     # narrow try: only the JVM path-resolution / scheme
                     # lookup — defaults application stays outside so its
                     # own bugs propagate instead of rerouting
-                    df = spark.read.schema(schema_to_spark_struct(schema)).parquet(
-                        *files
+                    df = read_listed_parquet(
+                        spark, spark.read.schema(schema_to_spark_struct(schema)), files
                     )
                 except Exception:  # noqa: BLE001 — reroute to the Arrow reader
                     from . import fileio
@@ -1326,21 +1367,21 @@ class Scan:
             out[c] = (lo, hi)
         return out
 
-    def _read_with_deletes(self, spark, tasks, schema: Schema, keep_pos=False):
+    def _read_with_deletes(self, spark, tasks, schema: Schema, lineage=False):
         """Merge-on-read in one pass over the scan, as the reference's
         arrow_scanner does: one read of every planned file carrying
         `_fp`/`_pos` (`_read_with_pos_deletes_jvm`), one `(_fp, _pos)`
         anti-join for positional deletes and DVs, and one anti-join per
-        equality-delete file, gated to the files plan-time matching
-        assigned it (`_anti_join_eq_keys`). If the JVM read fails, the
-        per-file Arrow reader drops positional deletes in-task instead.
-        `keep_pos` marks a row-lineage read: it keeps `_fp`/`_pos`
-        (`_row_id` derives from them) and the reserved lineage
-        columns."""
+        set of equality key columns, each key file gated to the files
+        plan-time matching assigned it (`_anti_join_eq_keys`). If the
+        JVM read fails, the per-file Arrow reader drops positional
+        deletes in-task instead. `lineage` marks a row-lineage read: it
+        keeps `_fp`/`_pos` (`_row_id` derives from them) and the
+        reserved lineage columns."""
         try:
-            df = self._read_with_pos_deletes_jvm(spark, tasks, schema, keep_pos)
+            df = self._read_with_pos_deletes_jvm(spark, tasks, schema, lineage)
         except Exception:
-            if keep_pos:
+            if lineage:
                 # the Arrow fallback has no _metadata.row_index; silently
                 # rerouting would break _row_id derivation
                 raise
@@ -1367,24 +1408,26 @@ class Scan:
                 ],
             )
         df = self._anti_join_eq_keys(spark, df, tasks, schema)
-        return df if keep_pos else df.drop("_fp", "_pos")
+        return df if lineage else df.drop("_fp", "_pos")
 
     def _anti_join_eq_keys(self, spark, df, tasks, schema: Schema):
-        """Drop equality-deleted rows from a `_fp`-carrying frame: one
-        null-safe left-anti join per equality-delete file (Iceberg
-        eq-delete semantics: NULL key values match NULL), over the whole
-        scan. Key files read by field id, so key-column renames stay
-        safe. The key side is not deduplicated: a left-anti join gives
-        the same rows whatever the duplicate keys on its right.
+        """Drop equality-deleted rows from a `_fp`-carrying frame, with
+        Iceberg eq-delete semantics (null-safe key match: NULL matches
+        NULL). The equality files keyed on the same field ids form one
+        key frame and one left-anti join over the whole scan, so a row
+        probes the keys once however many files hold them. Key files
+        read by field id, so key-column renames stay safe. The key side
+        is not deduplicated: a left-anti join gives the same rows
+        whatever the duplicate keys on its right.
 
         A file that applies to only some planned files (per
-        `task.delete_files`) adds `_fp_gate`'s `_fp IN (...)` to its
-        join condition: rows of the other files never match it."""
+        `task.delete_files`) is gated by `_fp_gate`'s `_fp IN (...)`.
+        In a key frame of several files, each key row carries its file
+        (`_efp`) and one `CASE _efp` in the join condition picks that
+        file's gate; it is evaluated only on key matches."""
         from pyspark.sql import functions as F
 
-        from . import fileio
         from .manifest import DataFileContent
-        from .types import schema_to_spark_struct
 
         planned: set = set()
         eq_files: dict[str, DataFile] = {}
@@ -1397,9 +1440,10 @@ class Scan:
                     eq_files[d.file_path] = d
                     covers.setdefault(d.file_path, set()).add(fp)
         by_id = {f.field_id: f for f in schema.fields}
+        by_key: dict[tuple, list[str]] = {}
         for path in sorted(covers):
-            eqf = eq_files[path]
-            missing = [i for i in (eqf.equality_ids or []) if i not in by_id]
+            ids = tuple(eq_files[path].equality_ids or ())
+            missing = [i for i in ids if i not in by_id]
             if missing:
                 # an equality key column was dropped from the schema: the
                 # delete can no longer be evaluated. Matching on the
@@ -1412,44 +1456,73 @@ class Scan:
                     "the current schema (compact the table before "
                     "dropping equality-key columns)"
                 )
-            fields = [by_id[i] for i in (eqf.equality_ids or [])]
-            if not fields:
-                continue
-            eq_schema = Schema(0, tuple(fields))
-            if fileio.is_local(path):
-                keys = spark.read.schema(schema_to_spark_struct(eq_schema)).parquet(
-                    path
-                )
-            else:
-                # key files are small (distinct delete keys) — a driver
-                # arrow read avoids needing a JVM FileSystem for the
-                # scheme. STATIC broadcast hint: a createDataFrame has
-                # no size stats, so without it Catalyst plans sort-merge
-                # and AQE shuffles the whole SCAN before converting the
-                # join (same trap the merge plan probe caught,
-                # write.py merge broadcast note / SCALE.md r10) — the
-                # driver just materialized these keys, so they are small
-                # by construction. The local branch needs no hint:
-                # parquet file-size stats auto-broadcast under the
-                # threshold, and a genuinely big key file SHOULD
-                # sort-merge.
-                keys = F.broadcast(
-                    spark.createDataFrame(
-                        fileio.read_parquet_table(
-                            path, columns=[f.name for f in fields]
-                        ).to_pandas(),
-                        schema=schema_to_spark_ddl(eq_schema),
-                    )
-                )
+            if ids:
+                by_key.setdefault(ids, []).append(path)
+        for ids, paths in by_key.items():
+            fields = [by_id[i] for i in ids]
+            gates = {
+                p: g for p in paths if (g := _fp_gate(covers[p], planned)) is not None
+            }
+            tagged = len(paths) > 1 and bool(gates)
+            keys = self._eq_key_frame(spark, paths, Schema(0, tuple(fields)), tagged)
             cond = None
             for f in fields:
                 c = df[f.name].eqNullSafe(keys[f.name])
                 cond = c if cond is None else (cond & c)
-            gate = _fp_gate(covers[path], planned)
-            if gate is not None:
+            if tagged:
+                # ungated files fall through to ELSE
+                cond = cond & F.expr(
+                    "CASE _efp "
+                    + " ".join(
+                        f"WHEN {_sql_str(strip_scheme(p))} THEN {g}"
+                        for p, g in gates.items()
+                    )
+                    + " ELSE true END"
+                )
+            elif gates:
+                (gate,) = gates.values()
                 cond = cond & F.expr(gate)
             df = df.join(keys, on=cond, how="left_anti")
         return df
+
+    @staticmethod
+    def _eq_key_frame(spark, paths, eq_schema: Schema, tagged: bool):
+        """The keys of equality files `paths`, columns by `eq_schema`
+        (read by field id), plus `_efp` (the raw, scheme-stripped key
+        file path) when `tagged`."""
+        from pyspark.sql import functions as F
+
+        from . import fileio
+        from .types import schema_to_spark_struct
+
+        names = [f.name for f in eq_schema.fields]
+        if all(fileio.is_local(p) for p in paths):
+            keys = read_listed_parquet(
+                spark, spark.read.schema(schema_to_spark_struct(eq_schema)), paths
+            )
+            return keys.select(*names, file_path_col().alias("_efp")) if tagged else keys
+        # key files are small (distinct delete keys) — a driver arrow
+        # read avoids needing a JVM FileSystem for the scheme. STATIC
+        # broadcast hint: a createDataFrame has no size stats, so
+        # without it Catalyst plans sort-merge and AQE shuffles the
+        # whole SCAN before converting the join (same trap the merge
+        # plan probe caught, write.py merge broadcast note / SCALE.md
+        # r10) — the driver just materialized these keys, so they are
+        # small by construction. The local branch needs no hint: parquet
+        # file-size stats auto-broadcast under the threshold, and a
+        # genuinely big key file SHOULD sort-merge.
+        import pandas as pd
+
+        parts = []
+        for p in paths:
+            part = fileio.read_parquet_table(p, columns=names).to_pandas()
+            if tagged:
+                part["_efp"] = strip_scheme(p)
+            parts.append(part)
+        ddl = schema_to_spark_ddl(eq_schema) + (", _efp string" if tagged else "")
+        return F.broadcast(
+            spark.createDataFrame(pd.concat(parts, ignore_index=True), schema=ddl)
+        )
 
     def _read_with_pos_deletes_jvm(self, spark, tasks, schema: Schema, lineage=False):
         """JVM-side read of every planned file in one `parquet(*files)`,
@@ -1498,7 +1571,7 @@ class Scan:
                 if lineage
                 else schema_to_spark_struct(schema)
             )
-            df = spark.read.schema(struct).parquet(*files).select(
+            df = read_listed_parquet(spark, spark.read.schema(struct), files).select(
                 "*",
                 file_path_col().alias("_fp"),
                 F.col("_metadata.row_index").alias("_pos"),
@@ -1561,13 +1634,11 @@ class Scan:
         dels = None
         if pos_files:
             # declared schema: inferring it would run a Spark job
-            dels = (
-                spark.read.schema("file_path string, pos long")
-                .parquet(*pos_files)
-                .select(
-                    strip(F.col("file_path")).alias("_fp"),
-                    F.col("pos").alias("_pos"),
-                )
+            dels = read_listed_parquet(
+                spark, spark.read.schema("file_path string, pos long"), pos_files
+            ).select(
+                strip(F.col("file_path")).alias("_fp"),
+                F.col("pos").alias("_pos"),
             )
         if dv_descriptors:
             # Driver decode has its OWN (much smaller) bound than the
@@ -1673,7 +1744,7 @@ class Scan:
                 for src, f in zip(assign, schema.fields)
                 if src is not None
             )
-            g = spark.read.schema(ddl).parquet(*paths)
+            g = read_listed_parquet(spark, spark.read.schema(ddl), paths)
             cols = [
                 (
                     F.col(f"`{src}`").alias(f.name)

@@ -1924,7 +1924,7 @@ def overwrite_where(table, df, expr) -> None:
 
             lineage_map = lineage_map_frame(spark, partial_tasks)
             srv = scan._read_with_deletes(
-                spark, partial_tasks, schema, keep_pos=True
+                spark, partial_tasks, schema, lineage=True
             )
             srv = attach_lineage(srv, lineage_map).where(to_spark_column(bound))
             srv_schema = Schema(
@@ -2003,10 +2003,38 @@ def overwrite_where(table, df, expr) -> None:
     )
 
 
+def _added_file_path(path: str) -> str:
+    """The path `add_files` records for `path`: the one Spark reports as
+    `_metadata.file_path` (scheme-stripped and decoded), which
+    positional deletes, DVs and equality gates match rows by. Hadoop's
+    `Path` qualifies a relative local path against the working
+    directory and resolves `.`, `..` and repeated `/`, so a local path
+    is recorded that way. An object-store key cannot be rewritten (the
+    rewrite names another object), so a non-normal one is refused."""
+    import re
+    from urllib.parse import urlparse
+
+    from . import fileio
+
+    if fileio.is_local(path):
+        local = fileio.local_path(path)
+        # POSIX abspath keeps a leading `//`; Hadoop collapses it too
+        norm = re.sub("/+", "/", os.path.abspath(local))
+        return norm if local == path else "file://" + norm
+    key = urlparse(path).path
+    if "//" in key or any(seg in (".", "..") for seg in key.split("/")):
+        raise ValueError(
+            f"add_files: {path!r} has a repeated '/' or a '.'/'..' "
+            "segment; register the object's normalized path"
+        )
+    return path
+
+
 def add_files(table, paths: list[str]) -> None:
     """Register existing Parquet files as data files, stats harvested
     from footers — ref transaction.go:499-564 (AddFiles) +
-    arrow_utils.go:1189-1257 (filesToDataFiles)."""
+    arrow_utils.go:1189-1257 (filesToDataFiles). Paths are recorded in
+    normalized, absolute form (`_added_file_path`)."""
     from .manifest import ManifestEntry, ManifestEntryStatus, write_manifest
 
     md = table.metadata
@@ -2018,7 +2046,7 @@ def add_files(table, paths: list[str]) -> None:
     missing_field_ids = False
     import pyarrow.parquet as pq
 
-    for p in paths:
+    for p in map(_added_file_path, paths):
         arrow_schema = pq.read_schema(p)
         if not any(
             (f.metadata or {}).get(b"PARQUET:field_id") for f in arrow_schema
@@ -3856,7 +3884,7 @@ def rewrite_data_files(
 
         lineage_map = lineage_map_frame(spark, victims)
         df = scan._read_with_deletes(
-            spark, victims, schema, keep_pos=True
+            spark, victims, schema, lineage=True
         )
         df = attach_lineage(df, lineage_map)
         write_schema = Schema(

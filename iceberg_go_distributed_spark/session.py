@@ -11,8 +11,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .iceberg.table import _DEFAULT_MAX_LISTED_FILES
-
 # Runtime (non-static) SQL confs applied to any session we are handed,
 # including driver-owned sessions passed into __spark_entry__.entry().
 RUNTIME_CONFS = {
@@ -41,10 +39,6 @@ RUNTIME_CONFS = {
     # dimension tables (region/nation/customer/supplier/part at test SFs)
     # should broadcast; at 100 TB the big fact tables never fit here anyway.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # table reads name the exact files their manifests list: no job (one
-    # task per path) to stat them, up to the engine's path-list ceiling
-    # (wider scans stream their paths to executors)
-    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(_DEFAULT_MAX_LISTED_FILES),
 }
 
 

@@ -7,7 +7,10 @@ gated by `_fp IN (...)` to the files it applies to.
     reads) on seeded hand-built task sets and on seeded DML histories;
   * deletes, defaults and row lineage on data paths that Spark's
     `_metadata.file_path` URI-encodes;
-  * building a MOR frame over more than 32 files starts no Spark job.
+  * `add_files` records the path Spark reports, so the gates find
+    imported files named by a relative or a `//` path;
+  * building a MOR frame over more than 32 files starts no Spark job,
+    and the listing threshold is raised only around local builds.
 """
 
 from __future__ import annotations
@@ -33,10 +36,12 @@ from iceberg_go_distributed_spark.iceberg.puffin import (
     write_puffin,
 )
 from iceberg_go_distributed_spark.iceberg.table import (
+    _LISTING_CONF,
     FileScanTask,
     Scan,
     Table,
     _fp_gate,
+    read_listed_parquet,
 )
 from iceberg_go_distributed_spark.iceberg.types import NestedField, Schema
 
@@ -221,10 +226,10 @@ def test_one_pass_read_matches_per_file_oracle(spark, odd_root, seed):
         for tk in tasks
     ]
     for ts in (tasks, no_eq):
-        for keep_pos in (False, True):
-            df = t.scan()._read_with_deletes(spark, ts, SCHEMA, keep_pos=keep_pos)
-            assert _frame_rows(df, keep_pos) == _oracle(ts, keep_pos), (
-                f"seed {seed} keep_pos={keep_pos}"
+        for lineage in (False, True):
+            df = t.scan()._read_with_deletes(spark, ts, SCHEMA, lineage=lineage)
+            assert _frame_rows(df, lineage) == _oracle(ts, lineage), (
+                f"seed {seed} lineage={lineage}"
             )
 
 
@@ -288,8 +293,61 @@ def test_dml_history_matches_per_file_oracle(spark, odd_root, version):
     assert any(d.content == POS for tk in tasks for d in tk.delete_files)
 
     assert _frame_rows(t.scan().to_df(spark)) == _oracle(tasks)
-    df = t.scan()._read_with_deletes(spark, tasks, SCHEMA, keep_pos=True)
+    df = t.scan()._read_with_deletes(spark, tasks, SCHEMA, lineage=True)
     assert _frame_rows(df, True) == _oracle(tasks, True)
+
+
+def test_add_files_paths_meet_both_gate_forms(spark, tmp_path, monkeypatch):
+    """`add_files` given a relative and a `//` path records each as
+    Spark's `_metadata.file_path` names it, so the equality gates find
+    the imported files: the first upsert's file covers only them
+    (`_fp IN`), the second's every file but its own batch
+    (`NOT (_fp IN ...)`)."""
+    monkeypatch.chdir(tmp_path)
+    os.makedirs("imp/sub")
+    for name, ids in (("imp/a.parquet", range(0, 50)), ("imp/sub/b.parquet", range(50, 100))):
+        pq.write_table(
+            pa.table(
+                {
+                    "id": pa.array(ids, pa.int64()),
+                    "k": [str(i % 3) for i in ids],
+                    "part": pa.array([i % 2 for i in ids], pa.int64()),
+                    "v": [float(i) for i in ids],
+                }
+            ),
+            name,
+        )
+    t = FileSystemCatalog(str(tmp_path / "wh")).create_table("db.imp", SCHEMA)
+    t.add_files(["imp/a.parquet", f"{tmp_path}//imp/./sub//b.parquet"])
+    t.refresh()
+    assert sorted(tk.file.file_path for tk in t.scan().plan_files()) == [
+        str(tmp_path / "imp" / "a.parquet"),
+        str(tmp_path / "imp" / "sub" / "b.parquet"),
+    ]
+
+    def batch(ids, dv):
+        return spark.createDataFrame(
+            [(i, "u", i % 2, i + dv) for i in ids], DDL
+        ).coalesce(1)
+
+    t.upsert(batch([1, 2, 60], 0.5), ["id"])
+    t.append(batch(range(100, 110), 0.0))
+    t.upsert(batch([2, 61, 105], 0.25), ["id"])
+    t.refresh()
+
+    tasks = t.scan().plan_files()
+    planned = {tk.file.file_path for tk in tasks}
+    covers = collections.defaultdict(set)
+    for tk in tasks:
+        for d in tk.delete_files:
+            covers[d.file_path].add(tk.file.file_path)
+    forms = sorted(_fp_gate(c, planned).split(" (")[0] for c in covers.values())
+    assert forms == ["NOT", "_fp IN"]
+
+    want = {i: float(i) for i in range(110)}
+    want |= {1: 1.5, 2: 2.25, 60: 60.5, 61: 61.25, 105: 105.25}
+    got = sorted((r.id, r.v) for r in t.scan().to_df(spark).collect())
+    assert got == sorted(want.items())
 
 
 # ------------------------------------------------- URI-encoded data paths
@@ -361,10 +419,10 @@ def test_deletes_apply_on_paths_spark_uri_encodes(spark, tmp_path, dirname):
     eq.append(src.selectExpr("id + 100 as id", "k", "part", "v").coalesce(1))
     eq.upsert(src.where("id < 3").selectExpr("id", "k", "part", "v + 0.5 as v"), ["id"])
     eq.refresh()
-    got = {r.id: r.v for r in eq.scan().to_df(spark).collect()}
     want = {i: float(i) for i in range(100)} | {i + 100: float(i) for i in range(100)}
     want |= {i: -float(i) for i in range(5)} | {i: i + 0.5 for i in range(3)}
-    assert got == want
+    got = sorted((r.id, r.v) for r in eq.scan().to_df(spark).collect())
+    assert got == sorted(want.items())
 
 
 # --------------------------------------------------------- no listing job
@@ -400,3 +458,61 @@ def test_mor_to_df_over_many_files_builds_without_spark_jobs(spark, tmp_path):
         assert sorted(r.id for r in df.collect()) == [
             i for i in range(400) if i % 2 == 1 or i < 7
         ]
+    assert spark.conf.get(_LISTING_CONF, None) is None
+
+
+def test_listing_threshold_is_raised_only_around_local_builds(spark):
+    """Spark's parallel listing stays on for object-store paths and for
+    reads within its threshold, and the raised value never outlives the
+    build."""
+
+    class Reader:
+        def parquet(self, *paths):
+            return spark.conf.get(_LISTING_CONF, None)
+
+    local = [f"/data/f{i}.parquet" for i in range(40)]
+    assert read_listed_parquet(spark, Reader(), local) == "40"
+    assert read_listed_parquet(spark, Reader(), [f"file://{p}" for p in local]) == "40"
+    assert read_listed_parquet(spark, Reader(), local[:32]) is None
+    assert read_listed_parquet(spark, Reader(), [f"s3://b{p}" for p in local]) is None
+    assert spark.conf.get(_LISTING_CONF, None) is None
+    spark.conf.set(_LISTING_CONF, "100")
+    try:
+        assert read_listed_parquet(spark, Reader(), local) == "100"
+        assert spark.conf.get(_LISTING_CONF, None) == "100"
+    finally:
+        spark.conf.unset(_LISTING_CONF)
+
+
+def test_concurrent_builds_leave_the_listing_threshold_unset(spark):
+    """Builds on many threads each see their own raised value, and none
+    restores another's: the session default survives."""
+    import sys
+    import threading
+
+    errors = []
+
+    class Reader:
+        def parquet(self, *paths):
+            seen = spark.conf.get(_LISTING_CONF, None)
+            if seen != str(len(paths)):
+                errors.append((len(paths), seen))
+
+    def worker(k):
+        for i in range(15):
+            n = 33 + (k * 7 + i) % 20
+            read_listed_parquet(spark, Reader(), [f"/d/f{j}.parquet" for j in range(n)])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(k,)) for k in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert spark.conf.get(_LISTING_CONF, None) is None
