@@ -1422,9 +1422,10 @@ class Scan:
 
         A file that applies to only some planned files (per
         `task.delete_files`) is gated by `_fp_gate`'s `_fp IN (...)`.
-        In a key frame of several files, each key row carries its file
-        (`_efp`) and one `CASE _efp` in the join condition picks that
-        file's gate; it is evaluated only on key matches."""
+        When the files of a key frame differ in coverage, each key row
+        carries its file (`_efp`) and one `CASE _efp` in the join
+        condition picks that file's gate; it is evaluated only on key
+        matches."""
         from pyspark.sql import functions as F
 
         from .manifest import DataFileContent
@@ -1460,10 +1461,9 @@ class Scan:
                 by_key.setdefault(ids, []).append(path)
         for ids, paths in by_key.items():
             fields = [by_id[i] for i in ids]
-            gates = {
-                p: g for p in paths if (g := _fp_gate(covers[p], planned)) is not None
-            }
-            tagged = len(paths) > 1 and bool(gates)
+            gates = {p: _fp_gate(covers[p], planned) for p in paths}
+            # files of one coverage share one gate, and need no _efp
+            tagged = len(set(gates.values())) > 1
             keys = self._eq_key_frame(spark, paths, Schema(0, tuple(fields)), tagged)
             cond = None
             for f in fields:
@@ -1476,12 +1476,12 @@ class Scan:
                     + " ".join(
                         f"WHEN {_sql_str(strip_scheme(p))} THEN {g}"
                         for p, g in gates.items()
+                        if g is not None
                     )
                     + " ELSE true END"
                 )
-            elif gates:
-                (gate,) = gates.values()
-                cond = cond & F.expr(gate)
+            elif gates[paths[0]] is not None:
+                cond = cond & F.expr(gates[paths[0]])
             df = df.join(keys, on=cond, how="left_anti")
         return df
 
