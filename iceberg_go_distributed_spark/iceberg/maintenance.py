@@ -1015,7 +1015,7 @@ def convert_equality_deletes(table, spark) -> bool:
     schema = md.current_schema()
     by_id = {f.field_id: f for f in schema.fields}
     tasks = table.scan().plan_files_auto(spark)
-    # Executor-memory bound (style of read.mor.driver-decode-max-positions):
+    # Executor-memory bound (style of the MOR driver-decode bound):
     # the fast path loads each applicable key file as ONE pandas frame per
     # task — right for typical CDC commits (one small key file per
     # commit), an OOM for a bulk-MERGE key file at 100 TB. Above the
@@ -1295,7 +1295,7 @@ def _eq_keys_df_arrow(spark, path: str, fields):
                 yield frame
 
     ddl = schema_to_spark_ddl(Schema(0, tuple(fields)))
-    return rg_df.mapInPandas(read_rg, ddl).dropDuplicates()
+    return rg_df.mapInPandas(read_rg, ddl)
 
 
 def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
@@ -1350,6 +1350,8 @@ def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
         ))
         groups.setdefault(key, []).append(t)
 
+    # key frames are not deduplicated: a left-semi join returns each
+    # data row at most once, whatever duplicate keys its right side holds
     def keys_df(path, fields):
         if _fileio.is_local(path):
             # distributed read — the key file is big by construction
@@ -1359,13 +1361,9 @@ def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
             from .table import _ensure_field_id_reads
 
             _ensure_field_id_reads(spark)
-            return (
-                spark.read.schema(
-                    schema_to_spark_struct(Schema(0, tuple(fields)))
-                )
-                .parquet(path)
-                .dropDuplicates()
-            )
+            return spark.read.schema(
+                schema_to_spark_struct(Schema(0, tuple(fields)))
+            ).parquet(path)
         return _eq_keys_df_arrow(spark, path, fields)
 
     matched = None
@@ -1373,7 +1371,9 @@ def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
         need_ids = sorted({i for _, ids in key for i in ids})
         key_schema = Schema(0, tuple(by_id[i] for i in need_ids))
         stripped = [_replace(t, delete_files=()) for t in gtasks]
-        df = table.scan()._read_with_pos_deletes_jvm(spark, stripped, key_schema)
+        df = table.scan()._read_with_deletes(
+            spark, stripped, key_schema, with_pos=True
+        )
         for path, ids in key:
             fields = [by_id[i] for i in ids]
             kdf = keys_df(path, fields)

@@ -1,9 +1,10 @@
 """The executor-side per-file reader: one data file in, the table's
 columns out (ref table/arrow_scanner.go).
 
-Every Arrow read path — the wide DataFrame-fed scan and its merge-on-read
-fallback (table.py), SPJ bucket sides (spj.py) and the stream source /
-CDC reads (streaming.py) — goes through these pieces, so column
+Every Arrow read path — the wide DataFrame-fed scan, which is also where
+a scan goes when the JVM cannot open its paths (table.py), SPJ bucket
+sides (spj.py) and the stream source / CDC reads (streaming.py) — goes
+through these pieces, so column
 resolution, v3 initial-defaults, type promotion and positional-delete
 application are defined exactly once:
 

@@ -224,17 +224,12 @@ def _spj_wide(table, spark) -> bool:
     snap = table.metadata.current_snapshot()
     if snap is None:
         return False
-    props = table.metadata.properties
-
-    def prop_int(key, default):
-        try:
-            return int(props.get(key, default))
-        except (TypeError, ValueError):
-            return int(default)
-
-    min_manifests = prop_int("read.distributed-planning.min-manifests", "64")
-    min_files = prop_int("read.distributed-planning.min-files", "50000")
     from .manifest import ManifestContent
+    from .table import _distributed_planning_minima
+
+    min_manifests, min_files = _distributed_planning_minima(
+        table.metadata.properties
+    )
 
     manifests = [
         m for m in snap.manifests() if m.content == ManifestContent.DATA

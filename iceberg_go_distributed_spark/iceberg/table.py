@@ -357,11 +357,50 @@ def build_delete_matcher(delete_rows):
 # URI schemes byte-identically, so the pattern lives in exactly one place
 SCHEME_RE = "^[a-z0-9]+:(//)?"
 
-# read.spark.max-listed-files: above this many matched files, plain scans
+# read.spark.max-listed-files: above this many matched files, scans
 # stop passing a path list to spark.read.parquet (py4j + driver file
 # index are O(files): 72 s at 100k files) and stream the paths to
 # executors as a DataFrame instead (_read_files_arrow_distributed)
 _DEFAULT_MAX_LISTED_FILES = 100_000
+
+# DVs with at most this many positions in total (and at most 1024
+# vectors) decode on the driver: materializing (path, pos) rows through
+# the driver costs ~µs/row in Python→JVM conversion, so past it the
+# executor decode wins (SCALE.md: 4.9 s → 2.9 s on a 9.6M-row /
+# 1.37M-delete scan)
+_DRIVER_DECODE_MAX_POSITIONS = 100_000
+
+
+def _prop_int(props, key: str, default: int) -> int:
+    """Integer table property `key`; a missing or malformed value reads
+    as `default`."""
+    try:
+        return int(props.get(key, default))
+    except (TypeError, ValueError):
+        return default
+
+
+def _distributed_planning_minima(props) -> tuple[int, int]:
+    """(`read.distributed-planning.min-manifests`, `...min-files`): the
+    manifest and live-file counts at which planning fans out to
+    executors. 0 disables that trigger."""
+    return (
+        _prop_int(props, "read.distributed-planning.min-manifests", 64),
+        _prop_int(props, "read.distributed-planning.min-files", 50_000),
+    )
+
+
+def _paths_frame(spark, paths):
+    """The distinct `paths` as a `path string` frame of at most 64
+    partitions, for executor-side footer probes. Built from one Arrow
+    batch: a list of Python rows would deserialize in a Python-worker
+    stage of default-parallelism tasks first."""
+    import pandas as pd
+
+    uniq = sorted(set(paths))
+    return spark.createDataFrame(
+        pd.DataFrame({"path": uniq}), "path string"
+    ).repartition(min(len(uniq), 64))
 
 
 def strip_scheme(path: str) -> str:
@@ -885,17 +924,7 @@ class Scan:
         snap = self.snapshot()
         if snap is not None and spark is not None:
             props = self.table.metadata.properties
-
-            def prop_int(key, default):
-                try:
-                    return int(props.get(key, default))
-                except (TypeError, ValueError):
-                    return int(default)
-
-            min_manifests = prop_int(
-                "read.distributed-planning.min-manifests", "64"
-            )
-            min_files = prop_int("read.distributed-planning.min-files", "50000")
+            min_manifests, min_files = _distributed_planning_minima(props)
             manifests = snap.manifests()
             n_files = sum(
                 m.added_files_count + m.existing_files_count for m in manifests
@@ -1021,14 +1050,11 @@ class Scan:
         return df.drop("_fp", "_pos"), None
 
     def _max_listed_files(self) -> int:
-        try:
-            return int(
-                self.table.metadata.properties.get(
-                    "read.spark.max-listed-files", _DEFAULT_MAX_LISTED_FILES
-                )
-            )
-        except (TypeError, ValueError):
-            return _DEFAULT_MAX_LISTED_FILES
+        return _prop_int(
+            self.table.metadata.properties,
+            "read.spark.max-listed-files",
+            _DEFAULT_MAX_LISTED_FILES,
+        )
 
     def _stream_plan_eligible(self) -> bool:
         if type(self) is not Scan:
@@ -1037,14 +1063,6 @@ class Scan:
             return False
         if self.include_row_lineage or self.snapshot() is None:
             return False
-        props = self.table.metadata.properties
-
-        def prop_int(key, default):
-            try:
-                return int(props.get(key, default))
-            except (TypeError, ValueError):
-                return int(default)
-
         max_listed = self._max_listed_files()
         if max_listed <= 0:
             return False
@@ -1061,8 +1079,9 @@ class Scan:
         # the codebase's convention) disable it; a snapshot past the
         # wide-read threshold but under the minima still streams — the
         # prune job just degrades to a few tasks
-        min_manifests = prop_int("read.distributed-planning.min-manifests", "64")
-        min_files = prop_int("read.distributed-planning.min-files", "50000")
+        min_manifests, min_files = _distributed_planning_minima(
+            self.table.metadata.properties
+        )
         if min_manifests <= 0 and min_files <= 0:
             return False
         return n_files > max_listed
@@ -1070,7 +1089,14 @@ class Scan:
     def to_df(self, spark, tasks=None):
         """Data-plane execution — SURVEY §3.1 step 7. The driver/executor
         boundary is exactly here: everything above was metadata-only.
-        Pass pre-planned `tasks` to skip re-planning (count() does)."""
+        Pass pre-planned `tasks` to skip re-planning (count() does).
+
+        A very wide snapshot may stream its plan straight into the Arrow
+        reader (`_stream_plan_route`). Every other non-empty plan is one
+        `_read_with_deletes` call, with or without delete files — a scan
+        with none is a merge-on-read with no deletes — followed by the
+        row-lineage columns, the residual filter, the projection and the
+        limit."""
         from pyspark.sql import functions as F
 
         if tasks is None:
@@ -1102,11 +1128,11 @@ class Scan:
         proj = self.projection()
         schema = self._scan_schema()
 
+        if self.include_row_lineage and self.table.metadata.format_version < 3:
+            raise ValueError("_row_id requires a format-version 3 table")
         if not tasks:
             ddl = schema_to_spark_ddl(proj)
             if self.include_row_lineage:
-                if self.table.metadata.format_version < 3:
-                    raise ValueError("_row_id requires a format-version 3 table")
                 # an empty lineage scan must still carry the lineage
                 # columns — changelog_scan joins/selects `_row_id` on
                 # both sides, and one side planning zero files is a
@@ -1114,120 +1140,35 @@ class Scan:
                 ddl += ", _row_id bigint, _last_updated_sequence_number bigint"
             return spark.createDataFrame([], ddl)
 
+        # v3 row lineage: _row_id = data file's first_row_id (assigned by
+        # the manifest-list writer, inherited per file at plan time) +
+        # the row's physical position, joined from a broadcast
+        # (file → first_row_id) map
+        lineage = (
+            lineage_map_frame(spark, tasks) if self.include_row_lineage else None
+        )
+        # read projection ∪ filter fields, plus every equality-delete key
+        # column (the eq anti-join matches on them; _anti_join_eq_keys
+        # keeps the dropped-key check)
+        read_schema = self._read_schema()
         from .manifest import DataFileContent
 
-        files = [t.file.file_path for t in tasks]
-        has_pos = any(
-            d.content == DataFileContent.POSITION_DELETES
-            for t in tasks
-            for d in t.delete_files
-        )
-        eq_files: dict[str, DataFile] = {
-            d.file_path: d
+        eq_ids = {
+            i
             for t in tasks
             for d in t.delete_files
             if d.content == DataFileContent.EQUALITY_DELETES
+            for i in (d.equality_ids or [])
         }
-        lineage = None
-        if self.include_row_lineage:
-            # v3 row lineage: _row_id = data file's first_row_id (assigned
-            # by the manifest-list writer, inherited per file at plan
-            # time) + the row's physical position. Computed JVM-side from
-            # _metadata.row_index + a broadcast (file → first_row_id) map.
-            md = self.table.metadata
-            if md.format_version < 3:
-                raise ValueError("_row_id requires a format-version 3 table")
-            lineage = lineage_map_frame(spark, tasks)
-        if has_pos or eq_files or lineage is not None:
-            # prune the MOR read too: projection ∪ filter fields, plus
-            # every equality-delete key column (the eq anti-join matches
-            # on them; _anti_join_eq_keys keeps the dropped-key check).
-            # Lineage reads take this path with or without deletes: it
-            # carries the _fp/_pos that _row_id derives from
-            read_schema = self._read_schema()
-            if eq_files:
-                keep = {f.field_id for f in read_schema.fields} | {
-                    i
-                    for d in eq_files.values()
-                    for i in (d.equality_ids or [])
-                }
-                read_schema = Schema(
-                    schema.schema_id,
-                    tuple(f for f in schema.fields if f.field_id in keep),
-                )
-            df = self._read_with_deletes(
-                spark, tasks, read_schema, lineage=lineage is not None
+        if eq_ids:
+            keep = {f.field_id for f in read_schema.fields} | eq_ids
+            read_schema = Schema(
+                schema.schema_id,
+                tuple(f for f in schema.fields if f.field_id in keep),
             )
-        else:
-            # field-id-based read: columns resolve by the parquet field
-            # ids our writer stamps, so renames/evolution are safe;
-            # Catalyst prunes columns + pushes the residual filter into
-            # the parquet row-group scan. Tables carrying a name mapping
-            # contain add_files-registered files WITHOUT field ids —
-            # those resolve by (mapped) name instead.
-            has_defaults = any(f.initial_default is not None for f in schema.fields)
-            max_listed = self._max_listed_files()
-            if 0 < max_listed < len(files):
-                # wide scan: a path-list read would ship O(files) strings
-                # through py4j and build a driver file index (72 s at
-                # 100k files, SCALE.md r13) — stream the paths to
-                # executors as a DataFrame instead. Defaults are filled
-                # in-task (file identity is free there), so the outer
-                # defaults pass is skipped; name-mapped (add_files)
-                # columns resolve per file inside the reader. The read
-                # schema is PRUNED to projection ∪ filter fields —
-                # Catalyst cannot push a projection through mapInArrow
-                df = self._read_files_arrow_distributed(
-                    spark, files, self._read_schema()
-                )
-            elif "schema.name-mapping.default" in self.table.metadata.properties:
-                # No Arrow fallback here: failures (including transient
-                # object-store errors) propagate.
-                if has_defaults:
-                    # defaults need per-row file identity: carry _fp
-                    # through the grouped union (no _metadata there)
-                    df = self._read_with_name_mapping(
-                        spark, files, schema, with_pos=True
-                    )
-                    df = self._apply_initial_defaults(
-                        spark, df, files, schema, F.col("_fp")
-                    ).drop("_fp", "_pos")
-                else:
-                    df = self._read_with_name_mapping(spark, files, schema)
-            else:
-                from .types import schema_to_spark_struct
-
-                _ensure_field_id_reads(spark)
-                try:
-                    # narrow try: only the JVM path-resolution / scheme
-                    # lookup — defaults application stays outside so its
-                    # own bugs propagate instead of rerouting
-                    df = read_listed_parquet(
-                        spark, spark.read.schema(schema_to_spark_struct(schema)), files
-                    )
-                except Exception:  # noqa: BLE001 — reroute to the Arrow reader
-                    from . import fileio
-
-                    if all(fileio.is_local(f) for f in files):
-                        # local files: a real error, not a missing scheme
-                        raise
-                    # object-store table but no Hadoop connector for the
-                    # scheme in this Spark: distributed per-file Arrow read
-                    # (real clusters ship s3a:// and never take this branch)
-                    logger.warning(
-                        "JVM parquet reader cannot open %s; using the "
-                        "distributed Arrow reader",
-                        files[0].split("://", 1)[0] + "://",
-                    )
-                    df = self._read_files_arrow_distributed(spark, files, schema)
-                else:
-                    df = self._apply_initial_defaults(
-                        spark,
-                        df,
-                        files,
-                        schema,
-                        file_path_col(),
-                    )
+        df = self._read_with_deletes(
+            spark, tasks, read_schema, lineage=lineage is not None
+        )
         if lineage is not None:
             df = attach_lineage(df, lineage)
         if not isinstance(self.row_filter, AlwaysTrue):
@@ -1367,48 +1308,105 @@ class Scan:
             out[c] = (lo, hi)
         return out
 
-    def _read_with_deletes(self, spark, tasks, schema: Schema, lineage=False):
-        """Merge-on-read in one pass over the scan, as the reference's
-        arrow_scanner does: one read of every planned file carrying
-        `_fp`/`_pos` (`_read_with_pos_deletes_jvm`), one `(_fp, _pos)`
-        anti-join for positional deletes and DVs, and one anti-join per
-        set of equality key columns, each key file gated to the files
-        plan-time matching assigned it (`_anti_join_eq_keys`). If the
-        JVM read fails, the per-file Arrow reader drops positional
-        deletes in-task instead. `lineage` marks a row-lineage read: it
-        keeps `_fp`/`_pos` (`_row_id` derives from them) and the
-        reserved lineage columns."""
-        try:
-            df = self._read_with_pos_deletes_jvm(spark, tasks, schema, lineage)
-        except Exception:
-            if lineage:
-                # the Arrow fallback has no _metadata.row_index; silently
-                # rerouting would break _row_id derivation
-                raise
-            logger.warning(
-                "JVM merge-on-read path failed; falling back to the per-file "
-                "Arrow reader (no parquet pushdown for this scan)",
-                exc_info=True,
-            )
-            from .manifest import DataFileContent
-            from .reader import delete_entry
+    def _read_with_deletes(
+        self, spark, tasks, schema: Schema, lineage=False, with_pos=False
+    ):
+        """Read every planned file in one pass and apply its deletes, as
+        the reference's arrow_scanner does; a scan with no delete files
+        is a merge-on-read with no deletes. The reader is chosen here,
+        from the file count and the table's properties:
 
+          * more than `read.spark.max-listed-files` files, unless this is
+            a lineage read: the wide Arrow reader
+            (`_read_files_arrow_distributed`), which streams the paths to
+            executors and fills initial defaults in-task;
+          * else the JVM frame build (`_read_jvm`): the grouped
+            name-mapped read when the table has a name mapping, else one
+            `parquet(*files)` with columns by field id. Initial defaults
+            then apply through `_apply_initial_defaults`.
+
+        `_fp` (raw file path) and `_pos` (file position) are read only
+        when used: `_pos` by positional deletes, DVs and lineage, `_fp`
+        by those and by the equality gates and the defaults probe. A
+        delete-free, default-free JVM read is a bare scan, and the Arrow
+        reader keeps per-file filter pushdown unless `_pos` is read.
+        Positional deletes and DVs drop through one `(_fp, _pos)`
+        anti-join: they name exact file paths, never a file of a later
+        snapshot, so one global anti-join keeps the per-file matching
+        computed at plan time. Each set of equality key columns drops
+        through one gated anti-join (`_anti_join_eq_keys`).
+
+        If the JVM frame build raises on paths that are not all local
+        (a scheme this Spark has no connector for), the scan reroutes to
+        the Arrow reader, which drops positional deletes in-task. On
+        local paths the error is real and propagates, as it does for a
+        lineage read: the Arrow reader has no materialized lineage
+        columns.
+
+        `lineage` marks a row-lineage read: it also reads the reserved
+        lineage columns (null where absent) and keeps `_fp`/`_pos`, which
+        `_row_id` derives from. `with_pos` keeps `_fp`/`_pos` for callers
+        that key on file positions."""
+        from pyspark.sql import functions as F
+
+        from . import fileio
+        from .manifest import DataFileContent
+        from .reader import delete_entry
+
+        files = [t.file.file_path for t in tasks]
+        task_pos = [
+            [d for d in t.delete_files if d.content == DataFileContent.POSITION_DELETES]
+            for t in tasks
+        ]
+        pos_deletes = [d for ds in task_pos for d in ds]
+        has_eq = any(
+            d.content == DataFileContent.EQUALITY_DELETES
+            for t in tasks
+            for d in t.delete_files
+        )
+        with_pos = with_pos or lineage
+        need_pos = with_pos or bool(pos_deletes)
+        arrow = 0 < self._max_listed_files() < len(files) and not lineage
+        in_task = None
+        if not arrow:
+            has_defaults = any(f.initial_default is not None for f in schema.fields)
+            meta = []
+            if need_pos or has_eq or has_defaults:
+                meta.append(file_path_col().alias("_fp"))
+            if need_pos:
+                meta.append(F.col("_metadata.row_index").alias("_pos"))
+            try:
+                df = self._read_jvm(spark, files, schema, meta, lineage)
+            except Exception:
+                if lineage or all(fileio.is_local(f) for f in files):
+                    raise
+                logger.warning(
+                    "JVM parquet reader cannot open %s; using the "
+                    "distributed Arrow reader",
+                    files[0].split("://", 1)[0] + "://",
+                    exc_info=True,
+                )
+                arrow = True
+                if pos_deletes and not with_pos:
+                    # dropping rows in-task renumbers positions, so only
+                    # a read that returns no `_pos` drops them there
+                    in_task = [[delete_entry(d) for d in ds] for ds in task_pos]
+                    pos_deletes = []
+                    need_pos = False
+        if arrow:
             df = self._read_files_arrow_distributed(
                 spark,
-                [t.file.file_path for t in tasks],
+                files,
                 schema,
-                with_fp=True,
-                deletes=[
-                    [
-                        delete_entry(d)
-                        for d in t.delete_files
-                        if d.content == DataFileContent.POSITION_DELETES
-                    ]
-                    for t in tasks
-                ],
+                with_fp=need_pos or has_eq,
+                with_pos=need_pos,
+                deletes=in_task,
             )
+        df = self._anti_join_pos_deletes(spark, df, pos_deletes)
+        if not arrow:
+            df = self._apply_initial_defaults(spark, df, files, schema)
         df = self._anti_join_eq_keys(spark, df, tasks, schema)
-        return df if lineage else df.drop("_fp", "_pos")
+        return df if with_pos else df.drop("_fp", "_pos")
 
     def _anti_join_eq_keys(self, spark, df, tasks, schema: Schema):
         """Drop equality-deleted rows from a `_fp`-carrying frame, with
@@ -1524,60 +1522,27 @@ class Scan:
             spark.createDataFrame(pd.concat(parts, ignore_index=True), schema=ddl)
         )
 
-    def _read_with_pos_deletes_jvm(self, spark, tasks, schema: Schema, lineage=False):
-        """JVM-side read of every planned file in one `parquet(*files)`,
-        with `_fp` (`file_path_col`) and `_pos` (`_metadata.row_index`)
-        added by one select; the matched positional deletes and DVs drop
-        through `_anti_join_pos_deletes`, then initial defaults apply.
-        Positional deletes name exact file paths, and a delete can never
-        name a file from a later snapshot, so the global anti-join
-        preserves the per-file sequence-gated matching computed at plan
-        time. Returns the frame with `_fp`/`_pos`. `lineage` marks a
-        row-lineage read: it also requests the reserved materialized
-        lineage columns (null-filled where absent)."""
-        from pyspark.sql import functions as F
-
-        from .manifest import DataFileContent
+    def _read_jvm(self, spark, files, schema: Schema, meta, lineage=False):
+        """The JVM frame over `files` with the `meta` columns (`_fp`,
+        `_pos`) appended: the grouped name-mapped read when the table
+        carries `schema.name-mapping.default` (add_files imports whose
+        files have no field ids), else one `parquet(*files)` resolving
+        columns by field id, so renames and evolution are safe and
+        Catalyst prunes columns and pushes the residual filter into the
+        parquet scan. `lineage` also reads the reserved lineage columns,
+        null-filled where absent."""
         from .types import schema_to_spark_struct
 
-        delete_files = [
-            d
-            for t in tasks
-            for d in t.delete_files
-            if d.content == DataFileContent.POSITION_DELETES
-        ]
-        files = [t.file.file_path for t in tasks]
-        max_listed = self._max_listed_files()
-        if 0 < max_listed < len(files) and not lineage:
-            # wide MOR scan: the same O(files) path-list cost as the
-            # plain read (SCALE.md r13) — stream the paths instead;
-            # the reader emits (_fp, _pos) in-task, file-order exact,
-            # and resolves name-mapped columns per file (lineage reads
-            # keep the JVM path: they need the reserved materialized
-            # lineage columns)
-            df = self._read_files_arrow_distributed(
-                spark, files, schema, with_fp=True, with_pos=True
+        if "schema.name-mapping.default" in self.table.metadata.properties:
+            return self._read_with_name_mapping(
+                spark, files, _lineage_ext_schema(schema) if lineage else schema, meta
             )
-        elif "schema.name-mapping.default" in self.table.metadata.properties:
-            # grouped multi-name read: ID-less files may carry any
-            # mapped (pre-rename) column name; _fp/_pos selected inside
-            # each group before the union
-            nm_schema = _lineage_ext_schema(schema) if lineage else schema
-            df = self._read_with_name_mapping(spark, files, nm_schema, with_pos=True)
-        else:
-            _ensure_field_id_reads(spark)
-            struct = (
-                _lineage_read_struct(schema)
-                if lineage
-                else schema_to_spark_struct(schema)
-            )
-            df = read_listed_parquet(spark, spark.read.schema(struct), files).select(
-                "*",
-                file_path_col().alias("_fp"),
-                F.col("_metadata.row_index").alias("_pos"),
-            )
-        df = self._anti_join_pos_deletes(spark, df, delete_files)
-        return self._apply_initial_defaults(spark, df, files, schema, F.col("_fp"))
+        _ensure_field_id_reads(spark)
+        struct = (
+            _lineage_read_struct(schema) if lineage else schema_to_spark_struct(schema)
+        )
+        df = read_listed_parquet(spark, spark.read.schema(struct), files)
+        return df.select("*", *meta) if meta else df
 
     def _anti_join_pos_deletes(self, spark, df, delete_files):
         """Drop positionally-deleted rows from a (_fp, _pos)-carrying
@@ -1621,14 +1586,11 @@ class Scan:
             for d in uniq.values()
             if d.content_offset is not None
         )
-        try:
-            max_small = int(
-                self.table.metadata.properties.get(
-                    "read.mor.broadcast-deletes-max-positions", "2000000"
-                )
-            )
-        except (TypeError, ValueError):
-            max_small = 2_000_000
+        max_small = _prop_int(
+            self.table.metadata.properties,
+            "read.mor.broadcast-deletes-max-positions",
+            2_000_000,
+        )
         n_del_positions = sum(d.record_count for d in uniq.values())
         small_deletes = 0 < n_del_positions <= max_small
         dels = None
@@ -1642,19 +1604,9 @@ class Scan:
             )
         if dv_descriptors:
             # Driver decode has its OWN (much smaller) bound than the
-            # broadcast gate: materializing (path, pos) rows through the
-            # driver costs ~µs/row in Python→JVM conversion, so at ~1M+
-            # positions the executor decode (parallel, Arrow-batched)
-            # wins even though the frame still broadcasts afterwards —
-            # measured 4.9 s → 2.9 s on a 9.6M-row/1.37M-delete scan.
-            try:
-                driver_max = int(
-                    self.table.metadata.properties.get(
-                        "read.mor.driver-decode-max-positions", "100000"
-                    )
-                )
-            except (TypeError, ValueError):
-                driver_max = 100_000
+            # broadcast gate, _DRIVER_DECODE_MAX_POSITIONS: past it the
+            # executor decode (parallel, Arrow-batched) wins even though
+            # the frame still broadcasts afterwards.
             dv_df = self._deletion_vector_positions(
                 spark,
                 dv_descriptors,
@@ -1664,7 +1616,7 @@ class Scan:
                 # max_small == 0 disables BOTH small-side paths (the
                 # documented escape hatch), so it gates driver decode too
                 on_driver=max_small > 0
-                and 0 < n_del_positions <= driver_max
+                and 0 < n_del_positions <= _DRIVER_DECODE_MAX_POSITIONS
                 and len(dv_descriptors) <= 1024,
             )
             dels = dv_df if dels is None else dels.unionByName(dv_df)
@@ -1674,7 +1626,7 @@ class Scan:
             df = df.join(dels, ["_fp", "_pos"], "left_anti")
         return df
 
-    def _read_with_name_mapping(self, spark, files, schema: Schema, with_pos=False):
+    def _read_with_name_mapping(self, spark, files, schema: Schema, meta=()):
         """Read for tables carrying `schema.name-mapping.default`
         (ID-less files registered via add_files): each schema field may
         live under ANY of its mapped names in a given file (renames
@@ -1682,8 +1634,10 @@ class Scan:
         probed for their column names executor-side, grouped by the
         resulting field→file-column assignment (group count is bounded
         by schema versions, not files), and each group reads with its
-        own physical schema then aliases to current names. Columns
-        absent from a file read as null, matching ID-based resolution."""
+        own physical schema then aliases to current names, plus the
+        `meta` columns (`_fp`, `_pos`: each group selects them before the
+        union). Columns absent from a file read as null, matching ID-based
+        resolution."""
         import pandas as pd
         from pyspark.sql import functions as F
 
@@ -1698,10 +1652,7 @@ class Scan:
         )
         names_by_id = {m.field_id: list(m.names) for m in mapping}
         cfg = _fileio.env_config()
-        uniq = sorted(set(files))
-        files_df = spark.createDataFrame(
-            [(p,) for p in uniq], "path string"
-        ).repartition(min(len(uniq), 64))
+        files_df = _paths_frame(spark, files)
         # the field→file-column assignment is computed executor-side so
         # only (path, small assignment key) crosses to the driver — the
         # driver already holds the O(files) path list from planning, but
@@ -1753,19 +1704,13 @@ class Scan:
                 )
                 for src, f in zip(assign, schema.fields)
             ]
-            if with_pos:
-                # positional-MOR callers need (file, row) before the union
-                cols += [
-                    file_path_col().alias("_fp"),
-                    F.col("_metadata.row_index").alias("_pos"),
-                ]
-            parts.append(g.select(*cols))
+            parts.append(g.select(*cols, *meta))
         df = parts[0]
         for p_ in parts[1:]:
             df = df.unionByName(p_)
         return df
 
-    def _apply_initial_defaults(self, spark, df, files, schema: Schema, fp_expr):
+    def _apply_initial_defaults(self, spark, df, files, schema: Schema):
         """v3 field default values (initial-default): rows read from
         files that physically LACK a defaulted column take the default;
         files that contain the column keep their stored values,
@@ -1773,7 +1718,7 @@ class Scan:
         never coalesce). Which files lack which columns is probed from
         parquet footers executor-side — one footer read per file, only
         when the schema actually carries defaults — and joined back on
-        file path, so no O(files) driver loop and no lit-list that
+        `df`'s `_fp`, so no O(files) driver loop and no lit-list that
         would blow up at a million files."""
         defaults = [f for f in schema.fields if f.initial_default is not None]
         if not defaults:
@@ -1794,10 +1739,7 @@ class Scan:
             (f.field_id, f.name, sorted({f.name, *alt_names.get(f.field_id, [])}))
             for f in defaults
         ]
-        uniq = sorted(set(files))
-        files_df = spark.createDataFrame(
-            [(p,) for p in uniq], "path string"
-        ).repartition(min(len(uniq), 64))
+        files_df = _paths_frame(spark, files)
 
         def probe(batches):
             import pandas as pd
@@ -1831,7 +1773,7 @@ class Scan:
             "_dflt_fp",
             strip_scheme_col(F.col("path")),
         ).drop("path")
-        df = df.join(flags, fp_expr == F.col("_dflt_fp"), "left")
+        df = df.join(flags, F.col("_fp") == F.col("_dflt_fp"), "left")
         for f in defaults:
             df = df.withColumn(
                 f.name,
@@ -2686,14 +2628,7 @@ class Table(StaticTable):
         planner) when the snapshot has >= read.distributed-planning.
         min-manifests manifests; otherwise None (caller decodes on the
         driver)."""
-        try:
-            min_manifests = int(
-                self.metadata.properties.get(
-                    "read.distributed-planning.min-manifests", "64"
-                )
-            )
-        except (TypeError, ValueError):
-            min_manifests = 64
+        min_manifests, _ = _distributed_planning_minima(self.metadata.properties)
         if min_manifests <= 0 or len(work_rows) < min_manifests:
             return None
         from . import fileio as _fileio

@@ -741,7 +741,7 @@ try:  # pyspark >= 4: Python Data Source API
                 )
 
             # Executor-memory bound for equality-delete expansion
-            # (mirrors read.mor.driver-decode-max-positions): executors
+            # (mirrors the MOR driver-decode bound): executors
             # load each partition's applicable key files as pandas
             # frames (_eq_sets) — one small file for typical CDC
             # commits, but a bulk MERGE can commit a 100M-key file that

@@ -307,7 +307,8 @@ def merge_on_read_oracle(tasks, schema: Schema, columns, with_fp_pos=False):
     task's (local) data file, drops the positions named by THAT task's
     own positional-delete files and DVs, then drops rows whose key tuple
     null-safely equals a key in any of that task's own equality-delete
-    files. Columns resolve by name. Returns a Counter of row tuples over
+    files. Columns resolve by name; a column a file lacks reads as its
+    `initial_default` (or null). Returns a Counter of row tuples over
     `columns`, plus (raw path, position) when `with_fp_pos`."""
     import collections
     import re
@@ -321,6 +322,7 @@ def merge_on_read_oracle(tasks, schema: Schema, columns, with_fp_pos=False):
         return re.sub(SCHEME_RE, "", p)
 
     name_of = {f.field_id: f.name for f in schema.fields}
+    default = {f.name: f.initial_default for f in schema.fields}
     out = collections.Counter()
     for t in tasks:
         path = raw(t.file.file_path)
@@ -354,7 +356,7 @@ def merge_on_read_oracle(tasks, schema: Schema, columns, with_fp_pos=False):
                 tuple(data[n][i] for n in names) in keys for names, keys in eq_sets
             ):
                 continue
-            row = tuple(data[c][i] for c in columns)
+            row = tuple(data[c][i] if c in data else default[c] for c in columns)
             out[row + ((path, i) if with_fp_pos else ())] += 1
     return out
 

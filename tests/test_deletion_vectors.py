@@ -194,16 +194,20 @@ def test_scan_applies_deletion_vector(fs_catalog, spark, sf_dir, tmp_path, monke
         spark
     ).count() == n0
 
-    # the Arrow fallback MOR path (taken when the JVM path fails)
-    # returns exactly the JVM path's rows
+    # the Arrow reroute (taken when the JVM frame build fails on paths
+    # that are not local) returns exactly the JVM path's rows
+    from iceberg_go_distributed_spark.iceberg import fileio
     from iceberg_go_distributed_spark.iceberg.table import Scan
 
     jvm_rows = sorted(tuple(r) for r in df.collect())
 
     def jvm_fails(*_a, **_k):
-        raise RuntimeError("JVM merge-on-read unavailable")
+        raise RuntimeError("no FileSystem for scheme")
 
-    monkeypatch.setattr(Scan, "_read_with_pos_deletes_jvm", jvm_fails)
+    monkeypatch.setattr(Scan, "_read_jvm", jvm_fails)
+    remote = {tk.file.file_path for tk in t2.scan().plan_files()}
+    is_local = fileio.is_local
+    monkeypatch.setattr(fileio, "is_local", lambda p: p not in remote and is_local(p))
     arrow_df = t2.scan().to_df(spark)
     assert "MapInArrow" in arrow_df._jdf.queryExecution().executedPlan().toString()
     assert sorted(tuple(r) for r in arrow_df.collect()) == jvm_rows

@@ -595,8 +595,9 @@ def test_conversion_join_path_on_partitioned_table(cat, spark):
 def test_eq_keys_df_arrow_row_group_parallel(cat, spark, tmp_path):
     """The non-JVM keys_df fallback must read the key file row-group-
     parallel on executors (bounded by one row group), resolve columns
-    by parquet FIELD ID (renames survive), and dedup — never a
-    whole-file driver pandas materialization."""
+    by parquet FIELD ID (renames survive), and return every key row of
+    every group — never a whole-file driver pandas materialization. No
+    dedup: its one consumer is a left-semi join."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -632,7 +633,7 @@ def test_eq_keys_df_arrow_row_group_parallel(cat, spark, tmp_path):
     df = _eq_keys_df_arrow(spark, path, fields)
     assert df.columns == ["id_renamed", "owner2"]
     got = sorted((r.id_renamed, r.owner2) for r in df.collect())
-    assert got == sorted((i, f"o{i}") for i in range(100))  # deduped
+    assert got == sorted((i, f"o{i}") for i in ids)
 
 
 def test_eq_convert_key_frame_cache_is_module_global(tmp_path):

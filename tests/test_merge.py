@@ -628,10 +628,19 @@ def test_merge_by_source_fuzz_against_pandas_model(fs_catalog, spark):
     AND both BY SOURCE clauses — vs the ANSI pandas model (delete wins
     over update within each pipeline; by-source conditions reference
     target only)."""
+    _merge_by_source_fuzz(fs_catalog, spark, seed=7, trials=3)
+
+
+def test_merge_by_source_fuzz_against_pandas_model_slice(fs_catalog, spark):
+    """One seeded trial of the fuzz above for the default tier."""
+    _merge_by_source_fuzz(fs_catalog, spark, seed=11, trials=1)
+
+
+def _merge_by_source_fuzz(fs_catalog, spark, seed, trials):
     import random
 
-    rng = random.Random(7)
-    for trial in range(3):
+    rng = random.Random(seed)
+    for trial in range(trials):
         tgt_rows = [
             (i, f"o{i}", float(rng.randint(0, 999)))
             for i in rng.sample(range(30), 18)

@@ -1,10 +1,18 @@
-"""One-pass merge-on-read (`Scan._read_with_deletes`): every planned
-file read in one scan, positional deletes and DVs through one
-`(_fp, _pos)` anti-join, each equality-delete file through one anti-join
-gated by `_fp IN (...)` to the files it applies to.
+"""One-pass merge-on-read (`Scan._read_with_deletes`), the one read path
+of every planned scan: every planned file read in one scan, positional
+deletes and DVs through one `(_fp, _pos)` anti-join, each
+equality-delete file through one anti-join gated by `_fp IN (...)` to
+the files it applies to.
 
   * a twin against `oracles.merge_on_read_oracle` (per-file pyarrow
-    reads) on seeded hand-built task sets and on seeded DML histories;
+    reads) on seeded hand-built task sets, with and without deletes and
+    initial defaults, through each reader the read can pick (JVM listed,
+    name-mapped, wide Arrow), and on seeded DML histories;
+  * which columns and operators each reader's plan carries: a plain JVM
+    read is a bare scan, a wide read fills defaults in-task with no
+    footer probe, an equality-only wide read keeps filter pushdown;
+  * the JVM-failure rule: local paths and lineage reads raise, other
+    paths reroute to the Arrow reader;
   * deletes, defaults and row lineage on data paths that Spark's
     `_metadata.file_path` URI-encodes;
   * `add_files` records the path Spark reports, so the gates find
@@ -19,6 +27,7 @@ import collections
 import copy
 import os
 import random
+import re
 from dataclasses import replace
 
 import pyarrow as pa
@@ -26,6 +35,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from iceberg_go_distributed_spark.iceberg import expressions as E
+from iceberg_go_distributed_spark.iceberg import fileio
 from iceberg_go_distributed_spark.iceberg import types as ty
 from iceberg_go_distributed_spark.iceberg.catalog import FileSystemCatalog
 from iceberg_go_distributed_spark.iceberg.manifest import DataFile, DataFileContent
@@ -34,6 +44,10 @@ from iceberg_go_distributed_spark.iceberg.puffin import (
     BlobMetadata,
     serialize_deletion_vector,
     write_puffin,
+)
+from iceberg_go_distributed_spark.iceberg.sanitize import (
+    name_mapping_from_schema,
+    name_mapping_to_json,
 )
 from iceberg_go_distributed_spark.iceberg.table import (
     _LISTING_CONF,
@@ -54,8 +68,23 @@ SCHEMA = Schema.of(
     NestedField(3, "part", ty.LongType()),
     NestedField(4, "v", ty.DoubleType()),
 )
-COLS = [f.name for f in SCHEMA.fields]
 DDL = "id long, k string, part long, v double"
+# SCHEMA plus a column with an initial default that no hand-built file has
+DEFAULTED = Schema.of(
+    0,
+    *SCHEMA.fields,
+    NestedField(5, "cat", ty.StringType(), initial_default="dflt", write_default="dflt"),
+)
+# the table properties that make `_read_with_deletes` pick each reader
+READERS = {
+    "jvm": {},
+    "name_mapped": {
+        "schema.name-mapping.default": name_mapping_to_json(
+            name_mapping_from_schema(DEFAULTED)
+        )
+    },
+    "wide": {"read.spark.max-listed-files": "1"},
+}
 POS = DataFileContent.POSITION_DELETES
 EQ = DataFileContent.EQUALITY_DELETES
 
@@ -86,13 +115,15 @@ def _write(path, fields, columns):
     )
 
 
-def _frame_rows(df, with_fp_pos=False):
-    cols = COLS + (["_fp", "_pos"] if with_fp_pos else [])
+def _frame_rows(df, with_fp_pos=False, schema=SCHEMA):
+    cols = [f.name for f in schema.fields] + (["_fp", "_pos"] if with_fp_pos else [])
     return collections.Counter(tuple(r) for r in df.select(*cols).collect())
 
 
-def _oracle(tasks, with_fp_pos=False):
-    return merge_on_read_oracle(tasks, SCHEMA, COLS, with_fp_pos)
+def _oracle(tasks, with_fp_pos=False, schema=SCHEMA):
+    return merge_on_read_oracle(
+        tasks, schema, [f.name for f in schema.fields], with_fp_pos
+    )
 
 
 def _hand_built(rng, root):
@@ -216,37 +247,112 @@ def odd_root(tmp_path):
     return root
 
 
-@pytest.mark.parametrize("seed", [1, 2, 3])
-def test_one_pass_read_matches_per_file_oracle(spark, odd_root, seed):
+@pytest.mark.parametrize(
+    "seed, reader, schema",
+    [
+        pytest.param(1, "jvm", SCHEMA, id="1"),
+        pytest.param(2, "jvm", SCHEMA, id="2"),
+        pytest.param(3, "jvm", SCHEMA, id="3"),
+        pytest.param(4, "jvm", DEFAULTED, id="jvm-defaults"),
+        pytest.param(5, "name_mapped", SCHEMA, id="name_mapped"),
+        pytest.param(6, "name_mapped", DEFAULTED, id="name_mapped-defaults"),
+        pytest.param(7, "wide", DEFAULTED, id="wide-defaults"),
+    ],
+)
+def test_one_pass_read_matches_per_file_oracle(spark, odd_root, seed, reader, schema):
+    """Each reader, with every delete kind, with positional deletes only
+    and with no deletes at all; plain and lineage reads (a lineage read
+    never takes the wide reader)."""
     t = FileSystemCatalog(str(odd_root / "wh")).create_table("db.t", SCHEMA)
+    t.properties.update(READERS[reader])
     tasks = _hand_built(random.Random(seed), str(odd_root))
-    # and the same scan with no equality delete at all
     no_eq = [
         replace(tk, delete_files=tuple(d for d in tk.delete_files if d.content != EQ))
         for tk in tasks
     ]
-    for ts in (tasks, no_eq):
-        for lineage in (False, True):
-            df = t.scan()._read_with_deletes(spark, ts, SCHEMA, lineage=lineage)
-            assert _frame_rows(df, lineage) == _oracle(ts, lineage), (
-                f"seed {seed} lineage={lineage}"
-            )
+    plain = [replace(tk, delete_files=()) for tk in tasks]
+    for ts, lineage in (
+        (tasks, False), (tasks, True), (no_eq, False), (no_eq, True), (plain, False)
+    ):
+        df = t.scan()._read_with_deletes(spark, ts, schema, lineage=lineage)
+        assert _frame_rows(df, lineage, schema) == _oracle(ts, lineage, schema), (
+            f"seed {seed} lineage={lineage}"
+        )
+
+
+def test_wide_equality_only_read_keeps_filter_pushdown(spark, odd_root, monkeypatch):
+    """Equality deletes alone need `_fp` for their gates and no `_pos`,
+    so the wide reader is asked for no positions and keeps pushing the
+    row filter into each file read."""
+    t = FileSystemCatalog(str(odd_root / "wh")).create_table("db.t", SCHEMA)
+    t.properties.update(READERS["wide"])
+    tasks = _hand_built(random.Random(8), str(odd_root))
+    eq_only = [
+        replace(tk, delete_files=tuple(d for d in tk.delete_files if d.content == EQ))
+        for tk in tasks
+    ]
+    calls = []
+    orig = Scan._read_files_arrow_distributed
+
+    def spy(self, spark_, files, schema, **kw):
+        calls.append((kw["with_fp"], kw["with_pos"]))
+        return orig(self, spark_, files, schema, **kw)
+
+    monkeypatch.setattr(Scan, "_read_files_arrow_distributed", spy)
+    df = t.scan(row_filter=E.greater_than("v", 300.0)).to_df(spark, tasks=eq_only)
+    assert calls == [(True, False)]
+    want = collections.Counter(
+        {row: n for row, n in _oracle(eq_only).items() if row[3] > 300.0}
+    )
+    assert _frame_rows(df) == want
+
+
+def _jvm_build_fails(monkeypatch):
+    def fail(*_a, **_k):
+        raise RuntimeError("no FileSystem for scheme")
+
+    monkeypatch.setattr(Scan, "_read_jvm", fail)
+
+
+def _data_paths_look_remote(monkeypatch, tasks):
+    """The planned data files count as object-store paths on the driver,
+    as for a scheme this Spark has no connector for."""
+    remote = {tk.file.file_path for tk in tasks}
+    is_local = fileio.is_local
+    monkeypatch.setattr(fileio, "is_local", lambda p: p not in remote and is_local(p))
 
 
 def test_arrow_fallback_applies_the_same_gates(spark, odd_root, monkeypatch):
-    """When the JVM read fails, the per-file Arrow reader drops the
-    positional deletes in-task and the equality gates still key on its
-    `_fp` column."""
+    """When the JVM frame build fails on non-local paths, the per-file
+    Arrow reader drops the positional deletes in-task, the equality
+    gates still key on its `_fp` column, and the rows are the JVM
+    route's."""
     t = FileSystemCatalog(str(odd_root / "wh")).create_table("db.t", SCHEMA)
     tasks = _hand_built(random.Random(4), str(odd_root))
+    jvm_rows = _frame_rows(t.scan()._read_with_deletes(spark, tasks, SCHEMA))
 
-    def jvm_fails(*_a, **_k):
-        raise RuntimeError("JVM merge-on-read unavailable")
-
-    monkeypatch.setattr(Scan, "_read_with_pos_deletes_jvm", jvm_fails)
+    _jvm_build_fails(monkeypatch)
+    _data_paths_look_remote(monkeypatch, tasks)
     df = t.scan()._read_with_deletes(spark, tasks, SCHEMA)
     assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
-    assert _frame_rows(df) == _oracle(tasks)
+    assert _frame_rows(df) == jvm_rows == _oracle(tasks)
+
+
+def test_jvm_build_failure_raises_on_local_paths_and_lineage_reads(
+    spark, odd_root, monkeypatch
+):
+    """A JVM build that fails on local paths is a real error, and a
+    lineage read cannot reroute: the Arrow reader has no materialized
+    lineage columns."""
+    t = FileSystemCatalog(str(odd_root / "wh")).create_table("db.t", SCHEMA)
+    tasks = _hand_built(random.Random(9), str(odd_root))
+    _jvm_build_fails(monkeypatch)
+    for ts in (tasks, [replace(tk, delete_files=()) for tk in tasks]):
+        with pytest.raises(RuntimeError, match="no FileSystem"):
+            t.scan()._read_with_deletes(spark, ts, SCHEMA)
+    _data_paths_look_remote(monkeypatch, tasks)
+    with pytest.raises(RuntimeError, match="no FileSystem"):
+        t.scan()._read_with_deletes(spark, tasks, SCHEMA, lineage=True)
 
 
 def test_gate_is_one_literal_set_over_the_smaller_side():
@@ -423,6 +529,49 @@ def test_deletes_apply_on_paths_spark_uri_encodes(spark, tmp_path, dirname):
     want |= {i: -float(i) for i in range(5)} | {i: i + 0.5 for i in range(3)}
     got = sorted((r.id, r.v) for r in eq.scan().to_df(spark).collect())
     assert got == sorted(want.items())
+
+
+# ------------------------------------------------------------ plan shapes
+
+
+def _lineitem_like(spark, n=40):
+    return spark.range(n).selectExpr(
+        "id", "cast(id % 3 as string) as k", "id % 2 as part", "cast(id as double) as v"
+    )
+
+
+def test_plain_jvm_read_is_a_bare_scan(spark, tmp_path):
+    """A delete-free, default-free read selects no `_metadata` column and
+    joins nothing."""
+    t = FileSystemCatalog(str(tmp_path / "wh")).create_table("db.plain", SCHEMA)
+    t.append(_lineitem_like(spark).coalesce(2))
+    t.refresh()
+    df = t.scan(row_filter=E.greater_than("id", 30)).select("id", "v").to_df(spark)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan and "_metadata" not in plan, plan
+    assert sorted(r.id for r in df.collect()) == list(range(31, 40))
+
+
+def test_wide_read_fills_defaults_without_a_footer_probe(spark, tmp_path):
+    """A wide read of a v3 table with an initial-default column and a DV
+    runs one Python operator, the reader's `MapInArrow`: the reader fills
+    the default in-task, so no footer-probe `MapInPandas` joins back."""
+    t = FileSystemCatalog(str(tmp_path / "wh")).create_table("db.wide", SCHEMA)
+    t.upgrade_format_version(3)
+    t.append(_lineitem_like(spark).repartition(2))
+    t.delete_where(spark, E.less_than("id", 5))
+    t.refresh()
+    tasks = t.scan().plan_files()
+    assert len(tasks) > 1 and any(tk.delete_files for tk in tasks)
+    wide = _with_default_column(t)
+    wide.properties.update(READERS["wide"])
+    # planned tasks: the collected-plan read, not the streamed plan
+    df = wide.scan().to_df(spark, tasks=tasks)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"\w*(?:InArrow|InPandas|EvalPython)\b", plan) == ["MapInArrow"], plan
+    rows = df.collect()
+    assert sorted(r.id for r in rows) == list(range(5, 40))
+    assert all(r.cat == "dflt" for r in rows)
 
 
 # --------------------------------------------------------- no listing job

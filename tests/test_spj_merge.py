@@ -254,10 +254,19 @@ def test_spj_merge_composite_key(spark, catalog):
 def test_spj_merge_fuzz_parity(spark, catalog):
     """Seeded random targets/sources/clauses: the SPJ route and the
     regular broadcast path must produce identical table states."""
+    _spj_merge_fuzz(spark, catalog, seed=1207, trials=4)
+
+
+def test_spj_merge_fuzz_parity_slice(spark, catalog):
+    """One seeded trial of the fuzz above for the default tier."""
+    _spj_merge_fuzz(spark, catalog, seed=3, trials=1)
+
+
+def _spj_merge_fuzz(spark, catalog, seed, trials):
     import random
 
-    rnd = random.Random(1207)
-    for trial in range(4):
+    rnd = random.Random(seed)
+    for trial in range(trials):
         n_t, n_s = rnd.randrange(5, 40), rnd.randrange(5, 40)
         lo = rnd.randrange(0, 30)
         tgt_rows = [
