@@ -1,12 +1,13 @@
 """The executor-side per-file reader: one data file in, the table's
 columns out (ref table/arrow_scanner.go).
 
-Every Arrow read path — the wide DataFrame-fed scan, which is also where
-a scan goes when the JVM cannot open its paths (table.py), SPJ bucket
-sides (spj.py) and the stream source / CDC reads (streaming.py) — goes
-through these pieces, so column
-resolution, v3 initial-defaults, type promotion and positional-delete
-application are defined exactly once:
+Every Arrow read path goes through these pieces: the DataFrame-fed scan
+(table.py), which serves every read of a wide file set, of a name-mapped
+table or of a schema with initial defaults, and every scan whose paths
+the JVM cannot open; SPJ bucket sides (spj.py); and the stream source /
+CDC reads (streaming.py). The JVM read resolves by field id alone, so
+column resolution by mapped name, v3 initial-defaults, type promotion
+and positional-delete application are defined here exactly once:
 
   * ``field_ids``        — the `PARQUET:field_id` parse of a file schema;
   * ``resolve``          — field id first; id-less files by a mapped

@@ -55,45 +55,16 @@ class FileScanTask:
     data_sequence_number: Optional[int] = None
 
 
-def _lineage_read_struct(schema):
-    """Read struct extended with the spec's reserved row-lineage columns
-    (`_row_id` 2147483540, `_last_updated_sequence_number` 2147483539).
-    Files written by row-copying writers (compaction) materialize them;
-    files that never rewrote rows lack the ids and null-fill, so readers
-    can `coalesce(materialized, inherited)` per spec."""
-    from pyspark.sql import types as st
-
-    from .manifest import LAST_UPDATED_SEQ_FIELD_ID, ROW_ID_FIELD_ID
-    from .types import schema_to_spark_struct
-
-    base = schema_to_spark_struct(schema)
-    return st.StructType(
-        list(base.fields)
-        + [
-            st.StructField(
-                "_row_id",
-                st.LongType(),
-                True,
-                metadata={"parquet.field.id": ROW_ID_FIELD_ID},
-            ),
-            st.StructField(
-                "_last_updated_sequence_number",
-                st.LongType(),
-                True,
-                metadata={"parquet.field.id": LAST_UPDATED_SEQ_FIELD_ID},
-            ),
-        ]
-    )
-
-
 def _lineage_ext_schema(schema):
-    """Iceberg schema extended with the reserved row-lineage fields, for
-    read paths that resolve columns by (mapped) NAME rather than field id
-    (`_read_with_name_mapping`). Name mappings never map the reserved
-    ids, so the probe falls back to the exact physical names — which is
-    precisely how row-copying writers (compaction) materialize them;
-    imported ID-less files lack the columns and read as null, leaving
-    inheritance to supply the values."""
+    """Iceberg schema extended with the spec's reserved row-lineage
+    fields (`_row_id` 2147483540, `_last_updated_sequence_number`
+    2147483539), optional longs. A lineage read resolves them like any
+    other column: files written by row-copying writers (compaction,
+    overwrite survivors) materialize them by id; files that never
+    rewrote rows lack them and read as null, so readers can
+    `coalesce(materialized, inherited)` per spec. Name mappings never
+    map the reserved ids, so an ID-less file resolves them by their
+    exact physical names. Also the write schema of those writers."""
     from .manifest import LAST_UPDATED_SEQ_FIELD_ID, ROW_ID_FIELD_ID
     from .types import LongType, NestedField, Schema
 
@@ -112,15 +83,14 @@ def lineage_map_frame(spark, tasks):
     """Broadcast-able (scheme-stripped file path → first_row_id, data
     sequence number) map for deriving the reserved lineage columns.
     Raises when any planned file lacks an assigned first_row_id."""
-    import re as _re
-
     missing = [t for t in tasks if t.file.first_row_id is None]
     if missing:
         raise ValueError(
             f"{len(missing)} data files lack first_row_id; commit once "
             "post-upgrade so the manifest list assigns row ids"
         )
-    return spark.createDataFrame(
+    return _rows_frame(
+        spark,
         [
             (
                 strip_scheme(t.file.file_path),
@@ -390,17 +360,19 @@ def _distributed_planning_minima(props) -> tuple[int, int]:
     )
 
 
-def _paths_frame(spark, paths):
-    """The distinct `paths` as a `path string` frame of at most 64
-    partitions, for executor-side footer probes. Built from one Arrow
-    batch: a list of Python rows would deserialize in a Python-worker
-    stage of default-parallelism tasks first."""
-    import pandas as pd
+def _rows_frame(spark, rows, ddl: str):
+    """`rows` (tuples in `ddl` column order) as a frame built from one
+    Arrow table: Spark plans it as a `LocalTableScan` and reading it
+    starts no job. A frame of Python rows is an RDD scan that
+    deserializes them in a Python-worker stage of default-parallelism
+    tasks first (seconds per collect on a many-core host)."""
+    import pyarrow as pa
 
-    uniq = sorted(set(paths))
+    names = [c.split()[0] for c in ddl.split(", ")]
+    cols = list(zip(*rows)) if rows else [()] * len(names)
     return spark.createDataFrame(
-        pd.DataFrame({"path": uniq}), "path string"
-    ).repartition(min(len(uniq), 64))
+        pa.table([pa.array(c) for c in cols], names=names), ddl
+    )
 
 
 def strip_scheme(path: str) -> str:
@@ -418,7 +390,7 @@ def strip_scheme_col(col):
 def file_path_col():
     """Raw, scheme-stripped data-file path of each row. Spark's
     `_metadata.file_path` is URI-encoded (`with%20space`); manifests, DV
-    targets, v2 positional rows, the lineage map and the defaults probe
+    targets, v2 positional rows, the equality gates and the lineage map
     hold raw paths. `+` is escaped first: `url_decode` reads it as a space."""
     from pyspark.sql import functions as F
 
@@ -920,11 +892,13 @@ class Scan:
             the manifest-list rows already in memory (added+existing
             counts), so the check itself is O(manifests).
 
-        Set a threshold to 0 to disable that trigger."""
+        Set a threshold to 0 to disable that trigger. A snapshot with at
+        least 90% of its manifests cache-resident always plans locally."""
         snap = self.snapshot()
         if snap is not None and spark is not None:
-            props = self.table.metadata.properties
-            min_manifests, min_files = _distributed_planning_minima(props)
+            min_manifests, min_files = _distributed_planning_minima(
+                self.table.metadata.properties
+            )
             manifests = snap.manifests()
             n_files = sum(
                 m.added_files_count + m.existing_files_count for m in manifests
@@ -940,12 +914,9 @@ class Scan:
                 # block, warm attempts) and without spending cluster
                 # resources on planning. Width is no longer the right
                 # routing signal when the decode is already paid.
-                if str(
-                    props.get("read.distributed-planning.skip-when-cached", "true")
-                ).lower() in ("1", "true", "yes"):
-                    cached = sum(is_resident(m.manifest_path) for m in manifests)
-                    if cached >= 0.9 * len(manifests):
-                        return self.plan_files()
+                cached = sum(is_resident(m.manifest_path) for m in manifests)
+                if cached >= 0.9 * len(manifests):
+                    return self.plan_files()
                 # same memo as the local planner (the two return the
                 # identical file set — bench-asserted), so a repeated
                 # scan skips the Spark planning job too
@@ -1099,79 +1070,59 @@ class Scan:
         limit."""
         from pyspark.sql import functions as F
 
+        df = None
         if tasks is None:
-            sdf, pre_tasks = self._stream_plan_route(spark)
-            if sdf is not None:
-                if not isinstance(self.row_filter, AlwaysTrue):
-                    # the reader pushes the residual per file when it
-                    # can; this outer filter is the correctness layer
-                    from .expressions import bind_expr, rewrite_not
-
-                    bound = bind_expr(
-                        rewrite_not(self.row_filter),
-                        self._scan_schema(),
-                        self.case_sensitive,
-                    )
-                    sdf = sdf.where(to_spark_column(bound))
-                if self.selected_fields != ("*",):
-                    sdf = sdf.select(
-                        *[F.col(f.name) for f in self.projection().fields]
-                    )
-                if self.limit is not None:
-                    sdf = sdf.limit(self.limit)
-                return sdf
-            tasks = (
-                pre_tasks
-                if pre_tasks is not None
-                else self.plan_files_auto(spark)
-            )
-        proj = self.projection()
+            # a streamed frame is never a lineage read (eligibility)
+            df, tasks = self._stream_plan_route(spark)
+            if df is None and tasks is None:
+                tasks = self.plan_files_auto(spark)
         schema = self._scan_schema()
-
-        if self.include_row_lineage and self.table.metadata.format_version < 3:
-            raise ValueError("_row_id requires a format-version 3 table")
-        if not tasks:
-            ddl = schema_to_spark_ddl(proj)
-            if self.include_row_lineage:
-                # an empty lineage scan must still carry the lineage
-                # columns — changelog_scan joins/selects `_row_id` on
-                # both sides, and one side planning zero files is a
-                # legitimate state (e.g. every file deleted)
-                ddl += ", _row_id bigint, _last_updated_sequence_number bigint"
-            return spark.createDataFrame([], ddl)
-
-        # v3 row lineage: _row_id = data file's first_row_id (assigned by
-        # the manifest-list writer, inherited per file at plan time) +
-        # the row's physical position, joined from a broadcast
-        # (file → first_row_id) map
-        lineage = (
-            lineage_map_frame(spark, tasks) if self.include_row_lineage else None
-        )
-        # read projection ∪ filter fields, plus every equality-delete key
-        # column (the eq anti-join matches on them; _anti_join_eq_keys
-        # keeps the dropped-key check)
-        read_schema = self._read_schema()
-        from .manifest import DataFileContent
-
-        eq_ids = {
-            i
-            for t in tasks
-            for d in t.delete_files
-            if d.content == DataFileContent.EQUALITY_DELETES
-            for i in (d.equality_ids or [])
-        }
-        if eq_ids:
-            keep = {f.field_id for f in read_schema.fields} | eq_ids
-            read_schema = Schema(
-                schema.schema_id,
-                tuple(f for f in schema.fields if f.field_id in keep),
+        if df is None:
+            if self.include_row_lineage and self.table.metadata.format_version < 3:
+                raise ValueError("_row_id requires a format-version 3 table")
+            if not tasks:
+                ddl = schema_to_spark_ddl(self.projection())
+                if self.include_row_lineage:
+                    # an empty lineage scan must still carry the lineage
+                    # columns — changelog_scan joins/selects `_row_id` on
+                    # both sides, and one side planning zero files is a
+                    # legitimate state (e.g. every file deleted)
+                    ddl += ", _row_id bigint, _last_updated_sequence_number bigint"
+                return spark.createDataFrame([], ddl)
+            # v3 row lineage: _row_id = data file's first_row_id (assigned by
+            # the manifest-list writer, inherited per file at plan time) +
+            # the row's physical position, joined from a broadcast
+            # (file → first_row_id) map
+            lineage = (
+                lineage_map_frame(spark, tasks) if self.include_row_lineage else None
             )
-        df = self._read_with_deletes(
-            spark, tasks, read_schema, lineage=lineage is not None
-        )
-        if lineage is not None:
-            df = attach_lineage(df, lineage)
+            # read projection ∪ filter fields, plus every equality-delete key
+            # column (the eq anti-join matches on them; _anti_join_eq_keys
+            # keeps the dropped-key check)
+            read_schema = self._read_schema()
+            from .manifest import DataFileContent
+
+            eq_ids = {
+                i
+                for t in tasks
+                for d in t.delete_files
+                if d.content == DataFileContent.EQUALITY_DELETES
+                for i in (d.equality_ids or [])
+            }
+            if eq_ids:
+                keep = {f.field_id for f in read_schema.fields} | eq_ids
+                read_schema = Schema(
+                    schema.schema_id,
+                    tuple(f for f in schema.fields if f.field_id in keep),
+                )
+            df = self._read_with_deletes(
+                spark, tasks, read_schema, lineage=lineage is not None
+            )
+            if lineage is not None:
+                df = attach_lineage(df, lineage)
         if not isinstance(self.row_filter, AlwaysTrue):
+            # the Arrow reader pushes the residual per file when it can;
+            # this outer filter is the correctness layer
             from .expressions import bind_expr, rewrite_not
 
             bound = bind_expr(
@@ -1179,8 +1130,8 @@ class Scan:
             )
             df = df.where(to_spark_column(bound))
         if self.selected_fields != ("*",):
-            cols = [F.col(f.name) for f in proj.fields]
-            if lineage is not None:
+            cols = [F.col(f.name) for f in self.projection().fields]
+            if self.include_row_lineage:
                 # the lineage surface is the same whether or not fields
                 # were selected: both reserved columns survive projection
                 cols += [F.col("_row_id"), F.col("_last_updated_sequence_number")]
@@ -1314,39 +1265,38 @@ class Scan:
         """Read every planned file in one pass and apply its deletes, as
         the reference's arrow_scanner does; a scan with no delete files
         is a merge-on-read with no deletes. The reader is chosen here,
-        from the file count and the table's properties:
+        from the file count, the table's name mapping and the read
+        schema's defaults:
 
-          * more than `read.spark.max-listed-files` files, unless this is
-            a lineage read: the wide Arrow reader
-            (`_read_files_arrow_distributed`), which streams the paths to
-            executors and fills initial defaults in-task;
-          * else the JVM frame build (`_read_jvm`): the grouped
-            name-mapped read when the table has a name mapping, else one
-            `parquet(*files)` with columns by field id. Initial defaults
-            then apply through `_apply_initial_defaults`.
+          * the wide Arrow reader (`_read_files_arrow_distributed`) when
+            there are more than `read.spark.max-listed-files` files, when
+            the table has `schema.name-mapping.default`, or when a read
+            field has an initial default. It streams the paths to
+            executors, and `reader.resolve` / `reader.project` resolve
+            mapped names and fill defaults in-task, per file;
+          * else the JVM frame build (`_read_jvm`): one bare
+            `parquet(*files)` with columns by field id.
 
         `_fp` (raw file path) and `_pos` (file position) are read only
         when used: `_pos` by positional deletes, DVs and lineage, `_fp`
-        by those and by the equality gates and the defaults probe. A
-        delete-free, default-free JVM read is a bare scan, and the Arrow
-        reader keeps per-file filter pushdown unless `_pos` is read.
-        Positional deletes and DVs drop through one `(_fp, _pos)`
-        anti-join: they name exact file paths, never a file of a later
-        snapshot, so one global anti-join keeps the per-file matching
-        computed at plan time. Each set of equality key columns drops
-        through one gated anti-join (`_anti_join_eq_keys`).
+        by those and by the equality gates. A delete-free, non-lineage
+        JVM read is a bare scan, and the Arrow reader keeps per-file
+        filter pushdown unless `_pos` is read. Positional deletes and
+        DVs drop through one `(_fp, _pos)` anti-join: they name exact
+        file paths, never a file of a later snapshot, so one global
+        anti-join keeps the per-file matching computed at plan time.
+        Each set of equality key columns drops through one gated
+        anti-join (`_anti_join_eq_keys`).
 
         If the JVM frame build raises on paths that are not all local
         (a scheme this Spark has no connector for), the scan reroutes to
-        the Arrow reader, which drops positional deletes in-task. On
-        local paths the error is real and propagates, as it does for a
-        lineage read: the Arrow reader has no materialized lineage
-        columns.
+        the Arrow reader, which drops positional deletes in-task unless
+        `_pos` is kept. On local paths the error is real and propagates.
 
-        `lineage` marks a row-lineage read: it also reads the reserved
-        lineage columns (null where absent) and keeps `_fp`/`_pos`, which
-        `_row_id` derives from. `with_pos` keeps `_fp`/`_pos` for callers
-        that key on file positions."""
+        `lineage` marks a row-lineage read: its schema gains the reserved
+        lineage columns (`_lineage_ext_schema`, null where absent) and it
+        keeps `_fp`/`_pos`, which `_row_id` derives from. `with_pos`
+        keeps `_fp`/`_pos` for callers that key on file positions."""
         from pyspark.sql import functions as F
 
         from . import fileio
@@ -1364,21 +1314,26 @@ class Scan:
             for t in tasks
             for d in t.delete_files
         )
+        if lineage:
+            schema = _lineage_ext_schema(schema)
         with_pos = with_pos or lineage
         need_pos = with_pos or bool(pos_deletes)
-        arrow = 0 < self._max_listed_files() < len(files) and not lineage
+        arrow = (
+            0 < self._max_listed_files() < len(files)
+            or "schema.name-mapping.default" in self.table.metadata.properties
+            or any(f.initial_default is not None for f in schema.fields)
+        )
         in_task = None
         if not arrow:
-            has_defaults = any(f.initial_default is not None for f in schema.fields)
             meta = []
-            if need_pos or has_eq or has_defaults:
+            if need_pos or has_eq:
                 meta.append(file_path_col().alias("_fp"))
             if need_pos:
                 meta.append(F.col("_metadata.row_index").alias("_pos"))
             try:
-                df = self._read_jvm(spark, files, schema, meta, lineage)
+                df = self._read_jvm(spark, files, schema, meta)
             except Exception:
-                if lineage or all(fileio.is_local(f) for f in files):
+                if all(fileio.is_local(f) for f in files):
                     raise
                 logger.warning(
                     "JVM parquet reader cannot open %s; using the "
@@ -1403,8 +1358,6 @@ class Scan:
                 deletes=in_task,
             )
         df = self._anti_join_pos_deletes(spark, df, pos_deletes)
-        if not arrow:
-            df = self._apply_initial_defaults(spark, df, files, schema)
         df = self._anti_join_eq_keys(spark, df, tasks, schema)
         return df if with_pos else df.drop("_fp", "_pos")
 
@@ -1522,26 +1475,17 @@ class Scan:
             spark.createDataFrame(pd.concat(parts, ignore_index=True), schema=ddl)
         )
 
-    def _read_jvm(self, spark, files, schema: Schema, meta, lineage=False):
+    def _read_jvm(self, spark, files, schema: Schema, meta):
         """The JVM frame over `files` with the `meta` columns (`_fp`,
-        `_pos`) appended: the grouped name-mapped read when the table
-        carries `schema.name-mapping.default` (add_files imports whose
-        files have no field ids), else one `parquet(*files)` resolving
-        columns by field id, so renames and evolution are safe and
-        Catalyst prunes columns and pushes the residual filter into the
-        parquet scan. `lineage` also reads the reserved lineage columns,
-        null-filled where absent."""
+        `_pos`) appended: one `parquet(*files)` resolving columns by
+        field id, so renames and evolution are safe and Catalyst prunes
+        columns and pushes the residual filter into the parquet scan."""
         from .types import schema_to_spark_struct
 
-        if "schema.name-mapping.default" in self.table.metadata.properties:
-            return self._read_with_name_mapping(
-                spark, files, _lineage_ext_schema(schema) if lineage else schema, meta
-            )
         _ensure_field_id_reads(spark)
-        struct = (
-            _lineage_read_struct(schema) if lineage else schema_to_spark_struct(schema)
+        df = read_listed_parquet(
+            spark, spark.read.schema(schema_to_spark_struct(schema)), files
         )
-        df = read_listed_parquet(spark, spark.read.schema(struct), files)
         return df.select("*", *meta) if meta else df
 
     def _anti_join_pos_deletes(self, spark, df, delete_files):
@@ -1621,168 +1565,13 @@ class Scan:
             )
             dels = dv_df if dels is None else dels.unionByName(dv_df)
         if dels is not None:
-            if small_deletes:
-                dels = F.broadcast(dels)
+            # above the bound, shuffle whatever size Spark estimates: the
+            # executor DV decode's descriptor frame is a small local
+            # table, and its estimate would auto-broadcast every decoded
+            # position
+            dels = F.broadcast(dels) if small_deletes else dels.hint("merge")
             df = df.join(dels, ["_fp", "_pos"], "left_anti")
         return df
-
-    def _read_with_name_mapping(self, spark, files, schema: Schema, meta=()):
-        """Read for tables carrying `schema.name-mapping.default`
-        (ID-less files registered via add_files): each schema field may
-        live under ANY of its mapped names in a given file (renames
-        keep old physical names — ref name_mapping.go:144). Files are
-        probed for their column names executor-side, grouped by the
-        resulting field→file-column assignment (group count is bounded
-        by schema versions, not files), and each group reads with its
-        own physical schema then aliases to current names, plus the
-        `meta` columns (`_fp`, `_pos`: each group selects them before the
-        union). Columns absent from a file read as null, matching ID-based
-        resolution."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from . import fileio as _fileio
-        from .sanitize import name_mapping_from_json
-        from .types import spark_type
-
-        import json as _json
-
-        mapping = name_mapping_from_json(
-            self.table.metadata.properties["schema.name-mapping.default"]
-        )
-        names_by_id = {m.field_id: list(m.names) for m in mapping}
-        cfg = _fileio.env_config()
-        files_df = _paths_frame(spark, files)
-        # the field→file-column assignment is computed executor-side so
-        # only (path, small assignment key) crosses to the driver — the
-        # driver already holds the O(files) path list from planning, but
-        # never the per-file column inventories
-        field_keys = [(f.field_id, f.name) for f in schema.fields]
-
-        def probe(batches):
-            import pyarrow.parquet as pq
-
-            from . import fileio
-
-            fileio.apply_config(cfg)
-            for pdf in batches:
-                rows = []
-                for p in pdf["path"]:
-                    with fileio.open_input(p) as f:
-                        have = set(pq.read_schema(f).names)
-                    out = []
-                    for fid, name in field_keys:
-                        if name in have:
-                            out.append(name)
-                        else:
-                            out.append(
-                                next(
-                                    (n for n in names_by_id.get(fid, []) if n in have),
-                                    None,  # column absent, read as null
-                                )
-                            )
-                    rows.append({"path": p, "assign": _json.dumps(out)})
-                yield pd.DataFrame(rows)
-
-        groups: dict[tuple, list[str]] = {}
-        for r in files_df.mapInPandas(probe, "path string, assign string").collect():
-            groups.setdefault(tuple(_json.loads(r.assign)), []).append(r.path)
-
-        parts = []
-        for assign, paths in groups.items():
-            ddl = ", ".join(
-                f"`{src}` {spark_type(f.field_type)}"
-                for src, f in zip(assign, schema.fields)
-                if src is not None
-            )
-            g = read_listed_parquet(spark, spark.read.schema(ddl), paths)
-            cols = [
-                (
-                    F.col(f"`{src}`").alias(f.name)
-                    if src is not None
-                    else F.lit(None).cast(spark_type(f.field_type)).alias(f.name)
-                )
-                for src, f in zip(assign, schema.fields)
-            ]
-            parts.append(g.select(*cols, *meta))
-        df = parts[0]
-        for p_ in parts[1:]:
-            df = df.unionByName(p_)
-        return df
-
-    def _apply_initial_defaults(self, spark, df, files, schema: Schema):
-        """v3 field default values (initial-default): rows read from
-        files that physically LACK a defaulted column take the default;
-        files that contain the column keep their stored values,
-        including explicit nulls (so this is when(missing, default),
-        never coalesce). Which files lack which columns is probed from
-        parquet footers executor-side — one footer read per file, only
-        when the schema actually carries defaults — and joined back on
-        `df`'s `_fp`, so no O(files) driver loop and no lit-list that
-        would blow up at a million files."""
-        defaults = [f for f in schema.fields if f.initial_default is not None]
-        if not defaults:
-            return df
-        from pyspark.sql import functions as F
-
-        from . import fileio as _fileio
-        from .types import spark_type
-
-        cfg = _fileio.env_config()
-        # ID-less files may store a defaulted column under ANY of its
-        # mapped (pre-rename) names — flagging by current name alone
-        # would overwrite real stored values with the default
-        from .reader import mapped_names
-
-        alt_names = mapped_names(self.table.metadata.properties)
-        want = [
-            (f.field_id, f.name, sorted({f.name, *alt_names.get(f.field_id, [])}))
-            for f in defaults
-        ]
-        files_df = _paths_frame(spark, files)
-
-        def probe(batches):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
-            from . import fileio
-            from .reader import field_ids
-
-            fileio.apply_config(cfg)
-            for pdf in batches:
-                rows = []
-                for p in pdf["path"]:
-                    with fileio.open_input(p) as f:
-                        arrow_schema = pq.read_schema(f)
-                    ids, names = field_ids(arrow_schema), set(arrow_schema.names)
-                    row = {"path": p}
-                    for fid, name, aliases in want:
-                        present = (
-                            fid in ids
-                            if ids
-                            else any(a in names for a in aliases)
-                        )
-                        row[f"_missing_{name}"] = not present
-                    rows.append(row)
-                yield pd.DataFrame(rows)
-
-        flag_ddl = ", ".join(
-            ["path string"] + [f"`_missing_{n}` boolean" for _, n, _a in want]
-        )
-        flags = files_df.mapInPandas(probe, flag_ddl).withColumn(
-            "_dflt_fp",
-            strip_scheme_col(F.col("path")),
-        ).drop("path")
-        df = df.join(flags, F.col("_fp") == F.col("_dflt_fp"), "left")
-        for f in defaults:
-            df = df.withColumn(
-                f.name,
-                F.when(
-                    F.col(f"_missing_{f.name}"),
-                    F.lit(f.initial_default).cast(spark_type(f.field_type)),
-                ).otherwise(F.col(f.name)),
-            )
-        return df.drop("_dflt_fp", *[f"_missing_{n}" for _, n, _a in want])
 
     @staticmethod
     def _deletion_vector_positions(spark, descriptors, on_driver=False):
@@ -1828,7 +1617,8 @@ class Scan:
             return spark.createDataFrame(tbl, "_fp string, _pos long")
 
         fileio_cfg = _fileio.env_config()
-        desc_df = spark.createDataFrame(
+        desc_df = _rows_frame(
+            spark,
             [(t, p, int(o), int(s)) for t, p, o, s in descriptors],
             "target string, dv_path string, offset long, size long",
         ).repartition(min(len(descriptors), 64))
@@ -1866,9 +1656,10 @@ class Scan:
         with_pos: bool = False,
         deletes: Optional[list] = None,
     ):
-        """DataFrame-fed scan execution for very wide file sets —
-        VERDICT r12 task 1 (the last unproven 100× leg) — and the
-        per-file Arrow fallback for URIs the JVM has no FileSystem for.
+        """DataFrame-fed scan execution: very wide file sets (VERDICT r12
+        task 1, the last unproven 100× leg), every read of a name-mapped
+        table or of a schema with initial defaults, and the per-file
+        Arrow fallback for URIs the JVM has no FileSystem for.
 
         `spark.read.parquet(*paths)` ships an O(files) argument list
         through py4j and builds a driver-side InMemoryFileIndex over it:
@@ -1881,16 +1672,16 @@ class Scan:
         with reader.read_file via mapInArrow — plan-to-first-row is O(1)
         on the driver in file count.
 
-        Semantics match the JVM field-id read (reader.py):
+        Semantics match the JVM field-id read, and are the package's
+        only column resolver (reader.py):
           * columns resolve BY FIELD ID (rename-safe); files with no
             ids resolve through the table's name mapping when one is
             declared (add_files imports — any mapped pre-rename name
-            counts, per-file, the same rule _read_with_name_mapping
-            applies group-wise), else by current name;
+            counts, per-file), else by current name (`reader.resolve`);
           * physically missing columns fill with the field's
-            initial-default (v3) or null — the same when(missing,
-            default) rule `_apply_initial_defaults` applies, evaluated
-            in-task where file identity is free;
+            initial-default (v3) or null, in-task where file identity is
+            free; a file that has the column keeps its stored values,
+            explicit nulls included (`reader.project`);
           * physical types promote by casting to the table type
             (int32→long etc., the same promotions the evolution rules
             allow);
@@ -2634,8 +2425,8 @@ class Table(StaticTable):
         from . import fileio as _fileio
 
         cfg = _fileio.env_config()
-        work = spark.createDataFrame(
-            work_rows, "path string, seq bigint, spec_id int"
+        work = _rows_frame(
+            spark, work_rows, "path string, seq bigint, spec_id int"
         ).repartition(min(len(work_rows), 64))
 
         def task(batches):

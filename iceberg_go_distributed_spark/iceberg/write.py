@@ -1919,26 +1919,14 @@ def overwrite_where(table, df, expr) -> None:
             # columns over manifest-list assignment). The incoming df
             # is written separately and gets fresh ids.
             from .manifest import LAST_UPDATED_SEQ_FIELD_ID, ROW_ID_FIELD_ID
-            from .table import attach_lineage, lineage_map_frame
-            from .types import LongType, NestedField
+            from .table import _lineage_ext_schema, attach_lineage, lineage_map_frame
 
             lineage_map = lineage_map_frame(spark, partial_tasks)
             srv = scan._read_with_deletes(
                 spark, partial_tasks, schema, lineage=True
             )
             srv = attach_lineage(srv, lineage_map).where(to_spark_column(bound))
-            srv_schema = Schema(
-                schema.schema_id,
-                schema.fields
-                + (
-                    NestedField(ROW_ID_FIELD_ID, "_row_id", LongType()),
-                    NestedField(
-                        LAST_UPDATED_SEQ_FIELD_ID,
-                        "_last_updated_sequence_number",
-                        LongType(),
-                    ),
-                ),
-            )
+            srv_schema = _lineage_ext_schema(schema)
             survivor_files = write_data_files(
                 srv, srv_schema, md.default_spec(), md.location,
                 f"{ds.commit_uuid}-srv",
@@ -3836,9 +3824,9 @@ def rewrite_data_files(
     md = table.metadata
     v3 = md.format_version >= 3
     # name-mapped v3 tables compact fine: the lineage read resolves
-    # ID-less files through the grouped name-mapping path (table.py
-    # _lineage_ext_schema), so the rewrite materializes exact _row_id
-    # values for imported rows too
+    # ID-less files by mapped name in the Arrow reader (reader.resolve,
+    # over table._lineage_ext_schema), so the rewrite materializes exact
+    # _row_id values for imported rows too
     target = target_file_size or int(
         md.properties.get("write.target-file-size-bytes", str(TARGET_FILE_SIZE_BYTES))
     )
@@ -3879,26 +3867,14 @@ def rewrite_data_files(
         # lineage from the source file's first_row_id / data sequence
         # number, and write the two reserved columns alongside the data.
         from .manifest import LAST_UPDATED_SEQ_FIELD_ID, ROW_ID_FIELD_ID
-        from .table import attach_lineage, lineage_map_frame
-        from .types import LongType, NestedField
+        from .table import _lineage_ext_schema, attach_lineage, lineage_map_frame
 
         lineage_map = lineage_map_frame(spark, victims)
         df = scan._read_with_deletes(
             spark, victims, schema, lineage=True
         )
         df = attach_lineage(df, lineage_map)
-        write_schema = Schema(
-            schema.schema_id,
-            schema.fields
-            + (
-                NestedField(ROW_ID_FIELD_ID, "_row_id", LongType()),
-                NestedField(
-                    LAST_UPDATED_SEQ_FIELD_ID,
-                    "_last_updated_sequence_number",
-                    LongType(),
-                ),
-            ),
-        )
+        write_schema = _lineage_ext_schema(schema)
     else:
         df = scan._read_with_deletes(spark, victims, schema)
     write_props = md.properties

@@ -6,19 +6,24 @@ the files it applies to.
 
   * a twin against `oracles.merge_on_read_oracle` (per-file pyarrow
     reads) on seeded hand-built task sets, with and without deletes and
-    initial defaults, through each reader the read can pick (JVM listed,
-    name-mapped, wide Arrow), and on seeded DML histories;
+    initial defaults, through each input that picks a reader (the JVM
+    listed read for a plain table; the Arrow reader for a name-mapped
+    table, a schema with defaults or a wide file set), and on seeded
+    DML histories;
   * which columns and operators each reader's plan carries: a plain JVM
-    read is a bare scan, a wide read fills defaults in-task with no
+    read is a bare scan, a defaulted read fills defaults in-task with no
     footer probe, an equality-only wide read keeps filter pushdown;
-  * the JVM-failure rule: local paths and lineage reads raise, other
-    paths reroute to the Arrow reader;
+  * the JVM-failure rule: local paths raise, other paths (lineage reads
+    too) reroute to the Arrow reader;
   * deletes, defaults and row lineage on data paths that Spark's
     `_metadata.file_path` URI-encodes;
   * `add_files` records the path Spark reports, so the gates find
     imported files named by a relative or a `//` path;
-  * building a MOR frame over more than 32 files starts no Spark job,
-    and the listing threshold is raised only around local builds.
+  * building a MOR frame over more than 32 files, plain, name-mapped
+    or defaulted, starts no Spark job, and the listing threshold is
+    raised only around local builds;
+  * the lineage map, the executor DV decode and the metadata-table
+    fan-out build their frames from one Arrow table.
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ import copy
 import os
 import random
 import re
+import uuid
 from dataclasses import replace
 
 import pyarrow as pa
@@ -55,6 +61,7 @@ from iceberg_go_distributed_spark.iceberg.table import (
     Scan,
     Table,
     _fp_gate,
+    lineage_map_frame,
     read_listed_parquet,
 )
 from iceberg_go_distributed_spark.iceberg.types import NestedField, Schema
@@ -75,7 +82,9 @@ DEFAULTED = Schema.of(
     *SCHEMA.fields,
     NestedField(5, "cat", ty.StringType(), initial_default="dflt", write_default="dflt"),
 )
-# the table properties that make `_read_with_deletes` pick each reader
+# the table properties behind each reader input of `_read_with_deletes`:
+# "jvm" takes the JVM listed read unless the schema has defaults;
+# "name_mapped" and "wide" always take the Arrow reader
 READERS = {
     "jvm": {},
     "name_mapped": {
@@ -260,9 +269,8 @@ def odd_root(tmp_path):
     ],
 )
 def test_one_pass_read_matches_per_file_oracle(spark, odd_root, seed, reader, schema):
-    """Each reader, with every delete kind, with positional deletes only
-    and with no deletes at all; plain and lineage reads (a lineage read
-    never takes the wide reader)."""
+    """Each reader input, with every delete kind, with positional
+    deletes only and with no deletes at all; plain and lineage reads."""
     t = FileSystemCatalog(str(odd_root / "wh")).create_table("db.t", SCHEMA)
     t.properties.update(READERS[reader])
     tasks = _hand_built(random.Random(seed), str(odd_root))
@@ -338,21 +346,21 @@ def test_arrow_fallback_applies_the_same_gates(spark, odd_root, monkeypatch):
     assert _frame_rows(df) == jvm_rows == _oracle(tasks)
 
 
-def test_jvm_build_failure_raises_on_local_paths_and_lineage_reads(
-    spark, odd_root, monkeypatch
-):
-    """A JVM build that fails on local paths is a real error, and a
-    lineage read cannot reroute: the Arrow reader has no materialized
-    lineage columns."""
+def test_jvm_build_failure_raises_only_on_local_paths(spark, odd_root, monkeypatch):
+    """A JVM build that fails on local paths is a real error, for plain
+    and lineage reads. On other paths a lineage read reroutes to the
+    Arrow reader like any other, and keeps the oracle's `(_fp, _pos)`."""
     t = FileSystemCatalog(str(odd_root / "wh")).create_table("db.t", SCHEMA)
     tasks = _hand_built(random.Random(9), str(odd_root))
     _jvm_build_fails(monkeypatch)
     for ts in (tasks, [replace(tk, delete_files=()) for tk in tasks]):
-        with pytest.raises(RuntimeError, match="no FileSystem"):
-            t.scan()._read_with_deletes(spark, ts, SCHEMA)
+        for lineage in (False, True):
+            with pytest.raises(RuntimeError, match="no FileSystem"):
+                t.scan()._read_with_deletes(spark, ts, SCHEMA, lineage=lineage)
     _data_paths_look_remote(monkeypatch, tasks)
-    with pytest.raises(RuntimeError, match="no FileSystem"):
-        t.scan()._read_with_deletes(spark, tasks, SCHEMA, lineage=True)
+    df = t.scan()._read_with_deletes(spark, tasks, SCHEMA, lineage=True)
+    assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
+    assert _frame_rows(df, True) == _oracle(tasks, True)
 
 
 def test_gate_is_one_literal_set_over_the_smaller_side():
@@ -552,10 +560,12 @@ def test_plain_jvm_read_is_a_bare_scan(spark, tmp_path):
     assert sorted(r.id for r in df.collect()) == list(range(31, 40))
 
 
-def test_wide_read_fills_defaults_without_a_footer_probe(spark, tmp_path):
-    """A wide read of a v3 table with an initial-default column and a DV
-    runs one Python operator, the reader's `MapInArrow`: the reader fills
-    the default in-task, so no footer-probe `MapInPandas` joins back."""
+@pytest.mark.parametrize("reader", ["wide", "name_mapped", "jvm"])
+def test_read_fills_defaults_without_a_footer_probe(spark, tmp_path, reader):
+    """A read of a v3 table with an initial-default column and a DV runs
+    one Python operator, the Arrow reader's `MapInArrow`, whatever the
+    table's reader input: the reader fills the default in-task, so no
+    footer-probe `MapInPandas` joins back."""
     t = FileSystemCatalog(str(tmp_path / "wh")).create_table("db.wide", SCHEMA)
     t.upgrade_format_version(3)
     t.append(_lineitem_like(spark).repartition(2))
@@ -563,10 +573,10 @@ def test_wide_read_fills_defaults_without_a_footer_probe(spark, tmp_path):
     t.refresh()
     tasks = t.scan().plan_files()
     assert len(tasks) > 1 and any(tk.delete_files for tk in tasks)
-    wide = _with_default_column(t)
-    wide.properties.update(READERS["wide"])
+    defaulted = _with_default_column(t)
+    defaulted.properties.update(READERS[reader])
     # planned tasks: the collected-plan read, not the streamed plan
-    df = wide.scan().to_df(spark, tasks=tasks)
+    df = defaulted.scan().to_df(spark, tasks=tasks)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert re.findall(r"\w*(?:InArrow|InPandas|EvalPython)\b", plan) == ["MapInArrow"], plan
     rows = df.collect()
@@ -574,13 +584,64 @@ def test_wide_read_fills_defaults_without_a_footer_probe(spark, tmp_path):
     assert all(r.cat == "dflt" for r in rows)
 
 
+def test_driver_built_frames_scan_one_arrow_table(spark, tmp_path):
+    """The lineage map, the executor DV decode's descriptor frame and the
+    metadata-table fan-out's work frame each reach the JVM as one Arrow
+    table (`LocalTableScan`), never as an RDD of Python rows that a
+    Python-worker stage must deserialize."""
+    t = FileSystemCatalog(str(tmp_path / "wh")).create_table("db.frames", SCHEMA)
+    t.upgrade_format_version(3)
+    t.append(_lineitem_like(spark).repartition(2))
+    t.delete_where(spark, E.less_than("id", 5))
+    t.refresh()
+    t.properties["read.distributed-planning.min-manifests"] = "1"
+    tasks = t.scan().plan_files()
+    dvs = sorted(
+        {
+            (d.referenced_data_file, d.file_path, d.content_offset, d.content_size_in_bytes)
+            for tk in tasks
+            for d in tk.delete_files
+        }
+    )
+    assert dvs
+    frames = {
+        "lineage map": lineage_map_frame(spark, tasks),
+        "dv decode": Scan._deletion_vector_positions(spark, dvs),
+        "inspect fan-out": t.inspect_files(spark),
+    }
+    plans = {
+        name: df._jdf.queryExecution().executedPlan().toString()
+        for name, df in frames.items()
+    }
+    rdd_built = [
+        name
+        for name, plan in plans.items()
+        if "LocalTableScan" not in plan or "ExistingRDD" in plan
+    ]
+    assert rdd_built == [], plans
+
+    assert sorted(r._first_row_id for r in frames["lineage map"].collect()) == sorted(
+        tk.file.first_row_id for tk in tasks
+    )
+    driver = Scan._deletion_vector_positions(spark, dvs, on_driver=True)
+    assert sorted(map(tuple, frames["dv decode"].collect())) == sorted(
+        map(tuple, driver.collect())
+    )
+    assert len(driver.collect()) == 5
+    assert sorted(
+        r.file_path for r in frames["inspect fan-out"].collect() if r.content == 0
+    ) == sorted(tk.file.file_path for tk in tasks)
+
+
 # --------------------------------------------------------- no listing job
 
 
 def test_mor_to_df_over_many_files_builds_without_spark_jobs(spark, tmp_path):
     """Building a MOR frame over more than 32 planned files starts no
-    Spark job: the data paths come from manifests, so there is no
-    listing job, and the delete sides need no schema inference."""
+    Spark job, on a plain, a name-mapped and a defaulted table: the data
+    paths come from manifests, so there is no listing job, the delete
+    sides need no schema inference, and the Arrow reader resolves
+    mapped names and fills defaults in-task, probing no file first."""
     cat = FileSystemCatalog(str(tmp_path / "wh"))
     src = spark.range(0, 400, 1, 40).selectExpr(
         "id", "cast(id % 3 as string) as k", "id % 2 as part", "cast(id as double) as v"
@@ -594,16 +655,18 @@ def test_mor_to_df_over_many_files_builds_without_spark_jobs(spark, tmp_path):
         t.upsert(src.where("id < 7"), ["id"])
         t.refresh()
         assert len(t.scan().plan_files()) > 32
+    mapped = Table(v2.identifier, copy.deepcopy(v2.metadata), v2.metadata_location, v2.catalog)
+    mapped.properties.update(READERS["name_mapped"])
 
     sc = spark.sparkContext
-    for t in (v2, v3):
-        group = f"mor-build-{t.identifier}"
+    for t in (v2, v3, mapped, _with_default_column(v3)):
+        group = f"mor-build-{uuid.uuid4()}"
         sc.setJobGroup(group, "build a MOR to_df")
         try:
             df = t.scan().to_df(spark)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], t.properties
         assert sorted(r.id for r in df.collect()) == [
             i for i in range(400) if i % 2 == 1 or i < 7
         ]

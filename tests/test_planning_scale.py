@@ -363,8 +363,7 @@ def test_plan_cache_repeat_scan_skips_manifest_reads(tmp_path, spark, monkeypatc
 def test_auto_route_prefers_local_when_cache_warm(big_table, spark, monkeypatch):
     """A re-plan of a snapshot whose manifests are already decoded (an
     UNFILTERED scan populated the manifest cache) must plan locally —
-    replaying cached prototype entries beats launching a Spark job —
-    unless read.distributed-planning.skip-when-cached is off."""
+    replaying cached prototype entries beats launching a Spark job."""
     from iceberg_go_distributed_spark.iceberg import manifest as manifest_mod
     from iceberg_go_distributed_spark.iceberg import table as table_mod
 
@@ -390,17 +389,7 @@ def test_auto_route_prefers_local_when_cache_warm(big_table, spark, monkeypatch)
         assert auto == local and not calls, (
             "warm-cache re-plan must stay on the local planner"
         )
-        # opting out restores width-based routing
-        big_table.metadata.properties[
-            "read.distributed-planning.skip-when-cached"
-        ] = "false"
-        table_mod._PLAN_CACHE.clear()
-        auto2 = {t.file.file_path for t in scan.plan_files_auto(spark)}
-        assert auto2 == local and calls
     finally:
         big_table.metadata.properties.pop(
             "read.distributed-planning.min-manifests", None
-        )
-        big_table.metadata.properties.pop(
-            "read.distributed-planning.skip-when-cached", None
         )
