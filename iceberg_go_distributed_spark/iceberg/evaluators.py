@@ -43,7 +43,6 @@ from .expressions import (
     and_,
     bind_expr,
     compile_evaluator,
-    evaluate,
     literal,
     or_,
     rewrite_not,

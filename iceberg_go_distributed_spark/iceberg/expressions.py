@@ -1,13 +1,36 @@
 """Expression algebra: unbound/bound predicates, literals with
-saturating casts, binding, NOT-rewrite, row evaluation, and compilation
-to Spark Columns.
+saturating casts, binding, NOT-rewrite, and the row-predicate compilers.
 
 Ports the semantics of the reference's exprs.go:130-313 (constant-fold
 constructors), predicates.go (operation taxonomy), literals.go:231-361
 (AboveMax/BelowMin saturation on bind), visitors.go:150-412 (BindExpr,
 RewriteNotExpr) and visitors.go:189-381 (ExpressionEvaluator over
-partition tuples). Pure Python — the metadata plane runs without Spark;
-`to_spark_column` is the bridge for residual row filters.
+partition tuples). Pure Python — the metadata plane runs without Spark.
+
+One predicate rule holds for every row evaluator:
+
+  * a predicate is evaluated after `rewrite_not`, with SQL
+    three-valued logic: a comparison or set test over null is null;
+  * NaN satisfies no ordering or equality comparison (IEEE), but it
+    does satisfy `!=` and NOT IN; `literal()` rejects a NaN value (use
+    `is_nan` / `not_nan`);
+  * `is_nan(null)` is false and `not_nan(null)` is true;
+  * a row matches — a read keeps it, a DML statement deletes it —
+    exactly when its predicate is TRUE.
+
+Three compilers implement it, one per layer:
+
+  * `compile_evaluator` — partition tuples in the planner
+    (evaluators.expression_evaluator);
+  * `to_spark_column`    — the JVM read's residual filter and the
+    survivors of `overwrite_where`;
+  * `to_arrow_expression` — the Arrow reader's residual, SPJ's in-task
+    filter and DML row matching (reader.matched_positions).
+
+The metrics evaluators (evaluators.py) prune files under the same rule:
+bounds exclude NaN and a NaN-only file matches no comparison.
+tests/oracles.py `evaluate` is the per-row reference the tests compare
+all three against.
 """
 
 from __future__ import annotations
@@ -102,7 +125,6 @@ BELOW_MIN = _Sentinel("BELOW_MIN")
 
 _INT32_MAX, _INT32_MIN = (1 << 31) - 1, -(1 << 31)
 _INT64_MAX, _INT64_MIN = (1 << 63) - 1, -(1 << 63)
-_FLOAT32_MAX = 3.4028234663852886e38
 
 
 @dataclass(frozen=True)
@@ -130,20 +152,11 @@ class Literal:
         if isinstance(target, LongType):
             if isinstance(t, (IntegerType, LongType)):
                 return Literal(int(v), target)
-        if isinstance(target, FloatType):
-            if isinstance(t, (IntegerType, LongType, FloatType, DoubleType)):
-                fv = float(v)
-                if fv > _FLOAT32_MAX:
-                    return ABOVE_MAX
-                if fv < -_FLOAT32_MAX:
-                    return BELOW_MIN
-                return Literal(fv, target)
-            if isinstance(t, DecimalType):
-                return Literal(float(v), target)
-        if isinstance(target, DoubleType):
-            if isinstance(t, (IntegerType, LongType, FloatType, DoubleType)):
-                return Literal(float(v), target)
-            if isinstance(t, DecimalType):
+        if isinstance(target, (FloatType, DoubleType)):
+            # no saturation: a float column holds ±inf, NaN and null,
+            # so `f < 1e39` is not AlwaysTrue (module docstring rule);
+            # comparisons run in double on every compiler
+            if isinstance(t, (IntegerType, LongType, FloatType, DoubleType, DecimalType)):
                 return Literal(float(v), target)
         if isinstance(target, DecimalType):
             if isinstance(t, (IntegerType, LongType)):
@@ -216,7 +229,11 @@ def _parse_datetime_literal(s: str, target: IcebergType):
 
 
 def literal(v: Any, t: Optional[IcebergType] = None) -> Literal:
-    """Infer a Literal from a Python value (ref literals.go:82-112)."""
+    """Infer a Literal from a Python value (ref literals.go:82-112).
+    NaN is rejected, as Iceberg Java does: no value compares to it, so
+    a NaN literal never means what it says."""
+    if isinstance(v, float) and math.isnan(v):
+        raise ValueError("NaN literal: test NaN with is_nan / not_nan")
     if t is not None:
         return Literal(_canonicalize(t, v), t)
     if isinstance(v, bool):
@@ -639,70 +656,11 @@ def extract_field_names(expr: Expression) -> set[str]:
     return set()
 
 
-def _cmp_values(a: Any, b: Any) -> int:
-    if a == b:
-        return 0
-    return -1 if a < b else 1
-
-
-def evaluate(expr: Expression, row: dict) -> bool:
-    """Row-level evaluation of a bound expression over a dict (used on
-    partition tuples) — ref visitors.go:189-381."""
-    if isinstance(expr, AlwaysTrue):
-        return True
-    if isinstance(expr, AlwaysFalse):
-        return False
-    if isinstance(expr, And):
-        return evaluate(expr.left, row) and evaluate(expr.right, row)
-    if isinstance(expr, Or):
-        return evaluate(expr.left, row) or evaluate(expr.right, row)
-    if isinstance(expr, Not):
-        return not evaluate(expr.child, row)
-    if isinstance(expr, BoundUnaryPredicate):
-        v = row.get(expr.term.name)
-        if expr.op_ == Operation.IS_NULL:
-            return v is None
-        if expr.op_ == Operation.NOT_NULL:
-            return v is not None
-        if expr.op_ == Operation.IS_NAN:
-            return v is not None and isinstance(v, float) and math.isnan(v)
-        if expr.op_ == Operation.NOT_NAN:
-            return not (v is not None and isinstance(v, float) and math.isnan(v))
-    if isinstance(expr, BoundLiteralPredicate):
-        v = row.get(expr.term.name)
-        if v is None:
-            return False
-        lv = expr.literal.value
-        op = expr.op_
-        if op == Operation.EQ:
-            return v == lv
-        if op == Operation.NOT_EQ:
-            return v != lv
-        if op == Operation.LT:
-            return v < lv
-        if op == Operation.LT_EQ:
-            return v <= lv
-        if op == Operation.GT:
-            return v > lv
-        if op == Operation.GT_EQ:
-            return v >= lv
-        if op == Operation.STARTS_WITH:
-            return str(v).startswith(str(lv))
-        if op == Operation.NOT_STARTS_WITH:
-            return not str(v).startswith(str(lv))
-    if isinstance(expr, BoundSetPredicate):
-        v = row.get(expr.term.name)
-        if v is None:
-            return False
-        if expr.op_ == Operation.IN:
-            return v in expr.values
-        return v not in expr.values
-    raise TypeError(f"cannot evaluate {expr!r}")
-
-
 def compile_evaluator(expr: Expression):
-    """Compile a bound expression into a closure tree returning the same
-    verdicts as evaluate(row). The planner evaluates the projected
+    """Compile a bound, NOT-rewritten expression into a closure tree
+    returning True exactly when the row's predicate is TRUE (module
+    docstring): a null operand makes a leaf False, and Python's float
+    comparisons are IEEE. The planner evaluates the projected
     filter once per manifest entry's partition tuple; walking the
     expression per row (isinstance dispatch, op_ chains) is per-entry
     hot-loop work — the walk happens once here, at scan construction."""
@@ -797,113 +755,54 @@ def compile_evaluator(expr: Expression):
     raise TypeError(f"cannot evaluate {expr!r}")
 
 
-# ----------------------------------------------------------- pandas compiler
+# ------------------------------------------------ spark and arrow compilers
 
-def to_pandas_mask(expr: Expression, pdf):
-    """Evaluate a bound expression over a pandas DataFrame → boolean
-    Series. Used by the executor-side positional-delete writer, which
-    (like the reference's arrow_scanner) processes one parquet file at a
-    time and needs vectorized residual evaluation without a JVM."""
-    import numpy as np
-    import pandas as pd
-
+def _python_value(v, t: IcebergType):
+    """A literal's internal value as the Python object Spark and Arrow
+    compare with: dates and timestamps as date / datetime."""
     from .conversions import days_to_date, micros_to_datetime
 
-    def series(term: BoundReference) -> "pd.Series":
-        return pdf[term.name]
-
-    def conv_value(v, t: IcebergType):
-        if isinstance(t, DateType):
-            return days_to_date(v)
-        if isinstance(t, TimestampTzType):
-            return pd.Timestamp(micros_to_datetime(v, tz=True))
-        if isinstance(t, (TimestampType,)):
-            return pd.Timestamp(micros_to_datetime(v, tz=False))
-        return v
-
-    def lit_value(l: Literal):
-        return conv_value(l.value, l.type)
-
-    if isinstance(expr, AlwaysTrue):
-        return pd.Series(True, index=pdf.index)
-    if isinstance(expr, AlwaysFalse):
-        return pd.Series(False, index=pdf.index)
-    if isinstance(expr, And):
-        return to_pandas_mask(expr.left, pdf) & to_pandas_mask(expr.right, pdf)
-    if isinstance(expr, Or):
-        return to_pandas_mask(expr.left, pdf) | to_pandas_mask(expr.right, pdf)
-    if isinstance(expr, Not):
-        return ~to_pandas_mask(expr.child, pdf)
-    if isinstance(expr, BoundUnaryPredicate):
-        s = series(expr.term)
-        if expr.op_ == Operation.IS_NULL:
-            return s.isna()
-        if expr.op_ == Operation.NOT_NULL:
-            return s.notna()
-        if expr.op_ in (Operation.IS_NAN, Operation.NOT_NAN):
-            # pandas float64 folds null into NaN; when the caller stashed
-            # an arrow validity mask (__isnull_<col>, see
-            # write_position_deletes) use it so nulls are NOT treated as
-            # NaN — otherwise fall back to the conflated check.
-            nan = pd.Series(
-                [isinstance(v, float) and v != v for v in s], index=pdf.index
-            )
-            null_col = f"__isnull_{expr.term.name}"
-            if null_col in pdf.columns:
-                nan = nan & ~pdf[null_col]
-            return nan if expr.op_ == Operation.IS_NAN else ~nan
-    if isinstance(expr, BoundLiteralPredicate):
-        s = series(expr.term)
-        lv = lit_value(expr.literal)
-        op = expr.op_
-        if op == Operation.EQ:
-            return (s == lv).fillna(False)
-        if op == Operation.NOT_EQ:
-            return (s != lv).fillna(False) & s.notna()
-        if op == Operation.LT:
-            return (s < lv).fillna(False)
-        if op == Operation.LT_EQ:
-            return (s <= lv).fillna(False)
-        if op == Operation.GT:
-            return (s > lv).fillna(False)
-        if op == Operation.GT_EQ:
-            return (s >= lv).fillna(False)
-        if op == Operation.STARTS_WITH:
-            return s.astype("string").str.startswith(str(expr.literal.value)).fillna(False)
-        if op == Operation.NOT_STARTS_WITH:
-            return (~s.astype("string").str.startswith(str(expr.literal.value))).fillna(False)
-    if isinstance(expr, BoundSetPredicate):
-        s = series(expr.term)
-        vals = [conv_value(v, expr.term.type) for v in expr.values]
-        isin = s.isin(vals)
-        return isin if expr.op_ == Operation.IN else (~isin & s.notna())
-    raise TypeError(f"cannot compile {expr!r} to a pandas mask")
+    if isinstance(t, DateType):
+        return days_to_date(v)
+    if isinstance(t, TimestampTzType):
+        return micros_to_datetime(v, tz=True)
+    if isinstance(t, TimestampType):
+        return micros_to_datetime(v, tz=False)
+    return v
 
 
-# ----------------------------------------------------------- spark compiler
+def _set_values(expr: "BoundSetPredicate") -> list:
+    """The set's values for Spark / Arrow (sorted for a stable plan).
+    -0.0 == 0.0 under IEEE, but Arrow's hashed isin tells them apart,
+    so a float set holding one signed zero gets the other too."""
+    vals = sorted(expr.values, key=str)
+    if isinstance(expr.term.type, (FloatType, DoubleType)) and 0.0 in vals:
+        vals = [v for v in vals if v != 0.0] + [-0.0, 0.0]
+    return [_python_value(v, expr.term.type) for v in vals]
 
-def to_spark_column(expr: Expression):
-    """Compile a (bound or unbound) expression to a Spark Column for the
-    residual row filter — the data-plane half of SURVEY §3.1 step 7.
-    Catalyst then handles parquet row-group pushdown for free."""
+
+def _spark_term(expr: BoundPredicate, zero: bool):
+    """The predicate's column. Parquet's dictionary filter compares
+    doubles bit by bit (-0.0 != 0.0), so a pushed-down `= 0.0`,
+    `<= 0.0`, `>= 0.0` or IN (0.0) skips row groups that hold the other
+    signed zero. Against a zero literal a float or double column reads
+    as `c + 0.0`: IEEE maps -0.0 to 0.0 and keeps every other value,
+    and the comparison stays out of the parquet scan."""
     from pyspark.sql import functions as F
 
-    from .conversions import days_to_date, micros_to_datetime
-    from .types import DateType as _Date
-    from .types import TimestampType as _Ts
-    from .types import TimestampTzType as _TsTz
+    c = F.col(expr.term.name)
+    if zero and isinstance(expr.term.type, (FloatType, DoubleType)):
+        return c + F.lit(0.0)
+    return c
 
-    def conv_value(v, t):
-        if isinstance(t, _Date):
-            return days_to_date(v)
-        if isinstance(t, _TsTz):
-            return micros_to_datetime(v, tz=True)
-        if isinstance(t, _Ts):
-            return micros_to_datetime(v, tz=False)
-        return v
 
-    def lit_value(l: Literal):
-        return F.lit(conv_value(l.value, l.type))
+def to_spark_column(expr: Expression):
+    """Compile a bound expression to a Spark Column for the residual row
+    filter — the data-plane half of SURVEY §3.1 step 7. Catalyst then
+    handles parquet row-group pushdown for free. Spark orders NaN above
+    every number, so `>`/`>=` on a float or double column also require
+    NOT isnan (the module's IEEE rule); Spark's isnan(null) is false."""
+    from pyspark.sql import functions as F
 
     if isinstance(expr, AlwaysTrue):
         return F.lit(True)
@@ -924,8 +823,8 @@ def to_spark_column(expr: Expression):
             Operation.NOT_NAN: ~F.isnan(c),
         }[expr.op_]
     if isinstance(expr, BoundLiteralPredicate):
-        c = F.col(expr.term.name)
-        lv = lit_value(expr.literal)
+        c = _spark_term(expr, expr.literal.value == 0)
+        lv = F.lit(_python_value(expr.literal.value, expr.literal.type))
         op = expr.op_
         if op == Operation.EQ:
             return c == lv
@@ -935,21 +834,18 @@ def to_spark_column(expr: Expression):
             return c < lv
         if op == Operation.LT_EQ:
             return c <= lv
-        if op == Operation.GT:
-            return c > lv
-        if op == Operation.GT_EQ:
-            return c >= lv
+        if op in (Operation.GT, Operation.GT_EQ):
+            cmp = c > lv if op == Operation.GT else c >= lv
+            if isinstance(expr.term.type, (FloatType, DoubleType)):
+                return cmp & ~F.isnan(c)
+            return cmp
         if op == Operation.STARTS_WITH:
             return c.startswith(str(expr.literal.value))
         if op == Operation.NOT_STARTS_WITH:
             return ~c.startswith(str(expr.literal.value))
     if isinstance(expr, BoundSetPredicate):
-        c = F.col(expr.term.name)
-        vals = [
-            conv_value(v, expr.term.type)
-            for v in sorted(expr.values, key=lambda v: str(v))
-        ]
-        col_in = c.isin([F.lit(v) for v in vals])
+        c = _spark_term(expr, any(v == 0 for v in expr.values))
+        col_in = c.isin([F.lit(v) for v in _set_values(expr)])
         return col_in if expr.op_ == Operation.IN else ~col_in
     if isinstance(expr, UnboundPredicate):
         raise ValueError("bind the expression before compiling to Spark")
@@ -957,26 +853,14 @@ def to_spark_column(expr: Expression):
 
 
 def to_arrow_expression(expr: Expression):
-    """Compile a BOUND expression to a pyarrow.dataset filter expression
-    — the residual bridge for executor-side Arrow reads (spj.py's
-    in-task join, where rows never pass through a Spark Column).  Same
-    SQL ternary semantics as to_spark_column: a predicate over null
-    evaluates to null and Table.filter drops it."""
+    """Compile a BOUND expression to a pyarrow compute expression — the
+    residual of every executor-side Arrow read (the wide reader, SPJ's
+    in-task join) and the row matcher of DML (reader.matched_positions),
+    where rows never pass through a Spark Column. Same rule as
+    to_spark_column (module docstring): a predicate over null evaluates
+    to null and Table.filter drops it; Arrow compares floats by IEEE."""
+    import pyarrow as pa
     import pyarrow.compute as pc
-
-    from .conversions import days_to_date, micros_to_datetime
-    from .types import DateType as _Date
-    from .types import TimestampType as _Ts
-    from .types import TimestampTzType as _TsTz
-
-    def conv_value(v, t):
-        if isinstance(t, _Date):
-            return days_to_date(v)
-        if isinstance(t, _TsTz):
-            return micros_to_datetime(v, tz=True)
-        if isinstance(t, _Ts):
-            return micros_to_datetime(v, tz=False)
-        return v
 
     if isinstance(expr, AlwaysTrue):
         return pc.scalar(True)
@@ -997,10 +881,11 @@ def to_arrow_expression(expr: Expression):
         if expr.op_ == Operation.IS_NAN:
             return f.is_nan()
         if expr.op_ == Operation.NOT_NAN:
-            return ~f.is_nan()
+            # Arrow's is_nan(null) is null; not_nan(null) is true
+            return ~f.is_nan() | f.is_null()
     if isinstance(expr, BoundLiteralPredicate):
         f = pc.field(expr.term.name)
-        v = conv_value(expr.literal.value, expr.literal.type)
+        v = _python_value(expr.literal.value, expr.literal.type)
         op = expr.op_
         if op == Operation.EQ:
             return f == v
@@ -1020,8 +905,11 @@ def to_arrow_expression(expr: Expression):
             return ~pc.starts_with(f, str(expr.literal.value))
     if isinstance(expr, BoundSetPredicate):
         f = pc.field(expr.term.name)
-        vals = [conv_value(v, expr.term.type) for v in expr.values]
-        isin = f.isin(vals)
+        if isinstance(expr.term.type, FloatType):
+            # isin casts its value set to the column type: widen the
+            # column instead, or 1e39 would round onto float32 inf
+            f = f.cast(pa.float64())
+        isin = f.isin(_set_values(expr))
         if expr.op_ == Operation.IN:
             return isin
         # Arrow's isin maps null → false (not null), so a bare ~isin

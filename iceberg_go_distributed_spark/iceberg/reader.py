@@ -16,6 +16,8 @@ and positional-delete application are defined here exactly once:
                            missing ones with the initial-default or null;
   * ``delete_positions`` — the file positions DVs / v2 positional delete
                            files remove from one data file;
+  * ``matched_positions`` — the file positions whose row a bound
+                           predicate matches (DML's row matcher);
   * ``read_file``        — one open, pruned columns, projection, and an
                            optional position drop.
 
@@ -201,6 +203,39 @@ def delete_positions(data_path: str, dels):
     return np.unique(np.concatenate(parts))
 
 
+def matched_positions(path, fields, mapped_names, bound, batch_rows=131072):
+    """File positions (sorted int64 numpy array) of the rows of `path`
+    whose predicate is TRUE — the rule of expressions.py, through
+    `to_arrow_expression(bound)`. `fields` are the predicate's columns:
+    they resolve and project like any read (field ids, mapped names,
+    promotion, initial defaults). The file streams in `batch_rows`
+    batches, so executor memory is one batch plus the positions."""
+    import numpy as np
+    import pyarrow as pa
+
+    from . import fileio
+    from .expressions import to_arrow_expression
+
+    expr = to_arrow_expression(bound)
+    parts = []
+    with fileio.parquet_file(path) as pf:
+        resolved = resolve(pf.schema_arrow, fields, mapped_names)
+        cols = [p for p in resolved.values() if p is not None]
+        start = 0
+        for batch in pf.iter_batches(batch_size=batch_rows, columns=cols):
+            n = batch.num_rows
+            tbl = pa.Table.from_batches(
+                [project(batch, fields, resolved, n)]
+            ).append_column(
+                "_pos", pa.array(np.arange(start, start + n, dtype=np.int64))
+            )
+            parts.append(tbl.filter(expr)["_pos"].to_numpy())
+            start += n
+    if not parts:
+        return np.empty(0, dtype=np.int64)
+    return np.concatenate(parts)
+
+
 def _arrow_read_file(path, fields, mapped_names, arrow_filter, filter_names, with_pos):
     """Open `path` ONCE and read only the resolved columns: one handle
     serves both the schema probe and the data read (a second open would
@@ -209,9 +244,13 @@ def _arrow_read_file(path, fields, mapped_names, arrow_filter, filter_names, wit
 
     The residual `arrow_filter` is pushed into the read only when every
     column it references physically carries its CURRENT name in this
-    file — the compiled expression addresses physical names — and never
-    for a positional read (`with_pos`), which must see every row in
-    file order: in-file filtering would renumber positions."""
+    file — the compiled expression addresses physical names — and is
+    not a float or double: parquet statistics leave NaN out, so pyarrow
+    would skip a row group whose NaN rows `!=` or NOT IN keep. It is
+    never pushed for a positional read (`with_pos`), which must see
+    every row in file order: in-file filtering would renumber
+    positions."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from . import fileio
@@ -231,8 +270,8 @@ def _arrow_read_file(path, fields, mapped_names, arrow_filter, filter_names, wit
             arrow_filter is not None
             and not with_pos
             and all(
-                resolved.get(fid) == name
-                for fid, name, _t, _d in fields
+                resolved.get(fid) == name and not pa.types.is_floating(t)
+                for fid, name, t, _d in fields
                 if name in filter_names
             )
         )

@@ -368,7 +368,7 @@ def _rows_frame(spark, rows, ddl: str):
     tasks first (seconds per collect on a many-core host)."""
     import pyarrow as pa
 
-    names = [c.split()[0] for c in ddl.split(", ")]
+    names = [c.split()[0].strip("`") for c in ddl.split(", ")]
     cols = list(zip(*rows)) if rows else [()] * len(names)
     return spark.createDataFrame(
         pa.table([pa.array(c) for c in cols], names=names), ddl
@@ -1453,27 +1453,26 @@ class Scan:
             )
             return keys.select(*names, file_path_col().alias("_efp")) if tagged else keys
         # key files are small (distinct delete keys) — a driver arrow
-        # read avoids needing a JVM FileSystem for the scheme. STATIC
-        # broadcast hint: a createDataFrame has no size stats, so
-        # without it Catalyst plans sort-merge and AQE shuffles the
-        # whole SCAN before converting the join (same trap the merge
-        # plan probe caught, write.py merge broadcast note / SCALE.md
-        # r10) — the driver just materialized these keys, so they are
-        # small by construction. The local branch needs no hint: parquet
+        # read by field id (reader.resolve) avoids needing a JVM
+        # FileSystem for the scheme. STATIC broadcast hint: the frame
+        # carries no size estimate Catalyst trusts, so without it
+        # Catalyst plans sort-merge and AQE shuffles the whole SCAN
+        # before converting the join (same trap the merge plan probe
+        # caught, write.py merge broadcast note / SCALE.md r10) — the
+        # driver just materialized these keys, so they are small by
+        # construction. The local branch needs no hint: parquet
         # file-size stats auto-broadcast under the threshold, and a
         # genuinely big key file SHOULD sort-merge.
-        import pandas as pd
+        from .reader import read_fields, read_file
 
-        parts = []
+        fields = read_fields(eq_schema)
+        rows: list = []
         for p in paths:
-            part = fileio.read_parquet_table(p, columns=names).to_pandas()
-            if tagged:
-                part["_efp"] = strip_scheme(p)
-            parts.append(part)
+            cols = read_file(p, fields, {}).columns
+            part = zip(*(c.to_pylist() for c in cols))
+            rows += [r + (strip_scheme(p),) for r in part] if tagged else part
         ddl = schema_to_spark_ddl(eq_schema) + (", _efp string" if tagged else "")
-        return F.broadcast(
-            spark.createDataFrame(pd.concat(parts, ignore_index=True), schema=ddl)
-        )
+        return F.broadcast(_rows_frame(spark, rows, ddl))
 
     def _read_jvm(self, spark, files, schema: Schema, meta):
         """The JVM frame over `files` with the `meta` columns (`_fp`,

@@ -1452,51 +1452,31 @@ def _commit_manifests(table, new_manifests, carried, operation: str, extra_summa
     tx.commit()
 
 
-def _iter_matched_positions(data_path, needed, bound, batch_rows: int = 131072):
-    """Stream a data file's predicate-relevant columns batch-wise and
-    yield one uint64 ndarray of matched GLOBAL row positions per record
-    batch. Executor memory is bounded by `batch_rows`, not file size —
-    at the 512 MB target file size with wide predicate columns a whole-
-    file to_pandas() doubles executor memory (runs executor-side)."""
-    import contextlib as _ctx
+def _row_matcher(md, expr):
+    """(bound predicate, reader fields of its columns, name mapping):
+    what `reader.matched_positions` needs to match a data file's rows
+    under the current schema."""
+    from .expressions import bind_expr, extract_field_names, rewrite_not
+    from .reader import mapped_names, read_fields
 
-    import numpy as np
-    import pyarrow.compute as pc
-
-    from . import fileio
-    from .expressions import to_pandas_mask
-
-    with _ctx.closing(fileio.parquet_file(data_path)) as pf:
-        start = 0
-        for batch in pf.iter_batches(batch_size=batch_rows, columns=needed):
-            frame = batch.to_pandas()
-            # arrow validity masks let IS_NAN distinguish real NaN from
-            # null (pandas folds both into NaN)
-            for cname in needed:
-                frame[f"__isnull_{cname}"] = pc.is_null(
-                    batch.column(cname)
-                ).to_numpy(zero_copy_only=False)
-            mask = to_pandas_mask(bound, frame).to_numpy()
-            idx = np.flatnonzero(mask)
-            if idx.size:
-                yield (start + idx).astype(np.uint64)
-            start += batch.num_rows
+    schema = md.current_schema()
+    bound = bind_expr(rewrite_not(expr), schema)
+    names = extract_field_names(bound)
+    fields = [f for f in read_fields(schema) if f[1] in names]
+    return bound, fields, mapped_names(md.properties)
 
 
 def write_position_deletes(spark_or_df_provider, table, tasks, expr, commit_uuid: str):
-    """Executor-side: per matched data file, stream it batch-wise with
-    pyarrow, apply the (bound) predicate as a pandas mask, emit sorted
-    (file_path, pos) delete rows — the merge-on-read write half (spec
-    position deletes; ref manifest.go:2395 PositionalDeleteSchema)."""
+    """Executor-side: per matched data file, match its rows with
+    `reader.matched_positions`, emit sorted (file_path, pos) delete
+    rows — the merge-on-read write half (spec position deletes; ref
+    manifest.go:2395 PositionalDeleteSchema)."""
     import pandas as pd
 
-    from .expressions import bind_expr, extract_field_names, rewrite_not
     from .manifest import positional_delete_schema
 
     md = table.metadata
-    schema = md.current_schema()
-    bound = bind_expr(rewrite_not(expr), schema)
-    needed = sorted(extract_field_names(bound))
+    bound, fields, mapped = _row_matcher(md, expr)
     location = md.location
     del_schema = positional_delete_schema()
 
@@ -1516,6 +1496,7 @@ def write_position_deletes(spark_or_df_provider, table, tasks, expr, commit_uuid
         from pyspark import TaskContext
 
         from . import fileio
+        from .reader import matched_positions
 
         fileio.apply_config(fileio_cfg)
         tc = TaskContext.get()
@@ -1531,12 +1512,10 @@ def write_position_deletes(spark_or_df_provider, table, tasks, expr, commit_uuid
         paths_parts, pos_parts = [], []
         for pdf in batches:
             for data_path in pdf["data_file"]:
-                for pos_arr in _iter_matched_positions(data_path, needed, bound):
-                    pos_parts.append(np.asarray(pos_arr, dtype=np.int64))
-                    paths_parts.append(
-                        np.full(len(pos_arr), data_path, dtype=object)
-                    )
-        if not pos_parts or not sum(len(p) for p in pos_parts):
+                pos = matched_positions(data_path, fields, mapped, bound)
+                pos_parts.append(pos)
+                paths_parts.append(np.full(len(pos), data_path, dtype=object))
+        if not sum(len(p) for p in pos_parts):
             yield pd.DataFrame({"descriptor": []}).astype({"descriptor": "string"})
             return
         out = pd.DataFrame(
@@ -1585,8 +1564,8 @@ def write_deletion_vectors(
     spark, table, tasks, expr, commit_uuid: str, snapshot_id: int = 0
 ):
     """Executor-side v3 delete-write half: per partially-matching data
-    file, evaluate the (bound) predicate batch-wise as pandas masks,
-    union the matched positions with the file's existing deletion vector
+    file, match its rows with `reader.matched_positions`, union the
+    matched positions with the file's existing deletion vector
     (spec: at most one DV per data file — the new DV replaces the old),
     and write ONE puffin file per task holding a `deletion-vector-v1`
     blob per referenced data file. The reference parses these manifest
@@ -1601,12 +1580,8 @@ def write_deletion_vectors(
     the same file must not double-count carried-over positions)."""
     import pandas as pd
 
-    from .expressions import bind_expr, extract_field_names, rewrite_not
-
     md = table.metadata
-    schema = md.current_schema()
-    bound = bind_expr(rewrite_not(expr), schema)
-    needed = sorted(extract_field_names(bound))
+    bound, fields, mapped = _row_matcher(md, expr)
     location = md.location
     seq_hint = md.last_sequence_number + 1
 
@@ -1637,7 +1612,6 @@ def write_deletion_vectors(
 
     def task(batches):
         import numpy as np
-        import pyarrow.compute as pc
 
         from pyspark import TaskContext
 
@@ -1649,6 +1623,7 @@ def write_deletion_vectors(
             serialize_deletion_vector,
             write_puffin,
         )
+        from .reader import matched_positions
 
         fileio.apply_config(fileio_cfg)
         tc = TaskContext.get()
@@ -1661,12 +1636,9 @@ def write_deletion_vectors(
         refs: list = []
         for pdf in batches:
             for rec in pdf.itertuples(index=False):
-                parts = list(_iter_matched_positions(rec.data_file, needed, bound))
-                positions = (
-                    np.concatenate(parts)
-                    if parts
-                    else np.empty(0, dtype=np.uint64)
-                )
+                positions = matched_positions(
+                    rec.data_file, fields, mapped, bound
+                ).astype(np.uint64)
                 newly = int(positions.size)
                 if rec.dv_path is not None and not pd.isna(rec.dv_path):
                     old = np.asarray(
@@ -1889,8 +1861,10 @@ def overwrite_where(table, df, expr) -> None:
     the matching rows, drop strictly-matching files, append `df` — one
     OVERWRITE snapshot (ref transaction.go:408-497 ReplaceDataFiles +
     snapshot_producers.go:104-243)."""
+    from pyspark.sql import functions as F
+
     from .evaluators import strict_metrics_evaluator
-    from .expressions import bind_expr, not_, rewrite_not, to_spark_column
+    from .expressions import bind_expr, rewrite_not, to_spark_column
     from .manifest import ManifestEntry, ManifestEntryStatus, write_manifest
 
     md = table.metadata
@@ -1901,7 +1875,8 @@ def overwrite_where(table, df, expr) -> None:
     removed = {t.file.file_path for t in tasks}
     ds = begin_distributed_snapshot(table)
 
-    # survivors of partial files (rows NOT matching) get rewritten
+    # survivors of partial files (rows whose predicate is not TRUE:
+    # false, null, or a NaN the comparison rejects) get rewritten
     # together with the new data — read through the MOR machinery so
     # pending position/equality deletes stay applied (a raw parquet
     # read would resurrect deleted rows into the rewritten files)
@@ -1909,7 +1884,9 @@ def overwrite_where(table, df, expr) -> None:
     survivor_files: list = []
     partial_tasks = [t for t in tasks if not strict(t.file)]
     if partial_tasks:
-        bound = bind_expr(rewrite_not(not_(expr)), schema)
+        keep = ~F.coalesce(
+            to_spark_column(bind_expr(rewrite_not(expr), schema)), F.lit(False)
+        )
         scan = table.scan()
         if md.format_version >= 3:
             # spec v3 "Row Lineage": rewriting a partial file copies its
@@ -1925,7 +1902,7 @@ def overwrite_where(table, df, expr) -> None:
             srv = scan._read_with_deletes(
                 spark, partial_tasks, schema, lineage=True
             )
-            srv = attach_lineage(srv, lineage_map).where(to_spark_column(bound))
+            srv = attach_lineage(srv, lineage_map).where(keep)
             srv_schema = _lineage_ext_schema(schema)
             survivor_files = write_data_files(
                 srv, srv_schema, md.default_spec(), md.location,
@@ -1945,7 +1922,7 @@ def overwrite_where(table, df, expr) -> None:
         else:
             survivors = scan._read_with_deletes(
                 spark, partial_tasks, schema
-            ).where(to_spark_column(bound))
+            ).where(keep)
             to_write = df.select(survivors.columns).unionByName(survivors)
 
     data_files = write_data_files(

@@ -509,9 +509,11 @@ try:  # pyspark >= 4: Python Data Source API
             self.path = path
             # [(field_id, current_name)] — executors resolve parquet
             # columns by FIELD ID (name-independent), so renamed columns
-            # keep streaming; name match is the fallback for imported
-            # (add_files / name-mapped) files without ids
+            # keep streaming; imported (add_files) files without ids
+            # resolve by the table's name mapping (`mapped`, set by the
+            # planner), then by the current name
             self.fields = fields
+            self.mapped: dict = {}
             self.cfg = cfg
             # rows per yielded record batch: the executor memory bound
             # (option stream_batch_rows)
@@ -645,22 +647,27 @@ try:  # pyspark >= 4: Python Data Source API
             if e_id == -1 or s_id == e_id:
                 return []
             t = _load_stream_table(self._options)
-            from .iceberg.reader import read_fields
+            from .iceberg.reader import mapped_names, read_fields
 
             fields = read_fields(t.metadata.current_schema())
             batch_rows = int(self._options.get("stream_batch_rows", "8192"))
             if self._mode == "cdc":
-                return self._cdc_partitions(t, s_id, e_id, fields, batch_rows)
-            scan = t.incremental_append_scan(
-                from_snapshot_id=None if s_id == -1 else s_id,
-                to_snapshot_id=e_id,
-            )
-            return [
-                _IcebergFilePartition(
-                    task.file.file_path, fields, self._cfg, batch_rows
+                parts = self._cdc_partitions(t, s_id, e_id, fields, batch_rows)
+            else:
+                scan = t.incremental_append_scan(
+                    from_snapshot_id=None if s_id == -1 else s_id,
+                    to_snapshot_id=e_id,
                 )
-                for task in scan.plan_files()
-            ]
+                parts = [
+                    _IcebergFilePartition(
+                        task.file.file_path, fields, self._cfg, batch_rows
+                    )
+                    for task in scan.plan_files()
+                ]
+            mapped = mapped_names(t.metadata.properties)
+            for p in parts:
+                p.mapped = mapped
+            return parts
 
         def _cdc_partitions(self, t, s_id, e_id, fields, batch_rows):
             """Row-level CDC planning for the range (s, e]: the chain is
@@ -1166,7 +1173,7 @@ try:  # pyspark >= 4: Python Data Source API
             batch_rows = getattr(partition, "batch_rows", 8192)
             fields = partition.fields
             with fileio.parquet_file(partition.path) as pf:
-                resolved = resolve(pf.schema_arrow, fields, {})
+                resolved = resolve(pf.schema_arrow, fields, partition.mapped)
                 read_cols = [p for p in resolved.values() if p is not None]
                 if change == "delete" or (
                     change == "insert"

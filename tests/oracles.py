@@ -12,10 +12,14 @@ degenerate inputs.
     reader.
   * `merge_on_read_oracle` — per-file twin of the one-pass
     merge-on-read `table.Scan._read_with_deletes`.
+  * `evaluate` — the predicate rule of expressions.py, one row at a
+    time in three-valued logic: the reference for `compile_evaluator`,
+    `to_spark_column` and `to_arrow_expression`.
 """
 
 from __future__ import annotations
 
+import math
 import struct
 from typing import Any, BinaryIO, Callable
 
@@ -40,6 +44,7 @@ from iceberg_go_distributed_spark.iceberg.expressions import (
     BoundLiteralPredicate,
     BoundPredicate,
     BoundSetPredicate,
+    BoundUnaryPredicate,
     Expression,
     Not,
     Operation,
@@ -256,6 +261,59 @@ def inclusive_metrics_oracle(
         return root(f)
 
     return eval_file
+
+
+# ------------------------------------------------------- row predicates
+
+def evaluate(expr: Expression, row: dict) -> bool:
+    """True exactly when the bound `expr` is TRUE for `row` (a dict by
+    column name) under the rule of the expressions.py docstring:
+    NOT-rewritten first, SQL three-valued logic, IEEE comparisons (NaN
+    satisfies only `!=` and NOT IN), is_nan(null) false."""
+    return _truth(rewrite_not(expr), row) is True
+
+
+def _truth(expr: Expression, row: dict):
+    """True, False or None (SQL unknown)."""
+    if isinstance(expr, AlwaysTrue):
+        return True
+    if isinstance(expr, AlwaysFalse):
+        return False
+    if isinstance(expr, (And, Or)):
+        sides = (_truth(expr.left, row), _truth(expr.right, row))
+        short = False if isinstance(expr, And) else True
+        if short in sides:
+            return short
+        return None if None in sides else not short
+    if isinstance(expr, Not):
+        v = _truth(expr.child, row)
+        return None if v is None else not v
+    v = row.get(expr.term.name)
+    op = expr.op_
+    if isinstance(expr, BoundUnaryPredicate):
+        nan = isinstance(v, float) and math.isnan(v)
+        return {
+            Operation.IS_NULL: v is None,
+            Operation.NOT_NULL: v is not None,
+            Operation.IS_NAN: nan,
+            Operation.NOT_NAN: not nan,
+        }[op]
+    if v is None:
+        return None
+    if isinstance(expr, BoundSetPredicate):
+        hit = any(v == x for x in expr.values)
+        return hit if op == Operation.IN else not hit
+    lv = expr.literal.value
+    return {
+        Operation.EQ: lambda: v == lv,
+        Operation.NOT_EQ: lambda: v != lv,
+        Operation.LT: lambda: v < lv,
+        Operation.LT_EQ: lambda: v <= lv,
+        Operation.GT: lambda: v > lv,
+        Operation.GT_EQ: lambda: v >= lv,
+        Operation.STARTS_WITH: lambda: str(v).startswith(str(lv)),
+        Operation.NOT_STARTS_WITH: lambda: not str(v).startswith(str(lv)),
+    }[op]()
 
 
 # --------------------------------------------------------- delete matching

@@ -504,12 +504,12 @@ def test_not_eq_delete_sound_with_nulls(fs_catalog, spark):
     assert sorted(r.id for r in t.scan().to_df(spark).collect()) == [2, 3]
 
 
-def test_iter_matched_positions_batchwise_multi_rowgroup(tmp_path):
-    """Predicate evaluation streams record batches with positions offset
-    by batch start — executor memory bounded by batch size, not file
-    size (ADVICE/VERDICT r5): verify exact global positions on a file
-    with many row groups and with batch_rows smaller than a row group."""
-    import numpy as np
+def test_matched_positions_batchwise_multi_rowgroup(tmp_path):
+    """DML row matching (reader.matched_positions) streams record batches
+    with positions offset by batch start — executor memory bounded by
+    batch size, not file size (ADVICE/VERDICT r5): verify exact file
+    positions on a file with many row groups and with batch_rows
+    smaller than a row group."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -521,8 +521,11 @@ def test_iter_matched_positions_batchwise_multi_rowgroup(tmp_path):
         or_,
         rewrite_not,
     )
+    from iceberg_go_distributed_spark.iceberg.reader import (
+        matched_positions,
+        read_fields,
+    )
     from iceberg_go_distributed_spark.iceberg.types import NestedField, Schema
-    from iceberg_go_distributed_spark.iceberg.write import _iter_matched_positions
 
     n = 1000
     vals = [float(i % 97) for i in range(n)]
@@ -539,14 +542,13 @@ def test_iter_matched_positions_batchwise_multi_rowgroup(tmp_path):
     )
     expr = or_(greater_than_or_equal("v", 90.0), is_nan("v"))
     bound = bind_expr(rewrite_not(expr), schema)
+    fields = [f for f in read_fields(schema) if f[1] == "v"]
 
     expect = sorted(
         i for i, v in enumerate(vals) if (v != v) or v >= 90.0
     )
     for batch_rows in (64, 128, 100000):  # < rowgroup, == rowgroup, whole file
-        got = np.concatenate(
-            list(_iter_matched_positions(path, ["v"], bound, batch_rows=batch_rows))
-        )
+        got = matched_positions(path, fields, {}, bound, batch_rows=batch_rows)
         assert got.tolist() == expect, batch_rows
 
 

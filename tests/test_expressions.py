@@ -9,6 +9,8 @@ import pytest
 from iceberg_go_distributed_spark.iceberg import expressions as E
 from iceberg_go_distributed_spark.iceberg import types as ty
 
+from tests.oracles import evaluate
+
 SCHEMA = ty.Schema.of(
     0,
     ty.NestedField(1, "id", ty.LongType(), required=True),
@@ -102,17 +104,46 @@ def test_row_evaluation():
         E.greater_than("id", 10).bind(SCHEMA),
         E.starts_with("name", "ab").bind(SCHEMA),
     )
-    assert E.evaluate(expr, {"id": 11, "name": "abc"})
-    assert not E.evaluate(expr, {"id": 11, "name": "xbc"})
-    assert not E.evaluate(expr, {"id": 9, "name": "abc"})
-    assert not E.evaluate(expr, {"id": None, "name": "abc"})
+    assert evaluate(expr, {"id": 11, "name": "abc"})
+    assert not evaluate(expr, {"id": 11, "name": "xbc"})
+    assert not evaluate(expr, {"id": 9, "name": "abc"})
+    assert not evaluate(expr, {"id": None, "name": "abc"})
 
 
 def test_evaluate_nan():
     e = E.is_nan("score").bind(SCHEMA)
-    assert E.evaluate(e, {"score": float("nan")})
-    assert not E.evaluate(e, {"score": 1.0})
-    assert not E.evaluate(e, {"score": None})
+    assert evaluate(e, {"score": float("nan")})
+    assert not evaluate(e, {"score": 1.0})
+    assert not evaluate(e, {"score": None})
+
+
+def test_nan_literals_rejected():
+    """NaN compares to nothing, so a NaN literal never means what it
+    says: binding one fails and points at is_nan / not_nan."""
+    nan = float("nan")
+    for e in (
+        E.equal("score", nan),
+        E.greater_than("score", nan),
+        E.is_in("score", [1.0, nan]),
+    ):
+        with pytest.raises(ValueError, match="is_nan"):
+            E.bind_expr(e, SCHEMA)
+    with pytest.raises(ValueError, match="is_nan"):
+        E.literal(nan, ty.DoubleType())
+
+
+def test_float_literals_do_not_saturate():
+    """A float column holds ±inf, NaN and null: `score = inf` can match,
+    and `score < 1e39` is not AlwaysTrue (inf, NaN and null fail it)."""
+    b = E.bind_expr(E.equal("score", float("inf")), SCHEMA)
+    assert isinstance(b, E.BoundLiteralPredicate)
+    assert evaluate(b, {"score": float("inf")})
+    b = E.bind_expr(E.less_than("score", 1e39), SCHEMA)
+    assert isinstance(b, E.BoundLiteralPredicate)
+    assert evaluate(b, {"score": 3.0e38})
+    assert not evaluate(b, {"score": float("inf")})
+    assert not evaluate(b, {"score": float("nan")})
+    assert not evaluate(b, {"score": None})
 
 
 def test_literal_increment_decrement():

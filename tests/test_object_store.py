@@ -189,6 +189,32 @@ def test_s3_initial_default_through_arrow_fallbacks(s3_catalog, spark):
     assert rows == [(i, f"v{i}", "unknown") for i in range(5, 20)]
 
 
+def test_s3_equality_keys_read_by_field_id_after_rename(s3_catalog, spark):
+    """Equality-delete key files on an object store are read by field
+    id: after the key column is renamed, the upsert's deletes still
+    apply (a read by the current name finds no such column in the key
+    file)."""
+    from iceberg_go_distributed_spark.iceberg.types import schema_from_spark
+
+    df = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(10)], "id long, v string"
+    )
+    t = s3_catalog.create_table(
+        "db.s3_eq_rename",
+        schema_from_spark(df.schema),
+        location=f"s3://{BUCKET}/db/s3_eq_rename",
+    )
+    t.append(df.coalesce(1))
+    t.upsert(
+        spark.createDataFrame([(3, "new3"), (5, "new5")], "id long, v string"),
+        ["id"],
+    )
+    t.update_schema().rename_column("id", "key").commit()
+    rows = sorted(tuple(r) for r in t.scan().to_df(spark).collect())
+    want = {i: f"v{i}" for i in range(10)} | {3: "new3", 5: "new5"}
+    assert rows == sorted(want.items())
+
+
 def test_s3_v3_deletion_vector_write(s3_catalog, spark, lineitem_df):
     """v3 write plane against the object store: the upgrade commit, the
     lineage-assigning manifest list, the executor-written puffin DV,

@@ -376,7 +376,8 @@ def test_spj_agg_with_row_filter(spark, sf_dir, catalog):
 def test_to_arrow_expression_sql_null_semantics():
     """Arrow residual compile: predicates over null drop the row (SQL
     ternary), including NOT IN — arrow's isin maps null to false, so the
-    compiler adds the explicit validity guard."""
+    compiler adds the explicit validity guard — and NaN follows the
+    IEEE rule of the expressions.py docstring."""
     import pyarrow as pa
 
     from iceberg_go_distributed_spark.iceberg import expressions as E
@@ -418,7 +419,17 @@ def test_to_arrow_expression_sql_null_semantics():
     assert run(E.is_null("k")) == [None]
     assert run(E.not_null("k")) == [1, 2]
     assert run(E.is_nan("x")) == [2]
-    assert run(E.not_nan("x")) == [1]  # null x dropped
+    # is_nan(null) is false, so not_nan(null) is true: the null row stays
+    assert run(E.not_nan("x")) == [1, None]
+    # NaN satisfies no ordering or equality comparison, but does satisfy
+    # != and NOT IN; every comparison over null drops the row
+    assert run(E.greater_than("x", 0.5)) == [1]
+    assert run(E.greater_than_or_equal("x", float("-inf"))) == [1]
+    assert run(E.less_than_or_equal("x", float("inf"))) == [1]
+    assert run(E.equal("x", 1.0)) == [1]
+    assert run(E.not_equal("x", 1.0)) == [2]
+    assert run(E.not_in("x", [1.0, 3.0])) == [2]
+    assert run(E.not_(E.greater_than("x", 0.5))) == []
     assert run(E.starts_with("s", "a")) == [1]
     assert run(E.and_(E.greater_than("k", 0), E.less_than("k", 2))) == [1]
     assert run(E.or_(E.equal("k", 1), E.equal("k", 2))) == [1, 2]

@@ -543,6 +543,49 @@ def test_iceberg_stream_source_survives_column_rename(tmp_path, spark):
     assert sorted(seen) == [(1, "a"), (2, "b")]
 
 
+def test_iceberg_stream_source_resolves_id_less_files_by_name_mapping(
+    tmp_path, spark
+):
+    """An add_files (ID-less) file streams through the table's name
+    mapping: after a rename, its column still resolves by the old
+    physical name instead of reading as null."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_go_distributed_spark.iceberg.catalog import FileSystemCatalog
+    from iceberg_go_distributed_spark.iceberg.types import schema_from_spark
+    from iceberg_go_distributed_spark.streaming import iceberg_stream
+
+    wh = str(tmp_path / "wh")
+    cat = FileSystemCatalog(wh)
+    t = cat.create_table(
+        "db.nm_stream",
+        schema_from_spark(
+            spark.createDataFrame([], "id long, payload string").schema
+        ),
+    )
+    ext = str(tmp_path / "ext.parquet")
+    pq.write_table(
+        pa.table({"id": pa.array([1, 2], pa.int64()), "payload": ["a", "b"]}),
+        ext,
+    )
+    t.add_files([ext])
+    t.update_schema().rename_column("payload", "body").commit()
+
+    seen: list[tuple] = []
+    q = (
+        iceberg_stream(spark, wh, "db.nm_stream")
+        .writeStream.foreachBatch(
+            lambda b, _id: seen.extend(tuple(r) for r in b.collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert sorted(seen) == [(1, "a"), (2, "b")]
+
+
 def test_iceberg_stream_source_survives_int_to_long_promotion(tmp_path, spark):
     """Files written before an int→long promotion still carry int32
     columns; the stream source casts them to the table type, so the
