@@ -12,7 +12,7 @@ Split of responsibilities (SURVEY.md §1.1 "Spark mapping"):
     work, no Spark dependency, so planning is testable without a JVM;
   - data plane: Spark DataFrames — the planner hands `spark.read.parquet`
     a pruned file list plus a residual filter Column, and the write path
-    runs executors-as-workers via mapInPandas (distributed.py).
+    runs executors-as-workers via mapInArrow (write.py).
 """
 
 from .types import (  # noqa: F401

@@ -15,6 +15,9 @@ One predicate rule holds for every row evaluator:
     does satisfy `!=` and NOT IN; `literal()` rejects a NaN value (use
     `is_nan` / `not_nan`);
   * `is_nan(null)` is false and `not_nan(null)` is true;
+  * an integer literal outside the column type's range saturates on
+    bind, and a comparison it makes hold for every value binds to
+    `not_null` (AlwaysTrue on a required column): null still fails it;
   * a row matches — a read keeps it, a DML statement deletes it —
     exactly when its predicate is TRUE.
 
@@ -140,18 +143,23 @@ class Literal:
         :231-361 (above-max/below-min markers). Returns Literal,
         ABOVE_MAX, or BELOW_MIN."""
         v, t = self.value, self.type
+        if isinstance(target, (IntegerType, LongType)) and isinstance(
+            t, (IntegerType, LongType)
+        ):
+            # range-checked even when the types agree: `literal()` types
+            # any int beyond int32 as long, 2**70 included
+            lo, hi = (
+                (_INT32_MIN, _INT32_MAX)
+                if isinstance(target, IntegerType)
+                else (_INT64_MIN, _INT64_MAX)
+            )
+            if v > hi:
+                return ABOVE_MAX
+            if v < lo:
+                return BELOW_MIN
+            return self if t == target else Literal(int(v), target)
         if t == target:
             return self
-        if isinstance(target, IntegerType):
-            if isinstance(t, (IntegerType, LongType)):
-                if v > _INT32_MAX:
-                    return ABOVE_MAX
-                if v < _INT32_MIN:
-                    return BELOW_MIN
-                return Literal(int(v), target)
-        if isinstance(target, LongType):
-            if isinstance(t, (IntegerType, LongType)):
-                return Literal(int(v), target)
         if isinstance(target, (FloatType, DoubleType)):
             # no saturation: a float column holds ±inf, NaN and null,
             # so `f < 1e39` is not AlwaysTrue (module docstring rule);
@@ -431,25 +439,20 @@ class UnboundPredicate(Expression):
                 raise ValueError(
                     f"cannot cast literal {lit.value!r} to {field.field_type} for {self.term}"
                 )
-            if cast is ABOVE_MAX:
-                # col <op> (value above type max) — ref literals.go:231-361
-                return {
-                    Operation.LT: AlwaysTrue(),
-                    Operation.LT_EQ: AlwaysTrue(),
-                    Operation.GT: AlwaysFalse(),
-                    Operation.GT_EQ: AlwaysFalse(),
-                    Operation.EQ: AlwaysFalse(),
-                    Operation.NOT_EQ: AlwaysTrue(),
+            if cast is ABOVE_MAX or cast is BELOW_MIN:
+                # col <op> (value outside the type's range) — ref
+                # literals.go:231-361. A comparison that holds for every
+                # value still fails on null (three-valued rule)
+                above = cast is ABOVE_MAX
+                holds = {
+                    Operation.LT: above,
+                    Operation.LT_EQ: above,
+                    Operation.GT: not above,
+                    Operation.GT_EQ: not above,
+                    Operation.EQ: False,
+                    Operation.NOT_EQ: True,
                 }[op]
-            if cast is BELOW_MIN:
-                return {
-                    Operation.LT: AlwaysFalse(),
-                    Operation.LT_EQ: AlwaysFalse(),
-                    Operation.GT: AlwaysTrue(),
-                    Operation.GT_EQ: AlwaysTrue(),
-                    Operation.EQ: AlwaysFalse(),
-                    Operation.NOT_EQ: AlwaysTrue(),
-                }[op]
+                return _non_null(field, ref) if holds else AlwaysFalse()
             return BoundLiteralPredicate(op, ref, cast)
 
         if op in _SET_OPS:
@@ -477,7 +480,7 @@ class UnboundPredicate(Expression):
                 return BoundSetPredicate(op, ref, frozenset(kept))
             else:  # NOT_IN
                 if not kept:
-                    return AlwaysTrue()
+                    return _non_null(field, ref)
                 if len(kept) == 1:
                     return BoundLiteralPredicate(
                         Operation.NOT_EQ, ref, Literal(kept[0], field.field_type)
@@ -485,6 +488,14 @@ class UnboundPredicate(Expression):
                 return BoundSetPredicate(op, ref, frozenset(kept))
 
         raise ValueError(f"cannot bind op {op}")
+
+
+def _non_null(field: NestedField, ref) -> Expression:
+    """What a predicate that every value satisfies binds to: the column
+    is not null (AlwaysTrue on a required column)."""
+    if field.required:
+        return AlwaysTrue()
+    return BoundUnaryPredicate(Operation.NOT_NULL, ref)
 
 
 @dataclass(frozen=True)

@@ -420,10 +420,13 @@ def rewrite_position_deletes(
     A steady delete stream writes one small puffin file per delete_where
     per touched task, so live DVs end up scattered over many tiny files
     even though the spec keeps at most one DV *blob* per data file.
-    This pass repacks every live DV blob into ceil(total/target) puffin
-    files (one per executor task, bin-sized by the blobs' byte size) and
-    replaces the delete manifests with ONE consolidated manifest — no
-    data files are rewritten and no delete is re-derived.
+    This pass repacks every live DV blob into at most
+    n = ceil(total bytes / target) puffin files and replaces the delete
+    manifests with ONE consolidated manifest — no data files are
+    rewritten and no delete is re-derived. The blobs' work rows are
+    coalesced into at most n tasks, one puffin each, in row order (not
+    sized by bytes); the row scan has at most default-parallelism
+    slices, so above that many the puffins exceed the target size.
 
     Correctness-critical: each blob keeps its ORIGINAL data sequence
     number and snapshot id (entry-level, explicit in the new manifest)
@@ -447,8 +450,6 @@ def rewrite_position_deletes(
 
     from . import fileio as _fileio
     from .manifest import (
-        DataFile,
-        DataFileContent,
         ManifestContent,
         ManifestEntry,
         ManifestEntryStatus,
@@ -457,7 +458,6 @@ def rewrite_position_deletes(
     )
     from .write import (
         _commit_manifests,
-        _decode_partition,
         _encode_partition,
         begin_distributed_snapshot,
     )
@@ -525,122 +525,60 @@ def rewrite_position_deletes(
     commit_uuid = ds.commit_uuid
     fileio_cfg = _fileio.env_config()
 
-    files_df = (
-        spark.createDataFrame(
-            live_rows,
-            "data_file string, dv_path string, dv_offset bigint, dv_size bigint, "
-            "cardinality bigint, seq bigint, file_seq bigint, snap_id bigint, "
-            "part string, spec_id int",
-        ).repartition(n_out)
-        if live_rows
-        else None
-    )
-
     def task(batches):
-        import pandas as pd
-
-        from pyspark import TaskContext
+        import pyarrow as pa
 
         from . import fileio
-        from .puffin import (
-            BlobMetadata,
-            read_deletion_vector,
-            serialize_deletion_vector,
-            write_puffin,
-        )
-        from .write import _encode_descriptor
+        from .puffin import write_dv_file
+        from .write import _dv_pointer
 
         fileio.apply_config(fileio_cfg)
-        tc = TaskContext.get()
-        # partition id + ATTEMPT id: speculative/retried attempts of the
-        # same task must never write the same path concurrently (the
-        # attempt id is unique per attempt; Iceberg writers embed one in
-        # the filename for the same reason)
-        task_id = f"{tc.partitionId()}-{tc.taskAttemptId()}" if tc else "0-0"
-        blobs, refs = [], []
-        for pdf in batches:
-            for rec in pdf.itertuples(index=False):
-                positions = read_deletion_vector(
-                    rec.dv_path, int(rec.dv_offset), int(rec.dv_size)
-                )
-                blobs.append(
-                    (
-                        BlobMetadata(
-                            type="deletion-vector-v1",
-                            fields=[],
-                            snapshot_id=int(rec.snap_id),
-                            sequence_number=int(rec.seq),
-                            properties={
-                                "referenced-data-file": rec.data_file,
-                                "cardinality": str(len(positions)),
-                            },
-                        ),
-                        serialize_deletion_vector(positions),
-                    )
-                )
-                refs.append(rec)
-        if not blobs:
-            yield pd.DataFrame(
-                {"descriptor": [], "seq": [], "file_seq": [], "snap_id": [], "spec_id": []}
-            ).astype(
-                {"descriptor": "string", "seq": "int64", "file_seq": "int64",
-                 "snap_id": "int64", "spec_id": "int64"}
+        recs = [r for batch in batches for r in batch.to_pylist()]
+        written = write_dv_file(
+            location, commit_uuid, "dv-rewrite",
+            [(r["data_file"], (), _dv_pointer(r), r["part"]) for r in recs],
+        )
+        out = [(r["row"], w[0]) for r, w in zip(recs, written) if w]
+        if out:
+            yield pa.record_batch(
+                {
+                    "row": pa.array([o[0] for o in out], pa.int32()),
+                    "descriptor": pa.array([o[1] for o in out], pa.string()),
+                }
             )
-            return
-        d = os.path.join(location, "data")
-        fileio.makedirs(d)
-        path = os.path.join(d, f"00000-{task_id}-{commit_uuid}-dv-rewrite.puffin")
-        write_puffin(path, blobs)
-        size = fileio.size(path)
-        out = {"descriptor": [], "seq": [], "file_seq": [], "snap_id": [], "spec_id": []}
-        for (meta, _), rec in zip(blobs, refs):
-            out["descriptor"].append(
-                _encode_descriptor(
-                    DataFile(
-                        file_path=path,
-                        file_format="PUFFIN",
-                        partition=_decode_partition(_json.loads(rec.part)),
-                        record_count=int(meta.properties["cardinality"]),
-                        file_size_in_bytes=size,
-                        content=DataFileContent.POSITION_DELETES,
-                        referenced_data_file=rec.data_file,
-                        content_offset=meta.offset,
-                        content_size_in_bytes=meta.length,
-                    )
-                )
-            )
-            out["seq"].append(int(rec.seq))
-            out["file_seq"].append(int(rec.file_seq))
-            out["snap_id"].append(int(rec.snap_id))
-            out["spec_id"].append(int(rec.spec_id))
-        yield pd.DataFrame(out)
 
-    from .write import _decode_descriptor
+    from .table import _map_rows
+    from .write import _DV_WORK_DDL, _decode_descriptor
 
     schema = md.current_schema()
     new_entries = []
     carried = list(keep)
-    if files_df is not None:
-        collected = files_df.mapInPandas(
+    if live_rows:
+        # coalesce, not repartition: at most n_out tasks, so at most
+        # n_out puffins, with no Exchange ahead of the writes
+        collected = _map_rows(
+            spark,
+            [(r[0], r[1], r[2], r[3], r[8], i) for i, r in enumerate(live_rows)],
+            _DV_WORK_DDL + ", row int",
             task,
-            "descriptor string, seq bigint, file_seq bigint, snap_id bigint, "
-            "spec_id int",
-        ).collect()
+            "row int, descriptor string",
+            max_tasks=n_out,
+        )
         by_spec: dict = {}
-        for r in collected:
-            if not r.descriptor:
-                continue
-            df = _decode_descriptor(r.descriptor)
-            df.content = DataFileContent.POSITION_DELETES
+        for i, desc in zip(
+            collected.column("row").to_pylist(),
+            collected.column("descriptor").to_pylist(),
+        ):
+            r = live_rows[i]
             e = ManifestEntry(
                 status=ManifestEntryStatus.EXISTING,
-                snapshot_id=int(r.snap_id),
-                sequence_number=int(r.seq),
-                file_sequence_number=int(r.file_seq),
-                data_file=df,
+                snapshot_id=r[7],
+                sequence_number=r[5],
+                file_sequence_number=r[6],
+                data_file=_decode_descriptor(desc),
             )
             new_entries.append(e)
-            by_spec.setdefault(int(r.spec_id), []).append(e)
+            by_spec.setdefault(r[9], []).append(e)
         assert len(new_entries) == len(live_rows), "a DV blob went missing in repack"
 
         # one consolidated manifest PER SPEC ID: entries keep their
@@ -951,6 +889,45 @@ def _eq_matched_positions(pf, eq_sets, batch_rows: int = 131072):
     return np.concatenate(out)
 
 
+def _dv_entries(collected, snapshot_id):
+    """(ADDED manifest entries, referenced data files whose DV they
+    replace, positions newly deleted) from `_DV_OUT_DDL` Arrow tables.
+    Entries inherit the committing snapshot's sequence number."""
+    from .manifest import ManifestEntry, ManifestEntryStatus
+    from .write import _decode_descriptor
+
+    entries, replaced, newly = [], set(), 0
+    for tbl in collected:
+        for r in tbl.to_pylist():
+            df = _decode_descriptor(r["descriptor"])
+            entries.append(
+                ManifestEntry(
+                    status=ManifestEntryStatus.ADDED,
+                    snapshot_id=snapshot_id,
+                    sequence_number=None,
+                    file_sequence_number=None,
+                    data_file=df,
+                )
+            )
+            newly += r["newly"]
+            if r["had_dv"]:
+                replaced.add(df.referenced_data_file)
+    return entries, replaced, newly
+
+
+def _dv_added_summary(entries, newly) -> dict:
+    """Snapshot-summary counters of a conversion's added DVs."""
+    return {
+        "added-delete-files": str(len(entries)),
+        "added-position-delete-files": str(len(entries)),
+        "added-dvs": str(len(entries)),
+        "added-position-deletes": str(newly),
+        "added-files-size": str(
+            sum(e.data_file.content_size_in_bytes or 0 for e in entries)
+        ),
+    }
+
+
 def convert_equality_deletes(table, spark) -> bool:
     """Materialize every applicable equality delete into deletion vectors
     and drop the equality-delete files — WITHOUT rewriting any data file.
@@ -976,16 +953,18 @@ def convert_equality_deletes(table, spark) -> bool:
     from .manifest import (
         DataFileContent,
         ManifestContent,
-        ManifestEntry,
-        ManifestEntryStatus,
         read_manifest,
         write_manifest,
     )
+    from .table import _map_rows
     from .write import (
+        _DV_OUT_DDL,
+        _DV_WORK_DDL,
         _commit_manifests,
-        _decode_partition,
-        _encode_partition,
+        _dv_pointer,
+        _dv_work_row,
         _rewrite_parent_manifests,
+        _write_dv_batches,
         begin_distributed_snapshot,
     )
 
@@ -1048,20 +1027,9 @@ def convert_equality_deletes(table, spark) -> bool:
         if sum(int(d.record_count or 0) for d in eqs) > keys_max:
             big_tasks.append(t)
             continue
-        dv = next(
-            (d for d in t.delete_files if d.content_offset is not None), None
-        )
         rows.append(
-            (
-                t.file.file_path,
-                _json.dumps(
-                    [[d.file_path, list(d.equality_ids or [])] for d in eqs]
-                ),
-                dv.file_path if dv else None,
-                int(dv.content_offset) if dv else None,
-                int(dv.content_size_in_bytes) if dv else None,
-                _json.dumps(_encode_partition(t.file.partition or {})),
-            )
+            _dv_work_row(t)
+            + (_json.dumps([[d.file_path, list(d.equality_ids or [])] for d in eqs]),)
         )
 
     ds = begin_distributed_snapshot(table)
@@ -1069,141 +1037,45 @@ def convert_equality_deletes(table, spark) -> bool:
     commit_uuid = ds.commit_uuid
     fileio_cfg = _fileio.env_config()
 
-    collected = []
-    if rows:
-        files_df = spark.createDataFrame(
-            rows,
-            "data_file string, eq_json string, dv_path string, "
-            "dv_offset bigint, dv_size bigint, part string",
-        ).repartition(min(len(rows), 32))
+    def task(batches):
+        from . import fileio
 
-        def task(batches):
-            import numpy as np
-            import pandas as pd
+        fileio.apply_config(fileio_cfg)
 
-            from pyspark import TaskContext
+        # per-WORKER bounded LRU (Spark reuses Python workers): without
+        # it each task re-reads every key file. _eq_convert_key_frame is
+        # module-level so cloudpickle resolves it (and its cache) by
+        # reference in the worker's imported module — a nested closure
+        # got a fresh globals dict per task and the cache never shared.
+        def new_positions(r):
+            eq_sets = [
+                (ids, _eq_convert_key_frame(path, ids))
+                for path, ids in _json.loads(r["eq_json"])
+            ]
+            with fileio.parquet_file(r["data_file"]) as pf:
+                return _eq_matched_positions(pf, eq_sets)
 
-            from . import fileio
-            from .manifest import DataFile as _DF
-            from .puffin import (
-                BlobMetadata,
-                read_deletion_vector,
-                serialize_deletion_vector,
-                write_puffin,
-            )
-            from .write import _encode_descriptor
+        yield from _write_dv_batches(
+            location, commit_uuid, "eqconv",
+            [
+                (r["data_file"], new_positions(r), _dv_pointer(r), r["part"])
+                for batch in batches
+                for r in batch.to_pylist()
+            ],
+        )
 
-            fileio.apply_config(fileio_cfg)
-            tc = TaskContext.get()
-            task_id = f"{tc.partitionId()}-{tc.taskAttemptId()}" if tc else "0-0"
-            blobs, refs, newly = [], [], []
-
-            # per-WORKER bounded LRU (Spark reuses Python workers):
-            # without it each of the ~32 tasks re-reads every key file.
-            # _eq_convert_key_frame is module-level so cloudpickle
-            # resolves it (and its cache) by reference in the worker's
-            # imported module — a nested closure got a fresh globals
-            # dict per task and the cache never actually shared.
-            key_frame = _eq_convert_key_frame
-
-            for pdfs in batches:
-                for rec in pdfs.itertuples(index=False):
-                    eq_sets = [
-                        (ids, key_frame(path, ids))
-                        for path, ids in __import__("json").loads(rec.eq_json)
-                    ]
-                    with fileio.parquet_file(rec.data_file) as pf:
-                        pos = _eq_matched_positions(pf, eq_sets)
-                    if rec.dv_path is not None:
-                        existing = read_deletion_vector(
-                            rec.dv_path, int(rec.dv_offset), int(rec.dv_size)
-                        )
-                    else:
-                        existing = np.empty(0, dtype="uint64")
-                    union = np.union1d(pos, existing.astype("uint64"))
-                    if union.size == 0:
-                        continue  # keys matched nothing; no DV needed
-                    blobs.append(
-                        (
-                            BlobMetadata(
-                                type="deletion-vector-v1",
-                                fields=[],
-                                snapshot_id=0,
-                                sequence_number=0,
-                                properties={
-                                    "referenced-data-file": rec.data_file,
-                                    "cardinality": str(int(union.size)),
-                                },
-                            ),
-                            serialize_deletion_vector(union),
-                        )
-                    )
-                    refs.append(rec)
-                    newly.append(int(union.size - existing.size))
-            if not blobs:
-                yield pd.DataFrame({"descriptor": [], "newly": [], "had_dv": []}).astype(
-                    {"descriptor": "string", "newly": "int64", "had_dv": "bool"}
-                )
-                return
-            d = os.path.join(location, "data")
-            fileio.makedirs(d)
-            path = os.path.join(d, f"00000-{task_id}-{commit_uuid}-eqconv.puffin")
-            write_puffin(path, blobs)
-            size = fileio.size(path)
-            out = {"descriptor": [], "newly": [], "had_dv": []}
-            for (meta, _), rec, nw in zip(blobs, refs, newly):
-                out["descriptor"].append(
-                    _encode_descriptor(
-                        _DF(
-                            file_path=path,
-                            file_format="PUFFIN",
-                            partition=_decode_partition(
-                                __import__("json").loads(rec.part)
-                            ),
-                            record_count=int(meta.properties["cardinality"]),
-                            file_size_in_bytes=size,
-                            content=DataFileContent.POSITION_DELETES,
-                            referenced_data_file=rec.data_file,
-                            content_offset=meta.offset,
-                            content_size_in_bytes=meta.length,
-                        )
-                    )
-                )
-                out["newly"].append(nw)
-                out["had_dv"].append(rec.dv_path is not None)
-            yield pd.DataFrame(out)
-
-        collected = files_df.mapInPandas(
-            task, "descriptor string, newly bigint, had_dv boolean"
-        ).collect()
-
+    collected = (
+        [_map_rows(spark, rows, _DV_WORK_DDL + ", eq_json string", task, _DV_OUT_DDL)]
+        if rows
+        else []
+    )
     if big_tasks:
-        collected = list(collected) + _eq_convert_join_rows(
-            table, spark, big_tasks, location, commit_uuid
+        collected.append(
+            _eq_convert_join_rows(table, spark, big_tasks, location, commit_uuid)
         )
-
-    from .write import _decode_descriptor
-
-    new_entries = []
-    replaced_dv_refs: set = set()
-    newly_total = 0
-    for r in collected:
-        if not r.descriptor:
-            continue
-        df = _decode_descriptor(r.descriptor)
-        df.content = DataFileContent.POSITION_DELETES
-        new_entries.append(
-            ManifestEntry(
-                status=ManifestEntryStatus.ADDED,
-                snapshot_id=ds.snapshot_id,
-                sequence_number=None,  # inherit the conversion commit's seq
-                file_sequence_number=None,
-                data_file=df,
-            )
-        )
-        newly_total += int(r.newly)
-        if r.had_dv:
-            replaced_dv_refs.add(df.referenced_data_file)
+    new_entries, replaced_dv_refs, newly_total = _dv_entries(
+        collected, ds.snapshot_id
+    )
 
     new_manifests = []
     if new_entries:
@@ -1229,20 +1101,7 @@ def convert_equality_deletes(table, spark) -> bool:
         "removed-position-deletes": str(rm["removed-position-deletes"]),
     }
     if new_entries:
-        summary.update(
-            {
-                "added-delete-files": str(len(new_entries)),
-                "added-position-delete-files": str(len(new_entries)),
-                "added-dvs": str(len(new_entries)),
-                "added-position-deletes": str(newly_total),
-                "added-files-size": str(
-                    sum(
-                        e.data_file.content_size_in_bytes or 0
-                        for e in new_entries
-                    )
-                ),
-            }
-        )
+        summary.update(_dv_added_summary(new_entries, newly_total))
     _commit_manifests(
         table,
         new_manifests,
@@ -1321,18 +1180,15 @@ def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
     `rewrite_position_deletes` repacks the small DVs, the existing
     consolidation tier.
 
-    Returns rows shaped like the fast path's collect():
-    (descriptor, newly, had_dv)."""
-    import json as _json
+    Returns an Arrow table shaped like the fast path's output
+    (`_DV_OUT_DDL`)."""
     from dataclasses import replace as _replace
-
-    from pyspark.sql import functions as F
 
     from . import fileio as _fileio
     from .manifest import DataFileContent
     from .table import strip_scheme
     from .types import Schema, schema_to_spark_struct
-    from .write import _encode_partition
+    from .write import _DV_OUT_DDL, _dv_work_row
 
     md = table.metadata
     schema = md.current_schema()
@@ -1383,104 +1239,32 @@ def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
                 cond = c if cond is None else (cond & c)
             hit = df.join(kdf, on=cond, how="left_semi").select("_fp", "_pos")
             matched = hit if matched is None else matched.unionByName(hit)
-    if matched is None:
-        return []
     matched = matched.dropDuplicates(["_fp", "_pos"])
 
-    # per-file metadata the DV writer needs, O(files), broadcast
-    meta = {}
-    for t in tasks:
-        dv = next(
-            (d for d in t.delete_files if d.content_offset is not None), None
-        )
-        meta[strip_scheme(t.file.file_path)] = (
-            t.file.file_path,
-            (
-                (dv.file_path, int(dv.content_offset),
-                 int(dv.content_size_in_bytes))
-                if dv else None
-            ),
-            _json.dumps(_encode_partition(t.file.partition or {})),
-        )
+    # per-file work rows the DV writer needs, O(files), broadcast
+    meta = {strip_scheme(t.file.file_path): _dv_work_row(t) for t in tasks}
     meta_b = spark.sparkContext.broadcast(meta)
     fileio_cfg = _fileio.env_config()
 
     def write_dv(pdf):
-        import hashlib
-
-        import numpy as np
         import pandas as pd
 
         from . import fileio
-        from .manifest import DataFile as _DF
-        from .puffin import (
-            BlobMetadata,
-            read_deletion_vector,
-            serialize_deletion_vector,
-            write_puffin,
-        )
-        from .write import _decode_partition, _encode_descriptor
+        from .puffin import write_dv_file
 
         fileio.apply_config(fileio_cfg)
-        fp = pdf["_fp"].iloc[0]
-        data_file, dv, part_json = meta_b.value[fp]
-        pos = np.unique(pdf["_pos"].to_numpy().astype("uint64"))
-        existing = (
-            read_deletion_vector(*dv).astype("uint64")
-            if dv is not None
-            else np.empty(0, dtype="uint64")
+        data_file, dv_path, offset, size, part_json = meta_b.value[pdf["_fp"].iloc[0]]
+        dv = (dv_path, offset, size) if dv_path is not None else None
+        written = write_dv_file(
+            location, commit_uuid, "eqconvj",
+            [(data_file, pdf["_pos"].to_numpy(), dv, part_json)],
         )
-        union = np.union1d(pos, existing)
-        empty = pd.DataFrame(
-            {"descriptor": pd.Series([], dtype="string"),
-             "newly": pd.Series([], dtype="int64"),
-             "had_dv": pd.Series([], dtype="bool")}
-        )
-        if union.size == 0:  # pragma: no cover - matched is non-empty here
-            return empty
-        digest = hashlib.md5(fp.encode()).hexdigest()[:12]
-        d = os.path.join(location, "data")
-        fileio.makedirs(d)
-        path = os.path.join(
-            d, f"00000-{digest}-{commit_uuid}-eqconvj.puffin"
-        )
-        blob = BlobMetadata(
-            type="deletion-vector-v1",
-            fields=[],
-            snapshot_id=0,
-            sequence_number=0,
-            properties={
-                "referenced-data-file": data_file,
-                "cardinality": str(int(union.size)),
-            },
-        )
-        write_puffin(path, [(blob, serialize_deletion_vector(union))])
         return pd.DataFrame(
-            {
-                "descriptor": [
-                    _encode_descriptor(
-                        _DF(
-                            file_path=path,
-                            file_format="PUFFIN",
-                            partition=_decode_partition(_json.loads(part_json)),
-                            record_count=int(union.size),
-                            file_size_in_bytes=fileio.size(path),
-                            content=DataFileContent.POSITION_DELETES,
-                            referenced_data_file=data_file,
-                            content_offset=blob.offset,
-                            content_size_in_bytes=blob.length,
-                        )
-                    )
-                ],
-                "newly": [int(union.size - existing.size)],
-                "had_dv": [dv is not None],
-            }
+            [w for w in written if w], columns=["descriptor", "newly", "had_dv"]
         )
 
     return (
-        matched.groupBy("_fp")
-        .applyInPandas(write_dv, "descriptor string, newly bigint, had_dv boolean")
-        .collect()
+        matched.groupBy("_fp").applyInPandas(write_dv, _DV_OUT_DDL).toArrow()
     )
 
 
@@ -1502,16 +1286,19 @@ def convert_position_deletes(table, spark) -> bool:
     from .manifest import (
         DataFileContent,
         ManifestContent,
-        ManifestEntry,
-        ManifestEntryStatus,
         read_manifest,
         write_manifest,
     )
+    from .reader import delete_entry
+    from .table import _map_rows
     from .write import (
+        _DV_OUT_DDL,
+        _DV_WORK_DDL,
         _commit_manifests,
-        _decode_partition,
-        _encode_partition,
+        _dv_pointer,
+        _dv_work_row,
         _rewrite_parent_manifests,
+        _write_dv_batches,
         begin_distributed_snapshot,
     )
 
@@ -1548,173 +1335,45 @@ def convert_position_deletes(table, spark) -> bool:
     tasks = table.scan().plan_files_auto(spark)
     rows = []
     for t in tasks:
-        pos_files = [d for d in t.delete_files if is_v2_pos(d)]
-        if not pos_files:
-            continue
-        dv = next(
-            (d for d in t.delete_files if d.content_offset is not None), None
-        )
-        rows.append(
-            (
-                t.file.file_path,
-                _json.dumps([d.file_path for d in pos_files]),
-                dv.file_path if dv else None,
-                int(dv.content_offset) if dv else None,
-                int(dv.content_size_in_bytes) if dv else None,
-                _json.dumps(_encode_partition(t.file.partition or {})),
-            )
-        )
+        pos_files = [delete_entry(d) for d in t.delete_files if is_v2_pos(d)]
+        if pos_files:
+            rows.append(_dv_work_row(t) + (_json.dumps(pos_files),))
 
     ds = begin_distributed_snapshot(table)
     location = md.location
     commit_uuid = ds.commit_uuid
     fileio_cfg = _fileio.env_config()
 
-    collected = []
-    if rows:
-        files_df = spark.createDataFrame(
-            rows,
-            "data_file string, pos_json string, dv_path string, "
-            "dv_offset bigint, dv_size bigint, part string",
-        ).repartition(min(len(rows), 32))
+    def task(batches):
+        from . import fileio
+        from .reader import delete_positions
 
-        def task(batches):
-            import numpy as np
-            import pandas as pd
-            import pyarrow.compute as pc
-
-            from pyspark import TaskContext
-
-            from . import fileio
-            from .manifest import DataFile as _DF
-            from .puffin import (
-                BlobMetadata,
-                read_deletion_vector,
-                serialize_deletion_vector,
-                write_puffin,
-            )
-            from .table import strip_scheme
-            from .write import _encode_descriptor
-
-            fileio.apply_config(fileio_cfg)
-            tc = TaskContext.get()
-            task_id = f"{tc.partitionId()}-{tc.taskAttemptId()}" if tc else "0-0"
-            blobs, refs, newly = [], [], []
-            pos_cache: dict = {}
-
-            def pos_table(path):
-                if path not in pos_cache:
-                    with fileio.parquet_file(path) as pf:
-                        pos_cache[path] = pf.read(columns=["file_path", "pos"])
-                return pos_cache[path]
-
-            for pdfs in batches:
-                for rec in pdfs.itertuples(index=False):
-                    want = strip_scheme(rec.data_file)
-                    parts = []
-                    for path in __import__("json").loads(rec.pos_json):
-                        tbl = pos_table(path)
-                        stripped = pc.replace_substring_regex(
-                            tbl["file_path"],
-                            pattern="^[a-z0-9]+:(//)?",
-                            replacement="",
-                        )
-                        parts.append(
-                            tbl["pos"]
-                            .filter(pc.equal(stripped, want))
-                            .to_numpy(zero_copy_only=False)
-                            .astype("uint64")
-                        )
-                    pos = (
-                        np.unique(np.concatenate(parts))
-                        if parts
-                        else np.empty(0, dtype="uint64")
-                    )
-                    if rec.dv_path is not None:
-                        existing = read_deletion_vector(
-                            rec.dv_path, int(rec.dv_offset), int(rec.dv_size)
-                        ).astype("uint64")
-                    else:
-                        existing = np.empty(0, dtype="uint64")
-                    union = np.union1d(pos, existing)
-                    if union.size == 0:
-                        continue
-                    blobs.append(
-                        (
-                            BlobMetadata(
-                                type="deletion-vector-v1",
-                                fields=[],
-                                snapshot_id=0,
-                                sequence_number=0,
-                                properties={
-                                    "referenced-data-file": rec.data_file,
-                                    "cardinality": str(int(union.size)),
-                                },
-                            ),
-                            serialize_deletion_vector(union),
-                        )
-                    )
-                    refs.append(rec)
-                    newly.append(int(union.size - existing.size))
-            if not blobs:
-                yield pd.DataFrame({"descriptor": [], "newly": [], "had_dv": []}).astype(
-                    {"descriptor": "string", "newly": "int64", "had_dv": "bool"}
+        fileio.apply_config(fileio_cfg)
+        # one read of each v2 file per task: a v2 file lists the
+        # positions of many data files
+        tables: dict = {}
+        yield from _write_dv_batches(
+            location, commit_uuid, "posconv",
+            [
+                (
+                    r["data_file"],
+                    delete_positions(r["data_file"], _json.loads(r["dels"]), tables),
+                    _dv_pointer(r),
+                    r["part"],
                 )
-                return
-            d = os.path.join(location, "data")
-            fileio.makedirs(d)
-            path = os.path.join(d, f"00000-{task_id}-{commit_uuid}-posconv.puffin")
-            write_puffin(path, blobs)
-            size = fileio.size(path)
-            out = {"descriptor": [], "newly": [], "had_dv": []}
-            for (meta, _), rec, nw in zip(blobs, refs, newly):
-                out["descriptor"].append(
-                    _encode_descriptor(
-                        _DF(
-                            file_path=path,
-                            file_format="PUFFIN",
-                            partition=_decode_partition(
-                                __import__("json").loads(rec.part)
-                            ),
-                            record_count=int(meta.properties["cardinality"]),
-                            file_size_in_bytes=size,
-                            content=DataFileContent.POSITION_DELETES,
-                            referenced_data_file=rec.data_file,
-                            content_offset=meta.offset,
-                            content_size_in_bytes=meta.length,
-                        )
-                    )
-                )
-                out["newly"].append(nw)
-                out["had_dv"].append(rec.dv_path is not None)
-            yield pd.DataFrame(out)
-
-        collected = files_df.mapInPandas(
-            task, "descriptor string, newly bigint, had_dv boolean"
-        ).collect()
-
-    from .write import _decode_descriptor
-
-    new_entries = []
-    replaced_dv_refs: set = set()
-    newly_total = 0
-    for r in collected:
-        if not r.descriptor:
-            continue
-        df = _decode_descriptor(r.descriptor)
-        df.content = DataFileContent.POSITION_DELETES
-        new_entries.append(
-            ManifestEntry(
-                status=ManifestEntryStatus.ADDED,
-                snapshot_id=ds.snapshot_id,
-                sequence_number=None,
-                file_sequence_number=None,
-                data_file=df,
-            )
+                for batch in batches
+                for r in batch.to_pylist()
+            ],
         )
-        newly_total += int(r.newly)
-        if r.had_dv:
-            replaced_dv_refs.add(df.referenced_data_file)
+
+    collected = (
+        [_map_rows(spark, rows, _DV_WORK_DDL + ", dels string", task, _DV_OUT_DDL)]
+        if rows
+        else []
+    )
+    new_entries, replaced_dv_refs, newly_total = _dv_entries(
+        collected, ds.snapshot_id
+    )
 
     new_manifests = []
     if new_entries:
@@ -1737,20 +1396,7 @@ def convert_position_deletes(table, spark) -> bool:
         "removed-files-size": str(rm["removed-files-size"]),
     }
     if new_entries:
-        summary.update(
-            {
-                "added-delete-files": str(len(new_entries)),
-                "added-position-delete-files": str(len(new_entries)),
-                "added-dvs": str(len(new_entries)),
-                "added-position-deletes": str(newly_total),
-                "added-files-size": str(
-                    sum(
-                        e.data_file.content_size_in_bytes or 0
-                        for e in new_entries
-                    )
-                ),
-            }
-        )
+        summary.update(_dv_added_summary(new_entries, newly_total))
     _commit_manifests(
         table,
         new_manifests,

@@ -173,6 +173,96 @@ def read_deletion_vector(path: str, offset: int, size: int):
     return parse_deletion_vector(blob)
 
 
+def write_dv_file(location: str, commit_uuid: str, suffix: str, rows) -> list:
+    """Executor side: write the deletion vectors of `rows` into ONE
+    puffin file under `<location>/data`, the v3 delete write every DV
+    writer of the package shares.
+
+    `rows` are (data_file, positions, dv, part_json): the data file's
+    new deleted positions (ints, repeats allowed), its existing DV as
+    (puffin path, offset, size) or None, and its partition tuple as
+    `write._encode_partition` JSON. Each written DV is the union of the
+    two (spec: at most one DV per data file, and the new one replaces
+    the old). Blob metadata follows Iceberg Java's BaseDVFileWriter:
+    `fields` holds the reserved `pos` field id, snapshot id and sequence
+    number are -1 (the manifest entry carries both), and the properties
+    name the referenced data file and the cardinality.
+
+    Returns one item per row: None when the union is empty (no file is
+    written for it), else (descriptor, newly, had_dv) — the encoded
+    DataFile, the positions the existing DV lacked, and whether one
+    existed. The file name holds the Spark partition and task-attempt
+    ids, so retried or speculative attempts never write the same path,
+    and a digest of the first DV's data file, so calls within one task
+    (one per group of an applyInPandas) never do either: a data file is
+    in one call's rows at most."""
+    import hashlib
+    import os
+
+    import numpy as np
+
+    from pyspark import TaskContext
+
+    from . import fileio
+    from .manifest import POSITIONAL_DELETE_POS_ID, DataFile, DataFileContent
+    from .write import _decode_partition, _encode_descriptor
+
+    blobs, done = [], []
+    for data_file, positions, dv, part_json in rows:
+        old = (
+            read_deletion_vector(*dv) if dv is not None
+            else np.empty(0, dtype=np.uint64)
+        )
+        union = np.union1d(np.asarray(positions, dtype=np.uint64), old)
+        if not union.size:
+            done.append(None)
+            continue
+        meta = BlobMetadata(
+            type="deletion-vector-v1",
+            fields=[POSITIONAL_DELETE_POS_ID],
+            snapshot_id=-1,
+            sequence_number=-1,
+            properties={
+                "referenced-data-file": data_file,
+                "cardinality": str(union.size),
+            },
+        )
+        blobs.append((meta, serialize_deletion_vector(union)))
+        done.append((data_file, meta, part_json, int(union.size - old.size), dv is not None))
+    if not blobs:
+        return done
+    tc = TaskContext.get()
+    task_id = f"{tc.partitionId()}-{tc.taskAttemptId()}" if tc else "0-0"
+    d = os.path.join(location, "data")
+    fileio.makedirs(d)
+    digest = hashlib.md5(blobs[0][0].properties["referenced-data-file"].encode())
+    path = os.path.join(
+        d, f"00000-{task_id}-{digest.hexdigest()[:12]}-{commit_uuid}-{suffix}.puffin"
+    )
+    size = write_puffin(path, blobs)["size"]
+    out = []
+    for w in done:
+        if w is None:
+            out.append(None)
+            continue
+        data_file, meta, part_json, newly, had_dv = w
+        descriptor = _encode_descriptor(
+            DataFile(
+                file_path=path,
+                file_format="PUFFIN",
+                partition=_decode_partition(json.loads(part_json)),
+                record_count=int(meta.properties["cardinality"]),
+                file_size_in_bytes=size,
+                content=DataFileContent.POSITION_DELETES,
+                referenced_data_file=data_file,
+                content_offset=meta.offset,
+                content_size_in_bytes=meta.length,
+            )
+        )
+        out.append((descriptor, newly, had_dv))
+    return out
+
+
 def _column_theta_hashes(df, c: str, k: int) -> list:
     """The <= k+1 smallest DataSketches update hashes of the column's
     distinct values. Hashing runs executor-side over the distinct frame

@@ -166,11 +166,13 @@ def delete_entry(d) -> dict:
     }
 
 
-def delete_positions(data_path: str, dels):
+def delete_positions(data_path: str, dels, v2_files=None):
     """Deleted file positions of `data_path` named by `delete_entry`
     descriptors, as a sorted unique int64 numpy array. A v2 file may
     hold rows for other data files; its `file_path` column matches
-    `data_path` with URI schemes stripped (table.strip_scheme)."""
+    `data_path` with URI schemes stripped (table.strip_scheme).
+    `v2_files`, a dict, keeps each v2 file's rows once read, for a
+    caller that looks up many data files in the same delete files."""
     import numpy as np
 
     parts = []
@@ -189,15 +191,21 @@ def delete_positions(data_path: str, dels):
         from . import fileio
         from .table import SCHEME_RE, strip_scheme
 
-        with fileio.parquet_file(d["path"]) as pf:
-            tbl = pf.read(columns=["file_path", "pos"])
-        stripped = pc.replace_substring_regex(
-            tbl["file_path"], pattern=SCHEME_RE, replacement=""
-        )
+        rows = (v2_files or {}).get(d["path"])
+        if rows is None:
+            with fileio.parquet_file(d["path"]) as pf:
+                tbl = pf.read(columns=["file_path", "pos"])
+            rows = (
+                pc.replace_substring_regex(
+                    tbl["file_path"], pattern=SCHEME_RE, replacement=""
+                ),
+                tbl["pos"],
+            )
+            if v2_files is not None:
+                v2_files[d["path"]] = rows
+        stripped, pos = rows
         hit = pc.equal(stripped, strip_scheme(data_path))
-        parts.append(
-            tbl["pos"].filter(hit).to_numpy(zero_copy_only=False).astype("int64")
-        )
+        parts.append(pos.filter(hit).to_numpy(zero_copy_only=False).astype("int64"))
     if not parts:
         return np.empty(0, dtype="int64")
     return np.unique(np.concatenate(parts))

@@ -64,7 +64,9 @@ def _serialize32(values: np.ndarray) -> bytes:
 def serialize_portable64(positions) -> bytes:
     """Serialize sorted-or-not positions (non-negative ints) to the
     64-bit portable Roaring format."""
-    arr = np.unique(np.asarray(list(positions), dtype=np.uint64))
+    if not isinstance(positions, np.ndarray):
+        positions = list(positions)
+    arr = np.unique(np.asarray(positions, dtype=np.uint64))
     highs = (arr >> 32).astype(np.uint32)
     keys, starts = np.unique(highs, return_index=True)
     bounds = np.append(starts, len(arr))

@@ -375,6 +375,20 @@ def _rows_frame(spark, rows, ddl: str):
     )
 
 
+def _map_rows(spark, rows, ddl: str, fn, out_ddl: str, max_tasks=None):
+    """Run the executor work `fn` (a `mapInArrow` function) over the
+    driver's work `rows` and collect its output as one Arrow table.
+    Spark splits the `_rows_frame` scan into min(rows, default
+    parallelism) tasks by itself, so no repartition runs ahead of the
+    work: the call is one job of one stage. `max_tasks` caps the task
+    count, and so the files the tasks write, with `coalesce`, which
+    merges scan slices without an Exchange."""
+    frame = _rows_frame(spark, rows, ddl)
+    if max_tasks is not None:
+        frame = frame.coalesce(max_tasks)
+    return frame.mapInArrow(fn, out_ddl).toArrow()
+
+
 def strip_scheme(path: str) -> str:
     import re as _re
 

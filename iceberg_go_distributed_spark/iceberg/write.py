@@ -3,11 +3,14 @@ Spark (SURVEY §3.3 — this is Spark's native shape):
 
   coordinator (driver)   BeginDistributedSnapshot → reserve snapshot id
                          + commit UUID (ref distributed_snapshot.go:52-76)
-  workers (executors)    mapInPandas: write Parquet files (bin-packed or
+  workers (executors)    mapInArrow: write Parquet files (bin-packed or
                          partition-fanout), harvest footer stats, return
                          DataFile descriptor rows (ref manifest.go:1137
                          NewManifestWriterForSnapshot — workers need no
-                         transaction)
+                         transaction); delete files are written the same
+                         way over a driver-built work frame
+                         (table._map_rows), deletion vectors by the one
+                         puffin.write_dv_file
   coordinator            build Avro manifest(s) + manifest list, commit
                          AddSnapshot+SetSnapshotRef guarded by
                          AssertRefSnapshotID(main, parent); on CAS
@@ -608,7 +611,7 @@ def write_data_files(
     properties: Optional[dict] = None,
     strict_metrics: bool = True,
 ):
-    """Executor-side Parquet writing via mapInPandas; returns the list of
+    """Executor-side Parquet writing via mapInArrow; returns the list of
     DataFile descriptors (driver-side, O(files)).
 
     Unpartitioned → bin-pack per task (ref arrow_utils.go:1267-1280);
@@ -1466,24 +1469,19 @@ def _row_matcher(md, expr):
     return bound, fields, mapped_names(md.properties)
 
 
-def write_position_deletes(spark_or_df_provider, table, tasks, expr, commit_uuid: str):
+def write_position_deletes(spark, table, tasks, expr, commit_uuid: str):
     """Executor-side: per matched data file, match its rows with
     `reader.matched_positions`, emit sorted (file_path, pos) delete
     rows — the merge-on-read write half (spec position deletes; ref
-    manifest.go:2395 PositionalDeleteSchema)."""
-    import pandas as pd
-
+    manifest.go:2395 PositionalDeleteSchema). One parquet file per
+    task, through `table._map_rows`."""
     from .manifest import positional_delete_schema
+    from .table import _map_rows
 
     md = table.metadata
     bound, fields, mapped = _row_matcher(md, expr)
     location = md.location
     del_schema = positional_delete_schema()
-
-    spark = spark_or_df_provider
-    files_df = spark.createDataFrame(
-        [(t.file.file_path,) for t in tasks], "data_file string"
-    ).repartition(min(len(tasks), 32))
     from . import fileio as _fileio
 
     fileio_cfg = _fileio.env_config()
@@ -1491,11 +1489,11 @@ def write_position_deletes(spark_or_df_provider, table, tasks, expr, commit_uuid
 
     def task(batches):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from pyspark import TaskContext
 
         from . import fileio
+        from .manifest import DataFileContent
         from .reader import matched_positions
 
         fileio.apply_config(fileio_cfg)
@@ -1505,72 +1503,56 @@ def write_position_deletes(spark_or_df_provider, table, tasks, expr, commit_uuid
         # attempt id is unique per attempt; Iceberg writers embed one in
         # the filename for the same reason)
         task_id = f"{tc.partitionId()}-{tc.taskAttemptId()}" if tc else "0-0"
-        import numpy as np
-
-        # column-wise numpy accumulation: a predicate matching millions
-        # of rows must not materialize per-position Python ints/strings
+        # column-wise accumulation: a predicate matching millions of
+        # rows must not materialize per-position Python ints/strings
         paths_parts, pos_parts = [], []
-        for pdf in batches:
-            for data_path in pdf["data_file"]:
+        for batch in batches:
+            for data_path in batch.column("data_file").to_pylist():
                 pos = matched_positions(data_path, fields, mapped, bound)
-                pos_parts.append(pos)
-                paths_parts.append(np.full(len(pos), data_path, dtype=object))
+                pos_parts.append(pa.array(pos))
+                paths_parts.append(pa.repeat(pa.scalar(data_path), len(pos)))
         if not sum(len(p) for p in pos_parts):
-            yield pd.DataFrame({"descriptor": []}).astype({"descriptor": "string"})
             return
-        out = pd.DataFrame(
-            {
-                "file_path": np.concatenate(paths_parts),
-                "pos": np.concatenate(pos_parts),
-            }
-        ).sort_values(["file_path", "pos"])
         d = os.path.join(location, "data")
         fileio.makedirs(d)
         path = os.path.join(d, f"00000-{task_id}-{commit_uuid}-deletes.parquet")
         apa = _arrow_schema(del_schema)
-        pq_tbl = pa.Table.from_pandas(out, schema=apa, preserve_index=False)
+        pq_tbl = pa.table(
+            [pa.concat_arrays(paths_parts), pa.concat_arrays(pos_parts)], schema=apa
+        ).sort_by([("file_path", "ascending"), ("pos", "ascending")])
         with fileio.parquet_writer(
             path, apa, compression=codec, compression_level=codec_level
         ) as w:
             w.write_table(pq_tbl)
-        stats = _stats_from_parquet(path, del_schema)
         dfile = DataFile(
             file_path=path,
             file_format="PARQUET",
             partition={},
             file_size_in_bytes=fileio.size(path),
-            content=__import__(
-                "iceberg_go_distributed_spark.iceberg.manifest", fromlist=["DataFileContent"]
-            ).DataFileContent.POSITION_DELETES,
-            **stats,
+            content=DataFileContent.POSITION_DELETES,
+            **_stats_from_parquet(path, del_schema),
         )
-        yield pd.DataFrame({"descriptor": [_encode_descriptor(dfile)]})
+        yield pa.record_batch({"descriptor": [_encode_descriptor(dfile)]})
 
-    import pyarrow.parquet  # noqa: F401  (fail fast on driver if missing)
-
-    descs = [
-        _decode_descriptor(r.descriptor)
-        for r in files_df.mapInPandas(task, _DESCRIPTOR_SCHEMA).collect()
-        if r.descriptor
-    ]
-    for d in descs:
-        d.content = __import__(
-            "iceberg_go_distributed_spark.iceberg.manifest", fromlist=["DataFileContent"]
-        ).DataFileContent.POSITION_DELETES
-    return descs
+    out = _map_rows(
+        spark,
+        [(t.file.file_path,) for t in tasks],
+        "data_file string",
+        task,
+        _DESCRIPTOR_SCHEMA,
+    )
+    return [_decode_descriptor(s) for s in out.column("descriptor").to_pylist()]
 
 
-def write_deletion_vectors(
-    spark, table, tasks, expr, commit_uuid: str, snapshot_id: int = 0
-):
+def write_deletion_vectors(spark, table, tasks, expr, commit_uuid: str):
     """Executor-side v3 delete-write half: per partially-matching data
-    file, match its rows with `reader.matched_positions`, union the
-    matched positions with the file's existing deletion vector
-    (spec: at most one DV per data file — the new DV replaces the old),
-    and write ONE puffin file per task holding a `deletion-vector-v1`
-    blob per referenced data file. The reference parses these manifest
-    fields (manifest.go:1792-1793) but never writes DVs; the blob layout
-    here follows the Iceberg v3 spec (puffin.py).
+    file, match its rows with `reader.matched_positions` and hand them
+    to `puffin.write_dv_file`, which unions them with the file's
+    existing deletion vector (spec: at most one DV per data file — the
+    new DV replaces the old) and writes ONE puffin file per task. One
+    job of one stage, through `table._map_rows`. The reference parses
+    these manifest fields (manifest.go:1792-1793) but never writes DVs;
+    the blob layout here follows the Iceberg v3 spec (puffin.py).
 
     Returns (descriptors, newly_deleted_total): each descriptor's
     record_count is the DV's full cardinality (spec), while
@@ -1578,142 +1560,90 @@ def write_deletion_vectors(
     replaced DV — the value the snapshot summary's
     added-position-deletes must report (repeated delete_where calls on
     the same file must not double-count carried-over positions)."""
-    import pandas as pd
+    from .table import _map_rows
 
     md = table.metadata
     bound, fields, mapped = _row_matcher(md, expr)
     location = md.location
-    seq_hint = md.last_sequence_number + 1
-
-    import json as _json
-
-    rows = []
-    for t in tasks:
-        dv = next((d for d in t.delete_files if d.content_offset is not None), None)
-        rows.append(
-            (
-                t.file.file_path,
-                dv.file_path if dv else None,
-                dv.content_offset if dv else None,
-                dv.content_size_in_bytes if dv else None,
-                # spec: a position-delete entry carries the referenced
-                # data file's partition tuple
-                _json.dumps(_encode_partition(t.file.partition or {})),
-            )
-        )
-    files_df = spark.createDataFrame(
-        rows,
-        "data_file string, dv_path string, dv_offset bigint, dv_size bigint, "
-        "part string",
-    ).repartition(min(len(rows), 32))
     from . import fileio as _fileio
 
     fileio_cfg = _fileio.env_config()
 
     def task(batches):
-        import numpy as np
-
-        from pyspark import TaskContext
-
         from . import fileio
-        from .manifest import DataFileContent
-        from .puffin import (
-            BlobMetadata,
-            read_deletion_vector,
-            serialize_deletion_vector,
-            write_puffin,
-        )
         from .reader import matched_positions
 
         fileio.apply_config(fileio_cfg)
-        tc = TaskContext.get()
-        # partition id + ATTEMPT id: speculative/retried attempts of the
-        # same task must never write the same path concurrently (the
-        # attempt id is unique per attempt; Iceberg writers embed one in
-        # the filename for the same reason)
-        task_id = f"{tc.partitionId()}-{tc.taskAttemptId()}" if tc else "0-0"
-        blobs: list = []
-        refs: list = []
-        for pdf in batches:
-            for rec in pdf.itertuples(index=False):
-                positions = matched_positions(
-                    rec.data_file, fields, mapped, bound
-                ).astype(np.uint64)
-                newly = int(positions.size)
-                if rec.dv_path is not None and not pd.isna(rec.dv_path):
-                    old = np.asarray(
-                        read_deletion_vector(
-                            rec.dv_path, int(rec.dv_offset), int(rec.dv_size)
-                        ),
-                        dtype=np.uint64,
-                    )
-                    newly = int(np.setdiff1d(positions, old).size)
-                    positions = np.union1d(positions, old)
-                if len(positions) == 0:
-                    continue
-                blobs.append(
-                    (
-                        BlobMetadata(
-                            type="deletion-vector-v1",
-                            fields=[],
-                            snapshot_id=snapshot_id,
-                            sequence_number=seq_hint,
-                            properties={
-                                "referenced-data-file": rec.data_file,
-                                "cardinality": str(len(positions)),
-                            },
-                        ),
-                        serialize_deletion_vector(positions),
-                    )
+        yield from _write_dv_batches(
+            location, commit_uuid, "deletes",
+            [
+                (
+                    r["data_file"],
+                    matched_positions(r["data_file"], fields, mapped, bound),
+                    _dv_pointer(r),
+                    r["part"],
                 )
-                refs.append((rec.data_file, int(len(positions)), newly, rec.part))
-        if not blobs:
-            yield pd.DataFrame(
-                {"descriptor": [], "new_positions": []}
-            ).astype({"descriptor": "string", "new_positions": "int64"})
-            return
-        d = os.path.join(location, "data")
-        fileio.makedirs(d)
-        path = os.path.join(d, f"00000-{task_id}-{commit_uuid}-deletes.puffin")
-        write_puffin(path, blobs)
-        size = fileio.size(path)
-        import json as _tjson
+                for batch in batches
+                for r in batch.to_pylist()
+            ],
+        )
 
-        out = []
-        new_counts = []
-        for (meta, _), (ref_path, card, newly, part_json) in zip(blobs, refs):
-            out.append(
-                _encode_descriptor(
-                    DataFile(
-                        file_path=path,
-                        file_format="PUFFIN",
-                        partition=_decode_partition(_tjson.loads(part_json)),
-                        record_count=card,
-                        file_size_in_bytes=size,
-                        content=DataFileContent.POSITION_DELETES,
-                        referenced_data_file=ref_path,
-                        content_offset=meta.offset,
-                        content_size_in_bytes=meta.length,
-                    )
-                )
-            )
-            new_counts.append(newly)
-        yield pd.DataFrame({"descriptor": out, "new_positions": new_counts})
+    out = _map_rows(
+        spark, [_dv_work_row(t) for t in tasks], _DV_WORK_DDL, task, _DV_OUT_DDL
+    )
+    descs = [_decode_descriptor(s) for s in out.column("descriptor").to_pylist()]
+    return descs, sum(out.column("newly").to_pylist())
 
-    import pyarrow.parquet  # noqa: F401  (fail fast on driver if missing)
 
-    from .manifest import DataFileContent as _DFC
+# one work row per data file a DV writer touches: the file, its
+# existing deletion vector (null when it has none) and its partition
+# tuple (`_encode_partition` JSON)
+_DV_WORK_DDL = "data_file string, dv_path string, dv_offset bigint, dv_size bigint, part string"
 
-    collected = files_df.mapInPandas(
-        task, "descriptor string, new_positions bigint"
-    ).collect()
-    descs = [
-        _decode_descriptor(r.descriptor) for r in collected if r.descriptor
-    ]
-    newly_total = sum(int(r.new_positions) for r in collected if r.descriptor)
-    for d in descs:
-        d.content = _DFC.POSITION_DELETES
-    return descs, newly_total
+
+def _dv_work_row(t) -> tuple:
+    """`_DV_WORK_DDL` row of a planned FileScanTask."""
+    dv = next((d for d in t.delete_files if d.content_offset is not None), None)
+    return (
+        t.file.file_path,
+        dv.file_path if dv else None,
+        int(dv.content_offset) if dv else None,
+        int(dv.content_size_in_bytes) if dv else None,
+        # spec: a position-delete entry carries the referenced data
+        # file's partition tuple
+        json.dumps(_encode_partition(t.file.partition or {})),
+    )
+
+
+def _dv_pointer(r: dict):
+    """(puffin path, offset, size) of a work row's existing DV, or None."""
+    if r["dv_path"] is None:
+        return None
+    return r["dv_path"], r["dv_offset"], r["dv_size"]
+
+
+# what a DV writer task returns per written deletion vector
+_DV_OUT_DDL = "descriptor string, newly bigint, had_dv boolean"
+
+
+def _write_dv_batches(location, commit_uuid, suffix, rows):
+    """Executor side: `puffin.write_dv_file` over `rows`, its written
+    DVs as one `_DV_OUT_DDL` record batch (none when nothing was
+    written)."""
+    import pyarrow as pa
+
+    from .puffin import write_dv_file
+
+    written = [w for w in write_dv_file(location, commit_uuid, suffix, rows) if w]
+    if written:
+        descriptors, newly, had_dv = zip(*written)
+        yield pa.record_batch(
+            {
+                "descriptor": pa.array(descriptors, pa.string()),
+                "newly": pa.array(newly, pa.int64()),
+                "had_dv": pa.array(had_dv, pa.bool_()),
+            }
+        )
 
 
 def _retry_dml_on_conflict(fn):
@@ -1778,7 +1708,7 @@ def delete_where(table, spark, expr, mode: str = "merge-on-read") -> None:
     if partial:
         if md.format_version >= 3:
             delete_files, newly_deleted = write_deletion_vectors(
-                spark, table, partial, expr, ds.commit_uuid, ds.snapshot_id
+                spark, table, partial, expr, ds.commit_uuid
             )
             replaced_dv_refs = {f.referenced_data_file for f in delete_files}
         else:

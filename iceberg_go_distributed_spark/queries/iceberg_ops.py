@@ -469,14 +469,20 @@ def ice_deletion_vector(spark, sf_dir):
 
     loc = t.location
     dv_path = os.path.join(loc, "data", "dv.puffin")
-    meta = BlobMetadata("deletion-vector-v1", [], 99, 2)
-    write_puffin(dv_path, [(meta, serialize_deletion_vector(positions))])
+    meta = BlobMetadata(
+        "deletion-vector-v1", [], 99, 2,
+        properties={
+            "referenced-data-file": data_path,
+            "cardinality": str(len(positions)),
+        },
+    )
+    info = write_puffin(dv_path, [(meta, serialize_deletion_vector(positions))])
     dv_file = DataFile(
         file_path=dv_path,
         file_format="PUFFIN",
         content=DataFileContent.POSITION_DELETES,
         record_count=len(positions),
-        file_size_in_bytes=meta.length,
+        file_size_in_bytes=info["size"],
         referenced_data_file=data_path,
         content_offset=meta.offset,
         content_size_in_bytes=meta.length,

@@ -74,13 +74,51 @@ def test_bind_nan_requires_float():
 
 
 def test_saturating_int32():
-    # literals_test.go above-max/below-min semantics
-    assert E.less_than("small", 1 << 40).bind(SCHEMA) == E.AlwaysTrue()
+    # literals_test.go above-max/below-min semantics; a comparison that
+    # holds for every value of the optional column still fails on null
+    nn = E.not_null("small").bind(SCHEMA)
+    assert E.less_than("small", 1 << 40).bind(SCHEMA) == nn
     assert E.greater_than("small", 1 << 40).bind(SCHEMA) == E.AlwaysFalse()
     assert E.equal("small", 1 << 40).bind(SCHEMA) == E.AlwaysFalse()
-    assert E.not_equal("small", 1 << 40).bind(SCHEMA) == E.AlwaysTrue()
+    assert E.not_equal("small", 1 << 40).bind(SCHEMA) == nn
     assert E.less_than("small", -(1 << 40)).bind(SCHEMA) == E.AlwaysFalse()
-    assert E.greater_than_or_equal("small", -(1 << 40)).bind(SCHEMA) == E.AlwaysTrue()
+    assert E.greater_than_or_equal("small", -(1 << 40)).bind(SCHEMA) == nn
+
+
+def test_saturated_comparisons_do_not_match_null():
+    """Every saturated comparison that holds for all values binds to
+    not_null on an optional column (AlwaysTrue on a required one), so
+    the null row fails it; a long literal beyond int64 saturates too
+    instead of reaching Arrow as an out-of-range long."""
+    import pyarrow as pa
+
+    big, huge = 1 << 40, 1 << 70
+    opt = ty.Schema.of(
+        0,
+        ty.NestedField(1, "i", ty.IntegerType()),
+        ty.NestedField(2, "l", ty.LongType()),
+        ty.NestedField(3, "r", ty.IntegerType(), required=True),
+    )
+    for expr, col in [
+        (E.less_than("i", big), "i"),
+        (E.less_than_or_equal("i", big), "i"),
+        (E.not_equal("i", big), "i"),
+        (E.greater_than("i", -big), "i"),
+        (E.not_in("i", [big, big * 2]), "i"),
+        (E.less_than("l", huge), "l"),
+        (E.not_equal("l", -huge), "l"),
+        (E.not_in("l", [huge, -huge]), "l"),
+    ]:
+        b = E.bind_expr(expr, opt)
+        assert b == E.not_null(col).bind(opt), expr
+        assert not evaluate(b, {"i": None, "l": None, "r": 1})
+        assert evaluate(b, {"i": 3, "l": 3, "r": 1})
+        tbl = pa.table({col: pa.array([3, None], pa.int32() if col == "i" else pa.int64())})
+        assert tbl.filter(E.to_arrow_expression(b))[col].to_pylist() == [3]
+    for expr in [E.greater_than("l", huge), E.equal("l", huge), E.is_in("l", [huge])]:
+        assert E.bind_expr(expr, opt) == E.AlwaysFalse()
+    assert E.bind_expr(E.less_than("r", big), opt) == E.AlwaysTrue()
+    assert E.bind_expr(E.not_in("r", [big]), opt) == E.AlwaysTrue()
 
 
 def test_in_degenerate():

@@ -140,6 +140,23 @@ def test_overwrite_where_keeps_rows_its_predicate_does_not_match(
     assert _ids(t, spark) == [2, 3, 4, 9]
 
 
+def test_saturated_int_delete_keeps_null_rows(catalog, spark):
+    """`i < 2**40` holds for every int but not for null: the scan of it
+    and a v3 delete_where on it leave the null-i row alone."""
+    schema = Schema.of(
+        1,
+        NestedField(1, "id", ty.LongType(), required=True),
+        NestedField(2, "i", ty.IntegerType()),
+    )
+    t = _table(catalog, "sat_int", schema, 3)
+    for rows in ([(1, 5), (2, None), (3, -7)], [(4, 9)]):
+        t.append(spark.createDataFrame(rows, "id long, i int").coalesce(1))
+    pred = E.less_than("i", 1 << 40)
+    assert _ids(t, spark, pred) == [1, 3, 4]
+    t.delete_where(spark, pred)
+    assert _ids(t, spark) == [2]
+
+
 @pytest.mark.parametrize("fv", [2, 3])
 def test_delete_where_on_renamed_column(catalog, spark, fv):
     """DML resolves predicate columns by field id: a column renamed
