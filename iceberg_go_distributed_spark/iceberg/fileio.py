@@ -54,6 +54,19 @@ def apply_config(cfg: dict[str, str]) -> None:
         os.environ.setdefault(k, v)
 
 
+def shipped(fn):
+    """`fn`, an executor function of one argument (a `mapInArrow`
+    iterator or an `applyInPandas` group), wrapped so that it first
+    applies the driver's object-store config, snapshotted here."""
+    cfg = env_config()
+
+    def run(arg):
+        apply_config(cfg)
+        return fn(arg)
+
+    return run
+
+
 def scheme_of(path: str) -> str:
     return urlparse(path).scheme
 

@@ -152,15 +152,13 @@ def _location_fs(location: str):
 
 def _delete_orphans_distributed(table, spark, cutoff, dry_run, concurrency):
     """Executor-side listing + manifest reads, Spark anti-join diff."""
-    import pandas as pd
     from pyarrow import fs as pafs
 
     from . import fileio
-    from .table import strip_scheme
+    from .table import _map_rows, _rows_frame, strip_scheme
 
     location = table.location
     fs, root, scheme = _location_fs(location)
-    cfg = fileio.env_config()
     is_local = scheme == ""
 
     # partition the listing work: second-level prefixes (data/<dir>,
@@ -187,25 +185,24 @@ def _delete_orphans_distributed(table, spark, cutoff, dry_run, concurrency):
     for d in level1:
         shallow(d, prefixes)
 
-    listing_parts = []
+    if not prefixes and not shallow_files:
+        return []
+    listing = _rows_frame(spark, shallow_files, "path string, mtime_ms long")
     if prefixes:
-        pref_df = spark.createDataFrame(
-            [(p,) for p in sorted(prefixes)], "prefix string"
-        ).repartition(min(len(prefixes), 64))
 
         def list_prefix(batches):
+            import pyarrow as pa
             from pyarrow import fs as pafs2
 
             from . import fileio as fio
 
-            fio.apply_config(cfg)
             if is_local:
                 lfs = pafs2.LocalFileSystem()
             else:
                 lfs, _ = fio.resolve(location)
-            for pdf in batches:
+            for batch in batches:
                 paths, mtimes = [], []
-                for prefix in pdf["prefix"]:
+                for prefix in batch.column("prefix").to_pylist():
                     try:
                         infos = lfs.get_file_info(
                             pafs2.FileSelector(prefix, recursive=True)
@@ -216,22 +213,17 @@ def _delete_orphans_distributed(table, spark, cutoff, dry_run, concurrency):
                         if fi.type == pafs2.FileType.File:
                             paths.append(fi.path)
                             mtimes.append(_mtime_ms(fi))
-                yield pd.DataFrame({"path": paths, "mtime_ms": mtimes})
+                yield pa.record_batch(
+                    {"path": pa.array(paths, pa.string()),
+                     "mtime_ms": pa.array(mtimes, pa.int64())}
+                )
 
-        listing_parts.append(
-            pref_df.mapInPandas(list_prefix, "path string, mtime_ms long")
-        )
-    if shallow_files:
-        listing_parts.append(
-            spark.createDataFrame(
-                list(shallow_files), "path string, mtime_ms long"
+        listing = listing.unionByName(
+            _map_rows(
+                spark, [(p,) for p in sorted(prefixes)], "prefix string",
+                list_prefix, "path string, mtime_ms long",
             )
         )
-    if not listing_parts:
-        return []
-    listing = listing_parts[0]
-    for part in listing_parts[1:]:
-        listing = listing.unionByName(part)
 
     # referenced paths: driver knows the metadata-plane files (O(snapshots
     # + manifests)); executors read each manifest once for its data/delete
@@ -247,31 +239,29 @@ def _delete_orphans_distributed(table, spark, cutoff, dry_run, concurrency):
             meta_refs.add(strip_scheme(m.manifest_path))
             manifest_paths.add(m.manifest_path)
 
-    refs_parts = [
-        spark.createDataFrame([(p,) for p in sorted(meta_refs)], "ref string")
-    ]
+    refs = _rows_frame(spark, [(p,) for p in sorted(meta_refs)], "ref string")
     if manifest_paths:
-        man_df = spark.createDataFrame(
-            [(p,) for p in sorted(manifest_paths)], "path string"
-        ).repartition(min(len(manifest_paths), 64))
 
         def read_refs(batches):
-            from . import fileio as fio
+            import pyarrow as pa
+
             from .manifest import read_manifest as rm
             from .table import strip_scheme as strip
 
-            fio.apply_config(cfg)
-            for pdf in batches:
-                out = []
-                for mp in pdf["path"]:
-                    for e in rm(mp, discard_deleted=False):
-                        out.append(strip(e.data_file.file_path))
-                yield pd.DataFrame({"ref": out})
+            for batch in batches:
+                out = [
+                    strip(e.data_file.file_path)
+                    for mp in batch.column("path").to_pylist()
+                    for e in rm(mp, discard_deleted=False)
+                ]
+                yield pa.record_batch({"ref": pa.array(out, pa.string())})
 
-        refs_parts.append(man_df.mapInPandas(read_refs, "ref string"))
-    refs = refs_parts[0]
-    for part in refs_parts[1:]:
-        refs = refs.unionByName(part)
+        refs = refs.unionByName(
+            _map_rows(
+                spark, [(p,) for p in sorted(manifest_paths)], "path string",
+                read_refs, "ref string",
+            )
+        )
 
     from pyspark.sql import functions as F
 
@@ -423,10 +413,8 @@ def rewrite_position_deletes(
     This pass repacks every live DV blob into at most
     n = ceil(total bytes / target) puffin files and replaces the delete
     manifests with ONE consolidated manifest — no data files are
-    rewritten and no delete is re-derived. The blobs' work rows are
-    coalesced into at most n tasks, one puffin each, in row order (not
-    sized by bytes); the row scan has at most default-parallelism
-    slices, so above that many the puffins exceed the target size.
+    rewritten and no delete is re-derived. The blobs' work rows run as
+    n tasks (at most one per blob), one puffin each, not sized by bytes.
 
     Correctness-critical: each blob keeps its ORIGINAL data sequence
     number and snapshot id (entry-level, explicit in the new manifest)
@@ -448,7 +436,6 @@ def rewrite_position_deletes(
     import json as _json
     import math
 
-    from . import fileio as _fileio
     from .manifest import (
         ManifestContent,
         ManifestEntry,
@@ -523,16 +510,13 @@ def rewrite_position_deletes(
     ds = begin_distributed_snapshot(table)
     location = md.location
     commit_uuid = ds.commit_uuid
-    fileio_cfg = _fileio.env_config()
 
     def task(batches):
         import pyarrow as pa
 
-        from . import fileio
         from .puffin import write_dv_file
         from .write import _dv_pointer
 
-        fileio.apply_config(fileio_cfg)
         recs = [r for batch in batches for r in batch.to_pylist()]
         written = write_dv_file(
             location, commit_uuid, "dv-rewrite",
@@ -554,16 +538,15 @@ def rewrite_position_deletes(
     new_entries = []
     carried = list(keep)
     if live_rows:
-        # coalesce, not repartition: at most n_out tasks, so at most
-        # n_out puffins, with no Exchange ahead of the writes
+        # one puffin per task
         collected = _map_rows(
             spark,
             [(r[0], r[1], r[2], r[3], r[8], i) for i, r in enumerate(live_rows)],
             _DV_WORK_DDL + ", row int",
             task,
             "row int, descriptor string",
-            max_tasks=n_out,
-        )
+            tasks=n_out,
+        ).toArrow()
         by_spec: dict = {}
         for i, desc in zip(
             collected.column("row").to_pylist(),
@@ -814,12 +797,23 @@ def _eq_convert_key_frame(path, ids):
     with fileio.parquet_file(path) as kf:
         kby = field_ids(kf.schema_arrow)
         cols = [kby[i] for i in ids]
-        pdf = kf.read(columns=cols).to_pandas()
+        pdf = _exact_pandas(kf.read(columns=cols))
     pdf.columns = [f"f{i}" for i in ids]
     while len(_EQ_KEY_FRAME_CACHE) >= _EQ_KEY_FRAME_CACHE_MAX:
         _EQ_KEY_FRAME_CACHE.pop(next(iter(_EQ_KEY_FRAME_CACHE)), None)
     _EQ_KEY_FRAME_CACHE[k] = pdf
     return pdf
+
+
+def _exact_pandas(tbl):
+    """`tbl` as pandas with integer columns in nullable dtypes: the
+    default bridge turns an integer column holding a null into float64,
+    which merges distinct keys above 2**53."""
+    import pandas as pd
+    import pyarrow as pa
+
+    ints = {getattr(pa, f"int{b}")(): getattr(pd, f"Int{b}Dtype")() for b in (8, 16, 32, 64)}
+    return tbl.to_pandas(types_mapper=ints.get)
 
 
 def _eq_matched_positions(pf, eq_sets, batch_rows: int = 131072):
@@ -857,7 +851,7 @@ def _eq_matched_positions(pf, eq_sets, batch_rows: int = 131072):
     out = []
     off = 0
     for batch in pf.iter_batches(columns=phys, batch_size=batch_rows):
-        pdf = batch.to_pandas()
+        pdf = _exact_pandas(batch)
         pdf.columns = [f"f{f}" for f in needed_ids if f in by_id]
         for f in needed_ids:
             if f not in by_id:
@@ -949,7 +943,6 @@ def convert_equality_deletes(table, spark) -> bool:
     conversion snapshot was committed."""
     import json as _json
 
-    from . import fileio as _fileio
     from .manifest import (
         DataFileContent,
         ManifestContent,
@@ -1035,12 +1028,9 @@ def convert_equality_deletes(table, spark) -> bool:
     ds = begin_distributed_snapshot(table)
     location = md.location
     commit_uuid = ds.commit_uuid
-    fileio_cfg = _fileio.env_config()
 
     def task(batches):
         from . import fileio
-
-        fileio.apply_config(fileio_cfg)
 
         # per-WORKER bounded LRU (Spark reuses Python workers): without
         # it each task re-reads every key file. _eq_convert_key_frame is
@@ -1065,7 +1055,11 @@ def convert_equality_deletes(table, spark) -> bool:
         )
 
     collected = (
-        [_map_rows(spark, rows, _DV_WORK_DDL + ", eq_json string", task, _DV_OUT_DDL)]
+        [
+            _map_rows(
+                spark, rows, _DV_WORK_DDL + ", eq_json string", task, _DV_OUT_DDL
+            ).toArrow()
+        ]
         if rows
         else []
     )
@@ -1122,39 +1116,38 @@ def _eq_keys_df_arrow(spark, path: str, fields):
     exceeded `maintenance.eq-convert.keys-max-rows`, so a whole-file
     driver read here (the old `read_parquet_table(...).to_pandas()`
     fallback) would re-introduce the unbounded materialization the
-    routing bound was built to prevent. One task reads ONE row group
-    (peak memory = one row group, writer-bounded), columns resolved by
-    parquet FIELD ID so renamed key columns still resolve — same
-    contract as the JVM branch; the driver only reads the footer."""
+    routing bound was built to prevent. Each task reads its row groups
+    one at a time (peak memory = one row group, writer-bounded), columns
+    resolved by parquet FIELD ID so renamed key columns still resolve —
+    same contract as the JVM branch; the driver only reads the footer.
+    Arrow end to end: a pandas bridge would turn a nullable long key
+    column into float64 and merge distinct keys above 2**53."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from . import fileio as _fileio
-    from .types import Schema, schema_to_spark_ddl
+    from .table import _map_rows
+    from .types import Schema, schema_to_spark_struct
 
     want_ids = [f.field_id for f in fields]
-    names = [f.name for f in fields]
+    struct = schema_to_spark_struct(Schema(0, tuple(fields)))
+    target = to_arrow_schema(struct)
     n_rg = max(_fileio.read_parquet_metadata(path).num_row_groups, 1)
-    rg_df = spark.createDataFrame(
-        [(path, i) for i in range(n_rg)], "path string, rg int"
-    ).repartition(min(n_rg, 64))
-    rg_cfg = _fileio.env_config()
 
     def read_rg(batches):
         from . import fileio
         from .reader import field_ids
 
-        fileio.apply_config(rg_cfg)
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                with fileio.parquet_file(row.path) as kf:
+        for batch in batches:
+            for row in batch.to_pylist():
+                with fileio.parquet_file(row["path"]) as kf:
                     by_fid = field_ids(kf.schema_arrow)
                     cols = [by_fid[i] for i in want_ids]
-                    frame = kf.read_row_group(
-                        int(row.rg), columns=cols
-                    ).to_pandas()
-                frame.columns = names
-                yield frame
+                    tbl = kf.read_row_group(row["rg"], columns=cols)
+                yield from tbl.rename_columns(target.names).cast(target).to_batches()
 
-    ddl = schema_to_spark_ddl(Schema(0, tuple(fields)))
-    return rg_df.mapInPandas(read_rg, ddl)
+    return _map_rows(
+        spark, [(path, i) for i in range(n_rg)], "path string, rg int", read_rg, struct
+    )
 
 
 def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
@@ -1244,15 +1237,12 @@ def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
     # per-file work rows the DV writer needs, O(files), broadcast
     meta = {strip_scheme(t.file.file_path): _dv_work_row(t) for t in tasks}
     meta_b = spark.sparkContext.broadcast(meta)
-    fileio_cfg = _fileio.env_config()
 
     def write_dv(pdf):
         import pandas as pd
 
-        from . import fileio
         from .puffin import write_dv_file
 
-        fileio.apply_config(fileio_cfg)
         data_file, dv_path, offset, size, part_json = meta_b.value[pdf["_fp"].iloc[0]]
         dv = (dv_path, offset, size) if dv_path is not None else None
         written = write_dv_file(
@@ -1264,7 +1254,9 @@ def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
         )
 
     return (
-        matched.groupBy("_fp").applyInPandas(write_dv, _DV_OUT_DDL).toArrow()
+        matched.groupBy("_fp")
+        .applyInPandas(_fileio.shipped(write_dv), _DV_OUT_DDL)
+        .toArrow()
     )
 
 
@@ -1282,7 +1274,6 @@ def convert_position_deletes(table, spark) -> bool:
     True when a conversion snapshot was committed."""
     import json as _json
 
-    from . import fileio as _fileio
     from .manifest import (
         DataFileContent,
         ManifestContent,
@@ -1342,13 +1333,10 @@ def convert_position_deletes(table, spark) -> bool:
     ds = begin_distributed_snapshot(table)
     location = md.location
     commit_uuid = ds.commit_uuid
-    fileio_cfg = _fileio.env_config()
 
     def task(batches):
-        from . import fileio
         from .reader import delete_positions
 
-        fileio.apply_config(fileio_cfg)
         # one read of each v2 file per task: a v2 file lists the
         # positions of many data files
         tables: dict = {}
@@ -1367,7 +1355,11 @@ def convert_position_deletes(table, spark) -> bool:
         )
 
     collected = (
-        [_map_rows(spark, rows, _DV_WORK_DDL + ", dels string", task, _DV_OUT_DDL)]
+        [
+            _map_rows(
+                spark, rows, _DV_WORK_DDL + ", dels string", task, _DV_OUT_DDL
+            ).toArrow()
+        ]
         if rows
         else []
     )

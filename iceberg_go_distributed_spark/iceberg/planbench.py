@@ -130,16 +130,15 @@ def build_wide_data_table(
     [gid*V_STRIDE, gid*V_STRIDE + rows_per_file)), so selective_filter
     works unchanged and any returned row is attributable to its file.
 
-    The file writes fan out over executors via mapInPandas (one pyarrow
-    write per file, field-ids stamped exactly like the production
+    The file writes fan out over executors through `table._map_rows`
+    (one pyarrow write per file, field-ids stamped exactly like the production
     writer); only (gid, path, size) descriptors return to the driver,
     which then builds manifests and commits through the
     distributed-snapshot protocol."""
-    import pandas as pd
-
     from .catalog import FileSystemCatalog
     from .conversions import to_bytes
     from .partitioning import spec_from
+    from .table import _map_rows
     from .write import (
         _arrow_schema,
         begin_distributed_snapshot,
@@ -160,20 +159,15 @@ def build_wide_data_table(
     arrow_schema = _arrow_schema(schema)
     stride, rpf, fpm = V_STRIDE, rows_per_file, files_per_manifest
 
-    gids = spark.createDataFrame(
-        pd.DataFrame({"gid": range(n_files)}), "gid long"
-    ).repartition(min(n_files, 128))
-
     def write_files(batches):
         import os as _os
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for pdf in batches:
+        for batch in batches:
             paths, sizes, out_gids = [], [], []
-            for gid in pdf["gid"]:
-                gid = int(gid)
+            for gid in batch.column("gid").to_pylist():
                 mi = gid // fpm
                 d = f"{loc}/data/k={mi}"
                 _os.makedirs(d, exist_ok=True)
@@ -187,12 +181,16 @@ def build_wide_data_table(
                 paths.append(p)
                 sizes.append(_os.path.getsize(p))
                 out_gids.append(gid)
-            yield pd.DataFrame({"gid": out_gids, "path": paths, "size": sizes})
+            yield pa.record_batch(
+                [pa.array(out_gids, pa.int64()), pa.array(paths), pa.array(sizes, pa.int64())],
+                names=["gid", "path", "size"],
+            )
 
-    rows = gids.mapInPandas(
-        write_files, "gid long, path string, size long"
-    ).collect()
-    by_gid = {r.gid: (r.path, r.size) for r in rows}
+    out = _map_rows(
+        spark, [(g,) for g in range(n_files)], "gid long",
+        write_files, "gid long, path string, size long",
+    ).toArrow()
+    by_gid = {r["gid"]: (r["path"], r["size"]) for r in out.to_pylist()}
     assert len(by_gid) == n_files
 
     ds = begin_distributed_snapshot(t)

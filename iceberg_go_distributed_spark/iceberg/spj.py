@@ -20,8 +20,10 @@ we implement the same idea directly over planned file tasks:
      both sides (Arrow), applies positional deletes / DVs and equality
      deletes (key frames LRU-cached per worker, NULL==NULL matching —
      the conversion's own matcher), and joins locally — no exchange of
-     table data, ever.  The only shuffle in the plan is the O(groups)
-     task-descriptor repartition.
+     table data, ever.  Driver-planned tasks run as one task per
+     slice of the task rows (`table._map_rows`), with no shuffle; the
+     executor-planned route's only shuffle is its O(groups)
+     task-descriptor repartition (`_spread_tasks`).
 
 Memory per task is one bucket pair, bounded up front from manifest
 file sizes (``join.spj.max-bucket-bytes``, default 4 GiB).  A skewed
@@ -65,6 +67,11 @@ DEFAULT_MAX_BUCKET_BYTES = 4 << 30  # join.spj.max-bucket-bytes
 # bucket tasks sequentially (memory stays one bucket pair) instead of
 # paying one Python-worker round per tiny task
 _MAX_TASK_PARTITIONS = 2048
+
+# driver-planned bucket task rows (`_map_rows` work rows)
+_PAIR_TASK_DDL = "part string, left_files string, right_files string"
+_STAR_TASK_DDL = "part string, sides string"
+
 
 # blob-frame memo (see _side_blobs): keyed like the plan cache —
 # metadata location + snapshot id invalidate on commit — plus the
@@ -225,7 +232,7 @@ def _spj_wide(table, spark) -> bool:
     if snap is None:
         return False
     from .manifest import ManifestContent
-    from .table import _distributed_planning_minima
+    from .table import _distributed_planning_minima, _live_data_files
 
     min_manifests, min_files = _distributed_planning_minima(
         table.metadata.properties
@@ -234,10 +241,9 @@ def _spj_wide(table, spark) -> bool:
     manifests = [
         m for m in snap.manifests() if m.content == ManifestContent.DATA
     ]
-    n_files = sum(
-        m.added_files_count + m.existing_files_count for m in manifests
+    return (0 < min_manifests <= len(manifests)) or (
+        0 < min_files <= _live_data_files(manifests)
     )
-    return (0 < min_manifests <= len(manifests)) or (0 < min_files <= n_files)
 
 
 def _side_blobs(table, pf, row_filter, spark):
@@ -486,8 +492,7 @@ def _spread_tasks(df, spark):
     probe's first dist run sat 9+ min in ONE task). An explicit
     repartition count is exempt from AQE coalescing and round-robins
     the task rows; empty partitions at small scale are scheduling
-    noise only. Mirrors the driver path's repartition(min(len(rows),
-    _MAX_TASK_PARTITIONS)) without needing a driver-side row count."""
+    noise only."""
     n = min(
         _MAX_TASK_PARTITIONS,
         max(64, spark.sparkContext.defaultParallelism * 4),
@@ -1047,10 +1052,8 @@ def storage_partitioned_join(
     if not distributed and not rows and not partial_rows:
         return spark.createDataFrame([], result_struct)
 
-    from . import fileio as _fileio
+    from .table import _map_rows
 
-    fileio_cfg = _fileio.env_config()
-    ptask_df = None
     if distributed:
         task_frame = _bucket_task_frame(spark, lframe, rframe, how, limit)
         if _fused_agg is not None:
@@ -1060,18 +1063,13 @@ def storage_partitioned_join(
 
             task_frame = _keep_persisted(task_frame)
             task_df = task_frame.where("split = 0").drop("split")
-            pdf_frame = task_frame.where("split = 1").drop("split")
-            has_partials = pdf_frame.limit(1).count() > 0
-            if has_partials:
-                ptask_df = pdf_frame
+            ptask_df = task_frame.where("split = 1").drop("split")
+            has_partials = ptask_df.limit(1).count() > 0
         else:
             task_df = task_frame.drop("split")
             has_partials = False
     else:
-        task_df = spark.createDataFrame(
-            rows or [],
-            "part string, left_files string, right_files string",
-        ).repartition(min(max(len(rows), 1), _MAX_TASK_PARTITIONS))
+        task_df, ptask_df = rows or [], partial_rows
         has_partials = bool(partial_rows)
     right_data_cols = [r_out_name[c] for c in right_cols if c not in rkeys]
     right_read_names = [r_out_name[c] for c in right_cols]
@@ -1161,10 +1159,6 @@ def storage_partitioned_join(
 
     def join_task(batches):
         import pyarrow as pa
-
-        from . import fileio
-
-        fileio.apply_config(fileio_cfg)
         from pyspark.sql.pandas.types import to_arrow_schema
 
         target = to_arrow_schema(out_struct)
@@ -1185,7 +1179,7 @@ def storage_partitioned_join(
             joined = _cast_to_schema(joined, target)
             yield from joined.to_batches(max_chunksize=1 << 16)
 
-    final_df = task_df.mapInArrow(join_task, result_struct)
+    final_df = _map_rows(spark, task_df, _PAIR_TASK_DDL, join_task, result_struct)
     if not has_partials:
         return final_df
 
@@ -1194,17 +1188,9 @@ def storage_partitioned_join(
     # the exchange carries only these buckets' aggregate rows
     partial_struct, p_items = _fused_partial_plan(out_struct, fg_keys, fg_items)
     p_names = [f.name for f in partial_struct.fields]
-    if ptask_df is None:
-        ptask_df = spark.createDataFrame(
-            partial_rows, "part string, left_files string, right_files string"
-        ).repartition(min(len(partial_rows), _MAX_TASK_PARTITIONS))
 
     def join_task_partial(batches):
         import pyarrow as pa
-
-        from . import fileio
-
-        fileio.apply_config(fileio_cfg)
         from pyspark.sql.pandas.types import to_arrow_schema
 
         target = to_arrow_schema(out_struct)
@@ -1217,7 +1203,7 @@ def storage_partitioned_join(
 
     combine = _fused_combine_exprs(fused_struct, fg_items)
     combined = (
-        ptask_df.mapInArrow(join_task_partial, partial_struct)
+        _map_rows(spark, ptask_df, _PAIR_TASK_DDL, join_task_partial, partial_struct)
         .groupBy(*fg_keys)
         .agg(*combine)
         .select(fused_names)
@@ -1503,13 +1489,13 @@ def storage_partitioned_agg(
     if not distributed and not rows:
         return spark.createDataFrame([], out_struct)
 
-    from . import fileio as _fileio
     from pyspark.sql.pandas.types import to_arrow_schema as _taschema
+
+    from .table import _map_rows
 
     t_types = {
         f.name: f.type for f in _taschema(schema_to_spark_struct(table.schema()))
     }
-    fileio_cfg = _fileio.env_config()
     if distributed:
         # byte-budget validation rides the blob frame executor-side —
         # an over-budget bucket raises the same refusal as the driver
@@ -1533,15 +1519,12 @@ def storage_partitioned_agg(
             spark,
         )
     else:
-        task_df = spark.createDataFrame(rows, "part string, files string").repartition(min(len(rows), _MAX_TASK_PARTITIONS))
+        task_df = rows
     agg_items = list(aggs.items())
     out_name_list = [f.name for f in out_struct.fields]
     read = _bucket_read(table, need, t_types)
 
     def agg_task(batches):
-        from . import fileio
-
-        fileio.apply_config(fileio_cfg)
         from pyspark.sql.pandas.types import to_arrow_schema
 
         target = to_arrow_schema(out_struct)
@@ -1555,7 +1538,7 @@ def storage_partitioned_agg(
                 )
                 yield from out.to_batches(max_chunksize=1 << 16)
 
-    return task_df.mapInArrow(agg_task, out_struct)
+    return _map_rows(spark, task_df, "part string, files string", agg_task, out_struct)
 
 
 def storage_partitioned_asof_join(
@@ -1677,9 +1660,10 @@ def storage_partitioned_asof_join(
     if not distributed and not rows:
         return spark.createDataFrame([], out_struct)
 
-    from . import fileio as _fileio
     import pyarrow as _pa
     from pyspark.sql.pandas.types import to_arrow_schema as _taschema
+
+    from .table import _map_rows
 
     l_types = {f.name: f.type for f in _taschema(schema_to_spark_struct(left.schema()))}
     r_types = {f.name: f.type for f in _taschema(schema_to_spark_struct(right.schema()))}
@@ -1689,7 +1673,6 @@ def storage_partitioned_asof_join(
         l_types[lkey] = r_types[rkey] = _pa.int64()
     l_spec = _bucket_read(left, left_cols, l_types)
     r_spec = _bucket_read(right, r_read, r_types)
-    fileio_cfg = _fileio.env_config()
     if distributed:
         # as-of keeps every left bucket and may only split the left
         # side (the right bucket must stay complete per task — a
@@ -1699,9 +1682,7 @@ def storage_partitioned_asof_join(
             "split"
         )
     else:
-        task_df = spark.createDataFrame(
-            rows, "part string, left_files string, right_files string"
-        ).repartition(min(len(rows), _MAX_TASK_PARTITIONS))
+        task_df = rows
     out_name_list = [f.name for f in out_struct.fields]
 
     def asof_task(batches):
@@ -1709,10 +1690,6 @@ def storage_partitioned_asof_join(
         import pandas as pd
         import pyarrow as pa
         import pyarrow.compute as pc
-
-        from . import fileio
-
-        fileio.apply_config(fileio_cfg)
         from pyspark.sql.pandas.types import to_arrow_schema
 
         target = to_arrow_schema(out_struct)
@@ -1837,7 +1814,7 @@ def storage_partitioned_asof_join(
                 out = _cast_to_schema(pa.table(cols).select(out_name_list), target)
                 yield from out.to_batches(max_chunksize=1 << 16)
 
-    return task_df.mapInArrow(asof_task, out_struct)
+    return _map_rows(spark, task_df, _PAIR_TASK_DDL, asof_task, out_struct)
 
 
 def storage_partitioned_star_join(
@@ -2039,10 +2016,8 @@ def storage_partitioned_star_join(
     if not distributed and not rows and not partial_rows:
         return spark.createDataFrame([], result_struct)
 
-    from . import fileio as _fileio
+    from .table import _map_rows
 
-    fileio_cfg = _fileio.env_config()
-    ptask_df = None
     if distributed:
         task_frame = _star_task_frame(spark, blob_frames, limit)
         if fused_struct is not None:
@@ -2050,17 +2025,13 @@ def storage_partitioned_star_join(
 
             task_frame = _keep_persisted(task_frame)
             task_df = task_frame.where("split = 0").drop("split")
-            pframe = task_frame.where("split = 1").drop("split")
-            has_partials = pframe.limit(1).count() > 0
-            if has_partials:
-                ptask_df = pframe
+            ptask_df = task_frame.where("split = 1").drop("split")
+            has_partials = ptask_df.limit(1).count() > 0
         else:
             task_df = task_frame.drop("split")
             has_partials = False
     else:
-        task_df = spark.createDataFrame(
-            rows or [], "part string, sides string"
-        ).repartition(min(max(len(rows), 1), _MAX_TASK_PARTITIONS))
+        task_df, ptask_df = rows or [], partial_rows
         has_partials = bool(partial_rows)
     keys = [s["key"] for s in norm]
     fused_names = [f.name for f in fused_struct.fields] if fused_struct else None
@@ -2093,9 +2064,6 @@ def storage_partitioned_star_join(
                 yield acc.select(out_names)
 
     def star_task(batches):
-        from . import fileio
-
-        fileio.apply_config(fileio_cfg)
         from pyspark.sql.pandas.types import to_arrow_schema
 
         target = to_arrow_schema(out_struct)
@@ -2113,21 +2081,14 @@ def storage_partitioned_star_join(
             out = _cast_to_schema(joined, target)
             yield from out.to_batches(max_chunksize=1 << 16)
 
-    final_df = task_df.mapInArrow(star_task, result_struct)
+    final_df = _map_rows(spark, task_df, _STAR_TASK_DDL, star_task, result_struct)
     if not has_partials:
         return final_df
 
     partial_struct, p_items = _fused_partial_plan(out_struct, fg_keys, fg_items)
     p_names = [f.name for f in partial_struct.fields]
-    if ptask_df is None:
-        ptask_df = spark.createDataFrame(
-            partial_rows, "part string, sides string"
-        ).repartition(min(len(partial_rows), _MAX_TASK_PARTITIONS))
 
     def star_task_partial(batches):
-        from . import fileio
-
-        fileio.apply_config(fileio_cfg)
         from pyspark.sql.pandas.types import to_arrow_schema
 
         p_target = to_arrow_schema(partial_struct)
@@ -2137,7 +2098,7 @@ def storage_partitioned_star_join(
 
     combine = _fused_combine_exprs(fused_struct, fg_items)
     combined = (
-        ptask_df.mapInArrow(star_task_partial, partial_struct)
+        _map_rows(spark, ptask_df, _STAR_TASK_DDL, star_task_partial, partial_struct)
         .groupBy(*fg_keys)
         .agg(*combine)
         .select(fused_names)

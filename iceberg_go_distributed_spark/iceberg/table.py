@@ -10,6 +10,7 @@ table/table.go:361-379 (Scan builder), table/scanner.go:410-460
 
 from __future__ import annotations
 
+import functools
 import logging
 import threading
 from dataclasses import dataclass, field, replace
@@ -360,33 +361,78 @@ def _distributed_planning_minima(props) -> tuple[int, int]:
     )
 
 
+def _live_data_files(manifests) -> int:
+    """Live data files of a snapshot, counted from its manifest-list
+    rows (O(manifests)): added + existing files of the data manifests.
+    A count a v1 list left null reads -1 (`read_manifest_list`) and
+    counts as 0 here."""
+    return sum(
+        max(m.added_files_count, 0) + max(m.existing_files_count, 0)
+        for m in manifests
+        if m.content == ManifestContent.DATA
+    )
+
+
 def _rows_frame(spark, rows, ddl: str):
     """`rows` (tuples in `ddl` column order) as a frame built from one
     Arrow table: Spark plans it as a `LocalTableScan` and reading it
     starts no job. A frame of Python rows is an RDD scan that
     deserializes them in a Python-worker stage of default-parallelism
     tasks first (seconds per collect on a many-core host)."""
+    return spark.createDataFrame(_arrow_rows(rows, _arrow_schema_of(ddl)), ddl)
+
+
+@functools.lru_cache(maxsize=128)
+def _arrow_schema_of(ddl: str):
+    """The Arrow schema of a Spark DDL string, parsed once per string
+    (driver-side: each parse is a JVM round trip)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(ddl))
+
+
+def _arrow_rows(rows, schema):
+    """`rows` (tuples in `schema` order) as one Arrow table of `schema`;
+    executor functions build their output batches with it too."""
     import pyarrow as pa
 
-    names = [c.split()[0].strip("`") for c in ddl.split(", ")]
-    cols = list(zip(*rows)) if rows else [()] * len(names)
-    return spark.createDataFrame(
-        pa.table([pa.array(c) for c in cols], names=names), ddl
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.table(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
     )
 
 
-def _map_rows(spark, rows, ddl: str, fn, out_ddl: str, max_tasks=None):
-    """Run the executor work `fn` (a `mapInArrow` function) over the
-    driver's work `rows` and collect its output as one Arrow table.
+def _map_rows(spark, rows, ddl, fn, out_ddl, tasks=None):
+    """The package's one executor work dispatch: the lazy frame of the
+    executor function `fn` run with `mapInArrow` over the work `rows`
+    (tuples in `ddl` column order), or over a work frame executors
+    built (`ddl` unused). Callers that collect add `.toArrow()`. `fn`
+    is shipped with the driver's object-store config applied first
+    (`fileio.shipped`), so no site handles that config itself.
+
     Spark splits the `_rows_frame` scan into min(rows, default
-    parallelism) tasks by itself, so no repartition runs ahead of the
-    work: the call is one job of one stage. `max_tasks` caps the task
-    count, and so the files the tasks write, with `coalesce`, which
-    merges scan slices without an Exchange."""
-    frame = _rows_frame(spark, rows, ddl)
-    if max_tasks is not None:
-        frame = frame.coalesce(max_tasks)
-    return frame.mapInArrow(fn, out_ddl).toArrow()
+    parallelism) slices by itself, so by default no repartition runs
+    ahead of the work: a collect is one job of one stage. `tasks` asks
+    for that many tasks (at most one per row): below the slice count
+    `coalesce` merges slices without an Exchange, above it `repartition`
+    spreads the rows round-robin. A work frame executors built is
+    repartitioned to `tasks` when given. SCALE.md "Task counts" has the
+    sweep behind every count a site passes."""
+    from . import fileio
+
+    if isinstance(rows, list):
+        frame = _rows_frame(spark, rows, ddl)
+        if tasks is not None:
+            tasks = max(1, min(tasks, len(rows)))
+            slices = min(max(len(rows), 1), spark.sparkContext.defaultParallelism)
+            if tasks < slices:
+                frame = frame.coalesce(tasks)
+            elif tasks > slices:
+                frame = frame.repartition(tasks)
+    else:
+        frame = rows if tasks is None else rows.repartition(tasks)
+    return frame.mapInArrow(fileio.shipped(fn), out_ddl)
 
 
 def strip_scheme(path: str) -> str:
@@ -914,11 +960,8 @@ class Scan:
                 self.table.metadata.properties
             )
             manifests = snap.manifests()
-            n_files = sum(
-                m.added_files_count + m.existing_files_count for m in manifests
-            )
             if (0 < min_manifests <= len(manifests)) or (
-                0 < min_files <= n_files
+                0 < min_files <= _live_data_files(manifests)
             ):
                 # re-plan of a cache-warm snapshot (e.g. a NEW filter on
                 # a just-scanned table: plan-memo miss, manifest-cache
@@ -1012,7 +1055,7 @@ class Scan:
             # small matched set (the JVM routes with Catalyst pushdown
             # win there) or eq deletes: collect the already-pruned
             # frame into tasks — O(matched) rows, the plan work reuses
-            return None, _descriptor_rows_to_tasks(frame.collect())
+            return None, _descriptor_rows_to_tasks(frame.toArrow())
         if not delete_rows:
             return (
                 self._read_files_arrow_distributed(
@@ -1051,14 +1094,7 @@ class Scan:
         max_listed = self._max_listed_files()
         if max_listed <= 0:
             return False
-        manifests = [
-            m
-            for m in self.snapshot().manifests()
-            if m.content == ManifestContent.DATA
-        ]
-        n_files = sum(
-            m.added_files_count + m.existing_files_count for m in manifests
-        )
+        n_files = _live_data_files(self.snapshot().manifests())
         # streaming rides the distributed prune machinery, so the same
         # knobs that disable distributed planning (both minima set to 0,
         # the codebase's convention) disable it; a snapshot past the
@@ -1102,7 +1138,7 @@ class Scan:
                     # both sides, and one side planning zero files is a
                     # legitimate state (e.g. every file deleted)
                     ddl += ", _row_id bigint, _last_updated_sequence_number bigint"
-                return spark.createDataFrame([], ddl)
+                return _rows_frame(spark, [], ddl)
             # v3 row lineage: _row_id = data file's first_row_id (assigned by
             # the manifest-list writer, inherited per file at plan time) +
             # the row's physical position, joined from a broadcast
@@ -1603,8 +1639,6 @@ class Scan:
 
         import pyarrow as pa
 
-        from . import fileio as _fileio
-
         if on_driver:
             import numpy as np
 
@@ -1629,19 +1663,11 @@ class Scan:
             )
             return spark.createDataFrame(tbl, "_fp string, _pos long")
 
-        fileio_cfg = _fileio.env_config()
-        desc_df = _rows_frame(
-            spark,
-            [(t, p, int(o), int(s)) for t, p, o, s in descriptors],
-            "target string, dv_path string, offset long, size long",
-        ).repartition(min(len(descriptors), 64))
-
         def decode(batches):
             import re
 
-            from . import fileio, puffin
+            from . import puffin
 
-            fileio.apply_config(fileio_cfg)
             for batch in batches:
                 for row in batch.to_pylist():
                     positions = puffin.read_deletion_vector(
@@ -1657,7 +1683,13 @@ class Scan:
                         }
                     )
 
-        return desc_df.mapInArrow(decode, "_fp string, _pos long")
+        return _map_rows(
+            spark,
+            [(t, p, int(o), int(s)) for t, p, o, s in descriptors],
+            "target string, dv_path string, offset long, size long",
+            decode,
+            "_fp string, _pos long",
+        )
 
     def _read_files_arrow_distributed(
         self,
@@ -1712,28 +1744,21 @@ class Scan:
         rows in-task instead — merge-on-read without the anti-join."""
         import json
 
-        import pandas as pd
-
-        from . import fileio as _fileio
         from .reader import mapped_names as _mapped_names
         from .reader import read_fields
         from .types import schema_to_spark_struct
 
-        fileio_cfg = _fileio.env_config()
-        par = spark.sparkContext.defaultParallelism
         if files_df is None:
             # one Arrow batch to the JVM — never a py4j argument list
-            cols = {"data_file": files}
-            ddl = "data_file string"
-            if deletes is not None:
-                cols["deletes"] = [json.dumps(d) for d in deletes]
-                ddl += ", deletes string"
-            files_df = spark.createDataFrame(pd.DataFrame(cols), ddl)
-            files_df = files_df.repartition(min(len(files), max(64, par * 4)))
+            if deletes is None:
+                work, ddl = [(f,) for f in files], "data_file string"
+            else:
+                work = [(f, json.dumps(d)) for f, d in zip(files, deletes)]
+                ddl = "data_file string, deletes string"
         else:
-            # pre-built paths frame (the streaming plan→read route):
-            # this repartition shuffles PATH STRINGS only, never data
-            files_df = files_df.repartition(max(64, par * 4))
+            # pre-built paths frame (the streaming plan→read route): the
+            # repartition shuffles PATH STRINGS only, never data
+            work, ddl = files_df, None
 
         fields = read_fields(schema)
         mapped_names = _mapped_names(self.table.metadata.properties)
@@ -1763,11 +1788,9 @@ class Scan:
             import numpy as np
             import pyarrow as pa
 
-            from . import fileio
             from .expressions import extract_field_names, to_arrow_expression
             from .reader import delete_positions, read_file
 
-            fileio.apply_config(fileio_cfg)
             arrow_filter = (
                 to_arrow_expression(bound_filter)
                 if bound_filter is not None
@@ -1843,7 +1866,10 @@ class Scan:
                         yield from flush()
             yield from flush()
 
-        return files_df.mapInArrow(read_task, out_struct)
+        # one task per core: a no-op on the driver's rows; the streaming
+        # route's paths come in prune slices, one per manifest at worst
+        par = spark.sparkContext.defaultParallelism
+        return _map_rows(spark, work, ddl, read_task, out_struct, tasks=par)
 
 
 @dataclass(frozen=True)
@@ -2393,14 +2419,14 @@ class Table(StaticTable):
             )
             for s in self.metadata.snapshots
         ]
-        return spark.createDataFrame(
+        return _rows_frame(
+            spark,
             rows,
             "snapshot_id bigint, parent_id bigint, sequence_number bigint, "
             "committed_at_ms bigint, manifest_list string, operation string",
         )
 
     def inspect_manifests(self, spark):
-        snap = self.current_snapshot()
         rows = [
             (
                 m.manifest_path,
@@ -2413,9 +2439,10 @@ class Table(StaticTable):
                 m.deleted_files_count,
                 m.added_rows_count,
             )
-            for m in (snap.manifests() if snap else [])
+            for m in self._snapshot_manifests()
         ]
-        return spark.createDataFrame(
+        return _rows_frame(
+            spark,
             rows,
             "path string, length bigint, partition_spec_id int, content int, "
             "added_snapshot_id bigint, added_data_files_count int, "
@@ -2426,41 +2453,34 @@ class Table(StaticTable):
     # distribute per-entry metadata tables at the same manifest count
     # the planner fans out at — a million-file snapshot's `files` table
     # would otherwise decode every manifest SEQUENTIALLY on the driver
-    def _inspect_fanout(self, spark, work_rows, decode, out_ddl):
-        """Decode manifest entries into metadata-table rows: executor
-        fan-out (mapInPandas over manifests, like the distributed
-        planner) when the snapshot has >= read.distributed-planning.
-        min-manifests manifests; otherwise None (caller decodes on the
-        driver)."""
+    def _inspect_frame(self, spark, manifests, decode, out_ddl):
+        """Metadata-table rows `decode(path, seq, spec_id)` makes from
+        each of `manifests`: an executor fan-out (`_map_rows` over the
+        manifests, like the distributed planner) when there are >=
+        read.distributed-planning.min-manifests of them, else decoded
+        on the driver."""
+        work = [(m.manifest_path, m.sequence_number, m.partition_spec_id) for m in manifests]
         min_manifests, _ = _distributed_planning_minima(self.metadata.properties)
-        if min_manifests <= 0 or len(work_rows) < min_manifests:
-            return None
-        from . import fileio as _fileio
-
-        cfg = _fileio.env_config()
-        work = _rows_frame(
-            spark, work_rows, "path string, seq bigint, spec_id int"
-        ).repartition(min(len(work_rows), 64))
+        if min_manifests <= 0 or len(work) < min_manifests:
+            return _rows_frame(spark, [r for w in work for r in decode(*w)], out_ddl)
+        schema = _arrow_schema_of(out_ddl)
 
         def task(batches):
-            import pandas as pd
+            for batch in batches:
+                out = [
+                    row
+                    for w in batch.to_pylist()
+                    for row in decode(w["path"], w["seq"], w["spec_id"])
+                ]
+                yield from _arrow_rows(out, schema).to_batches()
 
-            from . import fileio
+        return _map_rows(spark, work, "path string, seq bigint, spec_id int", task, out_ddl)
 
-            fileio.apply_config(cfg)
-            for pdf in batches:
-                out = []
-                for _, row in pdf.iterrows():
-                    out.extend(decode(row.path, int(row.seq), int(row.spec_id)))
-                yield pd.DataFrame(
-                    out,
-                    columns=[c.split()[0] for c in out_ddl.split(", ")],
-                )
-
-        return work.mapInPandas(task, out_ddl)
+    def _snapshot_manifests(self):
+        snap = self.current_snapshot()
+        return snap.manifests() if snap is not None else []
 
     def inspect_files(self, spark):
-        snap = self.current_snapshot()
         ddl = (
             "file_path string, file_format string, content int, "
             "record_count bigint, file_size_in_bytes bigint, partition string"
@@ -2481,26 +2501,11 @@ class Table(StaticTable):
                 for e in rm(path)
             ]
 
-        if snap is not None:
-            manifests = snap.manifests()
-            fanned = self._inspect_fanout(
-                spark,
-                [(m.manifest_path, m.sequence_number, m.partition_spec_id) for m in manifests],
-                decode,
-                ddl,
-            )
-            if fanned is not None:
-                return fanned
-        rows = []
-        if snap is not None:
-            for m in snap.manifests():
-                rows.extend(decode(m.manifest_path, 0, 0))
-        return spark.createDataFrame(rows, ddl)
+        return self._inspect_frame(spark, self._snapshot_manifests(), decode, ddl)
 
     def inspect_entries(self, spark):
         """Manifest entries of the current snapshot with their status
         and sequence numbers (the `entries` metadata table)."""
-        snap = self.current_snapshot()
         ddl = (
             "status int, snapshot_id bigint, sequence_number bigint, "
             "file_sequence_number bigint, file_path string, content int, "
@@ -2523,21 +2528,7 @@ class Table(StaticTable):
                 for e in rm(path, discard_deleted=False, inherit_sequence_number=seq)
             ]
 
-        if snap is not None:
-            manifests = snap.manifests()
-            fanned = self._inspect_fanout(
-                spark,
-                [(m.manifest_path, m.sequence_number, m.partition_spec_id) for m in manifests],
-                decode,
-                ddl,
-            )
-            if fanned is not None:
-                return fanned
-        rows = []
-        if snap is not None:
-            for m in snap.manifests():
-                rows.extend(decode(m.manifest_path, m.sequence_number, 0))
-        return spark.createDataFrame(rows, ddl)
+        return self._inspect_frame(spark, self._snapshot_manifests(), decode, ddl)
 
     def inspect_partitions(self, spark):
         """Per-partition rollup of the current snapshot (the
@@ -2545,7 +2536,6 @@ class Table(StaticTable):
         count, and bytes per distinct partition tuple. The per-file
         rows fan out across executors on wide snapshots; the rollup is
         a plain Spark aggregate either way."""
-        snap = self.current_snapshot()
         ddl = (
             "partition string, spec_id int, record_count bigint, "
             "file_size_in_bytes bigint"
@@ -2567,31 +2557,12 @@ class Table(StaticTable):
                 )
             return out
 
-        base = None
-        if snap is not None:
-            data_manifests = [
-                m for m in snap.manifests() if m.content == ManifestContent.DATA
-            ]
-            base = self._inspect_fanout(
-                spark,
-                [
-                    (m.manifest_path, m.sequence_number, m.partition_spec_id)
-                    for m in data_manifests
-                ],
-                decode,
-                ddl,
-            )
-            if base is None:
-                rows = []
-                for m in data_manifests:
-                    rows.extend(
-                        decode(m.manifest_path, 0, m.partition_spec_id)
-                    )
-                base = spark.createDataFrame(rows, ddl)
-        else:
-            base = spark.createDataFrame([], ddl)
         from pyspark.sql import functions as F
 
+        data_manifests = [
+            m for m in self._snapshot_manifests() if m.content == ManifestContent.DATA
+        ]
+        base = self._inspect_frame(spark, data_manifests, decode, ddl)
         return base.groupBy("partition", "spec_id").agg(
             F.count("*").alias("file_count"),
             F.sum("record_count").alias("record_count"),
@@ -2600,20 +2571,20 @@ class Table(StaticTable):
 
     def inspect_history(self, spark):
         rows = [(e.timestamp_ms, e.snapshot_id) for e in self.metadata.snapshot_log]
-        return spark.createDataFrame(rows, "made_current_at_ms bigint, snapshot_id bigint")
+        return _rows_frame(spark, rows, "made_current_at_ms bigint, snapshot_id bigint")
 
     def inspect_refs(self, spark):
         rows = [
             (name, r.snapshot_ref_type, r.snapshot_id)
             for name, r in self.metadata.refs.items()
         ]
-        return spark.createDataFrame(rows, "name string, type string, snapshot_id bigint")
+        return _rows_frame(spark, rows, "name string, type string, snapshot_id bigint")
 
 
 def _distributed_prune_frame(scan: Scan, spark):
     """The executor side of distributed planning WITHOUT the driver
     collect: manifest-level pruning (level 2) on the driver, then one
-    mapInPandas job entry-decodes + prunes (levels 3+4) and returns a
+    `_map_rows` stage entry-decodes + prunes (levels 3+4) and returns a
     DataFrame of surviving descriptors — (kind, seq, descriptor JSON).
     `plan_files_distributed` collects it into FileScanTasks; the
     STREAMING read path (Scan._stream_plan_route) instead feeds the
@@ -2624,8 +2595,6 @@ def _distributed_prune_frame(scan: Scan, spark):
 
     Returns (frame, n_delete_manifests) — None frame when the snapshot
     is empty or nothing survives manifest pruning."""
-    import pandas as pd
-
     from .evaluators import (
         expression_evaluator,
         inclusive_metrics_evaluator,
@@ -2676,73 +2645,77 @@ def _distributed_prune_frame(scan: Scan, spark):
     # The driver then runs the same sequence-gated matching the local
     # planner uses, but over O(matching + delete files) descriptors, not
     # O(all entries) — the manifest reads themselves were distributed.
-    work = spark.createDataFrame(
-        [
-            (m.manifest_path, m.partition_spec_id, m.sequence_number, 0, m.first_row_id)
-            for m in survivors
-        ]
-        + [
-            (m.manifest_path, m.partition_spec_id, m.sequence_number, 1, None)
-            for m in live_delete_manifests
-        ],
-        "path string, spec_id int, seq bigint, is_delete int, first_row_id bigint",
-    ).repartition(min(len(survivors) + len(live_delete_manifests), 64))
-
-    from . import fileio as _fileio
-
-    fileio_cfg = _fileio.env_config()
+    work = [
+        (m.manifest_path, m.partition_spec_id, m.sequence_number, 0, m.first_row_id)
+        for m in survivors
+    ] + [
+        (m.manifest_path, m.partition_spec_id, m.sequence_number, 1, None)
+        for m in live_delete_manifests
+    ]
 
     def prune(batches):
-        from . import fileio
+        import pyarrow as pa
+
         from .manifest import read_manifest, scan_manifest
 
-        fileio.apply_config(fileio_cfg)
         metrics_eval = inclusive_metrics_evaluator(schema_p, row_filter, case_sensitive)
         stats_ids = metrics_field_ids(schema_p, row_filter, case_sensitive)
         part_evals = {}
         kinds, seqs, out = [], [], []
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                if row.is_delete:
+        for batch in batches:
+            for row in batch.to_pylist():
+                if row["is_delete"]:
                     for e in read_manifest(
-                        row.path, inherit_sequence_number=int(row.seq)
+                        row["path"], inherit_sequence_number=row["seq"]
                     ):
                         kinds.append(1)
                         seqs.append(e.sequence_number or 0)
                         out.append(_encode_descriptor(e.data_file))
                     continue
-                spec = spec_by_id_p[row.spec_id]
-                if row.spec_id not in part_evals:
+                spec_id = row["spec_id"]
+                if spec_id not in part_evals:
+                    spec = spec_by_id_p[spec_id]
                     proj = inclusive_projection(schema_p, spec, case_sensitive)(row_filter)
                     part_schema = Schema(0, spec.partition_type(schema_p).fields)
-                    part_evals[row.spec_id] = expression_evaluator(
+                    part_evals[spec_id] = expression_evaluator(
                         part_schema, proj, case_sensitive
                     )
-                part_eval = part_evals[row.spec_id]
-                frid = None if pd.isna(row.first_row_id) else int(row.first_row_id)
+                part_eval = part_evals[spec_id]
                 # evaluate on the worker's cached column block, build
                 # survivors only (same filtered-read shape as the local
                 # planner's entries_of)
                 for e in scan_manifest(
-                    row.path,
+                    row["path"],
                     lambda b: b.partition_mask(part_eval) & metrics_eval(b),
-                    inherit_sequence_number=int(row.seq),
-                    inherit_first_row_id=frid,
+                    inherit_sequence_number=row["seq"],
+                    inherit_first_row_id=row["first_row_id"],
                     stats_ids=stats_ids,
                 ):
                     kinds.append(0)
                     seqs.append(e.sequence_number or 0)
                     out.append(_encode_descriptor(e.data_file))
-        yield pd.DataFrame({"kind": kinds, "seq": seqs, "descriptor": out})
+        yield pa.record_batch(
+            {
+                "kind": pa.array(kinds, pa.int32()),
+                "seq": pa.array(seqs, pa.int64()),
+                "descriptor": pa.array(out, pa.string()),
+            }
+        )
 
-    frame = work.mapInPandas(prune, "kind int, seq bigint, descriptor string")
+    frame = _map_rows(
+        spark,
+        work,
+        "path string, spec_id int, seq bigint, is_delete int, first_row_id bigint",
+        prune,
+        "kind int, seq bigint, descriptor string",
+    )
     return frame, len(live_delete_manifests)
 
 
 def plan_files_distributed(scan: Scan, spark) -> list[FileScanTask]:
     """Distributed scan planning — SURVEY P4: when a snapshot's manifest
     set exceeds driver memory, entry-level pruning (levels 3+4) runs in
-    executors via mapInPandas over manifest paths; the driver keeps only
+    executors (`_map_rows` over manifest paths); the driver keeps only
     manifest-level pruning (level 2, O(manifests)) and receives the
     surviving DataFile descriptors (O(matching files)).
 
@@ -2755,19 +2728,20 @@ def plan_files_distributed(scan: Scan, spark) -> list[FileScanTask]:
     frame, _n_del = _distributed_prune_frame(scan, spark)
     if frame is None:
         return []
-    return _descriptor_rows_to_tasks(frame.collect())
+    return _descriptor_rows_to_tasks(frame.toArrow())
 
 
-def _descriptor_rows_to_tasks(rows) -> list[FileScanTask]:
-    """Collected (kind, seq, descriptor) prune-frame rows →
+def _descriptor_rows_to_tasks(tbl) -> list[FileScanTask]:
+    """The collected (kind, seq, descriptor) prune-frame Arrow table →
     FileScanTasks with sequence-gated delete matching — shared by
     `plan_files_distributed` and the streaming route's collected
     fallback (which reuses its persisted frame instead of re-planning)."""
     from .write import _decode_descriptor
 
-    data_rows = [(r.seq, _decode_descriptor(r.descriptor)) for r in rows if r.kind == 0]
+    rows = tbl.to_pylist()
+    data_rows = [(r["seq"], _decode_descriptor(r["descriptor"])) for r in rows if r["kind"] == 0]
     delete_rows = sorted(
-        ((r.seq, _decode_descriptor(r.descriptor)) for r in rows if r.kind == 1),
+        ((r["seq"], _decode_descriptor(r["descriptor"])) for r in rows if r["kind"] == 1),
         key=lambda t: t[0],
     )
 

@@ -673,9 +673,6 @@ def write_data_files(
             )
         )
     target_size = target_file_size
-    from . import fileio as _fileio
-
-    fileio_cfg = _fileio.env_config()
     codec, codec_level = parquet_compression(properties or {})
     metrics_modes = resolve_metrics_modes(schema, properties, strict=strict_metrics)
     _props = properties or {}
@@ -708,7 +705,6 @@ def write_data_files(
 
         from . import fileio
 
-        fileio.apply_config(fileio_cfg)
         tc = TaskContext.get()
         # partition id + ATTEMPT id: speculative/retried attempts of the
         # same task must never write the same path concurrently (the
@@ -901,7 +897,9 @@ def write_data_files(
             [pa.array(done, type=pa.string())], names=["descriptor"]
         )
 
-    desc = data.mapInArrow(write_task, _DESCRIPTOR_SCHEMA)
+    from . import fileio as _fileio
+
+    desc = data.mapInArrow(_fileio.shipped(write_task), _DESCRIPTOR_SCHEMA)
     return [_decode_descriptor(r.descriptor) for r in desc.collect()]
 
 
@@ -1482,9 +1480,6 @@ def write_position_deletes(spark, table, tasks, expr, commit_uuid: str):
     bound, fields, mapped = _row_matcher(md, expr)
     location = md.location
     del_schema = positional_delete_schema()
-    from . import fileio as _fileio
-
-    fileio_cfg = _fileio.env_config()
     codec, codec_level = parquet_compression(md.properties)
 
     def task(batches):
@@ -1496,7 +1491,6 @@ def write_position_deletes(spark, table, tasks, expr, commit_uuid: str):
         from .manifest import DataFileContent
         from .reader import matched_positions
 
-        fileio.apply_config(fileio_cfg)
         tc = TaskContext.get()
         # partition id + ATTEMPT id: speculative/retried attempts of the
         # same task must never write the same path concurrently (the
@@ -1540,7 +1534,7 @@ def write_position_deletes(spark, table, tasks, expr, commit_uuid: str):
         "data_file string",
         task,
         _DESCRIPTOR_SCHEMA,
-    )
+    ).toArrow()
     return [_decode_descriptor(s) for s in out.column("descriptor").to_pylist()]
 
 
@@ -1565,15 +1559,10 @@ def write_deletion_vectors(spark, table, tasks, expr, commit_uuid: str):
     md = table.metadata
     bound, fields, mapped = _row_matcher(md, expr)
     location = md.location
-    from . import fileio as _fileio
-
-    fileio_cfg = _fileio.env_config()
 
     def task(batches):
-        from . import fileio
         from .reader import matched_positions
 
-        fileio.apply_config(fileio_cfg)
         yield from _write_dv_batches(
             location, commit_uuid, "deletes",
             [
@@ -1590,7 +1579,7 @@ def write_deletion_vectors(spark, table, tasks, expr, commit_uuid: str):
 
     out = _map_rows(
         spark, [_dv_work_row(t) for t in tasks], _DV_WORK_DDL, task, _DV_OUT_DDL
-    )
+    ).toArrow()
     descs = [_decode_descriptor(s) for s in out.column("descriptor").to_pylist()]
     return descs, sum(out.column("newly").to_pylist())
 

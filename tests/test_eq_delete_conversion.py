@@ -666,3 +666,70 @@ def test_eq_convert_key_frame_cache_is_module_global(tmp_path):
     # the call through the UNPICKLED function hit the real module cache
     assert (path, (1,)) in M._EQ_KEY_FRAME_CACHE
     M._EQ_KEY_FRAME_CACHE.clear()
+
+
+# ------------------------------------------------ keys above 2**53 stay exact
+
+_BIG = 2**53
+
+
+def _big_key_table(cat, spark, name):
+    """ids {2**53, 2**53+1, 5, null}; one equality-delete file holding
+    the keys {2**53+1, null}. The scan's anti-join deletes 2**53+1 and
+    the null row (NULL = NULL) and keeps 2**53 and 5."""
+    df = spark.createDataFrame(
+        [(_BIG, "a"), (_BIG + 1, "b"), (5, "c"), (None, "n")],
+        "id long, owner string",
+    )
+    t = cat.create_table(name, schema_from_spark(df.schema))
+    t.upgrade_format_version(3)
+    t.append(df.coalesce(1))
+    t.delete_by_keys(spark.createDataFrame([(_BIG + 1,), (None,)], "id long"), ["id"])
+    t.refresh()
+    return t
+
+
+def _big_rows(t, spark):
+    return sorted(
+        ((r.id is None, r.id or 0, r.owner) for r in t.scan().to_df(spark).collect())
+    )
+
+
+def test_eq_matched_positions_keeps_keys_above_2_53_exact(tmp_path):
+    """A key column holding a null must not pass through float64: the
+    key 2**53+1 matches only the row whose id is 2**53+1, not 2**53."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_go_distributed_spark.iceberg import fileio
+    from iceberg_go_distributed_spark.iceberg import maintenance as M
+
+    schema = pa.schema(
+        [pa.field("id", pa.int64(), metadata={b"PARQUET:field_id": b"1"})]
+    )
+    keys_path = str(tmp_path / "keys.parquet")
+    pq.write_table(pa.table({"id": [_BIG + 1, None]}, schema=schema), keys_path)
+    M._EQ_KEY_FRAME_CACHE.clear()
+    eq_sets = [([1], M._eq_convert_key_frame(keys_path, [1]))]
+    M._EQ_KEY_FRAME_CACHE.clear()
+    for ids, want in (
+        ([_BIG, _BIG + 1, 5], [1]),
+        ([_BIG, None, _BIG + 1], [1, 2]),  # NULL = NULL still matches
+    ):
+        data_path = str(tmp_path / "data.parquet")
+        pq.write_table(pa.table({"id": ids}, schema=schema), data_path)
+        with fileio.parquet_file(data_path) as pf:
+            assert M._eq_matched_positions(pf, eq_sets).tolist() == want
+
+
+@pytest.mark.parametrize("join_path", [False, True], ids=["fast", "join"])
+def test_conversion_keeps_keys_above_2_53_exact(cat, spark, join_path):
+    t = _big_key_table(cat, spark, f"db.eqbig_{int(join_path)}")
+    before = _big_rows(t, spark)
+    assert before == [(False, 5, "c"), (False, _BIG, "a")]
+    if join_path:
+        _force_join_path(t)
+    assert t.convert_equality_deletes(spark) is True
+    t.refresh()
+    assert "eq" not in _delete_kinds(t)
+    assert _big_rows(t, spark) == before

@@ -215,6 +215,45 @@ def test_s3_equality_keys_read_by_field_id_after_rename(s3_catalog, spark):
     assert rows == sorted(want.items())
 
 
+def test_s3_eq_conversion_join_path_keeps_keys_above_2_53_exact(s3_catalog, spark):
+    """The join route's key frame on an object store (executor Arrow
+    reads of the key file) keeps long keys exact: a key file holding
+    {2**53+1, null} converts to DVs that delete exactly the rows the
+    scan's anti-join deleted, never the row whose id is 2**53."""
+    from iceberg_go_distributed_spark.iceberg.manifest import DataFileContent
+    from iceberg_go_distributed_spark.iceberg.types import schema_from_spark
+
+    big = 2**53
+    df = spark.createDataFrame(
+        [(big, "a"), (big + 1, "b"), (5, "c"), (None, "n")], "id long, v string"
+    )
+    t = s3_catalog.create_table(
+        "db.s3_eq_big", schema_from_spark(df.schema), location=f"s3://{BUCKET}/db/s3_eq_big"
+    )
+    t.upgrade_format_version(3)
+    t.append(df.coalesce(1))
+    t.delete_by_keys(spark.createDataFrame([(big + 1,), (None,)], "id long"), ["id"])
+    tx = t.transaction()
+    tx.set_properties({"maintenance.eq-convert.keys-max-rows": "1"})
+    tx.commit()
+    t.refresh()
+
+    def rows():
+        return sorted(tuple(r) for r in t.scan().to_df(spark).collect())
+
+    before = rows()
+    assert before == [(5, "c"), (big, "a")]
+    assert t.convert_equality_deletes(spark) is True
+    t.refresh()
+    deletes = [d for task in t.scan().plan_files() for d in task.delete_files]
+    assert deletes and all(
+        d.content != DataFileContent.EQUALITY_DELETES
+        and d.file_path.endswith("-eqconvj.puffin")  # the join route wrote it
+        for d in deletes
+    )
+    assert rows() == before
+
+
 def test_s3_v3_deletion_vector_write(s3_catalog, spark, lineitem_df):
     """v3 write plane against the object store: the upgrade commit, the
     lineage-assigning manifest list, the executor-written puffin DV,

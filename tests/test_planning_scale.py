@@ -393,3 +393,25 @@ def test_auto_route_prefers_local_when_cache_warm(big_table, spark, monkeypatch)
         big_table.metadata.properties.pop(
             "read.distributed-planning.min-manifests", None
         )
+
+
+def test_live_data_file_count_reads_unknown_counts_as_zero():
+    """The route triggers' live-file count (`plan_files_auto`,
+    `_stream_plan_eligible`, `spj._spj_wide`) sums added + existing files
+    of DATA manifests only; a v1 list's null count (-1) counts as 0
+    instead of taking 2 off the total."""
+    from iceberg_go_distributed_spark.iceberg.manifest import (
+        ManifestContent,
+        ManifestFile,
+    )
+    from iceberg_go_distributed_spark.iceberg.table import _live_data_files
+
+    def m(added, existing, content=ManifestContent.DATA):
+        return ManifestFile(
+            "m.avro", 1, 0, content=content,
+            added_files_count=added, existing_files_count=existing,
+        )
+
+    assert _live_data_files([]) == 0
+    assert _live_data_files([m(3, 4), m(-1, -1), m(-1, 5), m(2, -1)]) == 14
+    assert _live_data_files([m(3, 4), m(7, 7, ManifestContent.DELETES)]) == 7

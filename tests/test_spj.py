@@ -6,7 +6,8 @@ on OUR table format: the bucket co-location comes from the Iceberg
 bucket[N] partition transform (bit-exact murmur3, transforms.py), the
 reads honor positional deletes / DVs, and both scan sides prune through
 the normal four-level cascade before bucket grouping.  The plan never
-exchanges table data — only the O(buckets) task-descriptor repartition.
+exchanges table data — at most the executor-planned route's O(buckets)
+task-descriptor repartition.
 """
 
 from __future__ import annotations
@@ -269,9 +270,10 @@ def test_spj_filters_prune_before_grouping(spark, cust_orders):
 
 
 def test_spj_plan_has_no_table_exchange(spark, cust_orders):
-    """The ONLY exchange in the SPJ plan is the round-robin repartition
-    of the O(buckets) task-descriptor rows; no hashpartitioning of table
-    data, no SortMergeJoin/ShuffledHashJoin operators at all."""
+    """The driver-planned SPJ plan has no exchange at all: the bucket
+    task rows are an Arrow `LocalTableScan` the join tasks run over
+    directly; no hashpartitioning of table data, no
+    SortMergeJoin/ShuffledHashJoin operators at all."""
     tc, to, _, _ = cust_orders
     df = storage_partitioned_join(
         spark,
@@ -284,9 +286,8 @@ def test_spj_plan_has_no_table_exchange(spark, cust_orders):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert "hashpartitioning" not in plan
-    assert plan.count("Exchange") <= 2  # the task-list RoundRobin only
-    assert "RoundRobinPartitioning" in plan
-    assert "MapInArrow" in plan
+    assert "Exchange" not in plan
+    assert "LocalTableScan" in plan and "MapInArrow" in plan
 
 
 def test_spj_agg_matches_groupby(spark, sf_dir, catalog):

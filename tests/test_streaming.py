@@ -1096,6 +1096,17 @@ def test_iceberg_stream_cdc_fuzz_vs_changelog_poll(tmp_path, spark):
     changelog_poll results — including rows appended and later deleted
     within the same range (both surfaces emit the insert AND the
     delete), whole-file drops, and repeat-delete DV replacement."""
+    _cdc_fuzz_vs_changelog_poll(tmp_path, spark, seed=0xCDC, n_ops=10)
+
+
+def test_iceberg_stream_cdc_fuzz_vs_changelog_poll_slice(tmp_path, spark):
+    """Short seeded slice of the fuzz above for the default tier: after
+    the opening append, seed 3 draws a group delete, a range delete and
+    an append."""
+    _cdc_fuzz_vs_changelog_poll(tmp_path, spark, seed=3, n_ops=3)
+
+
+def _cdc_fuzz_vs_changelog_poll(tmp_path, spark, seed, n_ops):
     import random
 
     from iceberg_go_distributed_spark.iceberg import expressions as E
@@ -1103,7 +1114,7 @@ def test_iceberg_stream_cdc_fuzz_vs_changelog_poll(tmp_path, spark):
     from iceberg_go_distributed_spark.iceberg.types import schema_from_spark
     from iceberg_go_distributed_spark.streaming import changelog_poll, iceberg_stream
 
-    rng = random.Random(0xCDC)
+    rng = random.Random(seed)
     wh = str(tmp_path / "wh")
     cat = FileSystemCatalog(wh)
     probe = spark.createDataFrame([(0, 0)], "id long, grp long")
@@ -1147,7 +1158,7 @@ def test_iceberg_stream_cdc_fuzz_vs_changelog_poll(tmp_path, spark):
 
     op_append()
     ops = [op_append, op_append, op_delete_grp, op_delete_range]
-    for _ in range(10):
+    for _ in range(n_ops):
         rng.choice(ops)()
 
     seen: list[tuple] = []
@@ -1234,13 +1245,24 @@ def test_iceberg_stream_cdc_fuzz_matches_changelog(tmp_path, spark):
     the deterministic tests enumerate one at a time — eq-deletes over
     DV-dead rows, DVs over eq-dead rows, consecutive upserts re-keying
     the same ids — in interleavings they don't."""
+    _cdc_fuzz_matches_changelog(tmp_path, spark, seed=0xC9, trials=2, steps=4)
+
+
+def test_iceberg_stream_cdc_fuzz_matches_changelog_slice(tmp_path, spark):
+    """Short seeded slice of the fuzz above for the default tier: one
+    trial where seed 6 draws delete, upsert before the mid-history run
+    and upsert, delete after it (DVs over eq-dead rows and back)."""
+    _cdc_fuzz_matches_changelog(tmp_path, spark, seed=6, trials=1, steps=2)
+
+
+def _cdc_fuzz_matches_changelog(tmp_path, spark, seed, trials, steps):
     import random
 
     from iceberg_go_distributed_spark.iceberg import expressions as E
     from iceberg_go_distributed_spark.streaming import changelog_poll, iceberg_stream
 
-    rng = random.Random(0xC9)
-    for trial in range(2):
+    rng = random.Random(seed)
+    for trial in range(trials):
         wh = str(tmp_path / f"fzwh{trial}")
         cat = FileSystemCatalog(wh)
         df0 = spark.createDataFrame(
@@ -1319,10 +1341,10 @@ def test_iceberg_stream_cdc_fuzz_matches_changelog(tmp_path, spark):
             assert q.awaitTermination(180), "bounded stream did not finish"
 
         ops = [do_append, do_upsert, do_delete]
-        for step in range(4):
+        for step in range(steps):
             rng.choice(ops)()
         run_stream()  # mid-history consume
-        for step in range(4):
+        for step in range(steps):
             rng.choice(ops)()
         run_stream()  # checkpoint resume over the second half
 

@@ -213,18 +213,25 @@ def test_distributed_read_empty_and_limit(spark, catalog):
     assert t.scan(limit=3).to_df(spark).count() == 3
 
 
+def _streams(plan: str) -> bool:
+    """The streaming route's plan: the prune job's manifest work rows
+    (the `is_delete` column of `_distributed_prune_frame`) feed the
+    Arrow reader's `MapInArrow`."""
+    return "is_delete" in plan and "MapInArrow" in plan
+
+
 def test_streaming_plan_read_matches_listed(spark, catalog):
     """Full-table scans above the threshold stream the pruned
     descriptor frame straight into the distributed reader — descriptors
     never collect to the driver. Results identical to the listed path;
-    the plan shows the prune job (MapInPandas) feeding the read
-    (MapInArrow), which the collected wide route does not have."""
+    the plan shows the prune job feeding the read, which the collected
+    wide route does not have."""
     t = _evolved_table(catalog, spark, name="db.stream_scan")
     listed_rows = _sorted_rows(t.scan().to_df(spark))
     t.properties["read.spark.max-listed-files"] = "1"
     df = t.scan().to_df(spark)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan and "MapInPandas" in plan
+    assert _streams(plan)
     assert _sorted_rows(df) == listed_rows
     # projection + limit still apply on the streamed frame
     assert t.scan().select("id").to_df(spark).columns == ["id"]
@@ -234,7 +241,7 @@ def test_streaming_plan_read_matches_listed(spark, catalog):
     # the prune job, not filter presence)
     fdf = t.scan(row_filter=E.less_than("id", 10)).to_df(spark)
     fplan = fdf._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in fplan and "MapInArrow" in fplan
+    assert _streams(fplan)
     assert sorted(r["id"] for r in fdf.select("id").collect()) == list(range(10))
 
 
@@ -257,12 +264,12 @@ def test_streaming_filtered_gate_on_matched_count(spark, catalog):
     # matches one file (id bounds) → collected: no prune job in the plan
     sel = t.scan(row_filter=E.less_than("id", 50)).to_df(spark)
     splan = sel._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in splan
+    assert not _streams(splan)
     assert sel.count() == 50
     # matches all four files (> threshold) → streams
     wide = t.scan(row_filter=E.greater_than_or_equal("id", 0)).to_df(spark)
     wplan = wide._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in wplan and "MapInArrow" in wplan
+    assert _streams(wplan)
     assert wide.count() == 400
 
 
@@ -285,7 +292,7 @@ def test_streaming_plan_read_mor(spark, catalog):
     assert sdf is not None and pre is None
     mor = t.scan().to_df(spark)
     plan = mor._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan and "MapInArrow" in plan
+    assert _streams(plan)
     assert sorted(r["id"] for r in mor.collect()) == list(range(5, 40))
     # count() must NOT answer from record counts while deletes exist
     assert t.scan().count(spark) == 35
@@ -470,7 +477,7 @@ def test_wide_read_name_mapped_table(spark, catalog, tmp_path):
     # streaming plan→read route (unfiltered)
     dist = t.scan().to_df(spark)
     plan = dist._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan and "MapInPandas" in plan
+    assert _streams(plan)
     assert _sorted_rows(dist) == listed
     rows = {r["id"]: r["body"] for r in dist.collect()}
     assert rows[1] == "a0" and rows[12] == "b1" and rows[100] == "native"
