@@ -124,12 +124,11 @@ def run_planning(spark):
     # files are fictitious; planning never opens them) with a filter on
     # a DATA column, so every manifest survives manifest-level pruning
     # and the planner must entry-decode all of them. Records the
-    # driver-local planner (ThreadPool, ref scanner.go:343-406) vs the
-    # distributed mapInPandas planner side by side, plus which route
-    # plan_files_auto picks. Measured crossover is ~50k files on this
-    # box: below that the distributed job's fixed overhead (~0.6 s)
-    # loses; above it the local planner scales at ~70 µs/file while the
-    # distributed one stays near-flat.
+    # driver-local planner (ref scanner.go:343-406) vs the executor
+    # planner (`plan_files_distributed`, one mapInArrow job) side by
+    # side, plus the route plan_files_auto took. Routing counts the
+    # entries still to decode; SCALE.md "Planning crossover" has the
+    # sweep behind `table._EXECUTOR_PLAN_MIN_ENTRIES`.
     import shutil
     import tempfile
 
@@ -185,9 +184,16 @@ def run_planning(spark):
             assert sorted(t.file.file_path for t in local_tasks) == sorted(
                 t.file.file_path for t in dist_tasks
             ), "distributed planner diverged from local"
-            auto_tasks, auto_sec = best_of(
-                lambda: scan.plan_files_auto(spark), label="auto"
-            )
+            # spy on the executor planner: the route auto actually took
+            routed = []
+            orig = TBL.plan_files_distributed
+            TBL.plan_files_distributed = lambda s, sp: routed.append(1) or orig(s, sp)
+            try:
+                auto_tasks, auto_sec = best_of(
+                    lambda: scan.plan_files_auto(spark), label="auto"
+                )
+            finally:
+                TBL.plan_files_distributed = orig
             assert len(auto_tasks) == len(local_tasks)
             # repeat-scan memo (read.plan-cache, default on): the second
             # plan of an unchanged table version is near-free — the
@@ -196,11 +202,6 @@ def run_planning(spark):
             cached_tasks = scan.plan_files_auto(spark)
             cached_sec = round(time.perf_counter() - t0, 4)
             assert len(cached_tasks) == len(local_tasks)
-            threshold = int(
-                pt.metadata.properties.get(
-                    "read.distributed-planning.min-manifests", "64"
-                )
-            )
             return {
                 "manifests": n_manifests,
                 "data_files": n_manifests * files_per_manifest,
@@ -217,8 +218,9 @@ def run_planning(spark):
                     round(dist_sec / local_sec, 4) if local_sec else None
                 ),
                 "attempts": raw_attempts,
-                # which planner plan_files_auto structurally picks here
-                "auto_route": "distributed" if n_manifests >= threshold else "local",
+                # which planner plan_files_auto took (after the local
+                # attempts warmed the manifest cache)
+                "auto_route": "distributed" if routed else "local",
             }
         finally:
             shutil.rmtree(wh, ignore_errors=True)

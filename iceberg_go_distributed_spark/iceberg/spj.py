@@ -62,11 +62,6 @@ from .types import (
 )
 
 DEFAULT_MAX_BUCKET_BYTES = 4 << 30  # join.spj.max-bucket-bytes
-# identity/day layouts can yield one task row per distinct partition
-# value; cap the Spark partition count so a worker streams several
-# bucket tasks sequentially (memory stays one bucket pair) instead of
-# paying one Python-worker round per tiny task
-_MAX_TASK_PARTITIONS = 2048
 
 # driver-planned bucket task rows (`_map_rows` work rows)
 _PAIR_TASK_DDL = "part string, left_files string, right_files string"
@@ -224,26 +219,17 @@ def _spj_wide(table, spark) -> bool:
     """True when this side's snapshot is wide enough that grouping its
     planned tasks in driver Python would be the O(files) collect the
     streaming plan→read eliminated for plain scans (VERDICT r13
-    task 2). Same thresholds as distributed planning, so the prune
-    job the blobs path rides was going to run anyway."""
+    task 2): its live data files reach the executor-planning constant.
+    Resident manifests count too — the cost is the driver collect, which
+    a warm cache does not remove."""
     if spark is None:
         return False
     snap = table.metadata.current_snapshot()
     if snap is None:
         return False
-    from .manifest import ManifestContent
-    from .table import _distributed_planning_minima, _live_data_files
+    from .table import _EXECUTOR_PLAN_MIN_ENTRIES, _live_data_files
 
-    min_manifests, min_files = _distributed_planning_minima(
-        table.metadata.properties
-    )
-
-    manifests = [
-        m for m in snap.manifests() if m.content == ManifestContent.DATA
-    ]
-    return (0 < min_manifests <= len(manifests)) or (
-        0 < min_files <= _live_data_files(manifests)
-    )
+    return _live_data_files(snap.manifests()) >= _EXECUTOR_PLAN_MIN_ENTRIES
 
 
 def _side_blobs(table, pf, row_filter, spark):
@@ -484,20 +470,18 @@ def _bucket_task_frame(spark, lframe, rframe, how, limit):
 
 
 def _spread_tasks(df, spark):
-    """One bucket task per Spark task: the planned task frame is tiny
-    (O(buckets) rows of a few KB), so AQE coalesces its exchange into
-    one or two partitions — and the heavy per-bucket file reads of the
-    downstream mapInArrow pipeline into them, serializing a
-    million-file join behind a single core (measured: the 1M-file
-    probe's first dist run sat 9+ min in ONE task). An explicit
-    repartition count is exempt from AQE coalescing and round-robins
-    the task rows; empty partitions at small scale are scheduling
-    noise only."""
-    n = min(
-        _MAX_TASK_PARTITIONS,
-        max(64, spark.sparkContext.defaultParallelism * 4),
-    )
-    return df.repartition(n)
+    """One task per core for the executor-planned bucket tasks: the
+    planned task frame is tiny (O(buckets) rows of a few KB), so AQE
+    would coalesce its exchange into one or two partitions — and the
+    heavy per-bucket file reads of the downstream mapInArrow pipeline
+    into them, serializing a million-file join behind a single core
+    (measured: the 1M-file probe's first dist run sat 9+ min in ONE
+    task). An explicit repartition count is exempt from AQE coalescing
+    and round-robins the task rows; each worker streams its bucket
+    tasks one after another (memory stays one bucket pair). One task
+    per core: 64 tasks at local[4] ran 3.9x slower on a uniform and on
+    a skewed key (SCALE.md "Task counts")."""
+    return df.repartition(spark.sparkContext.defaultParallelism)
 
 
 def _wide_merge_precheck(table, source, t_pf, s_pf, optional_fids, limit, spark):

@@ -341,6 +341,12 @@ _DEFAULT_MAX_LISTED_FILES = 100_000
 # 1.37M-delete scan)
 _DRIVER_DECODE_MAX_POSITIONS = 100_000
 
+# live data-file entries still to decode at which executor planning
+# beats the driver (SCALE.md "Planning crossover": between 30k and 50k
+# at local[4]). Local planning costs ~c·N, executor planning F + c·N/p,
+# so more cores than 4 move the crossover down by at most 4/3.
+_EXECUTOR_PLAN_MIN_ENTRIES = 40_000
+
 
 def _prop_int(props, key: str, default: int) -> int:
     """Integer table property `key`; a missing or malformed value reads
@@ -349,16 +355,6 @@ def _prop_int(props, key: str, default: int) -> int:
         return int(props.get(key, default))
     except (TypeError, ValueError):
         return default
-
-
-def _distributed_planning_minima(props) -> tuple[int, int]:
-    """(`read.distributed-planning.min-manifests`, `...min-files`): the
-    manifest and live-file counts at which planning fans out to
-    executors. 0 disables that trigger."""
-    return (
-        _prop_int(props, "read.distributed-planning.min-manifests", 64),
-        _prop_int(props, "read.distributed-planning.min-files", 50_000),
-    )
 
 
 def _live_data_files(manifests) -> int:
@@ -371,6 +367,14 @@ def _live_data_files(manifests) -> int:
         for m in manifests
         if m.content == ManifestContent.DATA
     )
+
+
+def _plan_on_executors(manifests) -> bool:
+    """True when decoding `manifests` should fan out to executors: their
+    live data-file entries that are not cache-resident reach
+    _EXECUTOR_PLAN_MIN_ENTRIES. O(manifests); a warm snapshot counts 0."""
+    cold = (m for m in manifests if not is_resident(m.manifest_path))
+    return _live_data_files(cold) >= _EXECUTOR_PLAN_MIN_ENTRIES
 
 
 def _rows_frame(spark, rows, ddl: str):
@@ -937,49 +941,20 @@ class Scan:
     # ----------------------------------------------------------- execution
 
     def plan_files_auto(self, spark) -> list[FileScanTask]:
-        """Route planning by metadata size: small snapshots plan on the
-        driver (no job overhead); larger ones fan the per-manifest entry
-        reads out across executors (plan_files_distributed), bounding
-        driver work at O(manifests + matching files) instead of O(all
-        entries). Two triggers, either routes distributed:
-
-          * manifest count >= `read.distributed-planning.min-manifests`
-            (default 64) — many small manifests;
-          * total live file count >= `read.distributed-planning.
-            min-files` (default 50000, the measured local/distributed
-            crossover on 32 cores — see SCALE.md) — few-but-FAT
-            manifests, the shape merge-append produces. Counted from
-            the manifest-list rows already in memory (added+existing
-            counts), so the check itself is O(manifests).
-
-        Set a threshold to 0 to disable that trigger. A snapshot with at
-        least 90% of its manifests cache-resident always plans locally."""
+        """Route planning by the decode still to pay: the driver plans
+        unless the live data-file entries of non-resident manifests
+        reach _EXECUTOR_PLAN_MIN_ENTRIES (`_plan_on_executors`), in
+        which case the entry reads fan out across executors
+        (plan_files_distributed), bounding driver work at
+        O(manifests + matching files). A cache-warm snapshot always
+        plans locally: re-evaluating cached blocks beats a Spark job's
+        fixed launch cost."""
         snap = self.snapshot()
-        if snap is not None and spark is not None:
-            min_manifests, min_files = _distributed_planning_minima(
-                self.table.metadata.properties
-            )
-            manifests = snap.manifests()
-            if (0 < min_manifests <= len(manifests)) or (
-                0 < min_files <= _live_data_files(manifests)
-            ):
-                # re-plan of a cache-warm snapshot (e.g. a NEW filter on
-                # a just-scanned table: plan-memo miss, manifest-cache
-                # hit): the local planner re-evaluates cached manifest
-                # blocks, much faster than the
-                # distributed job's fixed launch cost (bench planning
-                # block, warm attempts) and without spending cluster
-                # resources on planning. Width is no longer the right
-                # routing signal when the decode is already paid.
-                cached = sum(is_resident(m.manifest_path) for m in manifests)
-                if cached >= 0.9 * len(manifests):
-                    return self.plan_files()
-                # same memo as the local planner (the two return the
-                # identical file set — bench-asserted), so a repeated
-                # scan skips the Spark planning job too
-                return self._memoized(
-                    snap, lambda: plan_files_distributed(self, spark)
-                )
+        if snap is not None and spark is not None and _plan_on_executors(snap.manifests()):
+            # same memo as the local planner (the two return the
+            # identical file set — bench-asserted), so a repeated
+            # scan skips the Spark planning job too
+            return self._memoized(snap, lambda: plan_files_distributed(self, spark))
         return self.plan_files()
 
     def _stream_plan_route(self, spark):
@@ -1091,21 +1066,9 @@ class Scan:
             return False
         if self.include_row_lineage or self.snapshot() is None:
             return False
+        # read.spark.max-listed-files <= 0 turns streaming off
         max_listed = self._max_listed_files()
-        if max_listed <= 0:
-            return False
-        n_files = _live_data_files(self.snapshot().manifests())
-        # streaming rides the distributed prune machinery, so the same
-        # knobs that disable distributed planning (both minima set to 0,
-        # the codebase's convention) disable it; a snapshot past the
-        # wide-read threshold but under the minima still streams — the
-        # prune job just degrades to a few tasks
-        min_manifests, min_files = _distributed_planning_minima(
-            self.table.metadata.properties
-        )
-        if min_manifests <= 0 and min_files <= 0:
-            return False
-        return n_files > max_listed
+        return 0 < max_listed < _live_data_files(self.snapshot().manifests())
 
     def to_df(self, spark, tasks=None):
         """Data-plane execution — SURVEY §3.1 step 7. The driver/executor
@@ -2450,18 +2413,16 @@ class Table(StaticTable):
             "added_rows_count bigint",
         )
 
-    # distribute per-entry metadata tables at the same manifest count
-    # the planner fans out at — a million-file snapshot's `files` table
-    # would otherwise decode every manifest SEQUENTIALLY on the driver
+    # distribute per-entry metadata tables on the planner's rule — a
+    # million-file snapshot's `files` table would otherwise decode every
+    # manifest SEQUENTIALLY on the driver
     def _inspect_frame(self, spark, manifests, decode, out_ddl):
         """Metadata-table rows `decode(path, seq, spec_id)` makes from
         each of `manifests`: an executor fan-out (`_map_rows` over the
-        manifests, like the distributed planner) when there are >=
-        read.distributed-planning.min-manifests of them, else decoded
-        on the driver."""
+        manifests, like the distributed planner) when
+        `_plan_on_executors(manifests)`, else decoded on the driver."""
         work = [(m.manifest_path, m.sequence_number, m.partition_spec_id) for m in manifests]
-        min_manifests, _ = _distributed_planning_minima(self.metadata.properties)
-        if min_manifests <= 0 or len(work) < min_manifests:
+        if not _plan_on_executors(manifests):
             return _rows_frame(spark, [r for w in work for r in decode(*w)], out_ddl)
         schema = _arrow_schema_of(out_ddl)
 

@@ -233,7 +233,7 @@ def _column_paths(schema: Schema) -> dict:
     for list elements, ``key``/``value`` for maps) — ref
     arrow_utils.go:1139 resolves metrics overrides by full column path,
     not top-level name."""
-    from .types import ListType, MapType, NestedField, StructType
+    from .types import ListType, MapType, StructType
 
     paths: dict[str, int] = {}
 
@@ -298,8 +298,6 @@ def _stats_from_parquet(path: str, schema: Schema, modes: Optional[dict] = None)
     `modes` maps field_id → parsed metrics mode (resolve_metrics_modes);
     None means the truncate(16) default for every column. Column sizes
     are storage metrics and are kept under every mode."""
-    import pyarrow.parquet as pq
-
     from .conversions import to_bytes
     from .types import StructType
 
@@ -1273,12 +1271,7 @@ def _rewrite_parent_manifests(
     first_row_id — no ids are re-burned. `replaced_dv_refs` drops
     deletion-vector entries whose referenced data file got a new DV
     this commit (spec: at most one DV per data file)."""
-    from .manifest import (
-        DataFileContent,
-        ManifestContent,
-        read_manifest,
-        write_manifest,
-    )
+    from .manifest import ManifestContent, read_manifest, write_manifest
 
     v3 = md.format_version >= 3
     parent = md.current_snapshot()
@@ -1919,8 +1912,6 @@ def add_files(table, paths: list[str]) -> None:
     from footers — ref transaction.go:499-564 (AddFiles) +
     arrow_utils.go:1189-1257 (filesToDataFiles). Paths are recorded in
     normalized, absolute form (`_added_file_path`)."""
-    from .manifest import ManifestEntry, ManifestEntryStatus, write_manifest
-
     md = table.metadata
     schema = md.current_schema()
     if md.default_spec().fields:
@@ -2756,8 +2747,6 @@ def _spj_merge_route(table, spark, source, on):
         key's hash family matches (checked by the SPJ planner itself —
         probed here so incompatibility falls back instead of raising).
     """
-    from pyspark.sql import functions as F
-
     if not (hasattr(source, "scan") and hasattr(source, "spec")):
         return None
     # Source-size gate: a source small enough to broadcast merges
@@ -2796,13 +2785,7 @@ def _spj_merge_route(table, spark, source, on):
         )
         if src_rows < min_src:
             return None
-    from .spj import (
-        _hash_family,
-        _partition_fields_on,
-        _pick_copart_pair,
-        storage_partitioned_agg,
-        storage_partitioned_join,
-    )
+    from .spj import _hash_family, _partition_fields_on, _pick_copart_pair
 
     t_schema, s_schema = table.schema(), source.schema()
     copart_key = None
@@ -3107,10 +3090,6 @@ def merge(
     (the upsert/key-replacement contract); rows the merge never touched
     keep their lineage.
     """
-    from pyspark.sql import functions as F
-
-    from .types import schema_to_spark_struct
-
     md = table.metadata
     schema = md.current_schema()
     fields = _resolve_key_fields(schema, on)

@@ -1425,51 +1425,58 @@ def ice_spj(spark, sf_dir):
     fused_total = fused.agg(F.sum("n")).first()[0]
     assert fused_total == df.count(), "fused join→agg lost/duplicated rows"
 
-    # r14: the same join above the distributed-planning threshold must
+    # r14: the same join above the executor-planning constant must
     # route through executor-side bucket grouping (blob frames — the
     # driver never collects a file descriptor) and return exactly the
-    # driver-planned rows: count + price checksum cross-checked
+    # driver-planned rows: count + price checksum cross-checked. The
+    # constant is lowered only while the frames are built: each join
+    # picks its route when it is called.
+    from ..iceberg import table as T
     from ..iceberg.spj import _spj_wide
 
-    for t in (to, tc, tf):
-        t.properties["read.distributed-planning.min-manifests"] = "1"
-    assert _spj_wide(to, spark), "distributed SPJ planning did not engage"
-    dist_df = storage_partitioned_join(
-        spark,
-        to,
-        tc,
-        on=("o_custkey", "c_custkey"),
-        left_select=["o_custkey", "o_totalprice"],
-        right_select=["c_custkey", "c_mktsegment"],
-    )
-    dplan = dist_df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in dplan
-    assert "hashpartitioning(o_custkey" not in dplan
-    chk = [
-        F.count("*").alias("n"),
-        F.expr(
-            "CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DECIMAL(18,2))"
-        ).alias("s"),
-    ]
-    assert dist_df.agg(*chk).collect() == df.agg(*chk).collect(), (
-        "distributed SPJ planning diverged from the driver-planned join"
-    )
+    saved = T._EXECUTOR_PLAN_MIN_ENTRIES
+    T._EXECUTOR_PLAN_MIN_ENTRIES = 1
+    try:
+        assert _spj_wide(to, spark), "distributed SPJ planning did not engage"
+        dist_df = storage_partitioned_join(
+            spark,
+            to,
+            tc,
+            on=("o_custkey", "c_custkey"),
+            left_select=["o_custkey", "o_totalprice"],
+            right_select=["c_custkey", "c_mktsegment"],
+        )
+        dplan = dist_df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in dplan
+        assert "hashpartitioning(o_custkey" not in dplan
+        chk = [
+            F.count("*").alias("n"),
+            F.expr(
+                "CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DECIMAL(18,2))"
+            ).alias("s"),
+        ]
+        assert dist_df.agg(*chk).collect() == df.agg(*chk).collect(), (
+            "distributed SPJ planning diverged from the driver-planned join"
+        )
 
-    # 3-way star (orders⋈customer⋈flags, one task pass) carries the vip
-    # count into the oracle-hashed output; the flags side has every
-    # custkey, so row multiplicity equals the 2-way join's. The sides
-    # are still above the lowered threshold, so the star's buckets ALSO
-    # group executor-side — the oracle hash rides the r14 route.
-    star = storage_partitioned_star_join(
-        spark,
-        [
-            {"table": to, "key": "o_custkey",
-             "select": ["o_custkey", "o_totalprice"]},
-            {"table": tc, "key": "c_custkey",
-             "select": ["c_custkey", "c_mktsegment"]},
-            {"table": tf, "key": "f_custkey", "select": ["f_custkey", "vip"]},
-        ],
-    )
+        # 3-way star (orders⋈customer⋈flags, one task pass) carries the
+        # vip count into the oracle-hashed output; the flags side has
+        # every custkey, so row multiplicity equals the 2-way join's.
+        # The sides are still above the lowered constant, so the star's
+        # buckets ALSO group executor-side — the oracle hash rides the
+        # r14 route.
+        star = storage_partitioned_star_join(
+            spark,
+            [
+                {"table": to, "key": "o_custkey",
+                 "select": ["o_custkey", "o_totalprice"]},
+                {"table": tc, "key": "c_custkey",
+                 "select": ["c_custkey", "c_mktsegment"]},
+                {"table": tf, "key": "f_custkey", "select": ["f_custkey", "vip"]},
+            ],
+        )
+    finally:
+        T._EXECUTOR_PLAN_MIN_ENTRIES = saved
     return star.groupBy("c_mktsegment").agg(
         F.count("*").alias("n"),
         F.expr("CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)").alias("tot"),

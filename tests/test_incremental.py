@@ -97,16 +97,16 @@ def test_incremental_rejects_non_ancestor(fs_catalog, spark, lineitem_df):
 
 
 def test_incremental_never_routes_to_full_snapshot_planner(
-    fs_catalog, spark, lineitem_df
+    fs_catalog, spark, lineitem_df, monkeypatch
 ):
     """Review fix: IncrementalAppendScan inherits plan_files_auto, and
-    above the distributed-planning threshold the FULL-snapshot planner
+    above the executor-planning constant the FULL-snapshot planner
     would ignore the range, silently returning the whole table. The
     incremental override must keep the O(appended manifests) walk."""
+    from iceberg_go_distributed_spark.iceberg import table as table_mod
+
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 0)
     t = fs_catalog.create_table("db.inc_auto", LINEITEM_SCHEMA)
-    tx = t.transaction()
-    tx.set_properties({"read.distributed-planning.min-manifests": "1"})
-    tx.commit()
     t.append(lineitem_df.limit(50).coalesce(1))
     cp = t.current_snapshot().snapshot_id
     t.append(lineitem_df.limit(100).where("l_orderkey % 2 = 0").coalesce(1))

@@ -584,17 +584,19 @@ def test_read_fills_defaults_without_a_footer_probe(spark, tmp_path, reader):
     assert all(r.cat == "dflt" for r in rows)
 
 
-def test_driver_built_frames_scan_one_arrow_table(spark, tmp_path):
+def test_driver_built_frames_scan_one_arrow_table(spark, tmp_path, monkeypatch):
     """The lineage map, the executor DV decode's descriptor frame and the
     metadata-table fan-out's work frame each reach the JVM as one Arrow
     table (`LocalTableScan`), never as an RDD of Python rows that a
     Python-worker stage must deserialize."""
+    from iceberg_go_distributed_spark.iceberg import table as table_mod
+
     t = FileSystemCatalog(str(tmp_path / "wh")).create_table("db.frames", SCHEMA)
     t.upgrade_format_version(3)
     t.append(_lineitem_like(spark).repartition(2))
     t.delete_where(spark, E.less_than("id", 5))
     t.refresh()
-    t.properties["read.distributed-planning.min-manifests"] = "1"
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 0)
     tasks = t.scan().plan_files()
     dvs = sorted(
         {

@@ -185,15 +185,15 @@ def test_distributed_planning_matches_local(big_table, spark):
 
 def test_auto_route_to_distributed_planning(big_table, spark, monkeypatch):
     """Scan.plan_files_auto routes through plan_files_distributed once
-    the snapshot's manifest count crosses the (property-tunable)
-    threshold, and the routed plan is identical to the local one —
-    to_df/count pick the route up transparently."""
+    the entries left to decode reach `_EXECUTOR_PLAN_MIN_ENTRIES`, and
+    the routed plan is identical to the local one — to_df/count pick
+    the route up transparently."""
     from iceberg_go_distributed_spark.iceberg import table as table_mod
 
     scan = big_table.scan(row_filter=E.equal("day_key", 1234))
     local = {t.file.file_path for t in scan.plan_files()}
 
-    # default threshold (64) > 20 manifests: local planning
+    # 2,000 entries, far below the constant: local planning
     calls = []
     orig = table_mod.plan_files_distributed
     monkeypatch.setattr(
@@ -204,17 +204,17 @@ def test_auto_route_to_distributed_planning(big_table, spark, monkeypatch):
     auto = {t.file.file_path for t in scan.plan_files_auto(spark)}
     assert auto == local and not calls
 
-    # lowered threshold: the same call fans out to executors. Clear the
+    # lowered constant: the 19 manifests the filter did not decode are
+    # still cold, so the same call fans out to executors. Clear the
     # plan memo first — a repeated identical scan would (by design) be
     # served from it before the router ever runs, and this test is
     # about the ROUTER.
-    big_table.metadata.properties["read.distributed-planning.min-manifests"] = "2"
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 2)
     table_mod._PLAN_CACHE.clear()
     auto2 = {t.file.file_path for t in scan.plan_files_auto(spark)}
     assert auto2 == local and calls
     # the metadata-only count fast path rides the same router
     assert big_table.scan().count(spark) == N_MANIFESTS * FILES_PER_MANIFEST * 1000
-    big_table.metadata.properties.pop("read.distributed-planning.min-manifests")
 
 
 def test_planbench_builder_local_dist_auto_agree(tmp_path, spark):
@@ -230,7 +230,7 @@ def test_planbench_builder_local_dist_auto_agree(tmp_path, spark):
     )
     from iceberg_go_distributed_spark.iceberg.table import plan_files_distributed
 
-    n_manifests, files_per = 70, 20  # above the 64-manifest auto threshold
+    n_manifests, files_per = 70, 20
     t = build_wide_metadata_table(
         str(tmp_path / "wh"), n_manifests, files_per
     )
@@ -248,50 +248,52 @@ def test_planbench_builder_local_dist_auto_agree(tmp_path, spark):
     assert len(t.scan().plan_files()) == n_manifests * files_per
 
 
-def test_auto_route_triggers_on_file_count_for_fat_manifests(tmp_path, spark):
-    """Merge-append produces FEW but FAT manifests — a table can hold
-    millions of files in under 64 manifests, so routing on manifest
-    count alone would plan it on the driver. The file-count trigger
-    (read.distributed-planning.min-files, computed from manifest-list
-    added+existing counts, O(manifests)) must route it distributed."""
+def test_auto_route_triggers_on_file_count_for_fat_manifests(
+    tmp_path, spark, monkeypatch
+):
+    """The route counts live data-file entries still to decode (from
+    manifest-list added+existing counts and cache residency,
+    O(manifests)), not manifests: many small cold manifests plan on the
+    driver, few FAT cold ones (the shape merge-append produces) go to
+    executors once their entries reach the constant, and the same
+    snapshot plans locally once its manifests are resident."""
     from iceberg_go_distributed_spark.iceberg import table as table_mod
     from iceberg_go_distributed_spark.iceberg.planbench import (
         build_wide_metadata_table,
         selective_filter,
     )
 
-    n_manifests, files_per = 4, 50  # 200 files, far below 64 manifests
-    t = build_wide_metadata_table(str(tmp_path / "wh"), n_manifests, files_per)
-    tx = t.transaction()
-    tx.set_properties({"read.distributed-planning.min-files": "100"})
-    tx.commit()
-    flt, n_match = selective_filter(n_manifests, files_per)
-
     calls = []
     orig = table_mod.plan_files_distributed
+    monkeypatch.setattr(
+        table_mod,
+        "plan_files_distributed",
+        lambda s, sp: calls.append(1) or orig(s, sp),
+    )
 
-    def spy(scan, sp):
-        calls.append(1)
-        return orig(scan, sp)
+    # 64 cold manifests x 10 files: 640 entries, far below the constant
+    # — the driver plans it (a Spark job here measured 15x slower)
+    many = build_wide_metadata_table(str(tmp_path / "many"), 64, 10)
+    flt, n_match = selective_filter(64, 10)
+    assert len(many.scan(row_filter=flt).plan_files_auto(spark)) == n_match
+    assert not calls, "many small cold manifests went to executors"
 
-    table_mod.plan_files_distributed = spy
-    try:
-        got = t.scan(row_filter=flt).plan_files_auto(spark)
-    finally:
-        table_mod.plan_files_distributed = orig
+    n_manifests, files_per = 4, 50  # 200 files in 4 cold manifests
+    t = build_wide_metadata_table(str(tmp_path / "wh"), n_manifests, files_per)
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 100)
+    flt, n_match = selective_filter(n_manifests, files_per)
+    got = t.scan(row_filter=flt).plan_files_auto(spark)
     assert calls, "fat-manifest table did not route to distributed planning"
     assert len(got) == n_match
 
-    # raising the file threshold back above the table size routes local
-    tx = t.transaction()
-    tx.set_properties({"read.distributed-planning.min-files": "1000000"})
-    tx.commit()
+    # a local plan makes every manifest resident: nothing is left to
+    # decode, so the same snapshot now plans on the driver (the plan
+    # memo is cleared first, or it would answer both calls)
+    table_mod._PLAN_CACHE.clear()
+    t.scan(row_filter=flt).plan_files()
+    table_mod._PLAN_CACHE.clear()
     calls.clear()
-    table_mod.plan_files_distributed = spy
-    try:
-        got2 = t.scan(row_filter=flt).plan_files_auto(spark)
-    finally:
-        table_mod.plan_files_distributed = orig
+    got2 = t.scan(row_filter=flt).plan_files_auto(spark)
     assert not calls and len(got2) == n_match
 
 
@@ -382,21 +384,18 @@ def test_auto_route_prefers_local_when_cache_warm(big_table, spark, monkeypatch)
         "plan_files_distributed",
         lambda s, sp: calls.append(1) or orig(s, sp),
     )
-    big_table.metadata.properties["read.distributed-planning.min-manifests"] = "2"
-    try:
-        table_mod._PLAN_CACHE.clear()
-        auto = {t.file.file_path for t in scan.plan_files_auto(spark)}
-        assert auto == local and not calls, (
-            "warm-cache re-plan must stay on the local planner"
-        )
-    finally:
-        big_table.metadata.properties.pop(
-            "read.distributed-planning.min-manifests", None
-        )
+    # any cold entry would now route to executors; a warm snapshot has
+    # none
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 1)
+    table_mod._PLAN_CACHE.clear()
+    auto = {t.file.file_path for t in scan.plan_files_auto(spark)}
+    assert auto == local and not calls, (
+        "warm-cache re-plan must stay on the local planner"
+    )
 
 
 def test_live_data_file_count_reads_unknown_counts_as_zero():
-    """The route triggers' live-file count (`plan_files_auto`,
+    """The route triggers' live-file count (`_plan_on_executors`,
     `_stream_plan_eligible`, `spj._spj_wide`) sums added + existing files
     of DATA manifests only; a v1 list's null count (-1) counts as 0
     instead of taking 2 off the total."""

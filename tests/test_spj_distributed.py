@@ -2,14 +2,15 @@
 
 `_side_tasks` groups planned files by partition value in driver Python
 — O(files) driver memory per join side, the same collect the streaming
-plan→read eliminated for plain scans. Above the distributed-planning
-thresholds, `_side_blobs` groups the distributed prune frame's
-descriptors executor-side into one compressed blob row per bucket, and
+plan→read eliminated for plain scans. Once a side's live data files
+reach the executor-planning constant, `_side_blobs` groups the
+distributed prune frame's descriptors executor-side into one
+compressed blob row per bucket, and
 `_bucket_task_frame` joins the two sides' blob frames Spark-side —
 the driver never sees a file descriptor.
 
-These tests force the route by dropping the threshold to 1 manifest
-(`read.distributed-planning.min-manifests`) and pin parity against the
+These tests force the route by dropping the constant
+(`table._EXECUTOR_PLAN_MIN_ENTRIES`) to 0 and pin parity against the
 driver-grouped path on the shapes that distinguish them: null keys,
 oversized-bucket fragment splits (plain + fused two-phase), MOR tables
 (DVs + equality deletes matched inside the grouping task), as-of, and
@@ -50,9 +51,10 @@ def _bucketed(catalog, name, df, key, n=4):
     return t
 
 
-def _force_wide(*tables):
-    for t in tables:
-        t.properties["read.distributed-planning.min-manifests"] = "1"
+def _force_wide(monkeypatch):
+    from iceberg_go_distributed_spark.iceberg import table as table_mod
+
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 0)
 
 
 def _rows(df):
@@ -79,13 +81,13 @@ def lr_tables(spark, catalog):
 
 
 @pytest.mark.parametrize("how", ["inner", "left", "semi", "anti"])
-def test_spj_distributed_matches_driver_path(spark, lr_tables, how):
+def test_spj_distributed_matches_driver_path(spark, lr_tables, how, monkeypatch):
     tl, tr = lr_tables
     driver = _rows(
         storage_partitioned_join(spark, tl, tr, on=("k", "rk"), how=how)
     )
     assert not _spj_wide(tl, spark)
-    _force_wide(tl, tr)
+    _force_wide(monkeypatch)
     assert _spj_wide(tl, spark) and _spj_wide(tr, spark)
     dist_df = storage_partitioned_join(spark, tl, tr, on=("k", "rk"), how=how)
     assert driver == _rows(dist_df)
@@ -96,19 +98,19 @@ def test_spj_distributed_matches_driver_path(spark, lr_tables, how):
         assert not any(r[0] is None for r in driver)
 
 
-def test_spj_distributed_plan_no_descriptor_collect(spark, lr_tables):
+def test_spj_distributed_plan_no_descriptor_collect(spark, lr_tables, monkeypatch):
     """The distributed route's physical plan is blob-frame joins feeding
     mapInArrow — the prune/group/plan stages all show as executor
     operators, and no stage collects descriptors to the driver."""
     tl, tr = lr_tables
-    _force_wide(tl, tr)
+    _force_wide(monkeypatch)
     df = storage_partitioned_join(spark, tl, tr, on=("k", "rk"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan  # the bucket join tasks
     assert "FlatMapGroupsInPandas" in plan or "MapInPandas" in plan  # grouping
 
 
-def test_spj_distributed_oversized_bucket_splits(spark, catalog):
+def test_spj_distributed_oversized_bucket_splits(spark, catalog, monkeypatch):
     """Fragment-replicate under the byte budget, planned executor-side:
     results stay identical to the unsplit driver plan."""
     left = spark.createDataFrame(
@@ -118,7 +120,7 @@ def test_spj_distributed_oversized_bucket_splits(spark, catalog):
     tl = _bucketed(catalog, "sl", left, "k")
     tr = _bucketed(catalog, "sr", right, "rk")
     exp = _rows(storage_partitioned_join(spark, tl, tr, on=("k", "rk")))
-    _force_wide(tl, tr)
+    _force_wide(monkeypatch)
     got = _rows(
         storage_partitioned_join(
             spark, tl, tr, on=("k", "rk"), max_bucket_bytes=6000
@@ -135,7 +137,7 @@ def test_spj_distributed_oversized_bucket_splits(spark, catalog):
     assert "join.spj.max-bucket-bytes" in str(ei.value)
 
 
-def test_spj_distributed_with_deletes(spark, catalog):
+def test_spj_distributed_with_deletes(spark, catalog, monkeypatch):
     """DVs and equality deletes match inside the executor grouping task
     (sequence-gated, same `build_delete_matcher` the planners share)."""
     df = spark.createDataFrame(
@@ -162,7 +164,7 @@ def test_spj_distributed_with_deletes(spark, catalog):
     )
     tr = _bucketed(catalog, "mor_dim", right, "rk")
     exp = _rows(storage_partitioned_join(spark, t, tr, on=("k", "rk")))
-    _force_wide(t, tr)
+    _force_wide(monkeypatch)
     got_df = storage_partitioned_join(spark, t, tr, on=("k", "rk"))
     got = _rows(got_df)
     assert got == exp
@@ -171,7 +173,7 @@ def test_spj_distributed_with_deletes(spark, catalog):
     assert {r[2] for r in got if r[1] == 45} == {"UP45"}
 
 
-def test_spj_distributed_fused_agg_two_phase(spark, catalog):
+def test_spj_distributed_fused_agg_two_phase(spark, catalog, monkeypatch):
     """Fused join→agg with an over-budget bucket: split fragments route
     to the partial pipeline via the task frame's split flag — values
     bit-identical to the driver-planned twin."""
@@ -195,7 +197,7 @@ def test_spj_distributed_fused_agg_two_phase(spark, catalog):
             spark, tl, tr, on=("k", "rk"), aggs=aggs, group_keys=["k", "grp"]
         )
     )
-    _force_wide(tl, tr)
+    _force_wide(monkeypatch)
     got = _rows(
         storage_partitioned_join_agg(
             spark,
@@ -210,7 +212,7 @@ def test_spj_distributed_fused_agg_two_phase(spark, catalog):
     assert got == exp
 
 
-def test_spj_distributed_star_join(spark, catalog):
+def test_spj_distributed_star_join(spark, catalog, monkeypatch):
     """N-way star through the blob-frame route: parity with the driver
     plan, both plain and fused-with-forced-fact-split."""
     fact = spark.createDataFrame(
@@ -234,7 +236,7 @@ def test_spj_distributed_star_join(spark, catalog):
             group_keys=["k", "a"],
         )
     )
-    _force_wide(tf, t1, t2)
+    _force_wide(monkeypatch)
     got_df = storage_partitioned_star_join(spark, sides)
     plan = got_df._jdf.queryExecution().executedPlan().toString()
     # the star tasks read via mapInArrow; the only join operators in
@@ -253,7 +255,7 @@ def test_spj_distributed_star_join(spark, catalog):
     )
 
 
-def test_spj_merge_wide_precheck(spark, catalog):
+def test_spj_merge_wide_precheck(spark, catalog, monkeypatch):
     """MERGE with wide co-partitioned sides: the pre-check runs as
     Spark jobs (no O(files) driver collect), the SPJ legs engage, and
     the end state matches the driver-grouped twin."""
@@ -289,7 +291,7 @@ def test_spj_merge_wide_precheck(spark, catalog):
     exp = run_merge(tt_d, ts_d)
 
     tt_w, ts_w = build("wide")
-    _force_wide(tt_w, ts_w)
+    _force_wide(monkeypatch)
     assert _spj_wide(tt_w, spark)
     spj = _spj_merge_route(tt_w, spark, ts_w, ["id"])
     assert spj is not None, "wide pre-check refused an eligible merge"
@@ -298,13 +300,12 @@ def test_spj_merge_wide_precheck(spark, catalog):
     # over-budget bucket pair → pre-check returns None (falls back to
     # the regular path) instead of raising from an executor
     tt_o, ts_o = build("over")
-    _force_wide(tt_o, ts_o)
     tt_o.properties["join.spj.max-bucket-bytes"] = "10"
     assert _spj_merge_route(tt_o, spark, ts_o, ["id"]) is None
     assert run_merge(tt_o, ts_o) == exp
 
 
-def test_spj_distributed_agg_and_asof(spark, catalog):
+def test_spj_distributed_agg_and_asof(spark, catalog, monkeypatch):
     events = spark.createDataFrame(
         [(i % 6, i, float(i)) for i in range(600)],
         "k long, ts long, val double",
@@ -326,7 +327,7 @@ def test_spj_distributed_agg_and_asof(spark, catalog):
             right_cols=["px"],
         )
     )
-    _force_wide(te, tq)
+    _force_wide(monkeypatch)
     assert agg_exp == _rows(
         storage_partitioned_agg(
             spark, te, "k", {"n": ("ts", "count"), "s": ("val", "sum")}

@@ -708,7 +708,9 @@ def test_v3_lineage_over_name_mapped_files(fs_catalog, spark, tmp_path):
     assert {"_row_id"} <= set(pq.read_schema(task.file.file_path).names)
 
 
-def test_v3_lineage_survives_distributed_planning(fs_catalog, spark, lineitem_df):
+def test_v3_lineage_survives_distributed_planning(
+    fs_catalog, spark, lineitem_df, monkeypatch
+):
     """Review regression: the executor-side planner serializes DataFile
     descriptors; first_row_id must survive the round trip or every
     auto-routed lineage/changelog read fails on a valid table."""
@@ -733,9 +735,9 @@ def test_v3_lineage_survives_distributed_planning(fs_catalog, spark, lineitem_df
         for r in t.scan().with_row_lineage().to_df(spark).collect()
     }
     # force the distributed planner for every snapshot size
-    tx = t.transaction()
-    tx.set_properties({"read.distributed-planning.min-manifests": "1"})
-    tx.commit()
+    from iceberg_go_distributed_spark.iceberg import table as table_mod
+
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 0)
     t.refresh()
     scan = t.scan()
     assert len(scan.plan_files_auto(spark)) == len(scan.plan_files())

@@ -402,10 +402,11 @@ def test_distributed_read_full_type_surface(spark, catalog):
     assert _sorted_rows(dist) == listed_rows
 
 
-def test_metadata_tables_fan_out(spark, catalog):
+def test_metadata_tables_fan_out(spark, catalog, monkeypatch):
     """files/entries/partitions metadata tables decode manifests on
-    executors above read.distributed-planning.min-manifests — identical
-    rows to the driver-local decode."""
+    executors when `_plan_on_executors` says so — identical rows to the
+    driver-local decode."""
+    from iceberg_go_distributed_spark.iceberg import table as table_mod
     from iceberg_go_distributed_spark.iceberg.types import schema_from_spark
 
     df = spark.createDataFrame(
@@ -418,7 +419,9 @@ def test_metadata_tables_fan_out(spark, catalog):
     local_files = sorted(map(tuple, t.inspect_files(spark).collect()))
     local_entries = sorted(map(tuple, t.inspect_entries(spark).collect()))
     local_parts = sorted(map(tuple, t.inspect_partitions(spark).collect()))
-    t.properties["read.distributed-planning.min-manifests"] = "1"
+    # the local decode made every manifest resident: 0 forces the
+    # fan-out regardless
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 0)
     assert sorted(map(tuple, t.inspect_files(spark).collect())) == local_files
     assert (
         sorted(map(tuple, t.inspect_entries(spark).collect())) == local_entries
