@@ -124,11 +124,12 @@ def run_planning(spark):
     # files are fictitious; planning never opens them) with a filter on
     # a DATA column, so every manifest survives manifest-level pruning
     # and the planner must entry-decode all of them. Records the
-    # driver-local planner (ref scanner.go:343-406) vs the executor
-    # planner (`plan_files_distributed`, one mapInArrow job) side by
-    # side, plus the route plan_files_auto took. Routing counts the
-    # entries still to decode; SCALE.md "Planning crossover" has the
-    # sweep behind `table._EXECUTOR_PLAN_MIN_ENTRIES`.
+    # driver-local planner (ref scanner.go:343-406) vs the planner's
+    # executor leg (`plan_files_distributed`, one mapInArrow job, forced
+    # with every manifest cold) side by side, plus the route
+    # plan_files_auto took. Routing counts the cold entries that survive
+    # manifest pruning; SCALE.md "Planning crossover" has the sweep
+    # behind `table._EXECUTOR_PLAN_MIN_ENTRIES`.
     import shutil
     import tempfile
 
@@ -136,7 +137,28 @@ def run_planning(spark):
         build_wide_metadata_table,
         selective_filter,
     )
-    from iceberg_go_distributed_spark.iceberg.table import plan_files_distributed
+    from iceberg_go_distributed_spark.iceberg import manifest as MAN
+    from iceberg_go_distributed_spark.iceberg import table as TBL
+
+    def plan_on_executors(scan):
+        """`scan.plan_files_auto` with its executor leg forced: the
+        constant at 0 and the driver's manifest cache emptied, so every
+        surviving manifest is cold. Both are restored afterwards."""
+        saved = (
+            TBL._EXECUTOR_PLAN_MIN_ENTRIES,
+            MAN._OCF_CACHE,
+            MAN._OCF_CACHE_ENTRY_COUNT,
+        )
+        TBL._EXECUTOR_PLAN_MIN_ENTRIES = 0
+        MAN._OCF_CACHE, MAN._OCF_CACHE_ENTRY_COUNT = {}, 0
+        try:
+            return scan.plan_files_auto(spark)
+        finally:
+            (
+                TBL._EXECUTOR_PLAN_MIN_ENTRIES,
+                MAN._OCF_CACHE,
+                MAN._OCF_CACHE_ENTRY_COUNT,
+            ) = saved
 
     def bench_planning_shape(
         n_manifests, files_per_manifest, attempts, attempts_local=None
@@ -152,10 +174,8 @@ def run_planning(spark):
         try:
             pt = build_wide_metadata_table(wh, n_manifests, files_per_manifest)
             flt, _ = selective_filter(n_manifests, files_per_manifest)
-            plan_files_distributed(pt.scan(row_filter=flt), spark)  # warm workers
             scan = pt.scan(row_filter=flt)
-
-            from iceberg_go_distributed_spark.iceberg import table as TBL
+            plan_on_executors(scan)  # warm workers
 
             raw_attempts = {}
 
@@ -179,7 +199,7 @@ def run_planning(spark):
                 scan.plan_files, n=attempts_local, label="local"
             )
             dist_tasks, dist_sec = best_of(
-                lambda: plan_files_distributed(scan, spark), label="distributed"
+                lambda: plan_on_executors(scan), label="distributed"
             )
             assert sorted(t.file.file_path for t in local_tasks) == sorted(
                 t.file.file_path for t in dist_tasks
@@ -187,7 +207,9 @@ def run_planning(spark):
             # spy on the executor planner: the route auto actually took
             routed = []
             orig = TBL.plan_files_distributed
-            TBL.plan_files_distributed = lambda s, sp: routed.append(1) or orig(s, sp)
+            TBL.plan_files_distributed = lambda s, sp, ms: (
+                routed.append(1) or orig(s, sp, ms)
+            )
             try:
                 auto_tasks, auto_sec = best_of(
                     lambda: scan.plan_files_auto(spark), label="auto"
@@ -195,7 +217,7 @@ def run_planning(spark):
             finally:
                 TBL.plan_files_distributed = orig
             assert len(auto_tasks) == len(local_tasks)
-            # repeat-scan memo (read.plan-cache, default on): the second
+            # repeat-scan memo: the second
             # plan of an unchanged table version is near-free — the
             # driver bench itself is a repeated-scan workload
             t0 = time.perf_counter()

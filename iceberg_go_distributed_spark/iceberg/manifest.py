@@ -1156,9 +1156,12 @@ def _read_manifest_block(path: str, stats_ids=(), full: bool = False) -> Manifes
     return block
 
 
-def is_resident(path: str) -> bool:
-    """True when the decoded entries of manifest `path` are cached."""
-    return path in _OCF_CACHE
+def is_resident(path: str, stats_ids=()) -> bool:
+    """True when manifest `path` is cached in a block that holds the stats
+    of `stats_ids`, so a read of them decodes nothing. A block decoded
+    for other predicate columns is not resident for these."""
+    block = _OCF_CACHE.get(path)
+    return block is not None and (not stats_ids or block.covers(stats_ids))
 
 
 def map_manifests(fn, manifests, concurrency: int = 1) -> list:

@@ -238,18 +238,17 @@ def _side_blobs(table, pf, row_filter, spark):
     partition value in a Spark job and come back as ONE compressed
     blob row per bucket — (part, files, bytes, nfiles) — so the driver
     never materializes O(files) descriptors per join side (the same
-    move `_stream_plan_route` made for plain scans). Delete
-    descriptors are O(small) and collect driver-side; sequence-gated
-    matching (`build_delete_matcher`) runs inside the grouping task.
+    move `_stream_plan_route` made for plain scans). Deletes are
+    O(small) and planned on the driver with the prune frame;
+    sequence-gated matching (`build_delete_matcher`) runs inside the
+    grouping task.
 
     Returns (frame, residual) — the same residual contract as
     `_side_tasks`."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from .expressions import AlwaysTrue, bind_expr, rewrite_not
     from .table import _distributed_prune_frame_cached, _keep_persisted
-    from .write import _decode_descriptor
 
     scan = (
         table.scan(row_filter=row_filter)
@@ -281,21 +280,12 @@ def _side_blobs(table, pf, row_filter, spark):
             return hit, resid
     out_schema = "part string, files string, bytes long, nfiles long"
     # the memoized frame is persisted, so the several SPJ legs a MERGE
-    # plans (and the delete collect below) share ONE prune job per side
-    frame, n_del = _distributed_prune_frame_cached(scan, spark)
+    # plans share ONE prune job per side
+    frame, delete_rows = _distributed_prune_frame_cached(scan, spark)
     if frame is None:
         return spark.createDataFrame([], out_schema), resid
-    delete_rows = []
-    if n_del:
-        delete_rows = sorted(
-            (
-                (r.seq, _decode_descriptor(r.descriptor))
-                for r in frame.where(F.col("kind") == 1).collect()
-            ),
-            key=lambda t: t[0],
-        )
     pf_name = pf.name
-    data = frame.where(F.col("kind") == 0).select("seq", "descriptor")
+    data = frame.select("seq", "descriptor")
 
     # the blob entries need only (partition value, path, size); one
     # light json parse per descriptor extracts them and the grouping
@@ -555,8 +545,7 @@ def _wide_merge_precheck(table, source, t_pf, s_pf, optional_fids, limit, spark)
                 yield pd.DataFrame({"ok": [ok]})
 
             flags = (
-                frame.where("kind = 0")
-                .select("descriptor")
+                frame.select("descriptor")
                 .mapInPandas(check, "ok boolean")
                 .collect()
             )

@@ -71,3 +71,35 @@ def ducks():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def executor_plan(spark, monkeypatch):
+    """`plan(scan)`: `scan.plan_files_auto(spark)` with the collected
+    planner's executor leg forced — `_EXECUTOR_PLAN_MIN_ENTRIES` lowered
+    to 0 and the driver's manifest cache emptied, so every surviving
+    data manifest is cold and goes to the one executor job. Asserts
+    that `plan_files_distributed` ran exactly once; the constant and
+    the cache are restored when `plan` returns."""
+    from iceberg_go_distributed_spark.iceberg import manifest as M
+    from iceberg_go_distributed_spark.iceberg import table as T
+
+    def plan(scan):
+        calls = []
+        orig = T.plan_files_distributed
+        with monkeypatch.context() as mp:
+            mp.setattr(T, "_EXECUTOR_PLAN_MIN_ENTRIES", 0)
+            mp.setattr(M, "_OCF_CACHE", {})
+            mp.setattr(M, "_OCF_CACHE_ENTRY_COUNT", 0)
+            mp.setattr(
+                T,
+                "plan_files_distributed",
+                lambda s, sp, ms: calls.append(ms) or orig(s, sp, ms),
+            )
+            T._PLAN_CACHE.clear()
+            tasks = scan.plan_files_auto(spark)
+        T._PLAN_CACHE.clear()
+        assert len(calls) == 1, f"executor leg ran {len(calls)} times"
+        return tasks
+
+    return plan

@@ -473,3 +473,18 @@ def read_datum(buf: BinaryIO, schema: Any) -> Any:
                 out[k] = read_datum(buf, schema["values"])
         return out
     raise TypeError(f"unsupported avro type {t!r}")
+
+
+def plan_fields(tasks) -> list:
+    """The fields every planning route must agree on, per task:
+    (file_path, data_sequence_number, first_row_id, sorted delete
+    paths), sorted by file path."""
+    return sorted(
+        (
+            t.file.file_path,
+            t.data_sequence_number,
+            t.file.first_row_id,
+            tuple(sorted(d.file_path for d in t.delete_files)),
+        )
+        for t in tasks
+    )

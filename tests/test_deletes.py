@@ -338,11 +338,13 @@ def test_equality_delete_null_keys(fs_catalog, spark):
     assert left == {3}, f"null-keyed rows must be deleted too, got {left}"
 
 
-def test_distributed_planner_handles_delete_tables(fs_catalog, spark, lineitem_df):
+def test_distributed_planner_handles_delete_tables(
+    fs_catalog, spark, lineitem_df, executor_plan
+):
     """Executor-side planning must do the same sequence-gated delete
     matching as the local planner (ref scanner.go:268-309) — no driver
     fallback, identical task sets, identical scan results."""
-    from iceberg_go_distributed_spark.iceberg.table import plan_files_distributed
+    from oracles import plan_fields
 
     t = fs_catalog.create_table("db.dp_del", LINEITEM_SCHEMA)
     t.append(lineitem_df.limit(200).coalesce(1))
@@ -352,11 +354,8 @@ def test_distributed_planner_handles_delete_tables(fs_catalog, spark, lineitem_d
     t.delete_by_keys(victims, ["l_orderkey"])  # equality
 
     local = t.scan().plan_files()
-    dist = plan_files_distributed(t.scan(), spark)
-    as_map = lambda tasks: {
-        x.file.file_path: sorted(d.file_path for d in x.delete_files) for x in tasks
-    }
-    assert as_map(dist) == as_map(local)
+    dist = executor_plan(t.scan())
+    assert plan_fields(dist) == plan_fields(local)
     assert any(x.delete_files for x in dist), "expected matched delete files"
     # both kinds of deletes must appear in the matched sets
     kinds = {d.content for x in dist for d in x.delete_files}

@@ -235,12 +235,14 @@ def test_dv_only_deletes_its_referenced_file(fs_catalog, spark, sf_dir, tmp_path
 
 
 def test_distributed_planning_matches_local_with_dv(
-    fs_catalog, spark, sf_dir, tmp_path
+    fs_catalog, spark, sf_dir, tmp_path, executor_plan
 ):
-    """plan_files_distributed must ship DV pointers through the
-    descriptor codec intact and match by referenced_data_file."""
+    """The executor leg must plan a DV table exactly as the driver does:
+    data descriptors round-trip the codec, and the DVs (planned on the
+    driver) keep their pointers and match by referenced_data_file."""
+    from oracles import plan_fields
+
     from iceberg_go_distributed_spark.datasets import load_table
-    from iceberg_go_distributed_spark.iceberg.table import plan_files_distributed
 
     li = load_table(spark, sf_dir, "lineitem")
     t = fs_catalog.create_table("db.li_dv3", LINEITEM_SCHEMA)
@@ -250,7 +252,8 @@ def test_distributed_planning_matches_local_with_dv(
     t2 = _attach_deletion_vector(t, tasks[0].file.file_path, [0, 5, 9], tmp_path)
 
     local = t2.scan().plan_files()
-    dist = plan_files_distributed(t2.scan(), spark)
+    dist = executor_plan(t2.scan())
+    assert plan_fields(dist) == plan_fields(local)
 
     def key(ts):
         return sorted(

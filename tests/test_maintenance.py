@@ -429,7 +429,7 @@ def test_rewrite_position_deletes_consolidates_dvs(fs_catalog, spark, lineitem_d
 
 
 def test_rewrite_position_deletes_respects_sequence_gate(
-    fs_catalog, spark, lineitem_df
+    fs_catalog, spark, lineitem_df, executor_plan
 ):
     """A data file appended AFTER the deletes must stay untouched by the
     consolidated DVs: entry-level sequence numbers gate `dv.seq >=
@@ -461,19 +461,11 @@ def test_rewrite_position_deletes_respects_sequence_gate(
         r.l_orderkey for r in t.scan().to_df(spark).select("l_orderkey").collect()
     )
     assert got == [k for k in range(90) if k not in (0, 1, 2, 30, 31, 32)]
-    # distributed planner agrees with the local one post-rewrite
-    from iceberg_go_distributed_spark.iceberg.table import plan_files_distributed
+    # the executor leg agrees with the driver plan post-rewrite
+    from oracles import plan_fields
 
     sc = t.scan()
-    local = {
-        (tk.file.file_path, tuple(sorted(d.file_path for d in tk.delete_files)))
-        for tk in sc.plan_files()
-    }
-    dist = {
-        (tk.file.file_path, tuple(sorted(d.file_path for d in tk.delete_files)))
-        for tk in plan_files_distributed(sc, spark)
-    }
-    assert local == dist
+    assert plan_fields(executor_plan(sc)) == plan_fields(sc.plan_files())
 
 
 def test_dv_lifecycle_expire_then_orphan_cleanup(fs_catalog, spark, lineitem_df):

@@ -53,8 +53,6 @@ def _table(tmp_path, with_deletes=False):
     )
     if with_deletes:
         _add_delete_manifests(t)
-    # every plan must reach the manifests, not the plan memo
-    t.metadata.properties["read.plan-cache.enabled"] = "false"
     return t
 
 
@@ -114,6 +112,8 @@ def _add_delete_manifests(t):
 
 
 def _plan(t):
+    # every plan must reach the manifests, not the plan memo
+    TBL._PLAN_CACHE.clear()
     return t.scan(row_filter=ROW_FILTER).plan_files()
 
 

@@ -139,11 +139,15 @@ def test_planning_latency(big_table):
     assert dt < 1.0, f"planning too slow: {dt:.3f}s per pruned scan"
 
 
-def test_distributed_planning_matches_local_under_deletes(tmp_path, spark, sf_dir):
+def test_distributed_planning_matches_local_under_deletes(
+    tmp_path, spark, sf_dir, executor_plan
+):
     """Equivalence on a real table carrying positional + equality deletes
-    AND a pruning filter: identical (file → delete set) maps."""
+    AND a pruning filter: the executor leg plans the same tasks, field
+    for field."""
+    from oracles import plan_fields
+
     from iceberg_go_distributed_spark.datasets import load_table
-    from iceberg_go_distributed_spark.iceberg.table import plan_files_distributed
     from iceberg_go_distributed_spark.iceberg.types import schema_from_spark
 
     li = load_table(spark, sf_dir, "lineitem").limit(400)
@@ -157,37 +161,33 @@ def test_distributed_planning_matches_local_under_deletes(tmp_path, spark, sf_di
 
     for expr in (None, E.less_than("l_orderkey", 900)):
         scan = t.scan(row_filter=expr) if expr is not None else t.scan()
-        as_map = lambda tasks: {
-            x.file.file_path: sorted(d.file_path for d in x.delete_files)
-            for x in tasks
-        }
-        local, dist = scan.plan_files(), plan_files_distributed(scan, spark)
-        assert as_map(dist) == as_map(local) and local
+        local = scan.plan_files()
+        assert plan_fields(executor_plan(scan)) == plan_fields(local) and local
+        assert any(x.delete_files for x in local)
 
 
-def test_distributed_planning_matches_local(big_table, spark):
-    """plan_files_distributed must produce exactly the local planner's
-    file set (executor-side pruning, driver gets only descriptors)."""
-    from iceberg_go_distributed_spark.iceberg.table import plan_files_distributed
+def test_distributed_planning_matches_local(big_table, executor_plan):
+    """The executor leg must produce exactly the local planner's tasks
+    (executor-side pruning, driver gets only descriptors)."""
+    from oracles import plan_fields
 
     for expr in (
         E.equal("day_key", 1234),
         E.and_(E.greater_than_or_equal("day_key", 500), E.less_than("day_key", 600)),
         E.equal("id", 1_234_567),
     ):
-        local = {t.file.file_path for t in big_table.scan(row_filter=expr).plan_files()}
-        dist = {
-            t.file.file_path
-            for t in plan_files_distributed(big_table.scan(row_filter=expr), spark)
-        }
-        assert dist == local and local
+        local = big_table.scan(row_filter=expr).plan_files()
+        dist = executor_plan(big_table.scan(row_filter=expr))
+        assert plan_fields(dist) == plan_fields(local) and local
 
 
 def test_auto_route_to_distributed_planning(big_table, spark, monkeypatch):
     """Scan.plan_files_auto routes through plan_files_distributed once
-    the entries left to decode reach `_EXECUTOR_PLAN_MIN_ENTRIES`, and
-    the routed plan is identical to the local one — to_df/count pick
-    the route up transparently."""
+    the cold surviving entries reach `_EXECUTOR_PLAN_MIN_ENTRIES`, ships
+    only the manifests that survived manifest pruning, and the routed
+    plan is identical to the local one — to_df/count pick the route up
+    transparently."""
+    from iceberg_go_distributed_spark.iceberg import manifest as manifest_mod
     from iceberg_go_distributed_spark.iceberg import table as table_mod
 
     scan = big_table.scan(row_filter=E.equal("day_key", 1234))
@@ -199,25 +199,32 @@ def test_auto_route_to_distributed_planning(big_table, spark, monkeypatch):
     monkeypatch.setattr(
         table_mod,
         "plan_files_distributed",
-        lambda s, sp: calls.append(1) or orig(s, sp),
+        lambda s, sp, ms: calls.append(ms) or orig(s, sp, ms),
     )
     auto = {t.file.file_path for t in scan.plan_files_auto(spark)}
     assert auto == local and not calls
 
-    # lowered constant: the 19 manifests the filter did not decode are
-    # still cold, so the same call fans out to executors. Clear the
-    # plan memo first — a repeated identical scan would (by design) be
-    # served from it before the router ever runs, and this test is
-    # about the ROUTER.
+    # lowered constant and an empty manifest cache: the one manifest
+    # that survives manifest pruning (day 1234, 100 entries) is cold, so
+    # the same call fans it out to executors — and only it; the 19
+    # pruned manifests never count. Clear the plan memo first — a
+    # repeated identical scan would (by design) be served from it
+    # before the router ever runs, and this test is about the ROUTER.
     monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 2)
+    monkeypatch.setattr(manifest_mod, "_OCF_CACHE", {})
+    monkeypatch.setattr(manifest_mod, "_OCF_CACHE_ENTRY_COUNT", 0)
     table_mod._PLAN_CACHE.clear()
     auto2 = {t.file.file_path for t in scan.plan_files_auto(spark)}
-    assert auto2 == local and calls
+    assert auto2 == local and len(calls) == 1
+    (shipped,) = calls[0]
+    assert local <= {
+        e.data_file.file_path for e in manifest_mod.read_manifest(shipped.manifest_path)
+    }
     # the metadata-only count fast path rides the same router
     assert big_table.scan().count(spark) == N_MANIFESTS * FILES_PER_MANIFEST * 1000
 
 
-def test_planbench_builder_local_dist_auto_agree(tmp_path, spark):
+def test_planbench_builder_local_dist_auto_agree(tmp_path, spark, executor_plan):
     """The planning-bench synthetic snapshot (bench.py's `planning`
     block) is a REAL table committed through the distributed-snapshot
     protocol: local, distributed, and auto-routed planning must return
@@ -228,7 +235,7 @@ def test_planbench_builder_local_dist_auto_agree(tmp_path, spark):
         build_wide_metadata_table,
         selective_filter,
     )
-    from iceberg_go_distributed_spark.iceberg.table import plan_files_distributed
+    from oracles import plan_fields
 
     n_manifests, files_per = 70, 20
     t = build_wide_metadata_table(
@@ -237,9 +244,9 @@ def test_planbench_builder_local_dist_auto_agree(tmp_path, spark):
     flt, n_match = selective_filter(n_manifests, files_per)
 
     scan = t.scan(row_filter=flt)
-    local = sorted(x.file.file_path for x in scan.plan_files())
-    dist = sorted(x.file.file_path for x in plan_files_distributed(scan, spark))
-    auto = sorted(x.file.file_path for x in scan.plan_files_auto(spark))
+    local = plan_fields(scan.plan_files())
+    dist = plan_fields(executor_plan(scan))
+    auto = plan_fields(scan.plan_files_auto(spark))
     assert local == dist == auto
     assert len(local) == n_match
     # entry-level pruning did the cutting: far fewer files than total
@@ -268,7 +275,7 @@ def test_auto_route_triggers_on_file_count_for_fat_manifests(
     monkeypatch.setattr(
         table_mod,
         "plan_files_distributed",
-        lambda s, sp: calls.append(1) or orig(s, sp),
+        lambda s, sp, ms: calls.append(1) or orig(s, sp, ms),
     )
 
     # 64 cold manifests x 10 files: 640 entries, far below the constant
@@ -350,15 +357,11 @@ def test_plan_cache_repeat_scan_skips_manifest_reads(tmp_path, spark, monkeypatc
     t.refresh()
     assert len(t.scan().plan_files()) == 5 and len(reads) > n
 
-    # property kill switch
-    tx = t.transaction()
-    tx.set_properties({"read.plan-cache.enabled": "false"})
-    tx.commit()
-    t.refresh()
-    t.scan().plan_files()
+    # a cleared memo re-plans
     n = len(reads)
+    TBL._PLAN_CACHE.clear()
     t.scan().plan_files()
-    assert len(reads) > n, "disabled cache must re-plan"
+    assert len(reads) > n, "cleared memo must re-plan"
     TBL._PLAN_CACHE.clear()
 
 
@@ -382,7 +385,7 @@ def test_auto_route_prefers_local_when_cache_warm(big_table, spark, monkeypatch)
     monkeypatch.setattr(
         table_mod,
         "plan_files_distributed",
-        lambda s, sp: calls.append(1) or orig(s, sp),
+        lambda s, sp, ms: calls.append(1) or orig(s, sp, ms),
     )
     # any cold entry would now route to executors; a warm snapshot has
     # none
@@ -395,8 +398,8 @@ def test_auto_route_prefers_local_when_cache_warm(big_table, spark, monkeypatch)
 
 
 def test_live_data_file_count_reads_unknown_counts_as_zero():
-    """The route triggers' live-file count (`_plan_on_executors`,
-    `_stream_plan_eligible`, `spj._spj_wide`) sums added + existing files
+    """The route triggers' live-file count (`_plan_files_uncached`,
+    `_inspect_frame`, `_stream_plan_eligible`, `spj._spj_wide`) sums added + existing files
     of DATA manifests only; a v1 list's null count (-1) counts as 0
     instead of taking 2 off the total."""
     from iceberg_go_distributed_spark.iceberg.manifest import (
@@ -414,3 +417,115 @@ def test_live_data_file_count_reads_unknown_counts_as_zero():
     assert _live_data_files([]) == 0
     assert _live_data_files([m(3, 4), m(-1, -1), m(-1, 5), m(2, -1)]) == 14
     assert _live_data_files([m(3, 4), m(7, 7, ManifestContent.DELETES)]) == 7
+
+
+def _route_spy(monkeypatch):
+    """The manifest paths of every executor-leg call, per call."""
+    from iceberg_go_distributed_spark.iceberg import table as table_mod
+
+    calls = []
+    orig = table_mod.plan_files_distributed
+    monkeypatch.setattr(
+        table_mod,
+        "plan_files_distributed",
+        lambda s, sp, ms: calls.append([m.manifest_path for m in ms])
+        or orig(s, sp, ms),
+    )
+    return calls
+
+
+def _cold_cache(monkeypatch):
+    from iceberg_go_distributed_spark.iceberg import manifest as manifest_mod
+    from iceberg_go_distributed_spark.iceberg import table as table_mod
+
+    monkeypatch.setattr(manifest_mod, "_OCF_CACHE", {})
+    monkeypatch.setattr(manifest_mod, "_OCF_CACHE_ENTRY_COUNT", 0)
+    table_mod._PLAN_CACHE.clear()
+
+
+def test_partition_pruned_manifests_never_count_as_cold(tmp_path, spark, monkeypatch):
+    """`k == 7` on a cold planbench snapshot: 20 x 10 = 200 cold
+    entries, but manifest pruning leaves one manifest of 10 entries, so
+    the driver plans it even with the constant at 100."""
+    from iceberg_go_distributed_spark.iceberg import table as table_mod
+    from iceberg_go_distributed_spark.iceberg.planbench import build_wide_metadata_table
+
+    t = build_wide_metadata_table(str(tmp_path / "wh"), 20, 10)
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 100)
+    calls = _route_spy(monkeypatch)
+    scan = t.scan(row_filter=E.equal("k", 7))
+    _cold_cache(monkeypatch)
+    assert len(scan.plan_files_auto(spark)) == 10 and not calls
+    _cold_cache(monkeypatch)
+    report = scan.plan_report()
+    assert (report["manifests_cold"], report["entries_cold"]) == (1, 10)
+    assert report["manifests_pruned"] == 19
+
+
+def test_half_resident_snapshot_ships_only_cold_manifests(tmp_path, spark, monkeypatch):
+    """On a snapshot whose first half is resident with the stats of the
+    filter column, the executor leg receives exactly the cold half, and
+    the mixed plan equals the driver plan field for field."""
+    from oracles import plan_fields
+
+    from iceberg_go_distributed_spark.iceberg import manifest as manifest_mod
+    from iceberg_go_distributed_spark.iceberg import table as table_mod
+    from iceberg_go_distributed_spark.iceberg.planbench import (
+        build_wide_metadata_table,
+        selective_filter,
+    )
+
+    n, per = 8, 10
+    t = build_wide_metadata_table(str(tmp_path / "wh"), n, per)
+    flt, n_match = selective_filter(n, per, frac=0.5)
+    _cold_cache(monkeypatch)
+    prime = E.and_(E.less_than("k", n // 2), E.greater_than_or_equal("v", 0))
+    t.scan(row_filter=prime).plan_files()
+    v_id = 2  # field id of `v`, the filter column
+    paths = [m.manifest_path for m in t.current_snapshot().manifests()]
+    cold = [p for p in paths if not manifest_mod.is_resident(p, (v_id,))]
+    assert len(cold) == n // 2
+
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", n // 2 * per)
+    calls = _route_spy(monkeypatch)
+    table_mod._PLAN_CACHE.clear()
+    auto = t.scan(row_filter=flt).plan_files_auto(spark)
+    assert calls == [cold]
+    table_mod._PLAN_CACHE.clear()
+    local = t.scan(row_filter=flt).plan_files()
+    assert plan_fields(auto) == plan_fields(local) and len(local) == n_match
+    assert [x.file.file_path for x in auto] == [x.file.file_path for x in local]
+
+
+def test_block_primed_on_other_column_counts_as_cold(tmp_path, spark, monkeypatch):
+    """A manifest cached with the stats of `k` only must be decoded again
+    for a `v` filter, so it counts as cold: the route's inputs say so
+    and the executor leg receives it."""
+    from iceberg_go_distributed_spark.iceberg import manifest as manifest_mod
+    from iceberg_go_distributed_spark.iceberg import table as table_mod
+    from iceberg_go_distributed_spark.iceberg.planbench import (
+        build_wide_metadata_table,
+        selective_filter,
+    )
+
+    n, per = 6, 10
+    t = build_wide_metadata_table(str(tmp_path / "wh"), n, per)
+    flt, _ = selective_filter(n, per)
+    _cold_cache(monkeypatch)
+    t.scan(row_filter=E.less_than("k", 100)).plan_files()
+    paths = [m.manifest_path for m in t.current_snapshot().manifests()]
+    assert all(manifest_mod.is_resident(p) for p in paths)
+    assert not any(manifest_mod.is_resident(p, (2,)) for p in paths)
+
+    scan = t.scan(row_filter=flt)
+    table_mod._PLAN_CACHE.clear()
+    report = scan.plan_report()
+    assert (report["manifests_cold"], report["entries_cold"]) == (n, n * per)
+
+    _cold_cache(monkeypatch)
+    t.scan(row_filter=E.less_than("k", 100)).plan_files()
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", n * per)
+    calls = _route_spy(monkeypatch)
+    table_mod._PLAN_CACHE.clear()
+    scan.plan_files_auto(spark)
+    assert calls == [paths]

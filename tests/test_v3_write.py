@@ -709,7 +709,7 @@ def test_v3_lineage_over_name_mapped_files(fs_catalog, spark, tmp_path):
 
 
 def test_v3_lineage_survives_distributed_planning(
-    fs_catalog, spark, lineitem_df, monkeypatch
+    fs_catalog, spark, lineitem_df, monkeypatch, executor_plan
 ):
     """Review regression: the executor-side planner serializes DataFile
     descriptors; first_row_id must survive the round trip or every
@@ -734,13 +734,19 @@ def test_v3_lineage_survives_distributed_planning(
         (r.l_orderkey, r.l_linenumber): r._row_id
         for r in t.scan().with_row_lineage().to_df(spark).collect()
     }
-    # force the distributed planner for every snapshot size
+    # force the executor leg: the constant at 0 and every manifest cold
+    from oracles import plan_fields
+
+    from iceberg_go_distributed_spark.iceberg import manifest as manifest_mod
     from iceberg_go_distributed_spark.iceberg import table as table_mod
 
-    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 0)
     t.refresh()
     scan = t.scan()
-    assert len(scan.plan_files_auto(spark)) == len(scan.plan_files())
+    assert plan_fields(executor_plan(scan)) == plan_fields(scan.plan_files())
+    monkeypatch.setattr(table_mod, "_EXECUTOR_PLAN_MIN_ENTRIES", 0)
+    monkeypatch.setattr(manifest_mod, "_OCF_CACHE", {})
+    monkeypatch.setattr(manifest_mod, "_OCF_CACHE_ENTRY_COUNT", 0)
+    table_mod._PLAN_CACHE.clear()
     dist = {
         (r.l_orderkey, r.l_linenumber): r._row_id
         for r in t.scan().with_row_lineage().to_df(spark).collect()

@@ -215,9 +215,9 @@ def test_distributed_read_empty_and_limit(spark, catalog):
 
 def _streams(plan: str) -> bool:
     """The streaming route's plan: the prune job's manifest work rows
-    (the `is_delete` column of `_distributed_prune_frame`) feed the
-    Arrow reader's `MapInArrow`."""
-    return "is_delete" in plan and "MapInArrow" in plan
+    (the `first_row_id` column of `table._prune_job`'s work frame) feed
+    the Arrow reader's `MapInArrow`."""
+    return "first_row_id" in plan and "MapInArrow" in plan
 
 
 def test_streaming_plan_read_matches_listed(spark, catalog):
@@ -404,8 +404,8 @@ def test_distributed_read_full_type_surface(spark, catalog):
 
 def test_metadata_tables_fan_out(spark, catalog, monkeypatch):
     """files/entries/partitions metadata tables decode manifests on
-    executors when `_plan_on_executors` says so — identical rows to the
-    driver-local decode."""
+    executors when their cold entries reach the executor-planning
+    constant — identical rows to the driver-local decode."""
     from iceberg_go_distributed_spark.iceberg import table as table_mod
     from iceberg_go_distributed_spark.iceberg.types import schema_from_spark
 
