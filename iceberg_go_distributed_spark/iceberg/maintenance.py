@@ -763,124 +763,12 @@ def compute_partition_statistics(table) -> dict:
     return entry
 
 
-# Per-worker LRU of decoded equality-delete key frames, shared by the
-# conversion fast path, SPJ bucket reads and the CDC stream source:
-# resolved at unpickle time in each reused Python worker, so the ~32
-# conversion tasks (or one micro-batch's file partitions) read each key
-# file ~once per worker instead of once per task. Bounded by slot count
-# × the callers' key-row bounds (maintenance.eq-convert.keys-max-rows,
-# read.cdc.eq-keys-max-rows).
-_EQ_KEY_FRAME_CACHE: dict = {}
-_EQ_KEY_FRAME_CACHE_MAX = 4
-
-
-def _eq_convert_key_frame(path, ids):
-    """Executor-side load of one equality-delete key file as a pandas
-    frame (columns f{fid}), LRU-cached per worker process. MODULE-LEVEL
-    on purpose: a loader nested inside the conversion task would be
-    cloudpickled BY VALUE with a fresh globals dict per task
-    deserialization — every task would see an empty cache and the
-    claimed cross-task reuse would never happen. A module-level function
-    pickles by reference and resolves `_EQ_KEY_FRAME_CACHE` in the
-    worker's imported module. Caller applies fileio config first. Key
-    columns resolve by parquet FIELD ID, so renames survive. Frames are
-    under the callers' key-row bounds and key-file paths are immutable,
-    so the cache is bounded and can never go stale."""
-    from . import fileio
-    from .reader import field_ids
-
-    k = (path, tuple(ids))
-    cached = _EQ_KEY_FRAME_CACHE.pop(k, None)
-    if cached is not None:
-        _EQ_KEY_FRAME_CACHE[k] = cached  # LRU refresh
-        return cached
-    with fileio.parquet_file(path) as kf:
-        kby = field_ids(kf.schema_arrow)
-        cols = [kby[i] for i in ids]
-        pdf = _exact_pandas(kf.read(columns=cols))
-    pdf.columns = [f"f{i}" for i in ids]
-    while len(_EQ_KEY_FRAME_CACHE) >= _EQ_KEY_FRAME_CACHE_MAX:
-        _EQ_KEY_FRAME_CACHE.pop(next(iter(_EQ_KEY_FRAME_CACHE)), None)
-    _EQ_KEY_FRAME_CACHE[k] = pdf
-    return pdf
-
-
-def _exact_pandas(tbl):
-    """`tbl` as pandas with integer columns in nullable dtypes: the
-    default bridge turns an integer column holding a null into float64,
-    which merges distinct keys above 2**53."""
-    import pandas as pd
-    import pyarrow as pa
-
-    ints = {getattr(pa, f"int{b}")(): getattr(pd, f"Int{b}Dtype")() for b in (8, 16, 32, 64)}
-    return tbl.to_pandas(types_mapper=ints.get)
-
-
-def _eq_matched_positions(pf, eq_sets, batch_rows: int = 131072):
-    """Global row positions of `pf` (an open ParquetFile) whose key tuple
-    appears in any equality-delete key set. Executor-side; memory is one
-    record batch + the (small, distinct) key frames.
-
-    eq_sets: [(field_ids, pandas frame with columns f{fid})]. Data
-    columns resolve by parquet FIELD ID (renames survive); a key column
-    absent from the file (added after it was written) reads as nulls.
-    Null semantics match the scan's eq-delete anti-join: NULL == NULL.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from .reader import field_ids
-
-    by_id = field_ids(pf.schema_arrow)
-    needed_ids = sorted({fid for ids, _ in eq_sets for fid in ids})
-    phys = [by_id[f] for f in needed_ids if f in by_id]
-
-    # split each key set: vectorized merge for fully-non-null key rows,
-    # tuple-set fallback for null-carrying ones (NULL must match NULL)
-    prepared = []
-    for ids, keys in eq_sets:
-        cols = [f"f{f}" for f in ids]
-        nn = keys.dropna(subset=cols) if len(keys) else keys
-        withnull = keys[keys[cols].isna().any(axis=1)] if len(keys) else keys
-        null_tuples = {
-            tuple(None if pd.isna(v) else v for v in row)
-            for row in withnull[cols].itertuples(index=False)
-        }
-        prepared.append((ids, cols, nn.drop_duplicates(), null_tuples))
-
-    out = []
-    off = 0
-    for batch in pf.iter_batches(columns=phys, batch_size=batch_rows):
-        pdf = _exact_pandas(batch)
-        pdf.columns = [f"f{f}" for f in needed_ids if f in by_id]
-        for f in needed_ids:
-            if f not in by_id:
-                pdf[f"f{f}"] = None  # column added after this file
-        n = len(pdf)
-        mask = np.zeros(n, dtype=bool)
-        pdf = pdf.reset_index(drop=True)
-        for ids, cols, nn, null_tuples in prepared:
-            if len(nn):
-                hit = (
-                    pdf[cols]
-                    .reset_index()
-                    .merge(nn, on=cols, how="inner")["index"]
-                    .to_numpy()
-                )
-                mask[hit] = True
-            if null_tuples:
-                rows_with_null = pdf[cols].isna().any(axis=1).to_numpy()
-                for i in np.flatnonzero(rows_with_null):
-                    t = tuple(
-                        None if pd.isna(v) else v for v in pdf[cols].iloc[i]
-                    )
-                    if t in null_tuples:
-                        mask[i] = True
-        out.append(np.flatnonzero(mask).astype("uint64") + np.uint64(off))
-        off += n
-    if not out:
-        return np.empty(0, dtype="uint64")
-    return np.concatenate(out)
+# Key-row bound of the eq→DV conversion fast path, which loads a data
+# file's applicable key files into each task's memory: right for typical
+# CDC commits, an OOM for a bulk-MERGE key file. Above it the file routes
+# to `_eq_convert_join_rows`, whose keys stay distributed. Manifest
+# record_count gives the exact key-row count driver-side for free.
+_EQ_CONVERT_KEYS_MAX_ROWS = 2_000_000
 
 
 def _dv_entries(collected, snapshot_id):
@@ -949,6 +837,7 @@ def convert_equality_deletes(table, spark) -> bool:
         read_manifest,
         write_manifest,
     )
+    from .reader import eq_key_fields, mapped_names, read_fields
     from .table import _map_rows
     from .write import (
         _DV_OUT_DDL,
@@ -985,21 +874,9 @@ def convert_equality_deletes(table, spark) -> bool:
         return False
 
     schema = md.current_schema()
-    by_id = {f.field_id: f for f in schema.fields}
     tasks = table.scan().plan_files_auto(spark)
-    # Executor-memory bound (style of the MOR driver-decode bound):
-    # the fast path loads each applicable key file as ONE pandas frame per
-    # task — right for typical CDC commits (one small key file per
-    # commit), an OOM for a bulk-MERGE key file at 100 TB. Above the
-    # bound, the file routes to the distributed join path instead of
-    # degrading into an unbounded frame. Manifest record_count is the
-    # exact key-row count, known driver-side for free.
-    try:
-        keys_max = int(
-            md.properties.get("maintenance.eq-convert.keys-max-rows", "2000000")
-        )
-    except (TypeError, ValueError):
-        keys_max = 2_000_000
+    key_fields = {f[0]: f for f in read_fields(schema)}
+    mapped = mapped_names(md.properties)
     rows = []
     big_tasks = []
     for t in tasks:
@@ -1010,14 +887,8 @@ def convert_equality_deletes(table, spark) -> bool:
         if not eqs:
             continue
         for d in eqs:
-            missing = [i for i in (d.equality_ids or []) if i not in by_id]
-            if missing:
-                raise ValueError(
-                    f"equality-delete file {d.file_path} keys on dropped "
-                    f"field ids {missing}; the delete cannot be evaluated "
-                    "against the current schema"
-                )
-        if sum(int(d.record_count or 0) for d in eqs) > keys_max:
+            eq_key_fields(key_fields, d.file_path, d.equality_ids or [])
+        if sum(int(d.record_count or 0) for d in eqs) > _EQ_CONVERT_KEYS_MAX_ROWS:
             big_tasks.append(t)
             continue
         rows.append(
@@ -1031,19 +902,15 @@ def convert_equality_deletes(table, spark) -> bool:
 
     def task(batches):
         from . import fileio
+        from .reader import eq_deleted_positions
 
-        # per-WORKER bounded LRU (Spark reuses Python workers): without
-        # it each task re-reads every key file. _eq_convert_key_frame is
-        # module-level so cloudpickle resolves it (and its cache) by
-        # reference in the worker's imported module — a nested closure
-        # got a fresh globals dict per task and the cache never shared.
         def new_positions(r):
-            eq_sets = [
-                (ids, _eq_convert_key_frame(path, ids))
+            eq_files = [
+                (path, eq_key_fields(key_fields, path, ids))
                 for path, ids in _json.loads(r["eq_json"])
             ]
             with fileio.parquet_file(r["data_file"]) as pf:
-                return _eq_matched_positions(pf, eq_sets)
+                return eq_deleted_positions(pf, eq_files, mapped)
 
         yield from _write_dv_batches(
             location, commit_uuid, "eqconv",
@@ -1113,7 +980,7 @@ def _eq_keys_df_arrow(spark, path: str, fields):
     """Distributed DataFrame over one equality-delete key file for URIs
     the JVM has no FileSystem for — ROW-GROUP-parallel executor-side
     arrow read. The join path exists precisely because the key file
-    exceeded `maintenance.eq-convert.keys-max-rows`, so a whole-file
+    exceeded `_EQ_CONVERT_KEYS_MAX_ROWS`, so a whole-file
     driver read here (the old `read_parquet_table(...).to_pandas()`
     fallback) would re-introduce the unbounded materialization the
     routing bound was built to prevent. Each task reads its row groups
@@ -1153,12 +1020,12 @@ def _eq_keys_df_arrow(spark, path: str, fields):
 def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
     """Distributed join-based DV computation for data files whose
     applicable equality-delete key files exceed
-    `maintenance.eq-convert.keys-max-rows` (default 2M key rows).
+    `_EQ_CONVERT_KEYS_MAX_ROWS` (2M key rows).
 
-    The fast path loads each key file as ONE pandas frame per executor
-    task (`_eq_matched_positions`) — right for typical CDC commits, an
+    The fast path loads each key file as ONE Arrow table per executor
+    task (`reader.eq_deleted_positions`) — right for typical CDC commits, an
     OOM for a bulk-MERGE commit whose key file carries 100M+ rows. This
-    path is the scan's distributed eq anti-join (table.py:862) turned
+    path is the scan's distributed eq anti-join (`Scan._anti_join_eq_keys`) turned
     LEFT SEMI: read the affected data files with `_metadata.row_index`
     positions (JVM scan, key columns only — pushdown and split planning
     intact), semi-join per eq-delete file (null-safe: NULL keys match

@@ -18,6 +18,9 @@ and positional-delete application are defined here exactly once:
                            files remove from one data file;
   * ``matched_positions`` — the file positions whose row a bound
                            predicate matches (DML's row matcher);
+  * ``eq_deleted_positions`` — the file positions equality-delete key
+                           files remove (the executor-side twin of the
+                           scan's null-safe anti-join);
   * ``read_file``        — one open, pruned columns, projection, and an
                            optional position drop.
 
@@ -242,6 +245,132 @@ def matched_positions(path, fields, mapped_names, bound, batch_rows=131072):
     if not parts:
         return np.empty(0, dtype=np.int64)
     return np.concatenate(parts)
+
+
+def _key_fill(t):
+    """The fixed non-null value of type `t` that stands in for a null
+    key value, whose flag column then tells the two apart."""
+    import pyarrow as pa
+
+    if pa.types.is_boolean(t):
+        v = False
+    elif pa.types.is_fixed_size_binary(t):
+        v = bytes(t.byte_width)
+    elif pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        v = b""
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        v = ""
+    else:
+        v = 0
+    return pa.scalar(v, t)
+
+
+def _eq_join_keys(data, fields):
+    """Join-ready key columns of `data` (projected onto `fields`): each
+    key column becomes `k<fid>`, a typed fill, and `n<fid>`, a flag.
+    Arrow's hash join never matches null to null and tells -0.0 from
+    0.0, so the flag carries null (1) and NaN (2) and the fill holds
+    the value, floats read as `c + 0.0`. The join then follows the
+    equality-delete rule of the scan's `eqNullSafe` anti-join: NULL =
+    NULL, NaN = NaN, NULL ≠ NaN and -0.0 = 0.0."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arrays, names = [], []
+    for fid, name, t, _d in fields:
+        c = data.column(name)
+        if pa.types.is_floating(t):
+            nan = pc.is_nan(c)
+            flag = pc.if_else(pc.is_null(c), 1, pc.if_else(nan, 2, 0))
+            c = pc.if_else(nan, pa.scalar(0.0, t), pc.add(c, pa.scalar(0.0, t)))
+        else:
+            flag = pc.is_null(c)
+        arrays += [pc.fill_null(c, _key_fill(t)), flag.cast(pa.int8())]
+        names += [f"k{fid}", f"n{fid}"]
+    return pa.table(arrays, names=names)
+
+
+# Per-worker LRU of join-ready equality-delete key tables, shared by the
+# eq→DV conversion, SPJ bucket reads and the CDC stream source: the
+# tasks one Python worker runs read each key file about once. Bounded by
+# slot count × the callers' key-row bounds (maintenance
+# `_EQ_CONVERT_KEYS_MAX_ROWS`, `read.cdc.eq-keys-max-rows`); key-file
+# paths are immutable, so an entry never goes stale.
+_EQ_KEY_CACHE: dict = {}
+_EQ_KEY_CACHE_MAX = 4
+
+
+def eq_key_table(path, fields):
+    """One equality-delete key file through `read_file` (columns by
+    field id, projected onto the key `fields`) as `_eq_join_keys`
+    columns, LRU-cached per worker process. MODULE-LEVEL on purpose:
+    cloudpickle ships a module-level function by reference, so tasks
+    resolve `_EQ_KEY_CACHE` in the worker's imported module; a nested
+    loader would be pickled by value with a fresh cache per task. The
+    caller applies fileio config first."""
+    k = (path, tuple((fid, str(t)) for fid, _n, t, _d in fields))
+    keys = _EQ_KEY_CACHE.pop(k, None)
+    if keys is None:
+        keys = _eq_join_keys(read_file(path, fields, {}), fields)
+        while len(_EQ_KEY_CACHE) >= _EQ_KEY_CACHE_MAX:
+            _EQ_KEY_CACHE.pop(next(iter(_EQ_KEY_CACHE)))
+    _EQ_KEY_CACHE[k] = keys  # (re)insert as most recent
+    return keys
+
+
+def eq_key_fields(keys, path, ids):
+    """The fields of equality-delete file `path`'s key columns `ids`,
+    from `keys` ({field_id: field} of the current schema). Refuses a key
+    column dropped from the schema: matching on the rest would
+    over-delete, and skipping the file would resurrect deleted rows."""
+    missing = [i for i in ids if i not in keys]
+    if missing:
+        raise ValueError(
+            f"equality-delete file {path} keys on dropped field ids "
+            f"{missing}; the delete cannot be applied against the "
+            "current schema (compact the table before dropping "
+            "equality-key columns)"
+        )
+    return [keys[i] for i in ids]
+
+
+def eq_deleted_positions(pf, eq_files, mapped_names, batch_rows=131072):
+    """File positions (sorted unique int64 numpy array) of the rows of
+    `pf`, an open data file, whose key tuple an equality-delete file
+    names. `eq_files` is [(key file path, key `fields`)]. Data key
+    columns resolve and project like any read (field ids, mapped names,
+    promotion, initial defaults); key files load by `eq_key_table`.
+    Files on the same key columns form one key table and one Arrow
+    left-semi join per batch. The file streams in `batch_rows` batches,
+    so memory is one batch plus the key tables."""
+    import numpy as np
+    import pyarrow as pa
+
+    if not eq_files:
+        return np.empty(0, dtype=np.int64)
+    groups: dict = {}
+    need: dict = {}
+    for path, fields in eq_files:
+        ids = tuple(f[0] for f in fields)
+        groups.setdefault(ids, []).append(eq_key_table(path, fields))
+        need.update((f[0], f) for f in fields)
+    need = list(need.values())
+    keys = [pa.concat_tables(tables) for tables in groups.values()]
+    parts = []
+    resolved = resolve(pf.schema_arrow, need, mapped_names)
+    cols = sorted({p for p in resolved.values() if p is not None})
+    start = 0
+    for batch in pf.iter_batches(batch_size=batch_rows, columns=cols):
+        n = batch.num_rows
+        data = _eq_join_keys(project(batch, need, resolved, n), need).append_column(
+            "_pos", pa.array(np.arange(start, start + n, dtype=np.int64))
+        )
+        for ktbl in keys:
+            on = ktbl.column_names
+            hit = data.select(on + ["_pos"]).join(ktbl, on, join_type="left semi")
+            parts.append(hit["_pos"].to_numpy())
+        start += n
+    return np.unique(np.concatenate(parts or [np.empty(0, dtype=np.int64)]))
 
 
 def _arrow_read_file(path, fields, mapped_names, arrow_filter, filter_names, with_pos):

@@ -44,7 +44,7 @@ import json
 from typing import Optional
 
 from .manifest import DataFileContent
-from .reader import _cast_bridge, delete_entry, mapped_names
+from .reader import _cast_bridge, delete_entry, mapped_names, read_fields
 from .types import (
     BinaryType,
     DateType,
@@ -748,28 +748,37 @@ def _bucket_read(table, names: list, types: dict):
     """What _read_bucket_arrow needs for one side: reader `fields` for
     the columns `names` of `table` — resolved by FIELD ID, so a renamed
     column still finds its stored values — typed by `types` (the side's
-    Arrow read types, key-widened), plus the table's name mapping."""
+    Arrow read types, key-widened), the table's name mapping, and
+    {field_id: reader field} of the whole schema for equality-delete
+    key columns, which need not be in `names`."""
     schema = table.schema()
     fields = []
     for n in names:
         f = schema.find_field(n)
         fields.append((f.field_id, n, types[n], f.initial_default))
-    return fields, mapped_names(table.properties)
+    keys = {f[0]: f for f in read_fields(schema)}
+    return fields, mapped_names(table.properties), keys
 
 
 def _read_bucket_arrow(files: list, read, resid=None):
     """One bucket side as a pyarrow Table: each file through
-    reader.read_file (`read` is _bucket_read's (fields, name mapping)),
-    positional deletes / DVs and equality deletes dropped by file
-    position, then the bound residual row filter applied per file
-    (pruning removed FILES; other keys still share the bucket's files)."""
+    reader.read_file (`read` is _bucket_read's (fields, name mapping,
+    key fields)), positional deletes / DVs and equality deletes dropped
+    by file position, then the bound residual row filter applied per
+    file (pruning removed FILES; other keys still share the bucket's
+    files)."""
     import numpy as np
     import pyarrow as pa
 
     from . import fileio
-    from .reader import delete_positions, read_file
+    from .reader import (
+        delete_positions,
+        eq_deleted_positions,
+        eq_key_fields,
+        read_file,
+    )
 
-    fields, mapped = read
+    fields, mapped, keys = read
     arrow_filter = None
     filter_cols: set = set()
     if resid is not None:
@@ -783,19 +792,14 @@ def _read_bucket_arrow(files: list, read, resid=None):
         if f["dels"] or f.get("eqs"):
             drop = delete_positions(f["path"], f["dels"])
         if f.get("eqs"):
-            # equality deletes: key frames LRU-cached per worker, rows
-            # matched by field id with NULL==NULL semantics — the same
-            # matcher the eq→DV conversion uses (maintenance.py)
-            from .maintenance import _eq_convert_key_frame, _eq_matched_positions
-
-            eq_sets = [
-                (tuple(e["ids"]), _eq_convert_key_frame(e["path"], e["ids"]))
+            # equality deletes: the scan's key rule, matched by the
+            # executor-side matcher the eq→DV conversion also uses
+            eq_files = [
+                (e["path"], eq_key_fields(keys, e["path"], e["ids"]))
                 for e in f["eqs"]
             ]
             with fileio.parquet_file(f["path"]) as pf:
-                drop = np.union1d(
-                    drop, _eq_matched_positions(pf, eq_sets).astype("int64")
-                )
+                drop = np.union1d(drop, eq_deleted_positions(pf, eq_files, mapped))
         out = read_file(
             f["path"], fields, mapped, arrow_filter, filter_cols, drop=drop
         )

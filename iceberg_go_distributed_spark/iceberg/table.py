@@ -1098,7 +1098,14 @@ class Scan:
         `_read_with_deletes` call, with or without delete files — a scan
         with none is a merge-on-read with no deletes — followed by the
         row-lineage columns, the residual filter, the projection and the
-        limit."""
+        limit.
+
+        Known limit: a filter the caller applies to the returned frame
+        on a double or float column (`where("d = -0.0D")`, an IN list)
+        can miss rows holding the other signed zero, because Spark's
+        parquet dictionary filter compares the bits. The scan's own
+        predicate is safe: its compilers read such a column as
+        `c + 0.0`; a caller can write `d + 0.0 = 0.0` the same way."""
         from pyspark.sql import functions as F
 
         df = None
@@ -1407,6 +1414,7 @@ class Scan:
         from pyspark.sql import functions as F
 
         from .manifest import DataFileContent
+        from .reader import eq_key_fields
 
         planned: set = set()
         eq_files: dict[str, DataFile] = {}
@@ -1422,19 +1430,7 @@ class Scan:
         by_key: dict[tuple, list[str]] = {}
         for path in sorted(covers):
             ids = tuple(eq_files[path].equality_ids or ())
-            missing = [i for i in ids if i not in by_id]
-            if missing:
-                # an equality key column was dropped from the schema: the
-                # delete can no longer be evaluated. Matching on the
-                # remaining subset would OVER-delete live rows, and
-                # skipping the file would resurrect deleted ones — both
-                # are silent corruption, so fail loudly instead.
-                raise ValueError(
-                    f"equality-delete file {path} keys on dropped field "
-                    f"ids {missing}; the delete cannot be applied against "
-                    "the current schema (compact the table before "
-                    "dropping equality-key columns)"
-                )
+            eq_key_fields(by_id, path, ids)
             if ids:
                 by_key.setdefault(ids, []).append(path)
         for ids, paths in by_key.items():
@@ -2254,7 +2250,14 @@ class Table(StaticTable):
         """Multi-action MERGE INTO (single snapshot, merge-on-read):
         matched_update ("*" or {col: sql_expr}), matched_update_condition,
         matched_delete_condition, not_matched_insert (True or
-        {col: sql_expr}) — see write.merge."""
+        {col: sql_expr}) — see write.merge.
+
+        Known limit: a condition comparing a double or float column with
+        a signed-zero literal can miss rows holding the other zero
+        (0.0 vs -0.0) where Spark pushes it into the parquet read, whose
+        dictionary filter compares bits. The package's own compilers
+        avoid this by reading the column as `c + 0.0`; a condition can
+        do the same."""
         from .write import merge
 
         return merge(self, spark, source, on, **actions)

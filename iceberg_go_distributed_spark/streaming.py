@@ -307,7 +307,7 @@ def iceberg_stream(spark, warehouse: str, table: str, **options) -> DataFrame:
     a DV and an equality delete for the same file, and a commit whose
     applicable equality-delete key files exceed
     `read.cdc.eq-keys-max-rows` (default 2M key rows; per-query option
-    `cdc_eq_keys_max_rows` overrides) — the expansion loads key frames
+    `cdc_eq_keys_max_rows` overrides) — the expansion loads key tables
     into each task's memory, so a bulk-MERGE commit is refused AT PLAN
     TIME (bounded, degrades instead of OOMing at 100×) naming
     changelog_poll / convert_equality_deletes as the bounded routes.
@@ -387,8 +387,7 @@ def _read_change_deletes(pf, partition, resolved, batch_rows):
     import numpy as np
     import pyarrow as pa
 
-    from .iceberg.maintenance import _eq_matched_positions
-    from .iceberg.reader import delete_positions
+    from .iceberg.reader import delete_positions, eq_deleted_positions
 
     fields = partition.fields
     read_cols = [p for p in resolved.values() if p is not None]
@@ -399,10 +398,7 @@ def _read_change_deletes(pf, partition, resolved, batch_rows):
         # (whole-file drop, DV diff, or new eq match) re-emits them.
         # One key-matching pass over the file (pyarrow batch-wise).
         prior = np.union1d(
-            prior,
-            _eq_matched_positions(
-                pf, _eq_sets(partition.eq_prior)
-            ).astype("int64"),
+            prior, eq_deleted_positions(pf, partition.eq_prior, partition.mapped)
         )
     if partition.whole_file:
         target = None  # every position except `prior`
@@ -416,9 +412,7 @@ def _read_change_deletes(pf, partition, resolved, batch_rows):
         news = []
         if getattr(partition, "eq_new", None):
             news.append(
-                _eq_matched_positions(
-                    pf, _eq_sets(partition.eq_new)
-                ).astype("int64")
+                eq_deleted_positions(pf, partition.eq_new, partition.mapped)
             )
         if partition.new_deletes:
             news.append(delete_positions(partition.path, partition.new_deletes))
@@ -482,19 +476,64 @@ def _read_change_deletes(pf, partition, resolved, batch_rows):
         off += n
 
 
-def _eq_sets(descriptors):
-    """Executor-side load of equality-delete key files for
-    _eq_matched_positions: [(key_file_path, field_ids)] →
-    [(field_ids, key frame)]. Frames come from the conversion pass's
-    per-worker LRU (maintenance._eq_convert_key_frame: key columns by
-    field id), so the file partitions of one micro-batch read each key
-    file ~once per worker. The PLANNER bounds every load: partitions
-    whose applicable key files exceed `read.cdc.eq-keys-max-rows`
-    (manifest record_count, checked driver-side) are refused at plan
-    time naming changelog_poll."""
-    from .iceberg.maintenance import _eq_convert_key_frame
+class _CdcEqKeys:
+    """The CDC planners' equality-delete descriptors and their key-row
+    bound. Executors load a partition's applicable key files into each
+    task's memory (reader.eq_key_table) — one small file for a typical
+    CDC commit, but a bulk MERGE can commit a 100M-key file that would
+    OOM every task. Key-row counts are free driver-side (manifest
+    record_count), so `check` refuses AT PLAN TIME naming the bounded
+    routes. The bound is `read.cdc.eq-keys-max-rows` (default 2M key
+    rows); the per-query option `cdc_eq_keys_max_rows` overrides it."""
 
-    return [(list(ids), _eq_convert_key_frame(path, ids)) for path, ids in descriptors]
+    def __init__(self, options, properties, fields):
+        try:
+            self.max_rows = int(options.get(
+                "cdc_eq_keys_max_rows",
+                properties.get("read.cdc.eq-keys-max-rows", "2000000"),
+            ))
+        except (TypeError, ValueError):
+            self.max_rows = 2_000_000
+        self.keys = {f[0]: f for f in fields}
+        self.nrows: dict[str, int] = {}
+
+    def descs(self, delete_files, only=None, exclude=None):
+        """[(key file path, key fields)] of the equality-delete files
+        in `delete_files`, optionally only those in / not in a path
+        set; the key fields ride along because key columns need not be
+        in the read projection."""
+        from .iceberg.manifest import DataFileContent
+        from .iceberg.reader import eq_key_fields
+
+        out = []
+        for d in delete_files:
+            if d.content != DataFileContent.EQUALITY_DELETES:
+                continue
+            if only is not None and d.file_path not in only:
+                continue
+            if exclude is not None and d.file_path in exclude:
+                continue
+            self.nrows[d.file_path] = int(d.record_count or 0)
+            out.append((
+                d.file_path,
+                eq_key_fields(self.keys, d.file_path, d.equality_ids or []),
+            ))
+        return out
+
+    def check(self, what, path, *desc_lists):
+        """Refuse a partition reading `path` whose key files sum above
+        the bound; `what` names the planned commit or range."""
+        total = sum(
+            self.nrows.get(p, 0) for descs in desc_lists for p, _ in descs
+        )
+        if total > self.max_rows:
+            raise ValueError(
+                f"{what} loads {total} equality-delete key rows into each "
+                f"task reading {path} — above read.cdc.eq-keys-max-rows="
+                f"{self.max_rows}. Consume via changelog_poll (distributed "
+                "anti-join, bounded memory) or run convert_equality_deletes "
+                "first; raise the property to override"
+            )
 
 
 try:  # pyspark >= 4: Python Data Source API
@@ -536,7 +575,7 @@ try:  # pyspark >= 4: Python Data Source API
         Delete descriptors (reader.delete_entry) decode executor-side
         (reader.delete_positions); the driver ships only O(delete
         files) pointers.
-        eq_new / eq_prior: [(key_file_path, equality_field_ids)]."""
+        eq_new / eq_prior: [(key_file_path, key fields)] (_CdcEqKeys)."""
 
         def __init__(self, path, fields, cfg, batch_rows, change,
                      new_deletes=(), prior_deletes=(), whole_file=False,
@@ -747,59 +786,12 @@ try:  # pyspark >= 4: Python Data Source API
                     t, s_id, e_id, fields, batch_rows
                 )
 
-            # Executor-memory bound for equality-delete expansion
-            # (mirrors the MOR driver-decode bound): executors
-            # load each partition's applicable key files as pandas
-            # frames (_eq_sets) — one small file for typical CDC
-            # commits, but a bulk MERGE can commit a 100M-key file that
-            # would OOM every task. Key-row counts are free driver-side
-            # (manifest record_count), so refuse AT PLAN TIME naming the
-            # bounded alternative instead of dying executor-side.
-            try:
-                eq_keys_max = int(self._options.get(
-                    "cdc_eq_keys_max_rows",
-                    t.metadata.properties.get(
-                        "read.cdc.eq-keys-max-rows", "2000000"
-                    ),
-                ))
-            except (TypeError, ValueError):
-                eq_keys_max = 2_000_000
-            eq_nrows: dict[str, int] = {}
-
-            def eq_descs(delete_files, only=None, exclude=None):
-                out = []
-                for d in delete_files:
-                    if d.content != DataFileContent.EQUALITY_DELETES:
-                        continue
-                    if only is not None and d.file_path not in only:
-                        continue
-                    if exclude is not None and d.file_path in exclude:
-                        continue
-                    eq_nrows[d.file_path] = int(d.record_count or 0)
-                    out.append((d.file_path, list(d.equality_ids or [])))
-                return out
-
-            def check_eq_bound(path, snap_id, *desc_lists):
-                total = sum(
-                    eq_nrows.get(p, 0)
-                    for descs in desc_lists
-                    for p, _ in descs
-                )
-                if total > eq_keys_max:
-                    raise ValueError(
-                        f"cdc stream: expanding snapshot {snap_id} loads "
-                        f"{total} equality-delete key rows into each "
-                        f"task reading {path} — above read.cdc.eq-keys-"
-                        f"max-rows={eq_keys_max}. Consume this bulk "
-                        "commit via changelog_poll (distributed "
-                        "anti-join, bounded memory) or run "
-                        "convert_equality_deletes first; raise the "
-                        "property to override"
-                    )
+            eq = _CdcEqKeys(self._options, t.metadata.properties, fields)
 
             parts = []
             for snap in chain:
                 op = snap.summary.operation
+                what = f"cdc stream: expanding snapshot {snap.snapshot_id}"
                 if op == "replace":
                     continue
                 if op == "append":
@@ -849,7 +841,7 @@ try:  # pyspark >= 4: Python Data Source API
                             # parent: rows it killed are ALREADY dead and
                             # must never re-emit a delete event — from a
                             # whole-file drop, a DV diff, or a new eq match
-                            eq_descs(task.delete_files),
+                            eq.descs(task.delete_files),
                             task.file.first_row_id,
                         )
                 live_now = {
@@ -925,7 +917,7 @@ try:  # pyspark >= 4: Python Data Source API
                     )
                 for path in removed:
                     _, descs, prior_eqs, frid = prior_by_path[strip_scheme(path)]
-                    check_eq_bound(path, snap.snapshot_id, prior_eqs)
+                    eq.check(what, path, prior_eqs)
                     parts.append(_CdcFilePartition(
                         path, fields, self._cfg, batch_rows, "delete",
                         prior_deletes=descs,
@@ -939,7 +931,7 @@ try:  # pyspark >= 4: Python Data Source API
                     _, prior_descs, prior_eqs, frid = prior_by_path.get(
                         key, (None, [], [], None)
                     )
-                    check_eq_bound(orig_path, snap.snapshot_id, prior_eqs)
+                    eq.check(what, orig_path, prior_eqs)
                     parts.append(_CdcFilePartition(
                         orig_path, fields, self._cfg, batch_rows, "delete",
                         new_deletes=descs,
@@ -963,7 +955,7 @@ try:  # pyspark >= 4: Python Data Source API
                         if key not in prior_by_path:
                             continue  # added this snapshot: eq is not
                             # applicable (equal sequence number)
-                        eq_new = eq_descs(
+                        eq_new = eq.descs(
                             task.delete_files, only=new_eq_paths
                         )
                         if not eq_new:
@@ -976,14 +968,11 @@ try:  # pyspark >= 4: Python Data Source API
                                 "order the two delete sources — use "
                                 "changelog_poll"
                             )
-                        eq_prior = eq_descs(
+                        eq_prior = eq.descs(
                             task.delete_files, exclude=new_eq_paths
                         )
                         _, prior_descs, _prior_eqs, frid = prior_by_path[key]
-                        check_eq_bound(
-                            task.file.file_path, snap.snapshot_id,
-                            eq_new, eq_prior,
-                        )
+                        eq.check(what, task.file.file_path, eq_new, eq_prior)
                         parts.append(_CdcFilePartition(
                             task.file.file_path, fields, self._cfg,
                             batch_rows, "delete",
@@ -1049,44 +1038,8 @@ try:  # pyspark >= 4: Python Data Source API
             from .iceberg.reader import delete_entry
             from .iceberg.table import strip_scheme
 
-            try:
-                eq_keys_max = int(self._options.get(
-                    "cdc_eq_keys_max_rows",
-                    t.metadata.properties.get(
-                        "read.cdc.eq-keys-max-rows", "2000000"
-                    ),
-                ))
-            except (TypeError, ValueError):
-                eq_keys_max = 2_000_000
-            eq_nrows: dict[str, int] = {}
-
-            def eq_descs(delete_files, exclude=None):
-                out = []
-                for d in delete_files:
-                    if d.content != DataFileContent.EQUALITY_DELETES:
-                        continue
-                    if exclude is not None and d.file_path in exclude:
-                        continue
-                    eq_nrows[d.file_path] = int(d.record_count or 0)
-                    out.append((d.file_path, list(d.equality_ids or [])))
-                return out
-
-            def check_eq_bound(path, *desc_lists):
-                total = sum(
-                    eq_nrows.get(p, 0)
-                    for descs in desc_lists
-                    for p, _ in descs
-                )
-                if total > eq_keys_max:
-                    raise ValueError(
-                        f"cdc stream (netted): the range ({s_id}, {e_id}]"
-                        f" loads {total} equality-delete key rows into "
-                        f"each task reading {path} — above read.cdc.eq-"
-                        f"keys-max-rows={eq_keys_max}. Consume via "
-                        "changelog_poll (distributed anti-join, bounded "
-                        "memory) or run convert_equality_deletes first; "
-                        "raise the property to override"
-                    )
+            eq = _CdcEqKeys(self._options, t.metadata.properties, fields)
+            what = f"cdc stream (netted): the range ({s_id}, {e_id}]"
 
             prior_by_path: dict[str, tuple] = {}
             if s_id != -1:
@@ -1098,7 +1051,7 @@ try:  # pyspark >= 4: Python Data Source API
                             for d in task.delete_files
                             if d.content == DataFileContent.POSITION_DELETES
                         ],
-                        eq_descs(task.delete_files),
+                        eq.descs(task.delete_files),
                         task.file.first_row_id,
                     )
             parts = []
@@ -1109,14 +1062,14 @@ try:  # pyspark >= 4: Python Data Source API
                     for d in task.delete_files
                     if d.content == DataFileContent.POSITION_DELETES
                 ]
-                e_eqs = eq_descs(task.delete_files)
+                e_eqs = eq.descs(task.delete_files)
                 frid = task.file.first_row_id
                 if key not in prior_by_path:
                     # added during the range and still live: emit its
                     # live-at-e rows as inserts (whole_file live-read,
                     # labeled insert)
                     if e_pos or e_eqs:
-                        check_eq_bound(task.file.file_path, e_eqs)
+                        eq.check(what, task.file.file_path, e_eqs)
                         parts.append(_CdcFilePartition(
                             task.file.file_path, fields, self._cfg,
                             batch_rows, "insert",
@@ -1137,7 +1090,7 @@ try:  # pyspark >= 4: Python Data Source API
                 # cumulative DVs: dead(e) ⊇ dead(s); the executor diff
                 # (new ∪ eq_new matches) − (prior ∪ s_eq matches) is
                 # exactly the range's newly-dead rows
-                check_eq_bound(task.file.file_path, s_eqs, eq_new)
+                eq.check(what, task.file.file_path, s_eqs, eq_new)
                 parts.append(_CdcFilePartition(
                     task.file.file_path, fields, self._cfg, batch_rows,
                     "delete",
@@ -1148,7 +1101,7 @@ try:  # pyspark >= 4: Python Data Source API
             for key, (path, s_pos, s_eqs, frid) in prior_by_path.items():
                 # live at s, gone at e: a genuine whole-file drop
                 # (rewrites were excluded by _cdc_nettable)
-                check_eq_bound(path, s_eqs)
+                eq.check(what, path, s_eqs)
                 parts.append(_CdcFilePartition(
                     path, fields, self._cfg, batch_rows, "delete",
                     prior_deletes=s_pos, eq_prior=s_eqs,

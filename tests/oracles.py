@@ -360,14 +360,46 @@ def _delete_covers_path(delete_file: DataFile, data_path: str) -> bool:
     return lo_s[: len(data_path)] <= data_path <= hi_s or data_path.startswith(hi_s)
 
 
-def merge_on_read_oracle(tasks, schema: Schema, columns, with_fp_pos=False):
+_NAN = object()  # one NaN key: Python's NaN objects never compare equal
+
+
+def _eq_key(v):
+    """A key value under the equality-delete rule: NaN equals NaN, and
+    -0.0 == 0.0 already holds (with equal hashes) for Python floats."""
+    return _NAN if isinstance(v, float) and v != v else v
+
+
+def _file_columns(arrow_schema, schema: Schema, mapped) -> dict:
+    """{field_id: physical column or None}: by `PARQUET:field_id` when
+    the file carries ids, else by a mapped (pre-rename) name from
+    `mapped` ({field_id: [names]}), then by the current name."""
+    by_id = {
+        int(fld.metadata[b"PARQUET:field_id"]): fld.name
+        for fld in arrow_schema
+        if fld.metadata and b"PARQUET:field_id" in fld.metadata
+    }
+    names = set(arrow_schema.names)
+    out = {}
+    for f in schema.fields:
+        if by_id:
+            out[f.field_id] = by_id.get(f.field_id)
+            continue
+        aliases = [n for n in mapped.get(f.field_id, ()) if n in names]
+        out[f.field_id] = aliases[0] if aliases else (f.name if f.name in names else None)
+    return out
+
+
+def merge_on_read_oracle(tasks, schema: Schema, columns, with_fp_pos=False, mapped=None):
     """Per-file twin of `Scan._read_with_deletes`: pyarrow reads each
     task's (local) data file, drops the positions named by THAT task's
     own positional-delete files and DVs, then drops rows whose key tuple
-    null-safely equals a key in any of that task's own equality-delete
-    files. Columns resolve by name; a column a file lacks reads as its
-    `initial_default` (or null). Returns a Counter of row tuples over
-    `columns`, plus (raw path, position) when `with_fp_pos`."""
+    equals a key in any of that task's own equality-delete files under
+    the equality-delete rule (NULL = NULL, NaN = NaN, NULL != NaN,
+    -0.0 = 0.0). Data and key columns resolve by field id; a file
+    without ids resolves by the name mapping `mapped` ({field_id:
+    [names]}), then by the current name; a column a file lacks reads as
+    its `initial_default` (or null). Returns a Counter of row tuples
+    over `columns`, plus (raw path, position) when `with_fp_pos`."""
     import collections
     import re
 
@@ -379,8 +411,23 @@ def merge_on_read_oracle(tasks, schema: Schema, columns, with_fp_pos=False):
     def raw(p):
         return re.sub(SCHEME_RE, "", p)
 
-    name_of = {f.field_id: f.name for f in schema.fields}
-    default = {f.name: f.initial_default for f in schema.fields}
+    mapped = mapped or {}
+    default = {f.field_id: f.initial_default for f in schema.fields}
+    id_of = {f.name: f.field_id for f in schema.fields}
+
+    def read_by_id(p):
+        """{field_id: column values}, n rows of file `p`."""
+        tbl = pq.read_table(p)
+        cols = _file_columns(tbl.schema, schema, mapped)
+        return {
+            fid: (
+                tbl.column(name).to_pylist()
+                if name is not None
+                else [default[fid]] * tbl.num_rows
+            )
+            for fid, name in cols.items()
+        }, tbl.num_rows
+
     out = collections.Counter()
     for t in tasks:
         path = raw(t.file.file_path)
@@ -388,10 +435,10 @@ def merge_on_read_oracle(tasks, schema: Schema, columns, with_fp_pos=False):
         eq_sets = []
         for d in t.delete_files:
             if d.content == DataFileContent.EQUALITY_DELETES:
-                names = [name_of[i] for i in d.equality_ids]
-                kt = pq.read_table(raw(d.file_path), columns=names)
+                ids = list(d.equality_ids)
+                kcols, _n = read_by_id(raw(d.file_path))
                 eq_sets.append(
-                    (names, set(zip(*(kt.column(n).to_pylist() for n in names))))
+                    (ids, {tuple(map(_eq_key, k)) for k in zip(*(kcols[i] for i in ids))})
                 )
             elif d.content_offset is not None:
                 dropped.update(
@@ -407,14 +454,13 @@ def merge_on_read_oracle(tasks, schema: Schema, columns, with_fp_pos=False):
                 ):
                     if raw(fp) == path:
                         dropped.add(pos)
-        tbl = pq.read_table(path)
-        data = {n: tbl.column(n).to_pylist() for n in tbl.column_names}
-        for i in range(tbl.num_rows):
+        data, n = read_by_id(path)
+        for i in range(n):
             if i in dropped or any(
-                tuple(data[n][i] for n in names) in keys for names, keys in eq_sets
+                tuple(_eq_key(data[f][i]) for f in ids) in keys for ids, keys in eq_sets
             ):
                 continue
-            row = tuple(data[c][i] if c in data else default[c] for c in columns)
+            row = tuple(data[id_of[c]][i] for c in columns)
             out[row + ((path, i) if with_fp_pos else ())] += 1
     return out
 

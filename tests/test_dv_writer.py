@@ -18,6 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from iceberg_go_distributed_spark.iceberg import expressions as E
+from iceberg_go_distributed_spark.iceberg import maintenance
 from iceberg_go_distributed_spark.iceberg.catalog import FileSystemCatalog
 from iceberg_go_distributed_spark.iceberg.manifest import POSITIONAL_DELETE_POS_ID
 from iceberg_go_distributed_spark.iceberg.puffin import (
@@ -166,12 +167,11 @@ def _eq_convert(cat, spark):
 
 def _eq_convert_join(cat, spark):
     t = _eq_setup(cat, spark, "db.dv_eqj")
-    tx = t.transaction()
-    tx.set_properties({"maintenance.eq-convert.keys-max-rows": "0"})
-    tx.commit()
-    t.refresh()
     before, dv_before = _deleted(t), _dv_sizes(t)
-    assert t.convert_equality_deletes(spark) is True
+    with pytest.MonkeyPatch.context() as mp:
+        # a bound below any key file routes every file to the join path
+        mp.setattr(maintenance, "_EQ_CONVERT_KEYS_MAX_ROWS", 0)
+        assert t.convert_equality_deletes(spark) is True
     return t, before, dv_before
 
 

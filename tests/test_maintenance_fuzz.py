@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iceberg_go_distributed_spark.iceberg import expressions as E
+from iceberg_go_distributed_spark.iceberg import maintenance as M
 from iceberg_go_distributed_spark.iceberg.catalog import FileSystemCatalog
 from iceberg_go_distributed_spark.iceberg.manifest import DataFileContent
 from iceberg_go_distributed_spark.iceberg.types import schema_from_spark
@@ -44,18 +45,18 @@ def _invariants(t):
 # seed→bound routing (deterministic): 11→fast path only, 23→mixed
 # per-file routing, 7→every conversion through the join path
 @pytest.mark.parametrize("seed", [11, 23, 7])
-def test_maintenance_never_changes_visible_rows(tmp_path, spark, seed):
-    _maintained_twin(tmp_path, spark, seed, steps=8)
+def test_maintenance_never_changes_visible_rows(tmp_path, spark, seed, monkeypatch):
+    _maintained_twin(tmp_path, spark, seed, 8, monkeypatch)
 
 
-def test_maintenance_never_changes_visible_rows_slice(tmp_path, spark):
+def test_maintenance_never_changes_visible_rows_slice(tmp_path, spark, monkeypatch):
     """Short seeded slice of the fuzz above for the default tier: seed 8
     draws the mixed per-file eq-convert routing and opens with an
     upsert."""
-    _maintained_twin(tmp_path, spark, seed=8, steps=3)
+    _maintained_twin(tmp_path, spark, 8, 3, monkeypatch)
 
 
-def _maintained_twin(tmp_path, spark, seed, steps):
+def _maintained_twin(tmp_path, spark, seed, steps, monkeypatch):
     rng = random.Random(seed)
     cat = FileSystemCatalog(str(tmp_path / f"wh{seed}"))
     schema = schema_from_spark(_batch(spark, rng, [0]).schema)
@@ -65,13 +66,10 @@ def _maintained_twin(tmp_path, spark, seed, steps):
         t.upgrade_format_version(3)
     # randomize the eq-convert key-row bound so the fuzz exercises the
     # fast path, the distributed join path, AND mixed routing (r10):
-    # "0" forces every conversion through the join path, "12" mixes
+    # 0 forces every conversion through the join path, 12 mixes
     # per-file, the default stays fast-path-only at this scale
-    bound = rng.choice(["0", "12", "2000000"])
-    tx = a.transaction()
-    tx.set_properties({"maintenance.eq-convert.keys-max-rows": bound})
-    tx.commit()
-    a.refresh()
+    bound = rng.choice([0, 12, 2_000_000])
+    monkeypatch.setattr(M, "_EQ_CONVERT_KEYS_MAX_ROWS", bound)
 
     next_id = 0
     live_ceiling = 0

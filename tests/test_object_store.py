@@ -215,11 +215,12 @@ def test_s3_equality_keys_read_by_field_id_after_rename(s3_catalog, spark):
     assert rows == sorted(want.items())
 
 
-def test_s3_eq_conversion_join_path_keeps_keys_above_2_53_exact(s3_catalog, spark):
+def test_s3_eq_conversion_join_path_keeps_keys_above_2_53_exact(s3_catalog, spark, monkeypatch):
     """The join route's key frame on an object store (executor Arrow
     reads of the key file) keeps long keys exact: a key file holding
     {2**53+1, null} converts to DVs that delete exactly the rows the
     scan's anti-join deleted, never the row whose id is 2**53."""
+    from iceberg_go_distributed_spark.iceberg import maintenance
     from iceberg_go_distributed_spark.iceberg.manifest import DataFileContent
     from iceberg_go_distributed_spark.iceberg.types import schema_from_spark
 
@@ -233,10 +234,7 @@ def test_s3_eq_conversion_join_path_keeps_keys_above_2_53_exact(s3_catalog, spar
     t.upgrade_format_version(3)
     t.append(df.coalesce(1))
     t.delete_by_keys(spark.createDataFrame([(big + 1,), (None,)], "id long"), ["id"])
-    tx = t.transaction()
-    tx.set_properties({"maintenance.eq-convert.keys-max-rows": "1"})
-    tx.commit()
-    t.refresh()
+    monkeypatch.setattr(maintenance, "_EQ_CONVERT_KEYS_MAX_ROWS", 1)
 
     def rows():
         return sorted(tuple(r) for r in t.scan().to_df(spark).collect())
