@@ -1047,7 +1047,7 @@ def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
     from . import fileio as _fileio
     from .manifest import DataFileContent
     from .table import strip_scheme
-    from .types import Schema, schema_to_spark_struct
+    from .types import Schema
     from .write import _DV_OUT_DDL, _dv_work_row
 
     md = table.metadata
@@ -1074,12 +1074,9 @@ def _eq_convert_join_rows(table, spark, tasks, location, commit_uuid):
             # here. Field-id resolution (schema struct carries
             # parquet.field.id metadata) so renamed key columns still
             # resolve, same contract as the fast path's by-id read.
-            from .table import _ensure_field_id_reads
+            from .table import read_parquet_by_schema
 
-            _ensure_field_id_reads(spark)
-            return spark.read.schema(
-                schema_to_spark_struct(Schema(0, tuple(fields)))
-            ).parquet(path)
+            return read_parquet_by_schema(spark, Schema(0, tuple(fields)), [path])
         return _eq_keys_df_arrow(spark, path, fields)
 
     matched = None

@@ -131,16 +131,6 @@ def attach_lineage(df, lineage_map):
     )
 
 
-def _ensure_field_id_reads(spark) -> None:
-    """Field-id-based parquet column resolution, set once per session
-    (sessions built by session.py already have it; this covers
-    user-owned sessions without mutating conf on every scan)."""
-    if getattr(spark, "_iceberg_field_id_reads", False):
-        return
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    spark._iceberg_field_id_reads = True
-
-
 def _ranged_delete_bounds(delete_file: DataFile):
     """Decoded (lo, hi) file_path bounds of a legacy path-ranged
     positional delete, or None when bounds are absent/undecodable (the
@@ -498,6 +488,23 @@ def read_listed_parquet(spark, reader, paths: list):
                 spark.conf.set(_LISTING_CONF, prev)
 
 
+def read_parquet_by_schema(spark, schema: Schema, paths: list):
+    """The JVM frame over parquet `paths` with columns resolved by the
+    field ids of Iceberg `schema`, so renamed columns still resolve:
+    `read_listed_parquet` under field-id column resolution. That conf is
+    set once per session (sessions built by session.py already have
+    it; this covers user-owned sessions without mutating conf on every
+    read)."""
+    from .types import schema_to_spark_struct
+
+    if not getattr(spark, "_iceberg_field_id_reads", False):
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+        spark._iceberg_field_id_reads = True
+    return read_listed_parquet(
+        spark, spark.read.schema(schema_to_spark_struct(schema)), paths
+    )
+
+
 def _sql_str(s: str) -> str:
     """`s` as a Spark SQL string literal."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -617,17 +624,48 @@ def _scan_tasks(data_rows, delete_rows) -> list[FileScanTask]:
     ]
 
 
-# Bounded planning memo: (metadata_location, snapshot, filter
-# fingerprint, case, projection) → planned FileScanTask tuple. Keyed on
-# the metadata LOCATION so any commit invalidates by construction
-# (plan inputs for a given metadata file are immutable); lock-guarded —
-# the distributed planner and bench harness plan from worker threads
-# (the same race that bit _OCF_CACHE, see test_manifest_io).
-import threading as _threading
+class _LRU:
+    """A bounded least-recently-used map behind a lock: a hit moves its
+    entry to the back, an insert past `maxsize` drops the front. Values
+    are never None. The lock matters: the distributed planner and bench
+    harness plan from worker threads (the same race that bit _OCF_CACHE,
+    see test_manifest_io)."""
 
-_PLAN_CACHE: dict = {}
+    def __init__(self, maxsize: int):
+        self.maxsize = maxsize
+        self._items: dict = {}
+        self._lock = threading.Lock()
+
+    def get(self, key):
+        with self._lock:
+            hit = self._items.pop(key, None)
+            if hit is not None:
+                self._items[key] = hit
+            return hit
+
+    def put(self, key, value) -> None:
+        with self._lock:
+            self._items.pop(key, None)
+            self._items[key] = value
+            while len(self._items) > self.maxsize:
+                self._items.pop(next(iter(self._items)))
+
+    def clear(self) -> None:
+        with self._lock:
+            self._items.clear()
+
+
+# Planning memo: (metadata_location, snapshot, filter fingerprint, case,
+# projection) → planned FileScanTask tuple. Keyed on the metadata
+# LOCATION so any commit invalidates by construction (plan inputs for a
+# given metadata file are immutable).
 _PLAN_CACHE_MAX = 32
-_PLAN_CACHE_LOCK = _threading.Lock()
+_PLAN_CACHE = _LRU(_PLAN_CACHE_MAX)
+# Merge-on-read frame memo (`Scan._read_with_deletes`): the frame one
+# session built over one snapshot's tasks, reused by every later read
+# of the same tasks. IMPLEMENTATION.md "One frame per snapshot" has the
+# key and the JVM memory it retains.
+_FRAME_MEMO = _LRU(_PLAN_CACHE_MAX)
 
 
 @dataclass(frozen=True)
@@ -806,16 +844,11 @@ class Scan:
         key = self._plan_cache_key(snap)
         if key is None:
             return self._plan_files_uncached(snap, None, spark)
-        with _PLAN_CACHE_LOCK:
-            hit = _PLAN_CACHE.pop(key, None)
-            if hit is not None:
-                _PLAN_CACHE[key] = hit  # LRU refresh
-                return list(hit)
+        hit = _PLAN_CACHE.get(key)
+        if hit is not None:
+            return list(hit)
         tasks = self._plan_files_uncached(snap, None, spark)
-        with _PLAN_CACHE_LOCK:
-            while len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-                _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)), None)
-            _PLAN_CACHE[key] = tuple(tasks)
+        _PLAN_CACHE.put(key, tuple(tasks))
         return tasks
 
     def _plan_cache_key(self, snap):
@@ -1098,7 +1131,9 @@ class Scan:
         `_read_with_deletes` call, with or without delete files — a scan
         with none is a merge-on-read with no deletes — followed by the
         row-lineage columns, the residual filter, the projection and the
-        limit.
+        limit. That call reuses the frame an earlier read of the same
+        snapshot built in this session, so a repeated query adds only
+        those last steps to a relation Spark has already built.
 
         Known limit: a filter the caller applies to the returned frame
         on a double or float column (`where("d = -0.0D")`, an IN list)
@@ -1330,7 +1365,67 @@ class Scan:
         `lineage` marks a row-lineage read: its schema gains the reserved
         lineage columns (`_lineage_ext_schema`, null where absent) and it
         keeps `_fp`/`_pos`, which `_row_id` derives from. `with_pos`
-        keeps `_fp`/`_pos` for callers that key on file positions."""
+        keeps `_fp`/`_pos` for callers that key on file positions.
+
+        The frame is built once per session and snapshot: a later read
+        of the same tasks, schema and flags reuses it from `_FRAME_MEMO`
+        (`_frame_key`), so the JVM relation over the same immutable
+        files is not rebuilt. Each call logs one DEBUG line: the reader,
+        why it was chosen, and whether the memo hit."""
+        key = self._frame_key(spark, tasks, schema, lineage, with_pos)
+        built = None if key is None else _FRAME_MEMO.get(key)
+        hit = built is not None
+        if not hit:
+            built = self._build_read(spark, tasks, schema, lineage, with_pos)
+            if key is not None:
+                _FRAME_MEMO.put(key, built)
+        df, reader, reason = built
+        logger.debug(
+            "scan read: %s reader (%s), frame memo %s",
+            reader,
+            reason,
+            "hit" if hit else "miss",
+        )
+        return df
+
+    def _frame_key(self, spark, tasks, schema: Schema, lineage, with_pos):
+        """`_FRAME_MEMO` key of a `_read_with_deletes` call, or None for a
+        table with no metadata location. The metadata location fixes the
+        table's schema, name mapping and every `read.*` property, so a
+        commit misses; data and delete files are immutable. The
+        properties are keyed as well, since `Table.properties` hands out
+        the metadata's own dict and an edit in place commits nothing. The
+        session is keyed by identity (the held frame keeps it alive, so
+        its id is not reused while the entry lives) and by application
+        id. The row filter is keyed because the Arrow reader pushes it
+        into each file read."""
+        loc = getattr(self.table, "metadata_location", None)
+        if loc is None:
+            return None
+        snap = self.snapshot()
+        return (
+            id(spark),
+            spark.sparkContext.applicationId,
+            loc,
+            snap and snap.snapshot_id,
+            tuple(
+                (
+                    t.file.file_path,
+                    tuple((d.file_path, d.content_offset) for d in t.delete_files),
+                )
+                for t in tasks
+            ),
+            repr(schema),
+            lineage,
+            with_pos,
+            repr(self.row_filter),
+            self.case_sensitive,
+            tuple(sorted(self.table.metadata.properties.items())),
+        )
+
+    def _build_read(self, spark, tasks, schema: Schema, lineage, with_pos):
+        """The `_read_with_deletes` frame, built, with the reader that
+        serves it ("JVM" or "Arrow") and the reason for that reader."""
         from pyspark.sql import functions as F
 
         from . import fileio
@@ -1352,11 +1447,15 @@ class Scan:
             schema = _lineage_ext_schema(schema)
         with_pos = with_pos or lineage
         need_pos = with_pos or bool(pos_deletes)
-        arrow = (
-            0 < self._max_listed_files() < len(files)
-            or "schema.name-mapping.default" in self.table.metadata.properties
-            or any(f.initial_default is not None for f in schema.fields)
-        )
+        if 0 < self._max_listed_files() < len(files):
+            reason = "wide"
+        elif "schema.name-mapping.default" in self.table.metadata.properties:
+            reason = "name-mapped"
+        elif any(f.initial_default is not None for f in schema.fields):
+            reason = "initial defaults"
+        else:
+            reason = None
+        arrow = reason is not None
         in_task = None
         if not arrow:
             meta = []
@@ -1375,7 +1474,7 @@ class Scan:
                     files[0].split("://", 1)[0] + "://",
                     exc_info=True,
                 )
-                arrow = True
+                arrow, reason = True, "non-local reroute"
                 if pos_deletes and not with_pos:
                     # dropping rows in-task renumbers positions, so only
                     # a read that returns no `_pos` drops them there
@@ -1393,7 +1492,11 @@ class Scan:
             )
         df = self._anti_join_pos_deletes(spark, df, pos_deletes)
         df = self._anti_join_eq_keys(spark, df, tasks, schema)
-        return df if with_pos else df.drop("_fp", "_pos")
+        return (
+            df if with_pos else df.drop("_fp", "_pos"),
+            "Arrow" if arrow else "JVM",
+            reason or "listed files",
+        )
 
     def _anti_join_eq_keys(self, spark, df, tasks, schema: Schema):
         """Drop equality-deleted rows from a `_fp`-carrying frame, with
@@ -1467,13 +1570,10 @@ class Scan:
         from pyspark.sql import functions as F
 
         from . import fileio
-        from .types import schema_to_spark_struct
 
         names = [f.name for f in eq_schema.fields]
         if all(fileio.is_local(p) for p in paths):
-            keys = read_listed_parquet(
-                spark, spark.read.schema(schema_to_spark_struct(eq_schema)), paths
-            )
+            keys = read_parquet_by_schema(spark, eq_schema, paths)
             return keys.select(*names, file_path_col().alias("_efp")) if tagged else keys
         # key files are small (distinct delete keys) — a driver arrow
         # read by field id (reader.resolve) avoids needing a JVM
@@ -1502,12 +1602,7 @@ class Scan:
         `_pos`) appended: one `parquet(*files)` resolving columns by
         field id, so renames and evolution are safe and Catalyst prunes
         columns and pushes the residual filter into the parquet scan."""
-        from .types import schema_to_spark_struct
-
-        _ensure_field_id_reads(spark)
-        df = read_listed_parquet(
-            spark, spark.read.schema(schema_to_spark_struct(schema)), files
-        )
+        df = read_parquet_by_schema(spark, schema, files)
         return df.select("*", *meta) if meta else df
 
     def _anti_join_pos_deletes(self, spark, df, delete_files):
@@ -2694,8 +2789,7 @@ def _keep_persisted(frame):
 # (a persisted frame dies with its session). The memoized frame is
 # persisted; if the FIFO above unpersists it early, reuse silently
 # recomputes (correct, just unamortized).
-_PRUNE_FRAME_MEMO: dict = {}
-_PRUNE_FRAME_MEMO_MAX = 4
+_PRUNE_FRAME_MEMO = _LRU(4)
 
 
 def _distributed_prune_frame_cached(scan: Scan, spark):
@@ -2716,7 +2810,5 @@ def _distributed_prune_frame_cached(scan: Scan, spark):
     frame, delete_rows = _distributed_prune_frame(scan, spark)
     if frame is not None:
         frame = _keep_persisted(frame)
-    _PRUNE_FRAME_MEMO[key] = (frame, delete_rows)
-    while len(_PRUNE_FRAME_MEMO) > _PRUNE_FRAME_MEMO_MAX:
-        _PRUNE_FRAME_MEMO.pop(next(iter(_PRUNE_FRAME_MEMO)))
+    _PRUNE_FRAME_MEMO.put(key, (frame, delete_rows))
     return frame, delete_rows

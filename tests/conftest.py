@@ -97,8 +97,10 @@ def executor_plan(spark, monkeypatch):
                 lambda s, sp, ms: calls.append(ms) or orig(s, sp, ms),
             )
             T._PLAN_CACHE.clear()
+            T._FRAME_MEMO.clear()
             tasks = scan.plan_files_auto(spark)
         T._PLAN_CACHE.clear()
+        T._FRAME_MEMO.clear()
         assert len(calls) == 1, f"executor leg ran {len(calls)} times"
         return tasks
 

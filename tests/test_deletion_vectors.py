@@ -197,7 +197,7 @@ def test_scan_applies_deletion_vector(fs_catalog, spark, sf_dir, tmp_path, monke
     # the Arrow reroute (taken when the JVM frame build fails on paths
     # that are not local) returns exactly the JVM path's rows
     from iceberg_go_distributed_spark.iceberg import fileio
-    from iceberg_go_distributed_spark.iceberg.table import Scan
+    from iceberg_go_distributed_spark.iceberg.table import _FRAME_MEMO, Scan
 
     jvm_rows = sorted(tuple(r) for r in df.collect())
 
@@ -205,6 +205,8 @@ def test_scan_applies_deletion_vector(fs_catalog, spark, sf_dir, tmp_path, monke
         raise RuntimeError("no FileSystem for scheme")
 
     monkeypatch.setattr(Scan, "_read_jvm", jvm_fails)
+    # the JVM frame above is memoized; the reroute needs a new build
+    _FRAME_MEMO.clear()
     remote = {tk.file.file_path for tk in t2.scan().plan_files()}
     is_local = fileio.is_local
     monkeypatch.setattr(fileio, "is_local", lambda p: p not in remote and is_local(p))

@@ -281,6 +281,47 @@ def test_every_eq_consumer_keeps_the_scans_rows(tmp_path, spark, monkeypatch, sh
         assert _scan(t, spark) == want, f"bound {bound}"
 
 
+@pytest.mark.parametrize("reader", ["wide", "name_mapped"])
+def test_arrow_route_reads_key_files_by_field_id_in_a_plain_session(
+    tmp_path, spark, monkeypatch, reader
+):
+    """A session without field-id parquet reads (one not built by
+    session.py) whose first read of a renamed-key table takes the Arrow
+    reader: the key files still resolve by field id, so the deleted
+    rows stay deleted."""
+    from iceberg_go_distributed_spark.iceberg.sanitize import (
+        name_mapping_from_schema,
+        name_mapping_to_json,
+    )
+
+    conf = "spark.sql.parquet.fieldId.read.enabled"
+    was = spark.conf.get(conf, None)
+    monkeypatch.setattr(spark, "_iceberg_field_id_reads", False, raising=False)
+    spark.conf.unset(conf)
+    try:
+        cat = FileSystemCatalog(str(tmp_path / "wh"))
+        ddl, rows = "id long, k string", [(i, f"k{i % 3}") for i in range(6)]
+        t = _table(cat, spark, "db.plain", ddl, rows[:3])
+        _append(t, spark, ddl, rows[3:])  # two files: wide past one
+        _delete(t, spark, "k string", [("k1",)])
+        t.update_schema().rename_column("k", "kk").commit()
+        if reader == "wide":
+            props = {"read.spark.max-listed-files": "1"}
+        else:
+            mapping = name_mapping_from_schema(t.schema())
+            props = {"schema.name-mapping.default": name_mapping_to_json(mapping)}
+        t.transaction().set_properties(props).commit()
+        t.refresh()
+        got = _scan(t, spark)
+        assert {r[0] for r in got} == {0, 2, 3, 5}
+        assert got == _oracle(t)
+    finally:
+        if was is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, was)
+
+
 # ------------------------------------------------------------------ fuzz
 
 

@@ -56,6 +56,7 @@ from iceberg_go_distributed_spark.iceberg.sanitize import (
     name_mapping_to_json,
 )
 from iceberg_go_distributed_spark.iceberg.table import (
+    _FRAME_MEMO,
     _LISTING_CONF,
     FileScanTask,
     Scan,
@@ -316,10 +317,13 @@ def test_wide_equality_only_read_keeps_filter_pushdown(spark, odd_root, monkeypa
 
 
 def _jvm_build_fails(monkeypatch):
+    """Every later JVM frame build raises; frames built before are
+    dropped from the frame memo, so the next read builds again."""
     def fail(*_a, **_k):
         raise RuntimeError("no FileSystem for scheme")
 
     monkeypatch.setattr(Scan, "_read_jvm", fail)
+    _FRAME_MEMO.clear()
 
 
 def _data_paths_look_remote(monkeypatch, tasks):
