@@ -45,6 +45,7 @@ from typing import Optional
 
 from .manifest import DataFileContent
 from .reader import _cast_bridge, delete_entry, mapped_names, read_fields
+from .table import _LRU
 from .types import (
     BinaryType,
     DateType,
@@ -71,8 +72,7 @@ _STAR_TASK_DDL = "part string, sides string"
 # blob-frame memo (see _side_blobs): keyed like the plan cache —
 # metadata location + snapshot id invalidate on commit — plus the
 # Spark applicationId (persisted frames die with their session)
-_BLOB_FRAME_MEMO: dict = {}
-_BLOB_FRAME_MEMO_MAX = 8
+_BLOB_FRAME_MEMO = _LRU(8)
 
 
 def _hash_family(t) -> str:
@@ -356,9 +356,7 @@ def _side_blobs(table, pf, row_filter, spark):
     blob = keyed.groupBy("part").applyInPandas(to_blob, out_schema)
     if memo_key is not None:
         blob = _keep_persisted(blob)
-        _BLOB_FRAME_MEMO[memo_key] = blob
-        while len(_BLOB_FRAME_MEMO) > _BLOB_FRAME_MEMO_MAX:
-            _BLOB_FRAME_MEMO.pop(next(iter(_BLOB_FRAME_MEMO)))
+        _BLOB_FRAME_MEMO.put(memo_key, blob)
     return blob, resid
 
 

@@ -654,6 +654,9 @@ class _LRU:
         with self._lock:
             self._items.clear()
 
+    def __len__(self) -> int:
+        return len(self._items)
+
 
 # Planning memo: (metadata_location, snapshot, filter fingerprint, case,
 # projection) → planned FileScanTask tuple. Keyed on the metadata
@@ -661,11 +664,17 @@ class _LRU:
 # given metadata file are immutable).
 _PLAN_CACHE_MAX = 32
 _PLAN_CACHE = _LRU(_PLAN_CACHE_MAX)
-# Merge-on-read frame memo (`Scan._read_with_deletes`): the frame one
-# session built over one snapshot's tasks, reused by every later read
-# of the same tasks. IMPLEMENTATION.md "One frame per snapshot" has the
-# key and the JVM memory it retains.
+# Merge-on-read frame memo (`Scan.to_df`'s `_read_with_deletes` call):
+# the frame one session built over one snapshot's tasks, reused by every
+# later read of the same tasks. Only reads of at most
+# _FRAME_MEMO_MAX_FILES data and delete files and
+# _FRAME_MEMO_MAX_DELETE_ROWS delete rows are held: an entry pins its
+# driver file index (~1.6 KB a file) and driver-decoded DV rows (~175 B
+# a position) in the JVM heap. IMPLEMENTATION.md "One frame per
+# snapshot" has the key and the measured retained memory.
 _FRAME_MEMO = _LRU(_PLAN_CACHE_MAX)
+_FRAME_MEMO_MAX_FILES = 1_000
+_FRAME_MEMO_MAX_DELETE_ROWS = 10_000
 
 
 @dataclass(frozen=True)
@@ -1133,7 +1142,10 @@ class Scan:
         row-lineage columns, the residual filter, the projection and the
         limit. That call reuses the frame an earlier read of the same
         snapshot built in this session, so a repeated query adds only
-        those last steps to a relation Spark has already built.
+        those last steps to a relation Spark has already built (reads of
+        at most `_FRAME_MEMO_MAX_FILES` files and
+        `_FRAME_MEMO_MAX_DELETE_ROWS` delete rows; larger ones are built
+        each time).
 
         Known limit: a filter the caller applies to the returned frame
         on a double or float column (`where("d = -0.0D")`, an IN list)
@@ -1189,7 +1201,7 @@ class Scan:
                     tuple(f for f in schema.fields if f.field_id in keep),
                 )
             df = self._read_with_deletes(
-                spark, tasks, read_schema, lineage=lineage is not None
+                spark, tasks, read_schema, lineage=lineage is not None, memo=True
             )
             if lineage is not None:
                 df = attach_lineage(df, lineage)
@@ -1329,7 +1341,7 @@ class Scan:
         return out
 
     def _read_with_deletes(
-        self, spark, tasks, schema: Schema, lineage=False, with_pos=False
+        self, spark, tasks, schema: Schema, lineage=False, with_pos=False, memo=False
     ):
         """Read every planned file in one pass and apply its deletes, as
         the reference's arrow_scanner does; a scan with no delete files
@@ -1367,30 +1379,32 @@ class Scan:
         keeps `_fp`/`_pos`, which `_row_id` derives from. `with_pos`
         keeps `_fp`/`_pos` for callers that key on file positions.
 
-        The frame is built once per session and snapshot: a later read
-        of the same tasks, schema and flags reuses it from `_FRAME_MEMO`
-        (`_frame_key`), so the JVM relation over the same immutable
-        files is not rebuilt. Each call logs one DEBUG line: the reader,
-        why it was chosen, and whether the memo hit."""
-        key = self._frame_key(spark, tasks, schema, lineage, with_pos)
+        `memo` (set by `to_df` only) builds the frame once per session
+        and snapshot: a later read of the same tasks, schema and flags
+        reuses it from `_FRAME_MEMO` (`_frame_key`), so the JVM relation
+        over the same immutable files is not rebuilt. DML, compaction
+        and eq→DV conversion read once per operation and then commit, so
+        an entry of theirs could never hit again. Each call logs one
+        DEBUG line: the reader, why it was chosen, and the memo's
+        outcome."""
+        key = self._frame_key(spark, tasks, schema, lineage, with_pos) if memo else None
         built = None if key is None else _FRAME_MEMO.get(key)
-        hit = built is not None
-        if not hit:
+        outcome = "off" if key is None else "miss" if built is None else "hit"
+        if built is None:
             built = self._build_read(spark, tasks, schema, lineage, with_pos)
             if key is not None:
                 _FRAME_MEMO.put(key, built)
         df, reader, reason = built
         logger.debug(
-            "scan read: %s reader (%s), frame memo %s",
-            reader,
-            reason,
-            "hit" if hit else "miss",
+            "scan read: %s reader (%s), frame memo %s", reader, reason, outcome
         )
         return df
 
     def _frame_key(self, spark, tasks, schema: Schema, lineage, with_pos):
         """`_FRAME_MEMO` key of a `_read_with_deletes` call, or None for a
-        table with no metadata location. The metadata location fixes the
+        table with no metadata location or a read above the memo's file
+        or delete-row bound (`_FRAME_MEMO_MAX_FILES`,
+        `_FRAME_MEMO_MAX_DELETE_ROWS`). The metadata location fixes the
         table's schema, name mapping and every `read.*` property, so a
         commit misses; data and delete files are immutable. The
         properties are keyed as well, since `Table.properties` hands out
@@ -1401,6 +1415,16 @@ class Scan:
         into each file read."""
         loc = getattr(self.table, "metadata_location", None)
         if loc is None:
+            return None
+        deletes = {
+            (d.file_path, d.content_offset): d.record_count
+            for t in tasks
+            for d in t.delete_files
+        }
+        if (
+            len(tasks) + len(deletes) > _FRAME_MEMO_MAX_FILES
+            or sum(deletes.values()) > _FRAME_MEMO_MAX_DELETE_ROWS
+        ):
             return None
         snap = self.snapshot()
         return (

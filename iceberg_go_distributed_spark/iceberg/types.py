@@ -118,6 +118,9 @@ class DecimalType(PrimitiveType):
         self.scale = scale
         self.name = f"decimal({precision}, {scale})"
 
+    def __repr__(self) -> str:
+        return f"DecimalType({self.precision}, {self.scale})"
+
 
 @dataclass(frozen=True)
 class NestedField:
@@ -169,6 +172,9 @@ class StructType(IcebergType):
         inner = ", ".join(f"{f.field_id}: {f.name}: {f.field_type}" for f in self.fields)
         return f"struct<{inner}>"
 
+    def __repr__(self) -> str:
+        return f"StructType{self.fields!r}"
+
     def __eq__(self, other: object) -> bool:
         return isinstance(other, StructType) and self.fields == other.fields
 
@@ -189,6 +195,11 @@ class ListType(IcebergType):
 
     def __str__(self) -> str:
         return f"list<{self.element}>"
+
+    def __repr__(self) -> str:
+        return (
+            f"ListType({self.element_id}, {self.element!r}, {self.element_required})"
+        )
 
     def to_json(self) -> dict:
         return {
@@ -218,6 +229,12 @@ class MapType(IcebergType):
 
     def __str__(self) -> str:
         return f"map<{self.key}, {self.value}>"
+
+    def __repr__(self) -> str:
+        return (
+            f"MapType({self.key_id}, {self.key!r}, {self.value_id}, "
+            f"{self.value!r}, {self.value_required})"
+        )
 
     def to_json(self) -> dict:
         return {

@@ -18,6 +18,7 @@ On a v3 table with deletion vectors and equality deletes:
 from __future__ import annotations
 
 import collections
+from decimal import Decimal
 
 import pytest
 
@@ -95,6 +96,56 @@ def _rows(df, *columns):
     )
 
 
+def test_nested_columns_reuse_one_frame_across_loads(tmp_path, spark, builds):
+    """Every `load_table` parses new type objects: the key must depend on
+    the schema's content only, or a struct, list or decimal column would
+    miss on every reload."""
+    cat = FileSystemCatalog(str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [(i, (i, f"s{i}"), [i, i + 1], Decimal(i)) for i in range(10)],
+        "id long, s struct<a:int,b:string>, l array<int>, d decimal(9,2)",
+    )
+    t = cat.create_table("db.nested", schema_from_spark(df.schema))
+    t.upgrade_format_version(3)
+    t.append(df.coalesce(1))
+    t.delete_where(spark, E.less_than("id", 3))
+    first = _rows(cat.load_table("db.nested").scan().to_df(spark), "id", "d")
+    n = len(builds)
+    for _ in range(3):
+        again = _rows(cat.load_table("db.nested").scan().to_df(spark), "id", "d")
+    assert len(builds) == n, "a reload of a nested-column table rebuilt its frame"
+    assert first == again
+    assert sorted(r[0] for r in again) == list(range(3, 10))
+
+
+def test_only_to_df_reads_are_memoized(tmp_path, spark):
+    """DML, compaction and eq→DV conversion read once and then commit,
+    so they never put an entry in the memo."""
+    cat, t = _mor_table(tmp_path, spark)
+    _FRAME_MEMO.clear()
+    t.delete_where(spark, E.greater_than("id", 35))
+    t.rewrite_data_files(spark)
+    t.convert_equality_deletes(spark)
+    assert len(_FRAME_MEMO) == 0
+    t = cat.load_table("db.mor")
+    assert _rows(t.scan().to_df(spark)) == _oracle(t)
+    assert len(_FRAME_MEMO) == 1
+
+
+@pytest.mark.parametrize("bound", ["_FRAME_MEMO_MAX_FILES", "_FRAME_MEMO_MAX_DELETE_ROWS"])
+def test_reads_above_the_bound_are_not_held(tmp_path, spark, builds, monkeypatch, bound):
+    from iceberg_go_distributed_spark.iceberg import table as T
+
+    cat, t = _mor_table(tmp_path, spark)
+    monkeypatch.setattr(T, bound, 1)
+    _FRAME_MEMO.clear()
+    n = len(builds)
+    _rows(t.scan().to_df(spark))
+    assert _rows(t.scan().to_df(spark)) == _oracle(t)
+    assert len(builds) == n + 2
+    assert len(_FRAME_MEMO) == 0
+
+
 def test_repeated_reads_reuse_one_frame(tmp_path, spark, builds):
     cat, t = _mor_table(tmp_path, spark)
     want = _oracle(t)
@@ -148,11 +199,11 @@ def test_flags_and_projections_never_share_an_entry(tmp_path, spark, builds):
     cat, t = _mor_table(tmp_path, spark)
     scan, schema = t.scan(), t.schema()
     tasks = scan.plan_files()
-    plain = scan._read_with_deletes(spark, tasks, schema)
-    lineage = scan._read_with_deletes(spark, tasks, schema, lineage=True)
-    with_pos = scan._read_with_deletes(spark, tasks, schema, with_pos=True)
+    plain = scan._read_with_deletes(spark, tasks, schema, memo=True)
+    lineage = scan._read_with_deletes(spark, tasks, schema, lineage=True, memo=True)
+    with_pos = scan._read_with_deletes(spark, tasks, schema, with_pos=True, memo=True)
     assert len(builds) == 3
-    assert scan._read_with_deletes(spark, tasks, schema) is plain
+    assert scan._read_with_deletes(spark, tasks, schema, memo=True) is plain
     assert len(builds) == 3
     names = [f.name for f in schema.fields]
     assert _rows(plain) == _oracle(t)
